@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
 import graft.model.{Mention, Triple, Turn, Vocab}
+import graft.operators.DriverProbe
 
 /** Slim detection input: only the columns the automaton needs — decoding
   * role/tool/ts (esp. Timestamp) per row measurably slows the scan. */
@@ -189,17 +190,15 @@ object Grounder {
    * not one per raw lexicon row: a huge lexicon aggregates before it ever
    * touches the driver (round-1 collected raw rows and grouped driver-side).
    *
-   * The collect is HARD-BOUNDED at `maxPatterns` via a limit probe (one job,
-   * at most maxPatterns+1 rows ever reach the driver — the same cost-switch
-   * shape as KgPipeline.xrefCanonicalMap); an over-cap lexicon fails loudly
-   * with a strategy pointer instead of OOMing the driver.
+   * The collect is HARD-BOUNDED at `maxPatterns` via [[DriverProbe]] (one
+   * job, at most maxPatterns+1 rows ever reach the driver); an over-cap
+   * lexicon fails loudly with a strategy pointer instead of OOMing the driver.
    */
   def build(literalMappings: DataFrame,
             canonical: Map[String, String] = Map.empty,
             maxPatterns: Long = MaxDriverPatterns): Grounder = {
     val normUdf = udf((s: String) => AhoCorasick.normalize(s))
-    val limitInt = math.min(maxPatterns, Int.MaxValue - 2L).toInt
-    val grouped = literalMappings
+    val byPattern = literalMappings
       .select(col("prefix"), col("id"), coalesce(col("name"), col("text")).as("name"),
         col("predicate"), col("text"))
       .withColumn("norm", normUdf(col("text")))
@@ -207,9 +206,7 @@ object Grounder {
       .groupBy(col("norm"))
       .agg(collect_list(struct(col("prefix"), col("id"), col("name"),
         col("predicate"), col("text"))).as("es"))
-      .limit(limitInt + 1)
-      .collect()
-    if (grouped.length > limitInt)
+    val grouped = DriverProbe.bounded(byPattern, maxPatterns).getOrElse(
       throw new IllegalStateException(
         s"lexicon exceeds $maxPatterns distinct normalized patterns — too large " +
           "for one driver-built automaton. Either raise maxPatterns to match the " +
@@ -218,7 +215,7 @@ object Grounder {
           "text would split variant spellings of one pattern across shards and " +
           "corrupt per-span top-1), and the union of the shards' mentions " +
           "(MentionDetector.detectTopSlimSharded / detectTriplesSharded) equals " +
-          "the single-automaton result exactly.")
+          "the single-automaton result exactly."))
 
     // deterministic order regardless of partitioning: patterns sorted, and
     // per-pattern entries sorted by (prefix, id, predicate, text)

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.graftshim.InternalRowShim
 
 /**
@@ -18,9 +19,10 @@ import org.apache.spark.sql.graftshim.InternalRowShim
 object Closure {
 
   /** Above this edge count the closures below run distributed; at or below
-    * it they run on the driver (the [[DriverUnionFind]] /
-    * `KgPipeline.xrefCanonicalMap` cost-based switch, applied to the graph
-    * loops themselves). Rationale, measured in round 7: the iterative
+    * it they run on the driver (BFS for [[descendants]], [[DriverUnionFind]]
+    * for [[connectedComponents]] — the single connected-components cost
+    * switch, which `KgPipeline.xrefCanonicalMap` and `DedupOps.nearDupGroups`
+    * call). Rationale, measured in round 7: the iterative
     * DataFrame loops pay 3-6 whole Spark jobs PER ROUND in scheduling and
     * checkpoint overhead (q_closure: 68 jobs for a 199-edge tree; the CC
     * star contraction: 23 jobs for 15k edges) — for ontology-sized graphs
@@ -47,19 +49,15 @@ object Closure {
     x.length < y.length
   }
 
-  /** Bounded driver probe shared by both closures: collect up to limit+1
-    * rows of the narrow 2-string-column frame; None means "too big — stay
-    * distributed" (also on a null or non-string column, which the driver
-    * branches don't model). */
-  private def probePairs(narrow: DataFrame, driverLimit: Long): Option[Array[(String, String)]] = {
-    import org.apache.spark.sql.types.StringType
-    if (driverLimit <= 0) return None
-    if (!narrow.schema.fields.forall(_.dataType == StringType)) return None
-    val limitInt = math.min(driverLimit, Int.MaxValue - 1L).toInt
-    val probe = narrow.limit(limitInt + 1).collect()
-    if (probe.length > limitInt || probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(probe.map(r => (r.getString(0), r.getString(1))))
-  }
+  /** [[DriverProbe]] of the narrow 2-column pair frame for both closures;
+    * None means "stay distributed": too big, `driverLimit <= 0` (the test
+    * switch), columns not both of one type in `driverTypes`, or a null
+    * endpoint, which the driver branches don't model. */
+  private def probePairs(narrow: DataFrame, driverLimit: Long,
+                         driverTypes: Set[DataType]): Option[Array[Row]] =
+    if (driverLimit <= 0 || !driverTypes.exists(t => narrow.schema.forall(_.dataType == t))) None
+    else DriverProbe.bounded(narrow, driverLimit)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
 
   /**
    * T2 descendant closure, networkx `nx.ancestors` semantics on a
@@ -77,8 +75,9 @@ object Closure {
   def descendants(childParent: DataFrame, seeds: DataFrame,
                   driverLimit: Long = DriverGraphLimit): DataFrame = {
     val spark = childParent.sparkSession
-    probePairs(childParent.select(col("subj"), col("obj")), driverLimit) match {
-      case Some(pairs) =>
+    probePairs(childParent.select(col("subj"), col("obj")), driverLimit, Set(StringType)) match {
+      case Some(rows) =>
+        val pairs = rows.map(r => (r.getString(0), r.getString(1)))
         // driver BFS over parent→children adjacency: identical semantics to
         // the loop below (acc collects ONLY nodes reached via >= 1 edge step)
         // in ONE collect job instead of ~4 jobs per tree level
@@ -148,33 +147,46 @@ object Closure {
    * 50 iterations cover ~2^50 nodes, so tripping the guard means a logic bug
    * or corrupt input — wrong groups must never be returned as if converged.
    *
-   * @param edges columns (a, b) — undirected pairs of CURIEs
-   * @return (curie, component) — component = min CURIE reachable; every
-   *         endpoint appears (self-pairs count as membership)
+   * @param edges columns (a, b) — undirected pairs of CURIEs (strings) or of
+   *        long ids; other types always run distributed
+   * @return (curie, component) — component = min endpoint reachable, in
+   *         Spark's order for the type (UTF-8 bytes for strings, numeric for
+   *         longs); every endpoint appears (self-pairs count as membership)
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
                           driverLimit: Long = DriverGraphLimit): DataFrame = {
-    probePairs(edges.select(col("a"), col("b")), driverLimit) match {
-      case Some(pairs) =>
-        val spark = edges.sparkSession
-        // min-CURIE component roots in Spark's UTF-8 byte order — exactly
-        // the star-contraction fixpoint's labels (equivalence test-pinned)
-        val comp = DriverUnionFind.components(pairs.iterator)(
-          (x, y) => if (utf8Lt(y, x)) y else x)
-        import spark.implicits._
-        return comp.toSeq.sortBy(_._1).toDF("curie", "component")
+    val narrow = edges.select(col("a"), col("b"))
+    probePairs(narrow, driverLimit, Set(StringType, LongType)) match {
+      case Some(rows) =>
+        val dt = narrow.schema.head.dataType
+        // component roots in Spark's order for the type — exactly the star
+        // contraction's fixpoint labels (equivalence test-pinned)
+        val lt: (Any, Any) => Boolean =
+          if (dt == StringType) (x, y) => utf8Lt(x.asInstanceOf[String], y.asInstanceOf[String])
+          else (x, y) => x.asInstanceOf[Long] < y.asInstanceOf[Long]
+        val comp = DriverUnionFind.components(rows.iterator.map(r => (r.get(0), r.get(1))))(
+          (x, y) => if (lt(y, x)) y else x)
+        val out = comp.toSeq.sortWith((p, q) => lt(p._1, q._1)).map(p => Row(p._1, p._2))
+        return edges.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+          StructType(Seq(StructField("curie", dt), StructField("component", dt))))
       case None => // fall through to the distributed star contraction
     }
+    // the edge list is pinned ONCE: the node set and the initial edge set
+    // both derive from it, and as a lazy plan each would re-run the
+    // upstream pipeline (e.g. LSH banding behind near-dup pairs)
+    val pinned = narrow.localCheckpoint(true)
     // membership = every endpoint ever seen (incl. isolated self-loop nodes,
     // which the star contraction drops from the edge list)
-    val nodes = edges.select(col("a").as("curie"))
-      .unionByName(edges.select(col("b").as("curie")))
+    val nodes = pinned.select(col("a").as("curie"))
+      .unionByName(pinned.select(col("b").as("curie")))
       .distinct().localCheckpoint(true)
 
     // parent-pointer orientation big → small; self-loops carry no connectivity
-    var e = edges
+    var e = pinned
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
+    // both derived sets are eager checkpoints, so the pin is dead weight now
+    InternalRowShim.unpersistCheckpoint(pinned)
 
     var iter = 0
     var eCount = e.count()

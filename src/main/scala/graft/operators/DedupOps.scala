@@ -198,14 +198,17 @@ object DedupOps {
    * twice. Bucket membership lists are near-duplicate groups, i.e. tiny;
    * genuinely hot buckets hit the (observed) `MaxBucket` guard.
    */
-  private[operators] def bucketPairs(banded: DataFrame, bucketCols: String*): DataFrame = {
+  private[operators] def bucketPairs(banded: DataFrame, bucketCols: String*): DataFrame =
+    bucketPairsAll(banded, bucketCols: _*).distinct()
+
+  /** bucketPairs without the final distinct, for callers that aggregate pair
+    * counts or dedupe on the driver. */
+  private def bucketPairsAll(banded: DataFrame, bucketCols: String*): DataFrame =
     guardedBuckets(banded, bucketCols)
       .select(explode(flatten(transform(col("ids"), (x, i) =>
         transform(slice(col("ids"), i + 2, size(col("ids"))),
           y => struct(x.as("a"), y.as("b")))))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
-      .distinct()
-  }
 
   /** Exact token-set Jaccard between two docs' texts (verification metric). */
   def jaccard(textA: Column, textB: Column): Column = {
@@ -233,6 +236,18 @@ object DedupOps {
   def shingleJaccard(textA: Column, textB: Column, n: Int = 3): Column =
     shingleJaccardFromArrays(shingles(textA, n), shingles(textB, n))
 
+  /** The near-dup verify join: candidate pairs (a, b) joined to each side's
+    * staged [[shingleArray]] rows, kept at shingle-Jaccard ≥ `threshold`.
+    * @return (a, b, jaccard) */
+  private def verifiedPairs(pairs: DataFrame, shA: DataFrame, shB: DataFrame,
+                            threshold: Double): DataFrame =
+    pairs
+      .join(shA.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
+      .join(shB.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
+      .withColumn("jaccard", shingleJaccardFromArrays(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("a", "b", "jaccard")
+
   /**
    * Full near-dup pipeline: LSH candidates → exact SHINGLE-Jaccard verify ≥
    * threshold (same similarity space as the signatures — a token-set verify
@@ -246,15 +261,13 @@ object DedupOps {
                             k: Int = 16, bands: Int = 4): DataFrame = {
     // r7 probe-first shape (the incrementalMinhashDedup pattern): candidate
     // pairs are near-dup-sized by construction (LSH collisions behind the
-    // mega-bucket guard), so probe the NON-distinct pair stream with the
-    // bounded limit-collect. Under the probe, the pair table and candidate
-    // id set are driver-sized: the candidate fetch becomes an IN filter (or
-    // a broadcast local-relation semi-join) and the pair table rides the
-    // verify join as a broadcast local relation — no checkpointed pair
-    // exchange, no dedup exchange, no id-set semi-join plan. Over-probe
-    // corpora (or non-long doc ids, which the driver path would re-type)
-    // take the previous formulation verbatim.
-    val limitInt = math.min(DriverGroupLimit, Int.MaxValue - 1L).toInt
+    // mega-bucket guard), so DriverProbe the NON-distinct pair stream.
+    // Under the probe, the pair table and candidate id set are driver-sized:
+    // the candidate fetch is fetchDocsByIds over a local id relation and
+    // the pair table rides the verify join as a broadcast local relation —
+    // no checkpointed pair exchange, no dedup exchange, no id-set semi-join
+    // plan. Over-probe corpora (or non-long doc ids, which the driver path
+    // would re-type) take the distributed formulation.
     val longIds = documents.schema.fields
       .exists(f => f.name == "doc_id" &&
         f.dataType == org.apache.spark.sql.types.LongType)
@@ -262,36 +275,18 @@ object DedupOps {
     // reuses them instead of re-running the full-corpus banding pass (the
     // narrow bands×16B/doc rows are the only thing persisted)
     lazy val bandsDf = bandedSignatures(documents, k, bands).localCheckpoint(false)
-    val probe: Option[Array[(Long, Long)]] =
+    val probe =
       if (!longIds) None
-      else {
-        val p = bucketPairsAll(bandsDf, "band_idx", "band_hash")
-          .limit(limitInt + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
-        if (p.length <= limitInt) Some(p) else None
-      }
-    probe match {
-      case Some(p) =>
+      else DriverProbe.bounded(bucketPairsAll(bandsDf, "band_idx", "band_hash"), DriverGroupLimit)
+    val (cand, candDocs) = probe match {
+      case Some(rows) =>
         val spark = documents.sparkSession
         import spark.implicits._
-        val pairs = p.distinct
+        val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
         val candIds = pairs.iterator
           .flatMap(q => Iterator(q._1, q._2)).toArray.distinct.sorted
-        val candDocs =
-          if (candIds.length <= FetchProbeLimit)
-            documents.filter(col("doc_id").isin(candIds: _*))
-          else documents.join(broadcast(candIds.toSeq.toDF("doc_id")),
-            Seq("doc_id"), "left_semi")
-        // shingle arrays staged through projections ONCE per candidate doc,
-        // then pinned (both verify-join sides read them) — the text-to-text
-        // form would re-tokenize per element inside the intersect/union
-        // lambdas (HOF trap)
-        val sh = shingleArray(candDocs).localCheckpoint(false)
-        broadcast(pairs.toSeq.toDF("a", "b"))
-          .join(sh.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
-          .join(sh.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
-          .withColumn("jaccard", shingleJaccardFromArrays(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= threshold)
-          .select("a", "b", "jaccard")
+        (broadcast(pairs.toSeq.toDF("a", "b")),
+          fetchDocsByIds(documents, candIds.toSeq.toDF("doc_id")))
       case None =>
         // the candidate pipeline (normalize→tokenize→shingle→K minhashes→
         // bands) is the expensive full-corpus pass — reuse the pinned banded
@@ -306,15 +301,14 @@ object DedupOps {
         // touched again after candidate generation
         val candIds = cand.select(col("a").as("doc_id"))
           .unionByName(cand.select(col("b").as("doc_id"))).distinct()
-        val candDocs = documents.join(candIds, Seq("doc_id"), "left_semi")
-        val sh = shingleArray(candDocs).localCheckpoint(false)
-        cand
-          .join(sh.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
-          .join(sh.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
-          .withColumn("jaccard", shingleJaccardFromArrays(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= threshold)
-          .select("a", "b", "jaccard")
+        (cand, documents.join(candIds, Seq("doc_id"), "left_semi"))
     }
+    // shingle arrays staged through projections ONCE per candidate doc,
+    // then pinned (both verify-join sides read them) — the text-to-text
+    // form would re-tokenize per element inside the intersect/union
+    // lambdas (HOF trap)
+    val sh = shingleArray(candDocs).localCheckpoint(false)
+    verifiedPairs(cand, sh, sh, threshold)
   }
 
   // -------------------------------------------------------------------------
@@ -455,42 +449,26 @@ object DedupOps {
       .select("doc_id", "bench_id", "n_shared", "n_bench", "frac")
   }
 
-  /** bucketPairs without the final distinct (callers aggregate pair counts). */
-  private def bucketPairsAll(banded: DataFrame, bucketCols: String*): DataFrame =
-    guardedBuckets(banded, bucketCols)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-
   // -------------------------------------------------------------------------
   // near-dup groups → survivors (the decision a dedup pipeline actually ships)
   // -------------------------------------------------------------------------
+
+  /** Bound of the driver branch of [[nearDupGroups]] and of the pair probes
+    * of [[minhashNearDuplicates]] / [[incrementalMinhashDedup]] — an alias of
+    * [[Closure.DriverGraphLimit]], the connected-components cost switch. */
+  val DriverGroupLimit = Closure.DriverGraphLimit
 
   /**
    * Collapse near-duplicate PAIRS into groups (connected components) and pick
    * one survivor per group (min doc_id — deterministic). Docs in no pair are
    * their own survivor implicitly; this returns only docs that belong to some
    * group: (doc_id, keep_id). Components run on the pair list, which is
-   * near-dup-sized, not corpus-sized.
+   * near-dup-sized, not corpus-sized, through [[Closure.connectedComponents]]
+   * (its long-id branch: numeric-min roots on both sides of its cost switch).
    */
-  /** Sign-flipped fixed-width hex: lexicographic order == numeric long order
-    * for ALL ids, negatives included (zero-padded decimal sorts negatives
-    * backwards — and hash-derived doc_ids are negative half the time). */
-  private def sortableId(c: Column): Column =
-    format_string("%016x", c.bitwiseXOR(lit(Long.MinValue)))
-
-  /** Above this pair count the component computation runs distributed;
-    * below, a driver union-find (same cost-based switch as
-    * KgPipeline.xrefCanonicalMap — the iterative join loop pays whole jobs
-    * per hop, absurd for near-dup-sized pair lists). */
-  val DriverGroupLimit = 200000L
-
   def nearDupGroups(pairs: DataFrame, driverLimit: Long = DriverGroupLimit): DataFrame = {
-    val spark = pairs.sparkSession
     // ids must already be integral: cast("long") on e.g. string ids would
-    // null them SILENTLY, collapsing every pair to (0,0) in the driver branch
-    // and making the caller's dedup decision a no-op with no error
+    // null them SILENTLY and make the caller's dedup decision a no-op
     Seq("a", "b").foreach { c =>
       import org.apache.spark.sql.types._
       val ok = pairs.schema(c).dataType match {
@@ -500,35 +478,9 @@ object DedupOps {
       require(ok, s"nearDupGroups needs integral doc ids; column '$c' is " +
         pairs.schema(c).dataType.catalogString)
     }
-    val narrow = pairs.select(col("a").cast("long"), col("b").cast("long"))
-    // ONE probe job decides the branch AND feeds the driver path: collecting
-    // limit(n+1) and branching on length avoids re-running the (potentially
-    // expensive) upstream pair pipeline for a separate count
-    val limitInt = math.min(driverLimit, Int.MaxValue - 1L).toInt
-    val probe = narrow.limit(limitInt + 1).collect()
-    if (probe.length <= limitInt) {
-      // self-pairs count as membership (matches the distributed CC exactly)
-      val comp = DriverUnionFind.components(
-        probe.iterator.map(r => (r.getLong(0), r.getLong(1))))((x, y) => math.min(x, y))
-      import spark.implicits._
-      comp.toSeq.sortBy(_._1).toDF("doc_id", "keep_id")
-    } else {
-      // materialize the pair list ONCE: CC derives its node set and initial
-      // edge set from it and `ids` reads it again — as a lazy plan that is
-      // 3 more full runs of the upstream LSH/banding pipeline (released by
-      // the ContextCleaner when the result DataFrame is collected)
-      val big = narrow.localCheckpoint(true)
-      val cc = graft.operators.Closure.connectedComponents(
-        big.select(sortableId(col("a")).as("a"), sortableId(col("b")).as("b")))
-      // map encodings back by joining the original ids (hex→long parsing of
-      // the full unsigned range is messier than a narrow join)
-      val ids = big.select(col("a").as("id")).unionByName(big.select(col("b").as("id")))
-        .distinct().select(col("id"), sortableId(col("id")).as("enc"))
-      cc
-        .join(ids.withColumnRenamed("enc", "curie").withColumnRenamed("id", "doc_id"), "curie")
-        .join(ids.withColumnRenamed("enc", "component").withColumnRenamed("id", "keep_id"), "component")
-        .select("doc_id", "keep_id")
-    }
+    Closure.connectedComponents(pairs.select(col("a").cast("long"), col("b").cast("long")),
+        driverLimit = driverLimit)
+      .select(col("curie").as("doc_id"), col("component").as("keep_id"))
   }
 
   /** End-to-end minhash dedup decision: documents → LSH pairs → groups →
@@ -615,18 +567,21 @@ object DedupOps {
     * must also stay small enough to plan). */
   val FetchProbeLimit = 10000
 
-  /** Fetch `docs` rows whose doc_id is in `ids` (a near-dup-sized set).
-    * Bounded driver probe (the [[nearDupGroups]] cost-switch pattern): if the
-    * id set fits [[FetchProbeLimit]], push it as an `IN` filter — on a
-    * doc_id-BUCKETED corpus table that filter prunes whole bucket files at
-    * the scan (point lookups; `SelectedBucketsCount` plan-pinned in tests) —
-    * else fall back to a broadcast semi-join (full scan, still no shuffle
-    * of `docs`). */
-  private[graft] def fetchDocsByIds(docs: DataFrame, ids: DataFrame): DataFrame = {
-    val probe = ids.limit(FetchProbeLimit + 1).collect().map(_.get(0))
-    if (probe.length <= FetchProbeLimit) docs.filter(col("doc_id").isin(probe: _*))
-    else docs.join(ids, Seq("doc_id"), "left_semi")
-  }
+  /** Fetch `docs` rows whose doc_id is in `ids` (a near-dup-sized set) —
+    * the one "IN filter, else semi-join" step of every candidate fetch.
+    * [[DriverProbe]]: if the id set fits [[FetchProbeLimit]], push it as an
+    * `IN` filter — on a doc_id-BUCKETED corpus table that filter prunes
+    * whole bucket files at the scan (point lookups; `SelectedBucketsCount`
+    * plan-pinned in tests) — else fall back to a semi-join on `ids` (full
+    * scan, still no shuffle of `docs` when `ids` broadcasts). Callers that
+    * already hold the ids on the driver pass a local relation: its probe
+    * runs no Spark job, and its exact size statistics let the planner
+    * broadcast it on overflow. */
+  private[graft] def fetchDocsByIds(docs: DataFrame, ids: DataFrame): DataFrame =
+    DriverProbe.bounded(ids, FetchProbeLimit) match {
+      case Some(rows) => docs.filter(col("doc_id").isin(rows.map(_.get(0)): _*))
+      case None       => docs.join(ids, Seq("doc_id"), "left_semi")
+    }
 
   def incrementalMinhashDedup(batch: DataFrame, store: DataFrame,
                               history: DataFrame, threshold: Double = 0.8,
@@ -653,47 +608,41 @@ object DedupOps {
     // a pair repeats at most once per shared band, so the effective
     // distinct-pair threshold is conservatively >= limit/bands — an
     // overflow just takes the distributed tail, which keeps its distincts.
-    val limitInt = math.min(DriverGroupLimit, Int.MaxValue - 1L).toInt
-    def probePairs(df: DataFrame): Array[(Long, Long)] = df
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .limit(limitInt + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
-    val intraProbe = probePairs(bucketPairsAll(batchBands, "band_idx", "band_hash"))
-    val crossProbe = probePairs(crossStoreCandidatesAll(batchBands, store))
+    def probePairs(df: DataFrame): Option[Array[(Long, Long)]] =
+      DriverProbe.bounded(df.select(col("a").cast("long"), col("b").cast("long")),
+        DriverGroupLimit).map(_.map(r => (r.getLong(0), r.getLong(1))))
+    val probed = for {
+      intraProbe <- probePairs(bucketPairsAll(batchBands, "band_idx", "band_hash"))
+      crossProbe <- probePairs(crossStoreCandidatesAll(batchBands, store))
+    } yield (intraProbe, crossProbe)
 
-    val dropped: DataFrame =
-      if (intraProbe.length <= limitInt && crossProbe.length <= limitInt) {
+    val dropped: DataFrame = probed match {
+      case Some((intraProbe, crossProbe)) =>
         val histIdArr = crossProbe.map(_._2).distinct.sorted
         val batchIdArr = (intraProbe.flatMap(p => Iterator(p._1, p._2)) ++
           crossProbe.map(_._1)).distinct.sorted
-        // candidate docs fetched by id — the fetchDocsByIds switch over a
-        // driver array: IN-filter point lookups when small (bucket-pruning
-        // on a bucketed corpus), else a broadcast local-relation semi-join
-        def byIds(docs: DataFrame, ids: Array[Long]): DataFrame =
-          if (ids.length <= FetchProbeLimit) docs.filter(col("doc_id").isin(ids: _*))
-          else docs.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
         val shCand = shingleArray(
-          byIds(batch.select("doc_id", "text"), batchIdArr)
-            .unionByName(byIds(history.select("doc_id", "text"), histIdArr)))
+          fetchDocsByIds(batch.select("doc_id", "text"), batchIdArr.toSeq.toDF("doc_id"))
+            .unionByName(
+              fetchDocsByIds(history.select("doc_id", "text"), histIdArr.toSeq.toDF("doc_id"))))
         // exact shingle-Jaccard verify: the ONLY full-width text work, one
         // distributed pass; the pair table rides along as a broadcast local
         // relation and the verified result is bounded by the pair probes
-        val pairsDf = broadcast((intraProbe ++ crossProbe).distinct.toSeq.toDF("a", "b"))
-        val verifiedPairs = pairsDf
-          .join(shCand.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
-          .join(shCand.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
-          .filter(shingleJaccardFromArrays(col("sh_a"), col("sh_b")) >= threshold)
+        val verified = verifiedPairs(
+            broadcast((intraProbe ++ crossProbe).distinct.toSeq.toDF("a", "b")),
+            shCand, shCand, threshold)
           .select(col("a").cast("long"), col("b").cast("long"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
         // identical rule to the distributed tail: every member of a verified
         // component containing a historical doc is dropped, plus every
         // non-representative member of any component
         val histSet = histIdArr.toSet
-        val comp = DriverUnionFind.components(verifiedPairs.iterator)(
+        val comp = DriverUnionFind.components(verified.iterator)(
           (x, y) => math.min(x, y))
         val histKeep = comp.collect { case (d, c) if histSet(d) => c }.toSet
         val ids = comp.collect { case (d, c) if histKeep(c) || d != c => d }.toSeq.sorted
         broadcast(ids.toDF("doc_id")) // driver-sized by the probe bounds
-      } else {
+      case None =>
         // distributed tail (unchanged semantics): verify candidates with the
         // exact shingle-Jaccard predicate — ONLY candidate docs' text is
         // (re-)shingled, fetched by candidate id — then components + drop set
@@ -707,14 +656,8 @@ object DedupOps {
         val shBatch = shingleArray(batch.join(batchIds, Seq("doc_id"), "left_semi"))
           .localCheckpoint(false)
         val shHist = shingleArray(fetchDocsByIds(history, histIds))
-        def verified(pairs: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame =
-          pairs
-            .join(shA.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
-            .join(shB.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
-            .filter(shingleJaccardFromArrays(col("sh_a"), col("sh_b")) >= threshold)
-            .select("a", "b")
-        val allPairs = verified(intra, shBatch, shBatch)
-          .unionByName(verified(crossPinned, shBatch, shHist))
+        val allPairs = verifiedPairs(intra, shBatch, shBatch, threshold).select("a", "b")
+          .unionByName(verifiedPairs(crossPinned, shBatch, shHist, threshold).select("a", "b"))
         // components over batch ∪ matched-history nodes (pair-list-sized)
         val groups = nearDupGroups(allPairs)
         val histComponents = groups.join(histIds, Seq("doc_id"), "left_semi")
@@ -729,7 +672,7 @@ object DedupOps {
           .unionByName(groups.filter(col("doc_id") =!= col("keep_id")).select("doc_id"))
           .distinct()
           .localCheckpoint(false)
-      }
+    }
     val survivors = batch.join(dropped, Seq("doc_id"), "left_anti")
     val updated = store.select("doc_id", "band_idx", "band_hash")
       .unionByName(batchBands.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"))

@@ -1,9 +1,10 @@
 package graft.operators
 
 /**
- * Driver-side union-find with path compression — the small-graph half of the
- * cost-based connected-components switch used by BOTH entity merging
- * (KgPipeline.xrefCanonicalMap) and near-dup grouping (DedupOps.nearDupGroups).
+ * Driver-side union-find with path compression — the small-graph half of
+ * [[Closure.connectedComponents]]' cost switch (entity merging and near-dup
+ * grouping both go through it), also used directly by
+ * `DedupOps.incrementalMinhashDedup` on verified pairs it already holds.
  * Kept generic so a root-preference rule (e.g. numeric min) can be folded
  * into the unions instead of a post-pass.
  */

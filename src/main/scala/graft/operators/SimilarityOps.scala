@@ -156,20 +156,16 @@ object SimilarityOps {
     // hash-derived, not a limit).
     val narrow = embeddings
       .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
-    // bounded probe first (the fetchDocsByIds pattern): when the corpus fits
-    // the cap the probe IS the whole set — one collect job instead of
-    // count + hash-filter + collect; only a genuinely over-cap corpus pays
-    // the exact count the hash sample divisor needs
-    val lim = math.min(maxTrainRows, Int.MaxValue - 1L).toInt
-    val probe = narrow.limit(lim + 1).collect()
-    val rows =
-      if (probe.length <= lim) probe
-      else {
-        val n = embeddings.count()
-        narrow.filter(
-          pmod(xxhash64(col("vec_id"), lit(seed)),
-            lit((n + maxTrainRows - 1) / maxTrainRows)) === 0).collect()
-      }
+    // DriverProbe first: when the corpus fits the cap the probe IS the
+    // whole set — one collect job instead of count + hash-filter + collect;
+    // only a genuinely over-cap corpus pays the exact count the hash sample
+    // divisor needs
+    val rows = DriverProbe.bounded(narrow, maxTrainRows).getOrElse {
+      val n = embeddings.count()
+      narrow.filter(
+        pmod(xxhash64(col("vec_id"), lit(seed)),
+          lit((n + maxTrainRows - 1) / maxTrainRows)) === 0).collect()
+    }
     val data = rows.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     IvfIndex(driverKMeans(data, nLists, maxIter, seed))
   }

@@ -242,17 +242,15 @@ object TextOps {
       coalesce(tokenCount(col("text")).cast("long"), lit(0L)).as("n_tokens"),
       expr(s"`doc_id` div $bucketWidth").as("bucket"))
     // level 1: bucket totals → driver prefix (rows = corpus/bucketWidth) →
-    // broadcast bucket-offset table. Limit-probed (the Grounder.build cost
-    // switch shape): correctness needs the COMPLETE totals, so cap+1 rows
-    // means the dial is wrong and the build fails loudly
+    // broadcast bucket-offset table, read with DriverProbe (the
+    // Grounder.build shape): correctness needs the COMPLETE totals, so an
+    // over-cap probe means the dial is wrong and the build fails loudly
     val spark = documents.sparkSession
-    val limitInt = math.min(MaxDriverBuckets, Int.MaxValue - 2L).toInt
-    val probed = counted.groupBy("bucket").agg(sum("n_tokens").as("total"))
-      .limit(limitInt + 1).collect()
-    if (probed.length > limitInt)
-      throw new IllegalStateException(
+    val probed = DriverProbe.bounded(
+        counted.groupBy("bucket").agg(sum("n_tokens").as("total")), MaxDriverBuckets)
+      .getOrElse(throw new IllegalStateException(
         s"packSequences: more than $MaxDriverBuckets prefix-sum buckets — raise " +
-          s"bucketWidth (currently $bucketWidth) so corpus/bucketWidth fits the driver")
+          s"bucketWidth (currently $bucketWidth) so corpus/bucketWidth fits the driver"))
     val totals = probed.map { r =>
       require(!r.isNullAt(0), "packSequences: null doc_id has no stream position")
       (r.getLong(0), r.getLong(1))
@@ -408,9 +406,8 @@ object TextOps {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** Probe bound for the driver-side BPE training cost-switch: vocabularies
-    * at or under this many distinct words train in-driver (the
-    * [[graft.pipeline.KgPipeline]] union-find cost-switch precedent);
-    * larger ones run the distributed round loop. */
+    * at or under this many distinct words train in-driver (one
+    * [[DriverProbe]]); larger ones run the distributed round loop. */
   val BpeDriverVocabLimit = 200000
 
   /**
@@ -448,15 +445,15 @@ object TextOps {
                               endOfWord: Option[String] = Some("</w>"),
                               driverVocabLimit: Int = BpeDriverVocabLimit): (Seq[BpeMerge], DataFrame) = {
     require(nMerges > 0, s"nMerges must be positive (got $nMerges)")
-    // bounded probe (the fetchDocsByIds pattern): limit+1 rows decide the path
-    val probe = words.select("word", "cnt").limit(driverVocabLimit + 1).collect()
-    if (probe.length <= driverVocabLimit) {
-      val merges = trainBpeDriver(
-        probe.map(r => (r.getString(0), r.getLong(1))).toSeq, nMerges, endOfWord)
-      val vocab = applyBpeMergesStaged(words, merges.map(m => (m.left, m.right)), endOfWord)
-        .select("word", "cnt", "seg")
-      (merges, vocab)
-    } else trainBpeDistributed(words, nMerges, endOfWord)
+    DriverProbe.bounded(words.select("word", "cnt"), driverVocabLimit) match {
+      case Some(probe) =>
+        val merges = trainBpeDriver(
+          probe.map(r => (r.getString(0), r.getLong(1))).toSeq, nMerges, endOfWord)
+        val vocab = applyBpeMergesStaged(words, merges.map(m => (m.left, m.right)), endOfWord)
+          .select("word", "cnt", "seg")
+        (merges, vocab)
+      case None => trainBpeDistributed(words, nMerges, endOfWord)
+    }
   }
 
   /** How many chained merge folds to collapse into one plan before cutting

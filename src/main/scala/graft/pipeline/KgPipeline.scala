@@ -61,39 +61,27 @@ object KgPipeline {
     (nodes, edges)
   }
 
+  /** Above this edge count, xref CC runs distributed; below, driver union-find
+    * — an alias of [[Closure.DriverGraphLimit]], the connected-components
+    * cost switch [[xrefCanonicalMap]] goes through. */
+  val DriverUnionFindLimit = Closure.DriverGraphLimit
+
   /**
    * Xref-based entity merge (J3): build undirected (curie, xref) links from
    * node metadata, run connected components, return `curie → canonical` as a
    * driver map suitable for broadcast (ontology-sized by construction).
    */
-  /** Above this edge count, xref CC runs distributed; below, driver union-find. */
-  val DriverUnionFindLimit = 200000L
-
   def xrefCanonicalMap(nodes: DataFrame, preferPrefix: Option[String] = None,
                        extraEdges: Option[DataFrame] = None): Map[String, String] = {
     val nodeXrefs = nodes
       .select(col("curie").as("a"), explode(col("xrefs")).as("b"))
       .filter(col("b").isNotNull)
     val xrefEdges = extraEdges.fold(nodeXrefs)(e => nodeXrefs.unionByName(e))
-
-    // Ontology xref graphs are tiny relative to the corpus; SURVEY J3's
-    // driver union-find + broadcast map is both exact and ~20× cheaper in
-    // job-scheduling overhead than the iterative join loop. The distributed
-    // path stays for genuinely large entity graphs.
-    val probe = xrefEdges.limit(DriverUnionFindLimit.toInt + 1).collect()
-    val pairs: Array[(String, String)] =
-      if (probe.length <= DriverUnionFindLimit) {
-        // lexicographic-min root: the SAME canonical-label convention as the
-        // distributed branch (Closure.connectedComponents' min-CURIE roots),
-        // so the component labels cannot depend on collect/partition order or
-        // on which side of the cost switch a given graph lands
-        graft.operators.DriverUnionFind.components(
-          probe.iterator.map(r => (r.getString(0), r.getString(1))))(
-          (x, y) => if (x <= y) x else y).toArray
-      } else {
-        Closure.connectedComponents(xrefEdges)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-      }
+    // ontology xref graphs are tiny relative to the corpus: Closure's cost
+    // switch runs them as a driver union-find (one probe job) and keeps the
+    // distributed path for genuinely large entity graphs
+    val pairs = Closure.connectedComponents(xrefEdges)
+      .collect().map(r => (r.getString(0), r.getString(1)))
 
     // representative per component: prefer the ontology's own prefix (so the
     // merged entity keeps its PATO id, not a lexicographically-smaller

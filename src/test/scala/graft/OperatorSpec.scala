@@ -117,6 +117,8 @@ class OperatorSpec extends AnyFunSuite {
     val docs = Seq("aaab aaab", "aaab").toDF("text") // word freq {aaab: 3}
     val (mD, vD) = TextOps.learnBpeMerges(docs, nMerges = 2)
     val (mX, vX) = TextOps.learnBpeMerges(docs, nMerges = 2, driverVocabLimit = 0)
+    // an unbounded driver limit must not overflow the probe's limit + 1
+    val (mM, vM) = TextOps.learnBpeMerges(docs, nMerges = 2, driverVocabLimit = Int.MaxValue)
     // round 1: (a,a)=6 beats (a,b)=3, (b,</w>)=3; the greedy fold then
     // segments aaab</w> as [aa, a, b, </w>], never [a, aa, ...]
     assert(mD.head == TextOps.BpeMerge(1, "a", "a", "aa", 6L))
@@ -124,12 +126,12 @@ class OperatorSpec extends AnyFunSuite {
     val exp2 = Seq(("aa", "a"), ("a", "b"), ("b", "</w>"))
       .minBy { case (l, r) => md5hex(l + " " + r) }
     assert((mD(1).left, mD(1).right) == exp2 && mD(1).pairCount == 3L)
-    assert(mX == mD) // cost-switch paths agree on the learned table
+    assert(mX == mD && mM == mD) // cost-switch paths agree on the learned table
     // ...and on the final segmentations: the driver path APPLIES the table,
     // the distributed path folded round-by-round
     def segs(v: org.apache.spark.sql.DataFrame) =
       v.orderBy("word").collect().map(r => (r.getString(0), r.getSeq[String](2).toList)).toList
-    assert(segs(vX) == segs(vD))
+    assert(segs(vX) == segs(vD) && segs(vM) == segs(vD))
     // applying the learned table from scratch reproduces the trained vocab
     val applied = vD.select(col("word"), col("cnt"),
       TextOps.applyBpeMerges(
@@ -1009,11 +1011,25 @@ class OperatorSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(negGroups == Map(-42L -> -999L, -999L -> -999L, 7L -> -999L), negGroups.toString)
     // the distributed branch (forced via driverLimit = 0) must agree exactly
-    val distGroups = DedupOps.nearDupGroups(
-        Seq((-42L, -999L), (-999L, 7L), (1L, 5L), (5L, 9L)).toDF("a", "b"), driverLimit = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(distGroups == Map(-42L -> -999L, -999L -> -999L, 7L -> -999L,
-      1L -> 1L, 5L -> 1L, 9L -> 1L), distGroups.toString)
+    // with the driver branch, on ids across the sign bit and at both ends of
+    // the long range (numeric order, never the order of an encoding)
+    val mixed = Seq((-42L, -999L), (-999L, 7L), (1L, 5L), (5L, 9L),
+      (Long.MaxValue, -1L), (0L, Long.MaxValue), (3L, Long.MinValue)).toDF("a", "b")
+    val wantMixed = Map(-42L -> -999L, -999L -> -999L, 7L -> -999L,
+      1L -> 1L, 5L -> 1L, 9L -> 1L, Long.MaxValue -> -1L, -1L -> -1L, 0L -> -1L,
+      3L -> Long.MinValue, Long.MinValue -> Long.MinValue)
+    for (limit <- Seq(DedupOps.DriverGroupLimit, 0L)) {
+      val got = DedupOps.nearDupGroups(mixed, driverLimit = limit)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == wantMixed, s"driverLimit=$limit: $got")
+    }
+    // a pair with a null id: both branches return the same rows, neither throws
+    val withNull = Seq((Some(1L), Some(5L)), (None, Some(5L))).toDF("a", "b")
+    val nullDrv = DedupOps.nearDupGroups(withNull).collect().toSet
+    val nullDst = DedupOps.nearDupGroups(withNull, driverLimit = 0).collect().toSet
+    assert(nullDrv == nullDst, s"null pair: driver $nullDrv vs distributed $nullDst")
+    assert(nullDrv.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r.getLong(1)) ==
+      Set(1L -> 1L, 5L -> 1L), nullDrv.toString)
 
     val base = (0 until 40).map(i => s"tok$i")
     val docs = Seq(
