@@ -242,15 +242,14 @@ object SparkEntry {
     // r7: the distinct-token arrays are staged per DOC before the
     // inequality self-join (the shingleJaccardFromArrays rule) — the
     // text-to-text form re-split/deduped both texts per PAIR row (~n²/2
-    // tokenizations instead of n). Same round(intersect/union, 6) value.
+    // tokenizations instead of n), scored by the shared array Jaccard.
     "q_ngram_jaccard" -> ((s, dir) => {
       val d = docs(s, dir).filter(col("doc_id") < 100)
         .select(col("doc_id"),
           array_distinct(split(DedupOps.normText(col("text")), " ")).as("ta"))
       d.alias("x").join(d.alias("y"), col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-          round(size(array_intersect(col("x.ta"), col("y.ta"))).cast("double") /
-            size(array_union(col("x.ta"), col("y.ta"))).cast("double"), 6).as("jac"))
+          DedupOps.shingleJaccardFromArrays(col("x.ta"), col("y.ta")).as("jac"))
         .filter(col("jac") >= 0.5)
     }),
 

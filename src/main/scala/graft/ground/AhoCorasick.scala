@@ -18,51 +18,71 @@ import scala.collection.mutable
  *    scoring/top-1 window downstream resolves them.
  *
  * Construction is the textbook BFS failure-link build; lookup is O(|text| +
- * #matches). The compiled automaton is CSR-FLAT: one chars array + one
- * targets array indexed by per-node offsets (`base`), outputs likewise —
- * zero per-node objects. A Bioregistry-scale automaton (10^5-10^6 patterns)
- * compacts to tens of MB, so at 32 scan threads the hot states live in the
- * shared LLC instead of a million pointer-chased heap arrays in DRAM — this
- * is what the 10^12-turn scan is bound by (BASELINE.md). Immutable after
- * `build` and Serializable (primitive arrays only) so broadcasting is cheap.
+ * #matches). The compiled automaton is CSR-FLAT — per-node primitive arrays,
+ * zero per-node objects — and its transitions are constant-time:
+ *  - every character of the lexicon's alphabet gets a class id (`charClass`):
+ *    the 63 that label the most trie edges a bit of their own, every other
+ *    one the shared RARE bit 63;
+ *  - nodes are numbered in BFS order with each node's children enqueued in
+ *    class order, so the children of node s are the consecutive ids
+ *    base(s)+1 .. base(s+1) and no target array is needed;
+ *  - each node stores a 64-bit `childMask` of the classes it has children
+ *    for, so a child is one bit test and one `Long.bitCount` rank past
+ *    `base(s)`;
+ *  - a node's rare children are its last ids, sorted by char and searched
+ *    through `tailChars` (empty when the alphabet fits in 63 bits);
+ *  - a character outside the alphabet (no class) resets to the root without
+ *    walking failure links — no node has a child for it.
+ * A Bioregistry-scale automaton (10^5-10^6 patterns) compacts to tens of MB,
+ * so at 32 scan threads the hot states live in the shared LLC instead of a
+ * million pointer-chased heap arrays in DRAM — this is what the 10^12-turn
+ * scan is bound by (BASELINE.md). Immutable after `build` and Serializable
+ * (primitive arrays only) so broadcasting is cheap.
  */
 final class AhoCorasick private (
-    base: Array[Int],          // node → offset into transChars/transTargets (len nNodes+1)
-    transChars: Array[Char],   // per node: SORTED transition chars
-    transTargets: Array[Int],  // parallel targets
-    rootAscii: Array[Int],     // direct table for the root's ASCII transitions (-1 = none)
+    charClass: Array[Byte],    // char → class id (0..62 own bit, 63 rare, -1 outside the alphabet)
+    base: Array[Int],          // node s's children are nodes base(s)+1 .. base(s+1) (len nNodes+1)
+    childMask: Array[Long],    // node → bitmap of the classes it has children for
+    tailChars: Array[Char],    // node v → the rare char of its incoming edge, at v-1
     fail: Array[Int],
     outOff: Array[Int],        // node → offset into outPids (len nNodes+1)
     outPids: Array[Int],       // pattern ids ending at the node (output links merged)
     patLen: Array[Int],        // pattern lengths (avoids String deref in the hot loop)
     val patterns: Array[String]) extends Serializable {
+  import AhoCorasick.{RareClass, isWordChar}
 
-  @inline private def lookup(s: Int, c: Char): Int = {
-    if (s == 0 && c < 128) return rootAscii(c)
-    var lo = base(s)
-    var hi = base(s + 1) - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val mc = transChars(mid)
-      if (mc == c) return transTargets(mid)
-      else if (mc < c) lo = mid + 1
-      else hi = mid - 1
+  @inline private def lookup(s: Int, c: Char, cls: Int): Int = {
+    val m = childMask(s)
+    if (cls != RareClass) {
+      val bit = 1L << cls
+      if ((m & bit) == 0L) -1 else base(s) + 1 + java.lang.Long.bitCount(m & (bit - 1L))
+    } else if (m >= 0L) -1 // the rare bit is the sign bit
+    else {
+      var lo = base(s) + java.lang.Long.bitCount(m) // first rare child
+      var hi = base(s + 1)
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val mc = tailChars(mid - 1)
+        if (mc == c) return mid
+        else if (mc < c) lo = mid + 1
+        else hi = mid - 1
+      }
+      -1
     }
-    -1
   }
 
   @inline private def step(state: Int, c: Char): Int = {
+    val cls = if (c < charClass.length) charClass(c) else -1
+    if (cls < 0) return 0
     var s = state
     while (true) {
-      val nxt = lookup(s, c)
+      val nxt = lookup(s, c, cls)
       if (nxt >= 0) return nxt
       if (s == 0) return 0
       s = fail(s)
     }
     0
   }
-
-  @inline private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c)
 
   /** Allocation-free scan: invokes `f(start, endExclusive, patternId)` per match. */
   def findAllInto(text: String, f: (Int, Int, Int) => Unit): Unit = {
@@ -120,7 +140,7 @@ final class AhoCorasick private (
    */
   final class Scanner {
     private val ring = new Array[Char](scanRingSize)
-    private val mask = ring.length - 1
+    private val ringMask = ring.length - 1
     private var s: org.apache.spark.unsafe.types.UTF8String = _
     private var nBytes = 0
     private var j = 0            // byte cursor
@@ -128,54 +148,60 @@ final class AhoCorasick private (
     private var pend2 = -1
     private var pendingSpace = false
     private var produced = false
+    private var low = -1         // low surrogate of the last decoded code point, else -1
 
     // next normalized UTF-16 unit, or -1 at end — streaming equivalent of
-    // normalize(): per-unit lowercase, [-_\s]+ runs fold to one ' ', leading
-    // and trailing runs dropped (the deferred-space trick).
+    // normalize(): per-unit fold (lowercase, separators to ' '), [-_\s]+ runs
+    // fold to one ' ', leading and trailing runs dropped (the deferred-space
+    // trick). An ASCII byte is one fold-table load; multi-byte sequences go
+    // to the out-of-line decoder, which keeps this loop small enough to inline.
     private def nextNorm(): Int = {
       if (pend1 >= 0) { val r = pend1; pend1 = pend2; pend2 = -1; return r }
       while (j < nBytes) {
-        val b0 = s.getByte(j) & 0xFF
-        var u = 0      // decoded UTF-16 unit
-        var low = -1   // low surrogate for supplementary code points
-        // a multi-byte sequence truncated at the buffer end degrades to
-        // U+FFFD (like java.lang.String's decoder) instead of reading past
-        // numBytes into adjacent row memory — Spark-written data is always
-        // valid UTF-8, but the kernel must never depend on that
-        if (b0 < 0x80) { u = b0; j += 1 }
-        else if (b0 < 0xE0) { // 2-byte sequence
-          if (j + 1 < nBytes) { u = ((b0 & 0x1F) << 6) | (s.getByte(j + 1) & 0x3F); j += 2 }
-          else { u = 0xFFFD; j = nBytes }
-        } else if (b0 < 0xF0) { // 3-byte sequence
-          if (j + 2 < nBytes) {
-            u = ((b0 & 0x0F) << 12) | ((s.getByte(j + 1) & 0x3F) << 6) |
-              (s.getByte(j + 2) & 0x3F); j += 3
-          } else { u = 0xFFFD; j = nBytes }
-        } else { // 4-byte sequence → surrogate pair
-          if (j + 3 < nBytes) {
-            val cp = ((b0 & 0x07) << 18) | ((s.getByte(j + 1) & 0x3F) << 12) |
-              ((s.getByte(j + 2) & 0x3F) << 6) | (s.getByte(j + 3) & 0x3F)
-            j += 4
-            u = 0xD800 + ((cp - 0x10000) >> 10)
-            low = 0xDC00 + ((cp - 0x10000) & 0x3FF)
-          } else { u = 0xFFFD; j = nBytes }
-        }
-        val c = u.toChar
-        if (Character.isWhitespace(c) || c == '-' || c == '_') {
+        val b0 = s.getByte(j)
+        low = -1
+        val c = if (b0 >= 0) { j += 1; AhoCorasick.AsciiFold(b0) } else decodeMultiByte(b0 & 0xFF)
+        if (c == ' ') {
           pendingSpace = true // (separators are BMP; low is always -1 here)
         } else {
-          val lc = Character.toLowerCase(c)
           if (pendingSpace && produced) {
             pendingSpace = false
-            pend1 = lc; pend2 = low
+            pend1 = c; pend2 = low
             return ' '
           }
           pendingSpace = false; produced = true
           if (low >= 0) pend1 = low
-          return lc
+          return c
         }
       }
       -1
+    }
+
+    // folded unit of the sequence led by b0 >= 0x80 (a supplementary code
+    // point yields its high surrogate and sets `low`). A sequence truncated
+    // at the buffer end degrades to U+FFFD (like java.lang.String's decoder)
+    // instead of reading past numBytes into adjacent row memory — Spark-
+    // written data is always valid UTF-8, but the kernel must never depend on that
+    private def decodeMultiByte(b0: Int): Char = {
+      var u = 0
+      if (b0 < 0xE0) { // 2-byte sequence
+        if (j + 1 < nBytes) { u = ((b0 & 0x1F) << 6) | (s.getByte(j + 1) & 0x3F); j += 2 }
+        else { u = 0xFFFD; j = nBytes }
+      } else if (b0 < 0xF0) { // 3-byte sequence
+        if (j + 2 < nBytes) {
+          u = ((b0 & 0x0F) << 12) | ((s.getByte(j + 1) & 0x3F) << 6) |
+            (s.getByte(j + 2) & 0x3F); j += 3
+        } else { u = 0xFFFD; j = nBytes }
+      } else { // 4-byte sequence → surrogate pair
+        if (j + 3 < nBytes) {
+          val cp = ((b0 & 0x07) << 18) | ((s.getByte(j + 1) & 0x3F) << 12) |
+            ((s.getByte(j + 2) & 0x3F) << 6) | (s.getByte(j + 3) & 0x3F)
+          j += 4
+          u = 0xD800 + ((cp - 0x10000) >> 10)
+          low = 0xDC00 + ((cp - 0x10000) & 0x3FF)
+        } else { u = 0xFFFD; j = nBytes }
+      }
+      AhoCorasick.foldUnit(u.toChar)
     }
 
     /** f(start, endExclusive, patternId), coordinates in normalized space. */
@@ -188,7 +214,7 @@ final class AhoCorasick private (
       while (cur >= 0) {
         val la = nextNorm() // lookahead resolves the right boundary at emission
         val c = cur.toChar
-        ring(i & mask) = c
+        ring(i & ringMask) = c
         state = step(state, c)
         var k = outOff(state)
         val kEnd = outOff(state + 1)
@@ -196,7 +222,7 @@ final class AhoCorasick private (
           while (k < kEnd) {
             val pid = outPids(k)
             val start = i + 1 - patLen(pid)
-            if (start == 0 || !isWordChar(ring((start - 1) & mask))) f(start, i + 1, pid)
+            if (start == 0 || !isWordChar(ring((start - 1) & ringMask))) f(start, i + 1, pid)
             k += 1
           }
         }
@@ -212,6 +238,37 @@ final class AhoCorasick private (
 
 object AhoCorasick {
 
+  /** Class id of the characters that share the rare bit (bit 63, the sign bit). */
+  private val RareClass = 63
+
+  /**
+   * Per-unit fold of the ASCII range: separators (`Character.isWhitespace`,
+   * '-', '_') to ' ', every other unit to `Character.toLowerCase`. Derived
+   * from `Character.*` at class init, never written out by hand.
+   */
+  private[graft] val AsciiFold: Array[Char] = Array.tabulate(128) { i =>
+    val c = i.toChar
+    if (Character.isWhitespace(c) || c == '-' || c == '_') ' ' else Character.toLowerCase(c)
+  }
+
+  /** `Character.isLetterOrDigit` over the ASCII range, derived at class init. */
+  private[graft] val AsciiWord: Array[Boolean] =
+    Array.tabulate(128)(i => Character.isLetterOrDigit(i.toChar))
+
+  /**
+   * One UTF-16 unit of [[normalize]]: ' ' for a separator, else the
+   * lowercased unit. No non-separator lowercases to ' ', so ' ' marks the
+   * separators. The only separators outside ASCII are whitespace.
+   */
+  @inline private[ground] def foldUnit(c: Char): Char =
+    if (c < 128) AsciiFold(c)
+    else if (Character.isWhitespace(c)) ' '
+    else Character.toLowerCase(c)
+
+  /** Word character for the boundary rule — judged per UTF-16 unit. */
+  @inline private def isWordChar(c: Char): Boolean =
+    if (c < 128) AsciiWord(c) else Character.isLetterOrDigit(c)
+
   /** Casefold + collapse whitespace/dash runs to single spaces (F5 normalization). */
   def normalize(s: String): String = {
     if (s == null) return ""
@@ -219,11 +276,11 @@ object AhoCorasick {
     var i = 0
     var lastSpace = true // also trims leading separators
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c) || c == '-' || c == '_') {
+      val c = foldUnit(s.charAt(i))
+      if (c == ' ') {
         if (!lastSpace) { sb.append(' '); lastSpace = true }
       } else {
-        sb.append(Character.toLowerCase(c)); lastSpace = false
+        sb.append(c); lastSpace = false
       }
       i += 1
     }
@@ -238,7 +295,8 @@ object AhoCorasick {
     val gotoMaps = mutable.ArrayBuffer[java.util.HashMap[Character, Integer]](new java.util.HashMap)
     val outSets = mutable.ArrayBuffer[mutable.ArrayBuffer[Int]](new mutable.ArrayBuffer)
 
-    // trie insert
+    // trie insert, counting the edges each character labels
+    val edgeCounts = new Array[Int](Char.MaxValue + 1)
     var pid = 0
     while (pid < patterns.length) {
       val p = patterns(pid)
@@ -248,6 +306,7 @@ object AhoCorasick {
         val c = Character.valueOf(p.charAt(i))
         val nxt: Integer = gotoMaps(node).get(c)
         if (nxt == null) {
+          edgeCounts(c.charValue()) += 1
           gotoMaps += new java.util.HashMap
           outSets += new mutable.ArrayBuffer
           gotoMaps(node).put(c, Integer.valueOf(gotoMaps.length - 1))
@@ -259,76 +318,82 @@ object AhoCorasick {
       pid += 1
     }
 
-    // BFS failure links + output merge
+    // character classes: the 63 characters labelling the most edges get a
+    // bit each (ties by char, so the layout is deterministic), every other
+    // character of the alphabet the rare bit
+    val alphabet = new mutable.ArrayBuffer[Int]
+    var ch = 0
+    while (ch <= Char.MaxValue) { if (edgeCounts(ch) > 0) alphabet += ch; ch += 1 }
+    val byFreq = alphabet.sortBy(c => (-edgeCounts(c), c))
+    val charClass = Array.fill[Byte](if (byFreq.isEmpty) 0 else byFreq.max + 1)(-1)
+    byFreq.iterator.zipWithIndex.foreach { case (c, rank) => charClass(c) = math.min(rank, RareClass).toByte }
+
+    // one BFS numbers the nodes, resolves failure links, merges outputs and
+    // fills the per-id arrays. Each node's children are enqueued in
+    // (class, char) order, so they get consecutive ids in exactly the order
+    // the bitmap rank (and the rare tail's binary search) assumes. Build keeps
+    // Character/Integer deliberately — java.util.Map[Char, Int] in Scala
+    // silently unboxes missing-key null to 0, which corrupts the trie.
     val n = gotoMaps.length
+    val order = new Array[Int](n)     // id → trie node; doubles as the BFS queue
+    val id = new Array[Int](n)        // trie node → id
+    val failNode = new Array[Int](n)  // trie node → failure trie node
+    val base = new Array[Int](n + 1)
+    val childMask = new Array[Long](n)
     val fail = new Array[Int](n)
-    val queue = new mutable.Queue[Int]
-    gotoMaps(0).forEach((_, child) => { fail(child.intValue()) = 0; queue.enqueue(child.intValue()) })
-    while (queue.nonEmpty) {
-      val u = queue.dequeue()
-      gotoMaps(u).forEach { (c: Character, vBoxed: Integer) =>
-        val v = vBoxed.intValue()
-        // find failure state for v: deepest proper suffix state with a c-edge
-        var f = fail(u)
+    val outOff = new Array[Int](n + 1)
+    val tailChars = new Array[Char](if (byFreq.length > RareClass) n - 1 else 0)
+    var kids = new Array[Long](16)    // per child: ((class << 16 | char) << 32) | trie node
+    var s = 0
+    var next = 1
+    while (s < next) {
+      val u = order(s)
+      var deg = 0
+      val it = gotoMaps(u).entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        val c = e.getKey.charValue()
+        if (deg == kids.length) kids = java.util.Arrays.copyOf(kids, 2 * deg)
+        kids(deg) = (((charClass(c).toLong << 16) | c) << 32) | e.getValue.intValue()
+        deg += 1
+      }
+      java.util.Arrays.sort(kids, 0, deg)
+      base(s + 1) = base(s) + deg
+      fail(s) = id(failNode(u))
+      outOff(s + 1) = outOff(s) + outSets(u).length
+      var k = 0
+      while (k < deg) {
+        val cls = (kids(k) >>> 48).toInt
+        val c = (kids(k) >>> 32).toChar
+        val v = kids(k).toInt
+        childMask(s) |= 1L << cls
+        if (cls == RareClass) tailChars(next - 1) = c
+        // failure state for v: deepest proper suffix state with a c-edge
+        val boxed = Character.valueOf(c)
+        var f = failNode(u)
         var resolved = -1
         while (resolved < 0) {
-          val nxt: Integer = gotoMaps(f).get(c)
+          val nxt: Integer = gotoMaps(f).get(boxed)
           if (nxt != null && nxt.intValue() != v) resolved = nxt.intValue()
           else if (f == 0) resolved = 0
-          else f = fail(f)
+          else f = failNode(f)
         }
-        fail(v) = resolved
+        failNode(v) = resolved
         outSets(v) ++= outSets(resolved)
-        queue.enqueue(v)
-      }
-    }
-
-    // compile the HashMap trie (build-friendly) into CSR-FLAT arrays
-    // (scan-friendly): one chars array + one targets array with per-node
-    // offsets — zero per-node objects, boxing-free binary-search transitions,
-    // plus a direct root table. Build keeps Character/Integer deliberately —
-    // java.util.Map[Char, Int] in Scala silently unboxes missing-key null
-    // to 0, which corrupts the trie.
-    val nNodes = gotoMaps.length
-    val base = new Array[Int](nNodes + 1)
-    var s = 0
-    while (s < nNodes) { base(s + 1) = base(s) + gotoMaps(s).size; s += 1 }
-    val transChars = new Array[Char](base(nNodes))
-    val transTargets = new Array[Int](base(nNodes))
-    s = 0
-    while (s < nNodes) {
-      val entries = new mutable.ArrayBuffer[(Char, Int)](gotoMaps(s).size)
-      gotoMaps(s).forEach((c: Character, t: Integer) => entries += ((c.charValue(), t.intValue())))
-      val sorted = entries.sortBy(_._1)
-      var k = 0
-      while (k < sorted.length) {
-        transChars(base(s) + k) = sorted(k)._1
-        transTargets(base(s) + k) = sorted(k)._2
+        order(next) = v; id(v) = next; next += 1
         k += 1
       }
       s += 1
     }
-    val rootAscii = Array.fill(128)(-1)
-    var i = base(0)
-    while (i < base(1)) {
-      val c = transChars(i)
-      if (c < 128) rootAscii(c) = transTargets(i)
-      i += 1
-    }
-    val outOff = new Array[Int](nNodes + 1)
+    val outPids = new Array[Int](outOff(n))
     s = 0
-    while (s < nNodes) { outOff(s + 1) = outOff(s) + outSets(s).length; s += 1 }
-    val outPids = new Array[Int](outOff(nNodes))
-    s = 0
-    while (s < nNodes) {
-      var k = 0
-      val set = outSets(s)
-      while (k < set.length) { outPids(outOff(s) + k) = set(k); k += 1 }
+    while (s < n) {
+      outSets(order(s)).copyToArray(outPids, outOff(s))
       s += 1
     }
     val patLen = patterns.map(_.length)
 
-    new AhoCorasick(base, transChars, transTargets, rootAscii, fail,
+    new AhoCorasick(charClass, base, childMask, tailChars, fail,
       outOff, outPids, patLen, patterns)
   }
 }

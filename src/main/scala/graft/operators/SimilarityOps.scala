@@ -174,10 +174,9 @@ object SimilarityOps {
    * Seeded k-means++ init + Lloyd iterations on the driver, over the
    * hash-capped training sample. Deterministic for a fixed (data order,
    * seed); empty clusters keep their previous centroid (the MLlib
-   * convention); stops early when no assignment changes. The assignment
-   * step — the O(n·k·dim) part — runs data-parallel over points (writes are
-   * per-index, result independent of scheduling); the O(n·dim) accumulation
-   * stays serial so centroid sums are reproducible left-to-right doubles.
+   * convention); stops early when no assignment changes. Runs sequentially
+   * on the calling thread — no shared JVM-wide pool — and the accumulation
+   * sums left to right, so centroids are reproducible doubles.
    */
   private[operators] def driverKMeans(data: Array[Array[Double]], k: Int,
                                       maxIter: Int, seed: Long): Array[Array[Double]] = {
@@ -222,14 +221,15 @@ object SimilarityOps {
     var iter = 0
     var moved = true
     while (iter < maxIter && moved) {
-      val anyMoved = new java.util.concurrent.atomic.AtomicBoolean(false)
-      java.util.stream.IntStream.range(0, n).parallel().forEach { p =>
+      moved = false
+      var p = 0
+      while (p < n) {
         var best = 0; var bd = Double.MaxValue
         var j = 0
         while (j < k) { val d = dist2(data(p), centers(j)); if (d < bd) { bd = d; best = j }; j += 1 }
-        if (assign(p) != best) { assign(p) = best; anyMoved.set(true) }
+        if (assign(p) != best) { assign(p) = best; moved = true }
+        p += 1
       }
-      moved = anyMoved.get()
       if (moved) {
         val sums = Array.ofDim[Double](k, dim)
         val counts = new Array[Long](k)

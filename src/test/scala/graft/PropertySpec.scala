@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.curie.Converter
 import graft.fixtures.MiniOntology
@@ -73,15 +73,16 @@ object GraftProperties extends Properties("graft") {
   private val textGen: Gen[String] = Gen.listOf(Gen.frequency(
     6 -> Gen.alphaChar, 2 -> sepChar, 1 -> weirdChar,
     1 -> Gen.const('\uD83D'), 1 -> Gen.const('\uDE00') // force surrogate pairs too
-  )).map { cs =>
-    // keep only well-formed UTF-16 (UTF8String.fromString requires it)
+  )).map(cs => wellFormed(cs.mkString))
+
+  /** Drops unpaired surrogates: UTF8String.fromString requires well-formed UTF-16. */
+  private def wellFormed(s: String): String = {
     val sb = new StringBuilder
     var i = 0
-    val arr = cs.toArray
-    while (i < arr.length) {
-      val c = arr(i)
+    while (i < s.length) {
+      val c = s.charAt(i)
       if (Character.isHighSurrogate(c)) {
-        if (i + 1 < arr.length && Character.isLowSurrogate(arr(i + 1))) { sb += c += arr(i + 1); i += 2 }
+        if (i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1))) { sb += c += s.charAt(i + 1); i += 2 }
         else i += 1
       } else if (Character.isLowSurrogate(c)) i += 1
       else { sb += c; i += 1 }
@@ -102,6 +103,100 @@ object GraftProperties extends Properties("graft") {
       got == expected
     }
   }
+
+  // --- both matchers ≡ an independent brute-force reference ------------------
+
+  property("ASCII fold and word tables agree with Character.* on all 128 codes") =
+    Prop((0 until 128).forall { i =>
+      val c = i.toChar
+      val sep = Character.isWhitespace(c) || c == '-' || c == '_'
+      AhoCorasick.AsciiFold(i) == (if (sep) ' ' else Character.toLowerCase(c)) &&
+        AhoCorasick.AsciiWord(i) == Character.isLetterOrDigit(c)
+    })
+
+  /** Every occurrence of every non-empty pattern in `norm` whose neighbours are
+    * not letters or digits — no automaton, no shared transition code. */
+  private def bruteForce(patterns: Seq[String], norm: String): Seq[(Int, Int, Int)] =
+    (for {
+      (p, pid) <- patterns.zipWithIndex if p.nonEmpty
+      start <- 0 to norm.length - p.length if norm.startsWith(p, start)
+      end = start + p.length
+      if start == 0 || !Character.isLetterOrDigit(norm.charAt(start - 1))
+      if end == norm.length || !Character.isLetterOrDigit(norm.charAt(end))
+    } yield (start, end, pid)).sorted
+
+  // every ASCII whitespace code (incl. the U+001C–U+001F separators), the two
+  // folded punctuation marks, non-ASCII whitespace and U+00A0 (not whitespace)
+  private val separators: Seq[String] =
+    Seq("\t", "\n", "\u000B", "\f", "\r", "\u001C", "\u001D", "\u001E", "\u001F", " ",
+      "-", "_", "\u2003", "\u3000", "\u00A0")
+  private val narrowUnits: Seq[String] =
+    ('a' to 'f').map(_.toString) ++ Seq("0", "7", "é", "ß", "中", "ø", ".", "'",
+      "\uD835\uDD4F", "\uD83D\uDE00", "\uD801\uDC00") // 𝕏, 😀, 𐐀: surrogate pairs
+  private val wideUnits: Seq[String] = // 93 distinct BMP letters and digits
+    (('a' to 'z') ++ ('0' to '9') ++ ('\u03B1' to '\u03C9') ++ ('\u0430' to '\u044F')).map(_.toString)
+
+  /** Lexicons with shared prefixes and suffixes: stems, stem joins, and the
+    * prefixes and suffixes of those (which may split a surrogate pair). */
+  private def lexiconGen(units: Seq[String]): Gen[Seq[String]] = {
+    val stem = Gen.chooseNum(1, 5).flatMap(n => Gen.listOfN(n, Gen.oneOf(units)).map(_.mkString))
+    for {
+      stems <- Gen.listOfN(6, stem)
+      joined <- Gen.listOfN(4, Gen.listOfN(2, Gen.oneOf(stems)).map(_.mkString(" ")))
+      cuts <- Gen.listOfN(10, Gen.chooseNum(1, 4))
+      extra <- Gen.listOfN(2, Gen.oneOf(separators ++ units))
+    } yield {
+      val whole = stems ++ joined
+      val affixes = whole.zip(cuts).flatMap { case (p, k) => Seq(p.take(k), p.takeRight(k)) }
+      (whole ++ affixes ++ extra).filter(_.nonEmpty)
+    }
+  }
+
+  /** Texts planting lexicon terms (random case, any separator run for a
+    * space) among lexicon units, other units and separators. */
+  private def plantedTextGen(lexicon: Seq[String], units: Seq[String]): Gen[String] = {
+    val sepRun = Gen.chooseNum(1, 3).flatMap(n => Gen.listOfN(n, Gen.oneOf(separators)).map(_.mkString))
+    val planted = for {
+      p <- Gen.oneOf(lexicon)
+      upper <- Gen.oneOf(true, false)
+      sep <- sepRun
+    } yield (if (upper) p.toUpperCase(java.util.Locale.ROOT) else p).replace(" ", sep)
+    Gen.listOf(Gen.frequency(4 -> planted, 3 -> sepRun, 2 -> Gen.oneOf(units),
+      1 -> Gen.oneOf(narrowUnits ++ wideUnits))).map(parts => wellFormed(parts.mkString))
+  }
+
+  private def matchesEqualBruteForce(lexicon: Seq[String], text: String): Boolean = {
+    val ac = AhoCorasick.build(lexicon)
+    val norm = AhoCorasick.normalize(text)
+    val viaString = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
+    ac.findAllInto(norm, (s, e, p) => viaString += ((s, e, p)))
+    val viaBytes = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
+    ac.newScanner().scan(org.apache.spark.unsafe.types.UTF8String.fromString(text),
+      (s, e, p) => viaBytes += ((s, e, p)))
+    val expected = bruteForce(lexicon, norm)
+    viaString.sorted == expected && viaBytes.sorted == expected
+  }
+
+  property("scan and findAllInto equal a brute-force matcher (shared affixes, non-ASCII, separators)") =
+    forAll(lexiconGen(narrowUnits).flatMap(l => plantedTextGen(l, narrowUnits).map((l, _)))) {
+      case (lexicon, text) => matchesEqualBruteForce(lexicon, text)
+    }
+
+  /** Lexicons over all 93 wide units — more characters than the 63 bitmap
+    * bits, so the rare tail is in use — plus ten Cyrillic letters alone and
+    * after one unit, so the root and one node below it have many children. */
+  private val wideLexiconGen: Gen[Seq[String]] = for {
+    base <- lexiconGen(wideUnits)
+    fan <- Gen.oneOf(wideUnits)
+  } yield base ++ wideUnits.grouped(7).map(_.mkString) ++
+    ('\u0446' to '\u044F').flatMap(c => Seq(c.toString, fan + c))
+
+  property("scan and findAllInto equal a brute-force matcher over > 64 distinct pattern chars") =
+    forAll(wideLexiconGen.flatMap(l => plantedTextGen(l, wideUnits).map((l, _)))) {
+      case (lexicon, text) =>
+        val alphabet = lexicon.flatten.distinct.size
+        (alphabet > 64) :| s"alphabet $alphabet" && matchesEqualBruteForce(lexicon, text)
+    }
 
   property("Scanner reuse across calls leaves no state behind") = {
     val ac = AhoCorasick.build(Seq("ab", "b c"))
