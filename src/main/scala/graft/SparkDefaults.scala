@@ -1,11 +1,27 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Session conf the engine's own entry points (Bench/Verify/Demo/probes/tests)
  * apply uniformly. Library users building their own sessions should apply
  * [[ExcludedRules]] too — documented in README.
  */
 object SparkDefaults {
+
+  /** The common local session: `local[cores]`, one shuffle partition per
+    * core, AQE on, UTC, UI off, [[ExcludedRules]]. Call sites chain only
+    * what they need on top (a local dir, a file open cost) before
+    * `getOrCreate()`. */
+  def builder(app: String, cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(ExcludedRulesKey, ExcludedRules)
 
   val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"
 

@@ -88,22 +88,6 @@ final class Grounder private (
     }
   }
 
-  /**
-   * Allocation-lean kernel for the triple path: per turn, resolve span top-1
-   * and per-turn concept dedup in one scan, emitting canonical CURIEs into
-   * `out`. No Mention objects, no tuples — this is the 100 TB hot loop.
-   */
-  def collectTurnConcepts(text: String, out: java.util.ArrayList[String],
-                          seen: java.util.HashSet[String]): Unit = {
-    if (text == null || text.isEmpty) return
-    out.clear(); seen.clear()
-    val norm = AhoCorasick.normalize(text)
-    automaton.findAllInto(norm, (_, _, pid) => {
-      val curie = conceptCuries(pidConcept(pid))
-      if (seen.add(curie)) out.add(curie)
-    })
-  }
-
   // ----- precomputed hot-loop tables ---------------------------------------
   // The fused triple kernel never consults surfaces/case bonuses (the
   // predicate-weight argmax depends on the pattern alone), so the span top-1

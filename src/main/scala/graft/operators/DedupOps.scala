@@ -65,35 +65,6 @@ object DedupOps {
           sequence(lit(0), size(toks) - n),
           i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
 
-  /** Convenience single-expression form — ONLY for tiny inputs/tests (see rule above). */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesFromTokens(split(normText(text), " "), n)
-
-  /**
-   * K minhash values per doc: min over shingles of xxhash64(shingle, k).
-   * Pure Catalyst (`transform` + `array_min`), one projection, no UDF.
-   *
-   * NOTE: hash the shingles ONCE into an array column and fold K mins over
-   * the hashed array — inlining `shingles(text)` K times creates a K×-sized
-   * expression tree that Catalyst does not common-subexpression-eliminate
-   * across lambda scopes (measured 13s → <1s at 500 docs).
-   */
-  def minhashSignature(shingleHashes: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingleHashes, h => xxhash64(h, i))))
-
-  /** Base 64-bit hash per shingle (hashed once, remixed K times). */
-  def shingleHashes(text: Column, n: Int = 3): Column =
-    transform(shingles(text, n), s => xxhash64(s))
-
-  /** documents → (doc_id, sig) with each stage in its own projection. */
-  def minhashSignatures(documents: DataFrame, k: Int = 16): DataFrame =
-    documents
-      .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks")).as("shingle_arr"))
-      .select(col("doc_id"), transform(col("shingle_arr"), s => xxhash64(s)).as("sh"))
-      .select(col("doc_id"), minhashSignature(col("sh"), k).as("sig"))
-
   /**
    * Banded minhash signatures: documents → (doc_id, band_idx, band_hash),
    * `bands` narrow rows per doc. This IS the persistable signature-store
@@ -219,9 +190,9 @@ object DedupOps {
   }
 
   /** Exact SHINGLE-set Jaccard from two ALREADY-MATERIALIZED shingle-array
-    * attributes (see the PERFORMANCE RULE above: inlining `shingles(text)`
-    * here would re-tokenize per array element inside the intersect/union
-    * lambdas). Stage arrays with [[shingleArray]] first. */
+    * attributes (see the PERFORMANCE RULE above: inlining the tokenize +
+    * shingle expression here would re-tokenize per array element inside the
+    * intersect/union lambdas). Stage arrays with [[shingleArray]] first. */
   def shingleJaccardFromArrays(sa: Column, sb: Column): Column =
     round(size(array_intersect(sa, sb)).cast("double") /
       size(array_union(sa, sb)).cast("double"), 6)
@@ -231,10 +202,6 @@ object DedupOps {
     documents
       .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
       .select(col("doc_id"), shinglesFromTokens(col("toks"), n).as("sh"))
-
-  /** Convenience text-to-text form — ONLY for tiny inputs/tests (HOF rule). */
-  def shingleJaccard(textA: Column, textB: Column, n: Int = 3): Column =
-    shingleJaccardFromArrays(shingles(textA, n), shingles(textB, n))
 
   /** The near-dup verify join: candidate pairs (a, b) joined to each side's
     * staged [[shingleArray]] rows, kept at shingle-Jaccard ≥ `threshold`.

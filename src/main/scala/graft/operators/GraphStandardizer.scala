@@ -154,6 +154,4 @@ object GraphStandardizer {
     val subs = subClassOfEdges(stdEdges).select(col("subj").as("curie"))
     stdNodes.join(broadcast(subs), Seq("curie"), "left_anti")
   }
-
-  def curieCol(prefix: Column, id: Column): Column = concat(prefix, lit(":"), id)
 }

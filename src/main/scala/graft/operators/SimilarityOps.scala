@@ -11,10 +11,18 @@ import org.apache.spark.sql.functions._
  *  - [[bruteForceTopK]]: exact cosine top-k of the corpus against a SMALL
  *    broadcast query set — the correctness baseline. O(corpus × queries) dot
  *    products, all inside codegen (`zip_with`/`aggregate`), one window.
- *  - [[annTopK]]: hyperplane-LSH bucketed approximate variant — the scale
- *    path. Corpus is bucketed once (16-byte rows shuffle, not vectors);
- *    queries probe only their own bucket, so cost per query is
- *    corpus/2^planes. Recall is tunable via `planes`.
+ *  - [[annTopK]]: hyperplane-LSH multiprobe approximate variant; recall is
+ *    tunable via `nPlanes`.
+ *  - [[annTopKIvf]]: IVF lists from a seeded k-means coarse quantizer
+ *    ([[trainIvf]]).
+ *  - int8 ([[quantizeInt8]]) and PQ ([[trainPq]], [[adcTopKPq]]) compressed
+ *    scorers, and the composed IVF → PQ-ADC shortlist → exact re-rank tier,
+ *    in memory ([[annTopKIvfPqExact]]) and over list-partitioned storage
+ *    ([[writeIvfPq]], [[annTopKIvfPqStored]]).
+ *
+ * One implementation per mechanism: every per-query ranking ends in
+ * `topK`, both quantizers train on one `trainingSample`, and `driverKMeans`
+ * is the only k-means.
  */
 object SimilarityOps {
 
@@ -42,10 +50,13 @@ object SimilarityOps {
    * scanned once, never shuffled (the only exchange is the per-query window,
    * partitioned by query_id — #queries × k rows).
    */
-  def bruteForceTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val scored = embeddings.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("qvec")), 6).as("cos"))
+  def bruteForceTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
+    rerank(embeddings.crossJoin(broadcast(queries)), k)
+
+  /** Per-query top-k of scored `(query_id, vec_id, cos)` rows: ranked by cos
+    * desc, then vec_id asc (the deterministic tie-break the oracles mirror),
+    * `rank` 1..k. The one ranking window every scorer here ends in. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
@@ -69,13 +80,9 @@ object SimilarityOps {
     * dropDuplicates this replaces was a full extra shuffle of the scored
     * candidate set on every ANN query (the single-exchange plan assertion
     * in PipelineSpec pins its absence; the oracles pin the results). */
-  private def rerank(candidates: DataFrame, k: Int): DataFrame = {
-    val scored = candidates
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("qvec")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+  private def rerank(candidates: DataFrame, k: Int): DataFrame =
+    topK(candidates.select(col("query_id"), col("vec_id"),
+      round(cosine(col("embedding"), col("qvec")), 6).as("cos")), k)
 
   /**
    * ANN top-k: corpus bucketed by hyperplane LSH; each query MULTI-PROBES its
@@ -89,25 +96,6 @@ object SimilarityOps {
     rerank(corpus.join(broadcast(probedQueries(queries, nPlanes, dim)), "bucket"), k)
   }
 
-  /**
-   * The 100 TB storage path: corpus written ONCE partitioned by bucket (the
-   * Iceberg `bucket`-partition layout), probes become STATIC partition
-   * filters on the read — the scan itself prunes to probes/2^planes of the
-   * data instead of filtering after a full scan. Plan-asserted in tests
-   * (PartitionFilters on the probe scan).
-   */
-  def writeBucketed(embeddings: DataFrame, path: String,
-                    nPlanes: Int = 6, dim: Int = 64): Unit =
-    embeddings
-      .withColumn("bucket", hyperplaneBucket(col("embedding"), nPlanes, dim))
-      // key-aligned shuffle before the partitioned write: without it every
-      // input partition writes a file into every bucket dir it touches
-      // (parallelism × 2^planes tiny files); with it each bucket's rows sit
-      // in one task ⇒ one file per bucket (CompactionProbe's appendIvfPq
-      // finding, applied to every partitionBy writer)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
   // ------------------------------------------------------------------------
   // IVF (inverted-file) variant: k-means coarse quantizer instead of random
   // hyperplanes — data-adaptive lists, the standard trade when the corpus is
@@ -117,23 +105,13 @@ object SimilarityOps {
   /** Broadcastable IVF index: the trained coarse-quantizer centroids. */
   final case class IvfIndex(centroids: Array[Array[Double]]) extends Serializable
 
-  /**
-   * Train the coarse quantizer with MLlib k-means (seeded → deterministic for
-   * a fixed input). Ontology-of-lists sizing: nLists ≈ √corpus is the usual
-   * heuristic. The training set is CAPPED at `maxTrainRows` via a
-   * deterministic hash-sample — the quantizer needs distribution SHAPE, not
-   * every row, and k-means over 10^10 corpus vectors would dominate the whole
-   * build. Hash-sampling (not `limit`) keeps the sample uniform in vec_id and
-   * independent of storage order — a `limit` would train only on the first
-   * partitions, which under clustered/bucketed layouts is one region of the
-   * space.
-   */
-  /** Deterministic hash-capped training sample, shared by [[trainIvf]] and
-    * [[trainPq]]. CEILING divisor: floor(n/max) is 1 for max < n < 2*max
-    * (cap becomes a no-op) and overshoots by up to ~2x in general; ceil
-    * keeps the expected sample size <= maxTrainRows for every n. Uniform in
-    * vec_id and independent of storage order — a `limit` would train only
-    * on the first partitions. */
+  /** Deterministic hash-capped sample, behind [[trainIvf]]/[[trainPq]]
+    * (via `trainingSample`) and [[assignStats]]. CEILING divisor: floor(n/max)
+    * is 1 for max < n < 2*max (cap becomes a no-op) and overshoots by up to
+    * ~2x in general; ceil keeps the expected sample size <= maxTrainRows for
+    * every n. Uniform in vec_id and independent of storage order — a `limit`
+    * would train only on the first partitions, which under clustered or
+    * list-partitioned layouts is one region of the space. */
   private def hashCappedSample(embeddings: DataFrame, maxTrainRows: Long,
                                seed: Long): DataFrame = {
     val n = embeddings.count()
@@ -143,45 +121,46 @@ object SimilarityOps {
         lit((n + maxTrainRows - 1) / maxTrainRows)) === 0)
   }
 
-  def trainIvf(embeddings: DataFrame, nLists: Int = 16, maxIter: Int = 10,
-               seed: Long = 42L, maxTrainRows: Long = 100000L): IvfIndex = {
-    // The maxTrainRows cap makes the training set driver-sized BY DESIGN
-    // (the quantizer needs distribution shape, not every row) — so training
-    // collects the capped sample ONCE and runs seeded k-means++ + Lloyd on
-    // the driver. Round-7 measurement: the previous MLlib KMeans path paid
-    // ~15 scheduler round-trips (k-means|| init + one whole Spark job per
-    // Lloyd iteration) to cluster a sample that is a few MB — 28 of
-    // q_ann_ivf's 31 jobs were training. Sorting by vec_id makes the result
-    // independent of partitioning/collect order (same reason the sample is
-    // hash-derived, not a limit).
+  /** The quantizers' training set on the driver, as double vectors sorted by
+    * vec_id. The `maxTrainRows` cap makes it driver-sized BY DESIGN (a
+    * quantizer needs distribution shape, not every row). DriverProbe first:
+    * when the corpus fits the cap the probe IS the whole set — one collect
+    * job; only an over-cap corpus pays the exact count the hash sample's
+    * divisor needs. Sorting by vec_id makes the result independent of
+    * partitioning and collect order. */
+  private def trainingSample(embeddings: DataFrame, maxTrainRows: Long,
+                             seed: Long): Array[Array[Double]] = {
     val narrow = embeddings
       .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
-    // DriverProbe first: when the corpus fits the cap the probe IS the
-    // whole set — one collect job instead of count + hash-filter + collect;
-    // only a genuinely over-cap corpus pays the exact count the hash sample
-    // divisor needs
-    val rows = DriverProbe.bounded(narrow, maxTrainRows).getOrElse {
-      val n = embeddings.count()
-      narrow.filter(
-        pmod(xxhash64(col("vec_id"), lit(seed)),
-          lit((n + maxTrainRows - 1) / maxTrainRows)) === 0).collect()
-    }
-    val data = rows.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-    IvfIndex(driverKMeans(data, nLists, maxIter, seed))
+    DriverProbe.bounded(narrow, maxTrainRows)
+      .getOrElse(hashCappedSample(narrow, maxTrainRows, seed).collect())
+      .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
   }
 
   /**
-   * Seeded k-means++ init + Lloyd iterations on the driver, over the
-   * hash-capped training sample. Deterministic for a fixed (data order,
-   * seed); empty clusters keep their previous centroid (the MLlib
+   * Train the coarse quantizer: seeded k-means++ + Lloyd (`driverKMeans`)
+   * over the `trainingSample` — deterministic for a fixed input, whatever its
+   * partitioning. Ontology-of-lists sizing: nLists ≈ √corpus is the usual
+   * heuristic. Training stays on the driver because the sample is a few MB:
+   * a distributed k-means pays a Spark job per Lloyd iteration for it.
+   */
+  def trainIvf(embeddings: DataFrame, nLists: Int = 16, maxIter: Int = 10,
+               seed: Long = 42L, maxTrainRows: Long = 100000L): IvfIndex =
+    IvfIndex(driverKMeans(trainingSample(embeddings, maxTrainRows, seed),
+      nLists, maxIter, seed))
+
+  /**
+   * Seeded k-means++ init + Lloyd iterations on the driver — the one k-means
+   * behind [[trainIvf]] and [[trainPq]]. Deterministic for a fixed (data
+   * order, seed); empty clusters keep their previous centroid (the MLlib
    * convention); stops early when no assignment changes. Runs sequentially
    * on the calling thread — no shared JVM-wide pool — and the accumulation
    * sums left to right, so centroids are reproducible doubles.
    */
   private[operators] def driverKMeans(data: Array[Array[Double]], k: Int,
                                       maxIter: Int, seed: Long): Array[Array[Double]] = {
-    require(data.nonEmpty, "trainIvf: empty training sample — nothing to cluster")
-    require(k > 0, s"trainIvf: nLists must be positive, got $k")
+    require(data.nonEmpty, "k-means: empty training sample — nothing to cluster")
+    require(k > 0, s"k-means: k must be positive, got $k")
     val n = data.length
     val dim = data(0).length
     val rng = new scala.util.Random(seed)
@@ -260,51 +239,16 @@ object SimilarityOps {
     element_at(graft.functions.CentroidIds(v, index.centroids, 1), 1)
 
   /**
-   * IVF ANN top-k: corpus assigned to its nearest list once (narrow
-   * (vec_id, list_id) rows; at scale written `partitionBy(list_id)` exactly
-   * like [[writeBucketed]]); queries probe their `nprobe` nearest lists and
-   * re-rank exactly inside them. Probes × queries stays broadcast-small.
+   * IVF ANN top-k: corpus assigned to its nearest list once (the stored form
+   * is [[writeIvfPq]]'s `partitionBy(list_id)` layout); queries probe their
+   * `nprobe` nearest lists and re-rank exactly inside them. Probes × queries
+   * stays broadcast-small.
    */
   def annTopKIvf(embeddings: DataFrame, queries: DataFrame, index: IvfIndex,
                  k: Int = 5, nprobe: Int = 4): DataFrame = {
     val corpus = embeddings.withColumn("list_id", ivfListId(col("embedding"), index))
     val qs = queries.withColumn("list_id",
       explode(graft.functions.CentroidIds(col("qvec"), index.centroids, nprobe)))
-    rerank(corpus.join(broadcast(qs), "list_id"), k)
-  }
-
-  /** ANN top-k over [[writeBucketed]] storage with partition-pruned probes.
-    * Queries are broadcast-small by contract, so their probe set collects to
-    * the driver and prunes statically (no full-scan + post-filter). */
-  def annTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, k: Int = 5,
-                      nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    val qs = probedQueries(queries, nPlanes, dim)
-    val probeBuckets = qs.select("bucket").distinct().collect().map(_.getLong(0))
-    val corpus = spark.read.parquet(path)
-      .filter(col("bucket").isin(probeBuckets: _*))
-    rerank(corpus.join(broadcast(qs), "bucket"), k)
-  }
-
-  /** IVF storage path, the list-partitioned twin of [[writeBucketed]]: corpus
-    * written ONCE partitioned by nearest-centroid list, so probe reads prune
-    * at the scan. */
-  def writeIvf(embeddings: DataFrame, index: IvfIndex, path: String): Unit =
-    embeddings.withColumn("list_id", ivfListId(col("embedding"), index))
-      .repartition(col("list_id")) // one file per list, not per task×list
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-
-  /** IVF ANN over [[writeIvf]] storage: each query's `nprobe` nearest lists
-    * become STATIC partition filters (queries are broadcast-small by
-    * contract), so the scan touches ~nprobe/nLists of the corpus. */
-  def annTopKIvfStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                       queries: DataFrame, index: IvfIndex,
-                       k: Int = 5, nprobe: Int = 4): DataFrame = {
-    val qs = queries.withColumn("list_id",
-      explode(graft.functions.CentroidIds(col("qvec"), index.centroids, nprobe)))
-    val probeLists = qs.select("list_id").distinct().collect().map(_.getInt(0))
-    val corpus = spark.read.parquet(path)
-      .filter(col("list_id").isin(probeLists: _*))
     rerank(corpus.join(broadcast(qs), "list_id"), k)
   }
 
@@ -359,8 +303,7 @@ object SimilarityOps {
         when(col("scale") === 0.0d || col("qmax") === 0.0d, lit(-2.0d))
           .otherwise(round(cosine(dequantized(col("scale"), col("q8")), col("qvec")), 6))
           .as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /**
@@ -394,8 +337,7 @@ object SimilarityOps {
       .select(col("query_id"), col("vec_id"),
         when(col("n8") === 0.0d || col("qnorm") === 0.0d, lit(-2.0d))
           .otherwise(round(dot / (col("n8") * col("qnorm")), 6)).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   // ------------------------------------------------------------------------
@@ -414,27 +356,22 @@ object SimilarityOps {
     Array.fill(m)(Array.fill(k)(Array.fill(subDim)(rng.nextGaussian())))
   }
 
-  /** Production codebooks: per-subspace k-means on the (hash-capped, like
-    * [[trainIvf]]) corpus slices. */
+  /** Production codebooks: per-subspace `driverKMeans` (seed `seed + s`,
+    * 10 iterations) over slices of the ONE `trainingSample` that
+    * [[trainIvf]] uses — collected once, sliced on the driver. A sampled row
+    * whose length is not `dim` fails loudly (it would otherwise be clustered
+    * as truncated slices). */
   def trainPq(embeddings: DataFrame, m: Int = 4, k: Int = 8, dim: Int = 64,
               seed: Long = 42L, maxTrainRows: Long = 100000L): Array[Array[Array[Double]]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     require(k >= 1 && k <= 127, s"k must fit a byte code: $k (tinyint codes, sign reserved)")
     val subDim = dim / m
-    // ONE projection of all m subvector slices, persisted: the m sequential
-    // k-means fits would otherwise each re-scan (and re-filter) the corpus
-    val sliced = hashCappedSample(embeddings, maxTrainRows, seed)
-      .select((0 until m).map(s => array_to_vector(
-        slice(col("embedding").cast("array<double>"), s * subDim + 1, subDim)).as(s"f$s")): _*)
-      .persist()
-    try {
-      (0 until m).toArray.map { s =>
-        new KMeans().setK(k).setMaxIter(10).setSeed(seed + s)
-          .setFeaturesCol(s"f$s").fit(sliced).clusterCenters.map(_.toArray)
-      }
-    } finally sliced.unpersist(blocking = false)
+    val data = trainingSample(embeddings, maxTrainRows, seed)
+    data.find(_.length != dim).foreach(v => throw new IllegalArgumentException(
+      s"trainPq: embedding size ${v.length} != dim $dim"))
+    (0 until m).toArray.map { s =>
+      driverKMeans(data.map(_.slice(s * subDim, (s + 1) * subDim)), k, 10, seed + s)
+    }
   }
 
   /** (vec_id, codes: array<tinyint> of length m) — m bytes per vector.
@@ -493,11 +430,9 @@ object SimilarityOps {
     // join — inlined it would re-run per (row × query) pair
     val recon = codes.select(col("vec_id"),
       pqReconstructed(col("codes"), codebooks).as("dv"))
-    val scored = recon.crossJoin(broadcast(queries))
+    topK(recon.crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("dv"), col("qvec")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        round(cosine(col("dv"), col("qvec")), 6).as("cos")), k)
   }
 
   // ------------------------------------------------------------------------
@@ -526,11 +461,8 @@ object SimilarityOps {
    * by the equivalence test; both paths round to 6 digits before ranking).
    */
   def adcTopKPq(codes: DataFrame, codebooks: Array[Array[Array[Double]]],
-                queries: DataFrame, k: Int = 5): DataFrame = {
-    val scored = adcScored(codes, codebooks, queries)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+                queries: DataFrame, k: Int = 5): DataFrame =
+    topK(adcScored(codes, codebooks, queries), k)
 
   /** (query_id, vec_id, cos) for every (corpus row × query) via ADC. */
   private def adcScored(codes: DataFrame, codebooks: Array[Array[Array[Double]]],
@@ -592,7 +524,7 @@ object SimilarityOps {
   /**
    * IVF+PQ+exact composed top-k.
    *  1. corpus index rows (vec_id, list_id, codes) from ONE scan — at scale
-   *     written once `partitionBy(list_id)` exactly like [[writeIvf]];
+   *     written once `partitionBy(list_id)` by [[writeIvfPq]];
    *  2. each query probes its `nprobe` nearest lists; candidates are ADC-
    *     scored (2m lookups/row) and cut to `shortlist` per query;
    *  3. the shortlist's FULL vectors are fetched (broadcast-small id set →
@@ -604,7 +536,6 @@ object SimilarityOps {
   def annTopKIvfPqExact(embeddings: DataFrame, queries: DataFrame, index: IvfIndex,
                         codebooks: Array[Array[Array[Double]]], k: Int = 5,
                         nprobe: Int = 4, shortlist: Int = 64): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist < k $k")
     val indexRows = withPqCodes(embeddings, codebooks)
       .withColumn("list_id", ivfListId(col("embedding"), index))
       .select("vec_id", "list_id", "codes")
@@ -626,12 +557,8 @@ object SimilarityOps {
         "query_id")
     val adc = withAdcLuts(indexRows, codebooks)
       .join(broadcast(qs), "list_id")
-      .select(col("query_id"), col("vec_id"), adcCos(codebooks.length).as("adc_cos"))
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("adc_cos").desc, col("vec_id").asc)
-    val short = adc.withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
-      .select("query_id", "vec_id")
+      .select(col("query_id"), col("vec_id"), adcCos(codebooks.length).as("cos"))
+    val short = topK(adc, shortlist).select("query_id", "vec_id")
     // exact re-rank of the shortlist only: vectors ride no exchange — the
     // corpus scan is filtered by the broadcast shortlist id set
     val fetched = vectors
@@ -928,8 +855,8 @@ object SimilarityOps {
 
   /** Composed tier over [[writeIvfPq]] storage: each query's `nprobe` lists
     * become STATIC partition filters (queries broadcast-small by contract),
-    * so the ADC scan touches ~nprobe/nLists of the corpus — the twin of
-    * [[annTopKIvfStored]] with the PQ shortlist in between. */
+    * so the ADC scan touches ~nprobe/nLists of the corpus; ADC shortlists
+    * within them and the exact re-rank reads only the shortlist's vectors. */
   def annTopKIvfPqStored(spark: org.apache.spark.sql.SparkSession, path: String,
                          queries: DataFrame, index: IvfIndex,
                          codebooks: Array[Array[Array[Double]]], k: Int = 5,

@@ -7,14 +7,7 @@ import graft.icelite.Icelite
 /** Smoke driver: full KG pipeline on the mini ontology + synthetic transcripts. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
-      .getOrCreate()
+    val spark = graft.SparkDefaults.builder("graft-demo", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ontPath = MiniOntology.writeTo("target/fixtures")
     val transcripts = Transcripts.synthetic(spark, nConvs = 200, seed = 42)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
@@ -26,12 +25,9 @@ object BpeProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nWords = sys.env.getOrElse("BPE_PROBE_WORDS", "400000").toInt
     val nMerges = sys.env.getOrElse("BPE_PROBE_MERGES", "30").toInt
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .appName("graft-bpe-probe")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = graft.SparkDefaults.builder("graft-bpe-probe",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

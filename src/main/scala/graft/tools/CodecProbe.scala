@@ -15,16 +15,9 @@ import graft.pipeline.KgPipeline
 object CodecProbe {
 
   private def newSession(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-codec-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.SparkDefaults.builder(s"graft-codec-$cpus", cpus)
       .config("spark.sql.files.openCostInBytes", (128L * 1024 * 1024).toString)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

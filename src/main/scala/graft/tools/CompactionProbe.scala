@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.icelite.BucketedTables
@@ -37,12 +37,9 @@ object CompactionProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val days = sys.env.getOrElse("COMPACT_PROBE_DAYS", "12").toInt
     val perDay = sys.env.getOrElse("COMPACT_PROBE_ROWS", "8000").toLong
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .appName("graft-compaction-probe")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = graft.SparkDefaults.builder("graft-compaction-probe",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val base = java.nio.file.Files.createTempDirectory("graft_compact_probe").toString

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusHygiene, DedupOps, TextOps}
@@ -42,12 +42,9 @@ object HygieneProbe {
     val nBase = sys.env.getOrElse("HYGIENE_PROBE_DOCS", "50000").toLong
     val nDup = nBase / 10
     val threshold = 0.7
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .appName("graft-hygiene-probe")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = graft.SparkDefaults.builder("graft-hygiene-probe",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, Dials, RetrievalOps}
@@ -37,12 +37,9 @@ object RetrievalProbe {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nDocs = sys.env.getOrElse("RETRIEVAL_PROBE_DOCS", "500000").toLong
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .appName("graft-retrieval-probe")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = graft.SparkDefaults.builder("graft-retrieval-probe",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -20,15 +20,8 @@ import graft.pipeline.KgPipeline
 object ScalingProbe {
 
   private def newSession(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-probe-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.SparkDefaults.builder(s"graft-probe-$cpus", cpus)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -86,12 +86,9 @@ object SketchDialsProbe {
     val nBase = sys.env.getOrElse("SKETCH_PROBE_DOCS", "50000").toLong
     val nDup = nBase / 10
     val threshold = 0.7
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .appName("graft-sketch-dials")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = graft.SparkDefaults.builder("graft-sketch-dials",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

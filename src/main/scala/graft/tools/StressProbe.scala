@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.fixtures.{MiniOntology, Transcripts}
 import graft.pipeline.KgPipeline
@@ -11,13 +10,9 @@ import graft.pipeline.KgPipeline
 object StressProbe {
   def main(args: Array[String]): Unit = {
     val nConvs = sys.env.getOrElse("STRESS_CONVS", "1000000").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-stress")
+    val spark = graft.SparkDefaults.builder("graft-stress", 32)
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val ctx = KgPipeline.prepare(spark, MiniOntology.writeTo("target/fixtures"),

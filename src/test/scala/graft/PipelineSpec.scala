@@ -353,13 +353,18 @@ class PipelineSpec extends AnyFunSuite {
         .select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (exact & pq).size.toDouble / exact.size
     }
-    // isotropic driver embeddings are PQ's worst case; measured: trained 0.27,
+    // isotropic driver embeddings are PQ's worst case; measured: trained 0.30,
     // random 0.10, random-scan baseline 5/500 = 0.01 — floors leave drift room
-    val trained = recallOf(SimilarityOps.trainPq(emb))
+    val books = SimilarityOps.trainPq(emb)
+    val trained = recallOf(books)
     val random = recallOf(SimilarityOps.pqCodebooks())
     assert(trained >= 0.18, s"trained-PQ recall $trained")
     assert(random >= 0.05, s"random-PQ recall $random")
     assert(trained > random, s"training must beat random codebooks ($trained vs $random)")
+    // codebooks are a function of the rows, not of their partitioning
+    def asSeq(b: Array[Array[Array[Double]]]) = b.map(_.map(_.toSeq).toSeq).toSeq
+    assert(asSeq(SimilarityOps.trainPq(emb.repartition(7))) == asSeq(books),
+      "trainPq depends on the input's partitioning")
 
     // a mis-dialed embedding dim (!= m·subDim) must fail LOUDLY per row, not
     // silently encode a prefix whose reconstruction nulls out downstream
@@ -371,6 +376,10 @@ class PipelineSpec extends AnyFunSuite {
     def rootMessages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ rootMessages(e.getCause))
     assert(rootMessages(err).exists(_.contains("pqEncode")), s"unexpected error: $err")
+    // training on the same mis-dialed rows fails too, rather than clustering
+    // truncated slices
+    val trainErr = intercept[Exception] { SimilarityOps.trainPq(wrongDim) }
+    assert(rootMessages(trainErr).exists(_.contains("trainPq")), s"unexpected error: $trainErr")
   }
 
   test("ANN LSH: beats random-scan baseline on isotropic data, near-exact on clustered data") {
@@ -437,6 +446,9 @@ class PipelineSpec extends AnyFunSuite {
     // determinism: retraining with the same seed reproduces the index
     val index2 = graft.operators.SimilarityOps.trainIvf(emb, nLists = 10, seed = 7)
     assert(index2.centroids.map(_.toSeq).toSeq == index.centroids.map(_.toSeq).toSeq)
+    // ... and so does the same rows under another partitioning
+    val index7 = graft.operators.SimilarityOps.trainIvf(emb.repartition(7), nLists = 10, seed = 7)
+    assert(index7.centroids.map(_.toSeq).toSeq == index.centroids.map(_.toSeq).toSeq)
     // capped-training path: a deterministic hash-sample (uniform in vec_id,
     // not a storage-order limit) still yields a usable, deterministic index
     val capped = graft.operators.SimilarityOps.trainIvf(
@@ -450,6 +462,9 @@ class PipelineSpec extends AnyFunSuite {
     val capped2 = graft.operators.SimilarityOps.trainIvf(
       emb, nLists = 10, seed = 7, maxTrainRows = 100)
     assert(capped2.centroids.map(_.toSeq).toSeq == capped.centroids.map(_.toSeq).toSeq)
+    val capped7 = graft.operators.SimilarityOps.trainIvf(
+      emb.repartition(7), nLists = 10, seed = 7, maxTrainRows = 100)
+    assert(capped7.centroids.map(_.toSeq).toSeq == capped.centroids.map(_.toSeq).toSeq)
   }
 
   test("PQ ADC == reconstruction ranking; composed IVF+PQ+exact: all-dials exact, partial dials recall") {
@@ -780,49 +795,6 @@ class PipelineSpec extends AnyFunSuite {
       ConvertedSource(ontPath, "owl", Seq("sh", noop.toString, "{in}"), out3)))
     assert(res4.graphs.isEmpty)
     assert(res4.messages.exists(_.contains("wrote no output")), res4.messages)
-  }
-
-  test("ANN bucketed storage: partition-pruned probes, same results as in-memory path") {
-    import graft.operators.SimilarityOps
-    val emb = spark.range(400).select(col("id").as("vec_id"),
-      array((0 until 16).map(i =>
-        (pmod(xxhash64(col("id"), lit(i)), lit(1000)).cast("float") / 500.0f - 1.0f)): _*)
-        .as("embedding"))
-    val queries = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val path = "target/fixtures/ann_bucketed"
-    SimilarityOps.writeBucketed(emb, path, nPlanes = 4, dim = 16)
-    val got = SimilarityOps.annTopKBucketed(spark, path, queries, k = 3, nPlanes = 4, dim = 16)
-    val want = SimilarityOps.annTopK(emb, queries, k = 3, nPlanes = 4, dim = 16)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "vec_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(key(got) == key(want))
-    // the probe scan must prune partitions (storage-level pruning, not a
-    // post-scan filter): the parquet scan advertises partition filters
-    val planTxt = got.queryExecution.executedPlan.toString
-    assert(planTxt.contains("PartitionFilters: [bucket"), planTxt.take(2000))
-  }
-
-  test("ANN IVF storage: partition-pruned probe lists, same results as in-memory path") {
-    import graft.operators.SimilarityOps
-    val emb = spark.range(400).select(col("id").as("vec_id"),
-      array((0 until 16).map(i =>
-        (pmod(xxhash64(col("id"), lit(i)), lit(1000)).cast("float") / 500.0f - 1.0f)): _*)
-        .as("embedding"))
-    val queries = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val index = SimilarityOps.trainIvf(emb, nLists = 8)
-    val path = "target/fixtures/ann_ivf_stored"
-    SimilarityOps.writeIvf(emb, index, path)
-    val got = SimilarityOps.annTopKIvfStored(spark, path, queries, index, k = 3, nprobe = 3)
-    val want = SimilarityOps.annTopKIvf(emb, queries, index, k = 3, nprobe = 3)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "vec_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(key(got) == key(want))
-    val planTxt = got.queryExecution.executedPlan.toString
-    assert(planTxt.contains("PartitionFilters: [list_id"), planTxt.take(2000))
   }
 
   test("composed IVF+PQ storage: partition-pruned ADC scan, same results as in-memory path") {

@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for every suite (spark_guide.md pattern). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.SparkDefaults.ExcludedRulesKey, graft.SparkDefaults.ExcludedRules)
-      .getOrCreate()
+    val s = SparkDefaults.builder("graft-tests", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
