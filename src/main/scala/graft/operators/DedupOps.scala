@@ -35,7 +35,7 @@ object DedupOps {
    */
   def exactDuplicates(documents: DataFrame): DataFrame =
     documents
-      .select(col("doc_id"), xxhash64(normText(col("text"))).as("fp"))
+      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
       .groupBy("fp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
 
@@ -181,14 +181,6 @@ object DedupOps {
           y => struct(x.as("a"), y.as("b")))))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
 
-  /** Exact token-set Jaccard between two docs' texts (verification metric). */
-  def jaccard(textA: Column, textB: Column): Column = {
-    val ta = array_distinct(split(normText(textA), " "))
-    val tb = array_distinct(split(normText(textB), " "))
-    round(size(array_intersect(ta, tb)).cast("double") /
-      size(array_union(ta, tb)).cast("double"), 6)
-  }
-
   /** Exact SHINGLE-set Jaccard from two ALREADY-MATERIALIZED shingle-array
     * attributes (see the PERFORMANCE RULE above: inlining the tokenize +
     * shingle expression here would re-tokenize per array element inside the
@@ -203,17 +195,21 @@ object DedupOps {
       .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
       .select(col("doc_id"), shinglesFromTokens(col("toks"), n).as("sh"))
 
-  /** The near-dup verify join: candidate pairs (a, b) joined to each side's
-    * staged [[shingleArray]] rows, kept at shingle-Jaccard ≥ `threshold`.
-    * @return (a, b, jaccard) */
-  private def verifiedPairs(pairs: DataFrame, shA: DataFrame, shB: DataFrame,
-                            threshold: Double): DataFrame =
-    pairs
-      .join(shA.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
-      .join(shB.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
-      .withColumn("jaccard", shingleJaccardFromArrays(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
+  /** The one verify join: candidate pairs `(a, b, …)` joined to
+    * `features(id, f)` once per side, scored `name = score(f_a, f_b)` and
+    * kept where `keep(name)` holds. Every pair column passes through, so
+    * the candidate side may carry flags (the incremental `hist` marker).
+    * @return pair columns ++ `name` */
+  private def verifyPairs(pairs: DataFrame, features: DataFrame, name: String,
+                          score: (Column, Column) => Column,
+                          keep: Column => Column): DataFrame = {
+    val Array(id, f) = features.columns
+    def side(s: String) = features.select(col(id).as(s), col(f).as(s"f_$s"))
+    pairs.join(side("a"), "a").join(side("b"), "b")
+      .withColumn(name, score(col("f_a"), col("f_b")))
+      .filter(keep(col(name)))
+      .select(pairs.columns.toSeq.map(col) :+ col(name): _*)
+  }
 
   /**
    * Full near-dup pipeline: LSH candidates → exact SHINGLE-Jaccard verify ≥
@@ -225,57 +221,54 @@ object DedupOps {
    * ~1.5e-5 per pair (and the oracle checks the realized output exactly).
    */
   def minhashNearDuplicates(documents: DataFrame, threshold: Double = 0.8,
-                            k: Int = 16, bands: Int = 4): DataFrame = {
-    // r7 probe-first shape (the incrementalMinhashDedup pattern): candidate
-    // pairs are near-dup-sized by construction (LSH collisions behind the
-    // mega-bucket guard), so DriverProbe the NON-distinct pair stream.
-    // Under the probe, the pair table and candidate id set are driver-sized:
-    // the candidate fetch is fetchDocsByIds over a local id relation and
-    // the pair table rides the verify join as a broadcast local relation —
-    // no checkpointed pair exchange, no dedup exchange, no id-set semi-join
-    // plan. Over-probe corpora (or non-long doc ids, which the driver path
-    // would re-type) take the distributed formulation.
-    val longIds = documents.schema.fields
-      .exists(f => f.name == "doc_id" &&
-        f.dataType == org.apache.spark.sql.types.LongType)
-    // the banded rows are pinned BEFORE the probe so an over-probe fallback
-    // reuses them instead of re-running the full-corpus banding pass (the
-    // narrow bands×16B/doc rows are the only thing persisted)
-    lazy val bandsDf = bandedSignatures(documents, k, bands).localCheckpoint(false)
-    val probe =
-      if (!longIds) None
-      else DriverProbe.bounded(bucketPairsAll(bandsDf, "band_idx", "band_hash"), DriverGroupLimit)
+                            k: Int = 16, bands: Int = 4): DataFrame =
+    // banded rows pinned: an over-probe tail re-reads them for its distinct
+    // instead of re-running the full-corpus banding pass
+    verifiedCandidates(
+      bucketPairsAll(bandedSignatures(documents, k, bands).localCheckpoint(false),
+        "band_idx", "band_hash"),
+      documents, threshold)._1
+
+  /**
+   * The one minhash tail — candidate pairs → fetch → shingle → verify —
+   * behind [[minhashNearDuplicates]] and [[incrementalMinhashDedup]].
+   * Candidate pairs are near-dup-sized by construction (LSH collisions
+   * behind the mega-bucket guard), so the NON-distinct stream (a pair
+   * repeats once per shared band) is [[DriverProbe]]d and deduped on the
+   * driver: the ids reach [[fetchDocsByIds]] as a local relation and the
+   * pair table rides the verify join as a broadcast. Over the probe (or with
+   * non-long ids, which the driver path would re-type) the distinct pairs
+   * are pinned and their ids fetched the same way. Only candidate docs are
+   * shingled, once, pinned for both verify-join sides (HOF rule above).
+   *
+   * @param pairsAll candidate pairs (a, b, …); extra columns ride through
+   * @param docs (doc_id, text) covering every candidate id
+   * @return (verified pairs ++ `jaccard`, driverSized): driverSized means
+   *         the pairs fit the probe, so the result may be collected outright
+   */
+  private def verifiedCandidates(pairsAll: DataFrame, docs: DataFrame,
+                                 threshold: Double): (DataFrame, Boolean) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val longIds = Seq(pairsAll.schema("a"), pairsAll.schema("b"), docs.schema("doc_id"))
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    val probe = if (longIds) DriverProbe.bounded(pairsAll, DriverGroupLimit) else None
     val (cand, candDocs) = probe match {
       case Some(rows) =>
-        val spark = documents.sparkSession
-        import spark.implicits._
-        val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
+        val pairs = rows.distinct
         val candIds = pairs.iterator
-          .flatMap(q => Iterator(q._1, q._2)).toArray.distinct.sorted
-        (broadcast(pairs.toSeq.toDF("a", "b")),
-          fetchDocsByIds(documents, candIds.toSeq.toDF("doc_id")))
+          .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toArray.distinct.sorted
+        (broadcast(spark.createDataFrame(java.util.Arrays.asList(pairs: _*), pairsAll.schema)),
+          fetchDocsByIds(docs, candIds.toSeq.toDF("doc_id")))
       case None =>
-        // the candidate pipeline (normalize→tokenize→shingle→K minhashes→
-        // bands) is the expensive full-corpus pass — reuse the pinned banded
-        // rows from the probe (non-long-id inputs compute them here) and pin
-        // the narrow (a, b) pair rows; as a lazy plan they would re-run
-        // inside the id-set derivation below AND the verify join (round-3
-        // verdict: 3 full-corpus text passes)
-        val cand = bucketPairs(bandsDf, "band_idx", "band_hash").localCheckpoint(false)
-        // verify-side shingling is SEMI-JOINED to the candidate id set first:
-        // only candidate docs (near-dup-sized, bounded by LSH collisions) are
-        // ever re-shingled for verification — the corpus text is never
-        // touched again after candidate generation
-        val candIds = cand.select(col("a").as("doc_id"))
-          .unionByName(cand.select(col("b").as("doc_id"))).distinct()
-        (cand, documents.join(candIds, Seq("doc_id"), "left_semi"))
+        val cand = pairsAll.distinct().localCheckpoint(false)
+        (cand, fetchDocsByIds(docs,
+          cand.select(col("a").as("doc_id")).unionByName(cand.select(col("b").as("doc_id")))
+            .distinct()))
     }
-    // shingle arrays staged through projections ONCE per candidate doc,
-    // then pinned (both verify-join sides read them) — the text-to-text
-    // form would re-tokenize per element inside the intersect/union
-    // lambdas (HOF trap)
     val sh = shingleArray(candDocs).localCheckpoint(false)
-    verifiedPairs(cand, sh, sh, threshold)
+    (verifyPairs(cand, sh, "jaccard", shingleJaccardFromArrays, _ >= threshold),
+      probe.isDefined)
   }
 
   // -------------------------------------------------------------------------
@@ -326,14 +319,8 @@ object DedupOps {
     val blocked = sigs.select(col("doc_id"), col("sig"),
       posexplode(array(blockCols: _*)))
       .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_val")
-    val cand = bucketPairs(blocked, "block_idx", "block_val")
-    val sigById = sigs // signatures re-joined once, per candidate (tiny)
-    cand
-      .join(sigById.withColumnRenamed("doc_id", "a").withColumnRenamed("sig", "sig_a"), "a")
-      .join(sigById.withColumnRenamed("doc_id", "b").withColumnRenamed("sig", "sig_b"), "b")
-      .select(col("a"), col("b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    verifyPairs(bucketPairs(blocked, "block_idx", "block_val"), sigs, "hamming",
+      (x, y) => bit_count(x.bitwiseXOR(y)), _ <= maxHamming)
   }
 
   // -------------------------------------------------------------------------
@@ -371,11 +358,8 @@ object DedupOps {
       case None => pairs.filter(col("n_shared") >= minShared)
       case Some(f) =>
         val cnt = fps.groupBy(col("doc_id")).agg(countDistinct(col("fp")).as("n_fp"))
-        pairs
-          .join(cnt.withColumnRenamed("doc_id", "a").withColumnRenamed("n_fp", "n_fp_a"), "a")
-          .join(cnt.withColumnRenamed("doc_id", "b").withColumnRenamed("n_fp", "n_fp_b"), "b")
-          .filter(col("n_shared") >=
-            greatest(lit(minShared), ceil(least(col("n_fp_a"), col("n_fp_b")) * f)))
+        verifyPairs(pairs, cnt, "n_fp_min", least(_, _),
+          m => col("n_shared") >= greatest(lit(minShared), ceil(m * f)))
           .select("a", "b", "n_shared")
     }
   }
@@ -420,9 +404,10 @@ object DedupOps {
   // near-dup groups → survivors (the decision a dedup pipeline actually ships)
   // -------------------------------------------------------------------------
 
-  /** Bound of the driver branch of [[nearDupGroups]] and of the pair probes
-    * of [[minhashNearDuplicates]] / [[incrementalMinhashDedup]] — an alias of
-    * [[Closure.DriverGraphLimit]], the connected-components cost switch. */
+  /** Bound of the driver branch of [[nearDupGroups]] and of the candidate
+    * pair probe of the minhash tail ([[minhashNearDuplicates]],
+    * [[incrementalMinhashDedup]]) — an alias of [[Closure.DriverGraphLimit]],
+    * the connected-components cost switch. */
   val DriverGroupLimit = Closure.DriverGraphLimit
 
   /**
@@ -453,55 +438,22 @@ object DedupOps {
   /** End-to-end minhash dedup decision: documents → LSH pairs → groups →
     * the documents that SURVIVE (group representatives + untouched docs). */
   def minhashSurvivors(documents: DataFrame, threshold: Double = 0.8,
-                       k: Int = 16, bands: Int = 4): DataFrame = {
-    val groups = nearDupGroups(minhashNearDuplicates(documents, threshold, k, bands))
-    val dropped = groups.filter(col("doc_id") =!= col("keep_id")).select("doc_id")
-    documents.join(dropped, Seq("doc_id"), "left_anti")
+                       k: Int = 16, bands: Int = 4): DataFrame =
+    survivors(documents, "doc_id", minhashNearDuplicates(documents, threshold, k, bands))
+
+  /** The one survivor rule: each connected group of verified pairs (a, b)
+    * keeps its min id ([[nearDupGroups]]); every other member is dropped
+    * from `items`, keyed on `idCol`. Items in no pair pass untouched. */
+  private def survivors(items: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val dropped = nearDupGroups(pairs)
+      .filter(col("doc_id") =!= col("keep_id")).select(col("doc_id").as(idCol))
+    items.join(dropped, Seq(idCol), "left_anti")
   }
 
   // -------------------------------------------------------------------------
   // incremental NEAR-dup dedup (batch vs historical signature store)
   // -------------------------------------------------------------------------
 
-  /**
-   * Incremental minhash dedup of a new batch against a HISTORICAL signature
-   * STORE — the steady-state ingest shape (full-corpus re-dedup per batch
-   * would re-shingle and re-shuffle 100 TB for every daily increment). The
-   * exact-dedup twin is `TextOps.incrementalExactDedup`.
-   *
-   * State carried between batches: `store(doc_id, band_idx, band_hash)` =
-   * [[bandedSignatures]] of every RETAINED doc — bands × ~16 bytes/doc,
-   * written back as a BUCKETED icelite snapshot
-   * (`BucketedTables.BucketSpec(n, Seq("band_idx", "band_hash"))` — the
-   * [[graft.streaming.StreamingDedup]] layout). Candidates come from
-   * band-bucket equality: intra-batch via the guarded [[bucketPairs]],
-   * batch×history via [[crossStoreCandidates]] — a groupBy + equi-join
-   * keyed on the store's OWN bucket columns, so when the store arrives
-   * through its bucketed-table read NEITHER the grouping nor the join adds
-   * a store-side exchange (plan-pinned in OperatorSpec): per batch, only
-   * the batch's bands shuffle, and per-batch cost stops growing with corpus
-   * size. The history's signatures are never re-computed and its TEXT is
-   * never re-shingled wholesale: `history(doc_id, text)` is consulted only
-   * for the candidate ids via [[fetchDocsByIds]] — when the candidate id
-   * set is driver-bounded it becomes an `IN` filter that BUCKET-PRUNES a
-   * doc_id-bucketed corpus table at the scan (point lookups), else a
-   * broadcast semi-join (still no history shuffle).
-   *
-   * Survivor rule (≡ full-corpus [[minhashSurvivors]] over history ∪ batch
-   * whenever historical doc_ids precede batch doc_ids — asserted by the
-   * OperatorSpec equivalence test):
-   *  - a batch doc connected (via verified pairs over batch ∪ history) to
-   *    any historical doc is dropped — the retained historical copy is the
-   *    representative;
-   *  - in history-free components the min batch doc_id survives;
-   *  - batch docs in no verified pair survive untouched.
-   * Verification is the exact shingle-Jaccard predicate on candidate docs
-   * only — the same similarity space as the signatures.
-   *
-   * @return (survivors, updatedStore) — updatedStore = store ∪ survivors'
-   *   band signatures (reuses the already-computed batch bands; nothing
-   *   historical is recomputed)
-   */
   /** Batch×store candidate pairs (a = batch doc, b = retained hist doc) via
     * band-bucket equality, GUARDED on the store side: store buckets are
     * grouped (memory-bounded [[graft.functions.CappedCollectSet]]) and a
@@ -512,16 +464,11 @@ object DedupOps {
     * (one guard policy for both candidate paths). Both the groupBy and the
     * join are keyed on (band_idx, band_hash), the store's bucket columns —
     * a bucketed store read satisfies both distributions, so NO store-side
-    * exchange exists in the plan and only the batch side shuffles. */
+    * exchange exists in the plan and only the batch side shuffles. Not
+    * distinct: a pair repeats once per shared band (≤ bands); the minhash
+    * tail dedupes. */
   private[graft] def crossStoreCandidates(batchBands: DataFrame,
-                                          store: DataFrame): DataFrame =
-    crossStoreCandidatesAll(batchBands, store).distinct()
-
-  /** [[crossStoreCandidates]] without the final distinct — for consumers
-    * that dedupe on the driver (the probe-first incremental path), saving
-    * the dedup exchange. A pair repeats once per shared band (≤ bands). */
-  private[graft] def crossStoreCandidatesAll(batchBands: DataFrame,
-                                             store: DataFrame): DataFrame = {
+                                          store: DataFrame): DataFrame = {
     val storeBuckets = guardedBuckets(
       store.select("doc_id", "band_idx", "band_hash"),
       Seq("band_idx", "band_hash"), minMembers = 1)
@@ -550,96 +497,85 @@ object DedupOps {
       case None       => docs.join(ids, Seq("doc_id"), "left_semi")
     }
 
+  /**
+   * Incremental minhash dedup of a new batch against a HISTORICAL signature
+   * STORE — the steady-state ingest shape (full-corpus re-dedup per batch
+   * would re-shingle and re-shuffle 100 TB for every daily increment). The
+   * exact-dedup twin is `TextOps.incrementalExactDedup`.
+   *
+   * State carried between batches: `store(doc_id, band_idx, band_hash)` =
+   * [[bandedSignatures]] of every RETAINED doc — bands × ~16 bytes/doc,
+   * written back as a BUCKETED icelite snapshot
+   * (`BucketedTables.BucketSpec(n, Seq("band_idx", "band_hash"))` — the
+   * [[graft.streaming.StreamingDedup]] layout).
+   *
+   * One candidate stream feeds the minhash tail of [[minhashNearDuplicates]]:
+   * intra-batch band-bucket pairs united with the batch×store pairs of
+   * [[crossStoreCandidates]] (flagged `hist`), whose groupBy and join are
+   * keyed on the store's OWN bucket columns — a bucketed store read adds no
+   * store-side exchange (plan-pinned in OperatorSpec), so only the batch's
+   * bands shuffle and per-batch cost stops growing with corpus size. The
+   * tail's docs are batch ∪ history (ids disjoint by the ingest contract
+   * below): one probe, one candidate fetch, one shingle pass. History
+   * signatures are never recomputed, and history TEXT is read only for
+   * candidate ids via [[fetchDocsByIds]] (bucket-pruned point lookups on a
+   * doc_id-bucketed corpus when the id set is small).
+   *
+   * Survivor rule (≡ full-corpus [[minhashSurvivors]] over history ∪ batch
+   * whenever historical doc_ids precede batch doc_ids — asserted by the
+   * OperatorSpec equivalence test):
+   *  - a batch doc connected (via verified pairs over batch ∪ history) to
+   *    any historical doc is dropped — the retained historical copy is the
+   *    representative;
+   *  - in history-free components the min batch doc_id survives;
+   *  - batch docs in no verified pair survive untouched.
+   * Components run on the driver ([[DriverUnionFind]]) when the candidate
+   * stream fit the tail's probe (the verified pairs are then driver-sized
+   * too), else through [[nearDupGroups]].
+   *
+   * @return (survivors, updatedStore) — updatedStore = store ∪ survivors'
+   *   band signatures (reuses the already-computed batch bands; nothing
+   *   historical is recomputed)
+   */
   def incrementalMinhashDedup(batch: DataFrame, store: DataFrame,
                               history: DataFrame, threshold: Double = 0.8,
                               k: Int = 16, bands: Int = 4): (DataFrame, DataFrame) = {
     val spark = batch.sparkSession
     import spark.implicits._
     // batch bands feed THREE consumers (intra pairing, cross join, store
-    // update) — pin the narrow rows once (same rule as minhashNearDuplicates)
+    // update) — pin the narrow rows once
     val batchBands = bandedSignatures(batch, k, bands).localCheckpoint(false)
-
-    // r7: bounded probes of BOTH candidate pair lists FIRST (near-dup-sized
-    // by construction — LSH collisions behind the mega-bucket guard). When
-    // they fit, the candidate ids, the verify pair table and the whole drop
-    // decision are driver-sized, and the remaining distributed work is ONE
-    // shingle pass over the candidate docs (batch ∪ history in one frame —
-    // ids are disjoint by the historical-ids-precede-batch-ids contract —
-    // so one verify join pair replaces four) plus the survivor anti-join.
-    // The previous all-DataFrame formulation paid ~27 tiny Spark jobs per
-    // ingest batch in checkpoint/broadcast/AQE-stage scheduling; over-probe
-    // inputs take the unchanged distributed tail below.
-    //
-    // The probed streams are the NON-distinct pair variants (the driver
-    // dedupes for free), saving one dedup exchange per candidate pipeline;
-    // a pair repeats at most once per shared band, so the effective
-    // distinct-pair threshold is conservatively >= limit/bands — an
-    // overflow just takes the distributed tail, which keeps its distincts.
-    def probePairs(df: DataFrame): Option[Array[(Long, Long)]] =
-      DriverProbe.bounded(df.select(col("a").cast("long"), col("b").cast("long")),
-        DriverGroupLimit).map(_.map(r => (r.getLong(0), r.getLong(1))))
-    val probed = for {
-      intraProbe <- probePairs(bucketPairsAll(batchBands, "band_idx", "band_hash"))
-      crossProbe <- probePairs(crossStoreCandidatesAll(batchBands, store))
-    } yield (intraProbe, crossProbe)
-
-    val dropped: DataFrame = probed match {
-      case Some((intraProbe, crossProbe)) =>
-        val histIdArr = crossProbe.map(_._2).distinct.sorted
-        val batchIdArr = (intraProbe.flatMap(p => Iterator(p._1, p._2)) ++
-          crossProbe.map(_._1)).distinct.sorted
-        val shCand = shingleArray(
-          fetchDocsByIds(batch.select("doc_id", "text"), batchIdArr.toSeq.toDF("doc_id"))
-            .unionByName(
-              fetchDocsByIds(history.select("doc_id", "text"), histIdArr.toSeq.toDF("doc_id"))))
-        // exact shingle-Jaccard verify: the ONLY full-width text work, one
-        // distributed pass; the pair table rides along as a broadcast local
-        // relation and the verified result is bounded by the pair probes
-        val verified = verifiedPairs(
-            broadcast((intraProbe ++ crossProbe).distinct.toSeq.toDF("a", "b")),
-            shCand, shCand, threshold)
-          .select(col("a").cast("long"), col("b").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        // identical rule to the distributed tail: every member of a verified
-        // component containing a historical doc is dropped, plus every
-        // non-representative member of any component
-        val histSet = histIdArr.toSet
-        val comp = DriverUnionFind.components(verified.iterator)(
+    val (verified, driverSized) = verifiedCandidates(
+      bucketPairsAll(batchBands, "band_idx", "band_hash").withColumn("hist", lit(false))
+        .unionByName(crossStoreCandidates(batchBands, store).withColumn("hist", lit(true))),
+      batch.select("doc_id", "text").unionByName(history.select("doc_id", "text")),
+      threshold)
+    // every member of a verified component containing a historical doc is
+    // dropped, plus every non-representative member of any component
+    val dropped: DataFrame =
+      if (driverSized) {
+        val rows = verified.select("a", "b", "hist").collect()
+        val histIds = rows.collect { case r if r.getBoolean(2) => r.getLong(1) }.toSet
+        val comp = DriverUnionFind.components(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))(
           (x, y) => math.min(x, y))
-        val histKeep = comp.collect { case (d, c) if histSet(d) => c }.toSet
+        val histKeep = comp.collect { case (d, c) if histIds(d) => c }.toSet
         val ids = comp.collect { case (d, c) if histKeep(c) || d != c => d }.toSeq.sorted
-        broadcast(ids.toDF("doc_id")) // driver-sized by the probe bounds
-      case None =>
-        // distributed tail (unchanged semantics): verify candidates with the
-        // exact shingle-Jaccard predicate — ONLY candidate docs' text is
-        // (re-)shingled, fetched by candidate id — then components + drop set
-        val intra = bucketPairs(batchBands, "band_idx", "band_hash")
-        val crossPinned = crossStoreCandidates(batchBands, store)
-          .localCheckpoint(false) // ids + verify read it
-        val batchIds = intra.select(col("a").as("doc_id"))
-          .unionByName(intra.select(col("b").as("doc_id")))
-          .unionByName(crossPinned.select(col("a").as("doc_id"))).distinct()
-        val histIds = crossPinned.select(col("b").as("doc_id")).distinct()
-        val shBatch = shingleArray(batch.join(batchIds, Seq("doc_id"), "left_semi"))
-          .localCheckpoint(false)
-        val shHist = shingleArray(fetchDocsByIds(history, histIds))
-        val allPairs = verifiedPairs(intra, shBatch, shBatch, threshold).select("a", "b")
-          .unionByName(verifiedPairs(crossPinned, shBatch, shHist, threshold).select("a", "b"))
-        // components over batch ∪ matched-history nodes (pair-list-sized)
-        val groups = nearDupGroups(allPairs)
-        val histComponents = groups.join(histIds, Seq("doc_id"), "left_semi")
+        broadcast(ids.toDF("doc_id")) // driver-sized by the probe bound
+      } else {
+        val pairs = verified.select("a", "b", "hist").localCheckpoint(false)
+        val groups = nearDupGroups(pairs)
+        val histComponents = groups
+          .join(pairs.filter(col("hist")).select(col("b").cast("long").as("doc_id")),
+            Seq("doc_id"), "left_semi")
           .select("keep_id").distinct()
         // the drop-decision set is PINNED: it is the junction both returned
         // frames hang off (survivors anti-join; store update via survivors),
-        // and as a lazy plan the whole verification tail — history semi-join,
-        // candidate re-shingle, pair verify, components — would re-run once
-        // per consumer action. The set itself is near-dup-sized (narrow ids).
-        groups.join(histComponents, Seq("keep_id"), "left_semi")
-          .select("doc_id") // every member of a history-touching component
+        // and as a lazy plan the components would re-run per consumer action
+        groups.join(histComponents, Seq("keep_id"), "left_semi").select("doc_id")
           .unionByName(groups.filter(col("doc_id") =!= col("keep_id")).select("doc_id"))
           .distinct()
           .localCheckpoint(false)
-    }
+      }
     val survivors = batch.join(dropped, Seq("doc_id"), "left_anti")
     val updated = store.select("doc_id", "band_idx", "band_hash")
       .unionByName(batchBands.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"))
@@ -674,11 +610,11 @@ object DedupOps {
    * this replaces.)
    */
   def embeddingCandidates(embeddings: DataFrame, planes: Int = 16, dim: Int = 64): DataFrame = {
-    val probes = (0 until planes).map(i => col("bucket0").bitwiseXOR(lit(1L << i)))
     val probed = embeddings
       .select(col("vec_id").as("doc_id"),
         SimilarityOps.hyperplaneBucket(col("embedding"), planes, dim).as("bucket0"))
-      .select(col("doc_id"), explode(array(col("bucket0") +: probes: _*)).as("bucket"))
+      .select(col("doc_id"),
+        explode(SimilarityOps.multiprobe(col("bucket0"), planes)).as("bucket"))
     bucketPairs(probed, "bucket")
   }
 
@@ -693,19 +629,13 @@ object DedupOps {
                               planes: Int = 16, dim: Int = 64): DataFrame =
     verifyCosine(embeddingCandidates(embeddings, planes, dim), embeddings, threshold)
 
-  /** Exact-cosine verify of candidate (a, b) pairs: the vectors join the
-    * NARROW pair list once per side — vector bytes never enter the
-    * candidate self-pairing (shared by the LSH and the semantic/IVF
-    * candidate generators). */
+  /** Exact-cosine verify of candidate (a, b) pairs through [[verifyPairs]]:
+    * the vectors join the NARROW pair list once per side — vector bytes
+    * never enter the candidate self-pairing (shared by the LSH and the
+    * semantic/IVF candidate generators). */
   private def verifyCosine(cand: DataFrame, embeddings: DataFrame,
-                           threshold: Double): DataFrame = {
-    val vecs = embeddings.select(col("vec_id"), col("embedding"))
-    cand
-      .join(vecs.withColumnRenamed("vec_id", "a").withColumnRenamed("embedding", "vec_a"), "a")
-      .join(vecs.withColumnRenamed("vec_id", "b").withColumnRenamed("embedding", "vec_b"), "b")
-      .select(col("a"), col("b"), cosine(col("vec_a"), col("vec_b")).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
+                           threshold: Double): DataFrame =
+    verifyPairs(cand, embeddings.select("vec_id", "embedding"), "cos", cosine, _ >= threshold)
 
   // -------------------------------------------------------------------------
   // semantic dedup (SemDeDup: cluster-scoped embedding near-dup)
@@ -746,13 +676,8 @@ object DedupOps {
   /** Doc-level SemDeDup decision: connected near-dup groups keep their min
     * vec_id (the [[minhashSurvivors]] rule in the embedding space). */
   def semanticSurvivors(embeddings: DataFrame, index: SimilarityOps.IvfIndex,
-                        threshold: Double = 0.95): DataFrame = {
-    val groups = nearDupGroups(
-      semanticNearDuplicates(embeddings, index, threshold).select("a", "b"))
-    val dropped = groups.filter(col("doc_id") =!= col("keep_id"))
-      .select(col("doc_id").as("vec_id"))
-    embeddings.join(dropped, Seq("vec_id"), "left_anti")
-  }
+                        threshold: Double = 0.95): DataFrame =
+    survivors(embeddings, "vec_id", semanticNearDuplicates(embeddings, index, threshold))
 
   // -------------------------------------------------------------------------
   // span-level (substring) dedup — remove repeated PASSAGES, not documents

@@ -41,8 +41,11 @@ object SimilarityOps {
     graft.functions.HyperplaneBucket(v,
       planes(nPlanes, dim).map(_.toArray).toArray)
 
-  /** Exact cosine between two vector columns. */
-  def cosine(a: Column, b: Column): Column = DedupOps.cosine(a, b)
+  /** Multiprobe expansion of a hyperplane bucket: the home bucket plus every
+    * 1-bit flip over `nPlanes` bits — the probe set of [[annTopK]]'s queries
+    * and of `DedupOps.embeddingCandidates`' vectors. */
+  private[operators] def multiprobe(bucket0: Column, nPlanes: Int): Column =
+    array(bucket0 +: (0 until nPlanes).map(i => bucket0.bitwiseXOR(lit(1L << i))): _*)
 
   /**
    * Exact top-k: every (query, corpus) cosine, ranked per query.
@@ -62,13 +65,11 @@ object SimilarityOps {
   }
 
   /** Query-side multiprobe expansion: home bucket + every 1-bit flip. */
-  private def probedQueries(queries: DataFrame, nPlanes: Int, dim: Int): DataFrame = {
-    val probes = (0 until nPlanes).map(i => col("bucket0").bitwiseXOR(lit(1L << i)))
+  private def probedQueries(queries: DataFrame, nPlanes: Int, dim: Int): DataFrame =
     queries
       .withColumn("bucket0", hyperplaneBucket(col("qvec"), nPlanes, dim))
-      .withColumn("bucket", explode(array(col("bucket0") +: probes: _*)))
+      .withColumn("bucket", explode(multiprobe(col("bucket0"), nPlanes)))
       .drop("bucket0")
-  }
 
   /** Exact cosine re-rank of probed candidates → top-k per query.
     *
@@ -82,7 +83,7 @@ object SimilarityOps {
     * in PipelineSpec pins its absence; the oracles pin the results). */
   private def rerank(candidates: DataFrame, k: Int): DataFrame =
     topK(candidates.select(col("query_id"), col("vec_id"),
-      round(cosine(col("embedding"), col("qvec")), 6).as("cos")), k)
+      round(DedupOps.cosine(col("embedding"), col("qvec")), 6).as("cos")), k)
 
   /**
    * ANN top-k: corpus bucketed by hyperplane LSH; each query MULTI-PROBES its
@@ -301,7 +302,7 @@ object SimilarityOps {
       .crossJoin(broadcast(qs))
       .select(col("query_id"), col("vec_id"),
         when(col("scale") === 0.0d || col("qmax") === 0.0d, lit(-2.0d))
-          .otherwise(round(cosine(dequantized(col("scale"), col("q8")), col("qvec")), 6))
+          .otherwise(round(DedupOps.cosine(dequantized(col("scale"), col("q8")), col("qvec")), 6))
           .as("cos"))
     topK(scored, k)
   }
@@ -432,7 +433,7 @@ object SimilarityOps {
       pqReconstructed(col("codes"), codebooks).as("dv"))
     topK(recon.crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("dv"), col("qvec")), 6).as("cos")), k)
+        round(DedupOps.cosine(col("dv"), col("qvec")), 6).as("cos")), k)
   }
 
   // ------------------------------------------------------------------------

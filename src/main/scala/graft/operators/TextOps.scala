@@ -73,12 +73,14 @@ object TextOps {
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
 
   /**
-   * Deterministic 64-bit document fingerprint: xxhash64 over the
-   * whitespace-normalized, casefolded text. Content-defined (whitespace runs
-   * collapse), so trivial formatting changes don't change the fingerprint.
+   * Deterministic 64-bit document fingerprint: xxhash64 over
+   * [[DedupOps.normText]] (whitespace-normalized, casefolded). Content-defined
+   * (whitespace runs collapse), so trivial formatting changes don't change
+   * the fingerprint. The one fingerprint of exact, incremental-exact and
+   * streaming exact dedup.
    */
   def fingerprint(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
+    xxhash64(DedupOps.normText(text))
 
   /** documents table → per-doc text metrics frame (one scan, all codegen). */
   def metrics(documents: DataFrame): DataFrame =

@@ -350,6 +350,34 @@ class OperatorSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(sigSet(updated) ==
       sigSet(DedupOps.bandedSignatures(hist.unionByName(survivors), k = 16, bands = 16)))
+
+    // int doc ids: the same inputs re-typed take the minhash tail's
+    // distributed branch (the driver branch needs long ids) — identical
+    // survivors and store update size
+    def asInt(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("doc_id", col("doc_id").cast("int"))
+    val (survivorsInt, updatedInt) = DedupOps.incrementalMinhashDedup(asInt(batch),
+      asInt(store), asInt(hist), threshold = 0.7, k = 16, bands = 16)
+    assert(survivorsInt.select("doc_id").collect().map(_.getInt(0).toLong).toSet == inc)
+    assert(updatedInt.count() == updated.count())
+
+    // over-probe stream: 640 identical batch docs at bands = 1 give
+    // C(640, 2) = 204,480 intra pairs (+ 640 cross pairs against the
+    // history copy), beyond DriverGroupLimit — the distributed fetch,
+    // verify and survivor rule. Every copy joins the historical doc's
+    // component and is dropped; only the two distinct singles survive. The
+    // historical id sits ABOVE the batch ids, so the drop comes from the
+    // history rule, not from the min-id representative.
+    val dupText = "the same boilerplate page crawled again and again every day"
+    val bigHist = Seq((9000L, dupText)).toDF("doc_id", "text")
+    val bigBatch = ((1000L until 1640L).map(i => (i, dupText)) ++
+      Seq((5000L, "an unrelated single about ontologies and graphs"),
+        (5001L, "another lone document on spark shuffles and joins"))).toDF("doc_id", "text")
+    assert(640L * 639 / 2 > DedupOps.DriverGroupLimit)
+    val (bigSurv, _) = DedupOps.incrementalMinhashDedup(bigBatch,
+      DedupOps.bandedSignatures(bigHist, k = 16, bands = 1), bigHist, threshold = 0.7,
+      k = 16, bands = 1)
+    assert(bigSurv.select("doc_id").collect().map(_.getLong(0)).toSet == Set(5000L, 5001L))
   }
 
   test("simhash: identical texts distance 0; near texts within small Hamming") {
@@ -702,8 +730,10 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("jaccard: exact token-set semantics") {
+    def toks(c: String) = array_distinct(split(DedupOps.normText(col(c)), " "))
     val df = Seq(("a b c d", "c d e f")).toDF("x", "y")
-      .select(DedupOps.jaccard(col("x"), col("y")).as("j"))
+      .select(toks("x").as("tx"), toks("y").as("ty"))
+      .select(DedupOps.shingleJaccardFromArrays(col("tx"), col("ty")).as("j"))
     assert(math.abs(df.collect()(0).getDouble(0) - 2.0 / 6.0) < 1e-6)
   }
 
@@ -1476,8 +1506,8 @@ class OperatorSpec extends AnyFunSuite {
       // the invariant lives at the BAND JOIN: its store-side subtree (scan →
       // guard groupBy → join input) must be exchange-free — the bucketed scan
       // already satisfies both the aggregation and the join distribution.
-      // (The pair-distinct above the join and the batch side below it DO
-      // shuffle; that's batch-sized, not store-sized.)
+      // (The batch side below it DOES shuffle; that's batch-sized, not
+      // store-sized.)
       val joins = plan.collect {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec    => j: org.apache.spark.sql.execution.SparkPlan
         case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j: org.apache.spark.sql.execution.SparkPlan
