@@ -198,7 +198,7 @@ object Grounder {
           "shards the pattern space by hash of the NORMALIZED pattern text (raw " +
           "text would split variant spellings of one pattern across shards and " +
           "corrupt per-span top-1), and the union of the shards' mentions " +
-          "(MentionDetector.detectTopSlimSharded / detectTriplesSharded) equals " +
+          "(MentionDetector.detectTriplesSharded) equals " +
           "the single-automaton result exactly."))
 
     // deterministic order regardless of partitioning: patterns sorted, and
@@ -281,19 +281,6 @@ object MentionDetector {
    */
   def detectTop(turns: Dataset[Turn], grounder: Broadcast[Grounder]): Dataset[Mention] =
     detectTopSlim(slim(turns.toDF()), grounder)
-
-  /**
-   * Sharded-lexicon detection: one pass per shard automaton, results
-   * unioned — exact vs the single-automaton result (see
-   * [[Grounder.buildSharded]]). The trade is explicit: N corpus scans buy an
-   * N-fold smaller per-executor automaton footprint; use only when one
-   * automaton genuinely exceeds the driver/executor budget.
-   */
-  def detectTopSlimSharded(turns: Dataset[SlimTurn],
-                           grounders: Seq[Broadcast[Grounder]]): Dataset[Mention] = {
-    require(grounders.nonEmpty, "need at least one grounder shard")
-    grounders.map(g => detectTopSlim(turns, g)).reduce(_ union _)
-  }
 
   /** Preferred scale path: slim projection in, fused top-1 out. */
   def detectTopSlim(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],

@@ -305,10 +305,10 @@ object DedupOps {
     val sigCol = if (portableHash) simhashPortable(col("text")) else simhash(col("text"))
     // sigs feeds THREE consumers (banding + both sides of the verify join);
     // as a plan that is three full text→tokens→hash→vote corpus scans —
-    // materialize the narrow (doc_id, sig) rows once instead (same rule as
-    // winnowingNearDuplicates' fraction branch). Lifetime: the returned
-    // DataFrame reads these blocks lazily, so they cannot be released here;
-    // the ContextCleaner unpersists them once the result plan is GC'd
+    // materialize the narrow (doc_id, sig) rows once instead. Lifetime: the
+    // returned DataFrame reads these blocks lazily, so they cannot be
+    // released here; the ContextCleaner unpersists them once the result plan
+    // is GC'd
     val sigs = documents.select(col("doc_id"), sigCol.as("sig")).localCheckpoint(false)
     val blockCols = (0 until blocks).map { b =>
       val lo = b * 64 / blocks
@@ -346,12 +346,13 @@ object DedupOps {
   def winnowingNearDuplicates(documents: DataFrame, minShared: Int = 2,
                               k: Int = 8, w: Int = 4,
                               minSharedFrac: Option[Double] = None): DataFrame = {
-    val fpsPlan = documents.select(col("doc_id"),
+    // the fraction branch reads fps twice (pairing + per-doc counts), so the
+    // sketch runs twice. Not pinned: a lazy localCheckpoint here left tasks
+    // reporting to SQL metrics the driver had already dropped (DAGScheduler
+    // "non-existent accumulator" ERRORs; the relative-threshold test pins
+    // their absence), and an eager one costs a job
+    val fps = documents.select(col("doc_id"),
       explode(winnowingSketch(col("text"), k, w)).as("fp"))
-    // the fraction branch consumes fps TWICE (pairing + per-doc counts);
-    // materialize the narrow (doc_id, fp) rows once instead of re-running
-    // the rolling-hash sketch over every document's text
-    val fps = if (minSharedFrac.isDefined) fpsPlan.localCheckpoint(false) else fpsPlan
     val pairs = bucketPairsAll(fps, "fp")
       .groupBy("a", "b").agg(count(lit(1)).as("n_shared"))
     minSharedFrac match {
@@ -680,7 +681,7 @@ object DedupOps {
     survivors(embeddings, "vec_id", semanticNearDuplicates(embeddings, index, threshold))
 
   // -------------------------------------------------------------------------
-  // span-level (substring) dedup — remove repeated PASSAGES, not documents
+  // span-level (substring) dedup — find repeated PASSAGES, not documents
   // -------------------------------------------------------------------------
 
   /**
@@ -755,32 +756,4 @@ object DedupOps {
           i => xxhash64(concat_ws(" ", slice(col("toks"), i + 1, lit(n))))).as("gh_arr"))
       .select(col("doc_id"), posexplode(col("gh_arr")))
       .toDF("doc_id", "pos", "gh")
-
-  /**
-   * The cleaning decision [[duplicateSpans]] feeds: rewrite each document
-   * with its duplicated spans' tokens REMOVED (kept documents pass through
-   * unchanged). The span list is aggregated per doc and joined back — the
-   * corpus is rewritten in one scan + one join whose build side is the
-   * (sparse) flagged-doc span lists; a doc's token is dropped iff any span
-   * covers its position.
-   *
-   * Order caveat, stated not hidden: removal operates on the NORMALIZED
-   * token stream (the same canonical form every dedup family hashes), so
-   * original whitespace/case inside a rewritten document is not preserved —
-   * the output is training-corpus text, not display text.
-   */
-  def removeDuplicateSpans(documents: DataFrame, n: Int = 8): DataFrame = {
-    val spans = duplicateSpans(documents, n)
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
-    documents
-      .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
-      .join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("spans").isNull, concat_ws(" ", col("toks")))
-          .otherwise(concat_ws(" ", filter(col("toks"), (_, i) =>
-            !exists(col("spans"), s =>
-              i.cast("long").between(s.getField("span_start"), s.getField("span_end"))))))
-          .as("clean_text"))
-  }
 }

@@ -129,21 +129,4 @@ object Dials {
     require(corpusDocs >= 1, s"bad corpus size $corpusDocs")
     pow2Clamp(corpusDocs.toDouble / 4000.0, floorVal = 16, capPow = 12)
   }
-
-  /**
-   * SemDeDup IVF list count ([[graft.operators.DedupOps.semanticCandidates]]):
-   * expected cluster size corpus/nLists drives BOTH costs — candidate pairs
-   * grow with cluster² (the exact-cosine verify bill) and a cluster past
-   * `DedupOps.MaxBucket` is guard-DROPPED outright — so hold it near the
-   * published SemDeDup operating point of ~1k docs/cluster: next power of
-   * two of corpus/1024, floor 8, cap 65536. The cap is a real boundary:
-   * single-level k-means assignment is O(nLists·dim) per row, so past it
-   * clusters grow with the corpus instead, and at ~6×10⁸ docs the expected
-   * cluster reaches the guard cap — a flat coarse quantizer is the wrong
-   * tool there (a hierarchical quantizer is the declared next step).
-   */
-  def semanticLists(corpusSize: Long): Int = {
-    require(corpusSize >= 1, s"bad corpus size $corpusSize")
-    pow2Clamp(corpusSize.toDouble / 1024.0, floorVal = 8, capPow = 16)
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /**
  * Multimodal column plumbing: image/audio/video as opaque `binary` payloads
- * with typed metadata, plus decode / feature-extract / frame-sample stages.
+ * with typed metadata, plus decode and feature-extract stages.
  *
  * Codec status:
  *  - BMP (24-bit uncompressed) and WAV (PCM16 mono) are REAL zero-dependency
@@ -993,23 +993,5 @@ object MultimodalOps {
         MediaFeatures(m.media_id, m.kind, m.payload.length, feats)
       }
     }
-  }
-
-  /**
-   * Frame sampling for video rows: emit every `stride`-th 256-byte block as a
-   * "frame" (stub for real frame extraction). Catalyst-side slicing — the
-   * payload column is pruned away right after, so downstream stages never
-   * carry the binary.
-   */
-  def sampleFrames(media: DataFrame, stride: Int = 4): DataFrame = {
-    media.filter(col("kind") === "video")
-      .select(col("media_id"),
-        posexplode(transform(
-          sequence(lit(0), floor(length(col("payload")) / lit(256 * stride)).cast("int") - 1),
-          i => substring(col("payload"), (i * 256 * stride + 1).cast("int"), lit(256)))))
-      .withColumnRenamed("pos", "frame_idx")
-      .withColumnRenamed("col", "frame_bytes")
-      .withColumn("frame_hash", xxhash64(col("frame_bytes")))
-      .drop("frame_bytes")
   }
 }

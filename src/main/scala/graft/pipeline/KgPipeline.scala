@@ -1,13 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.curie.Converter
 import graft.fixtures.MiniOntology
 import graft.ground.{Grounder, MentionDetector}
 import graft.icelite.Icelite
-import graft.model.{Turn, Vocab}
 import graft.operators.{Closure, GraphStandardizer, LiteralMappings}
 import graft.sources.OboGraphReader
 
@@ -96,65 +95,10 @@ object KgPipeline {
   }
 
   /**
-   * Fully-distributed variant of [[xrefCanonicalMap]] for entity graphs too
-   * large to collect (cross-ontology merges, instance-level entity linking):
-   * the `member → canonical` relation stays a DataFrame end to end —
-   * connected components run distributed, the per-component representative
-   * is an aggregate (prefer `preferPrefix`-owned CURIEs, then min CURIE:
-   * identical rep rule to the driver path), and triples are rewritten with
-   * [[canonicalizeJoin]] instead of a broadcast map. Nothing here bounds the
-   * entity-graph size by driver memory.
-   *
-   * @return (curie, canonical) — one row per NON-representative member
-   */
-  def xrefCanonicalTable(nodes: DataFrame, preferPrefix: Option[String] = None,
-                         extraEdges: Option[DataFrame] = None): DataFrame = {
-    val nodeXrefs = nodes
-      .select(col("curie").as("a"), explode(col("xrefs")).as("b"))
-      .filter(col("b").isNotNull)
-    val xrefEdges = extraEdges.fold(nodeXrefs)(e => nodeXrefs.unionByName(e))
-    val cc = Closure.connectedComponents(xrefEdges)
-    // representative = min (prefix-rank, curie) struct per component — struct
-    // ordering is field-lexicographic, so this is exactly the driver path's
-    // minBy(rank)
-    val rank = preferPrefix match {
-      case Some(p) => when(col("curie").startsWith(p + ":"), 0).otherwise(1)
-      case None    => lit(0)
-    }
-    val reps = cc
-      .groupBy("component")
-      .agg(min(struct(rank.as("r"), col("curie"))).as("rep"))
-      .select(col("component"), col("rep.curie").as("canonical"))
-    cc.join(reps, "component")
-      .filter(col("curie") =!= col("canonical"))
-      .select(col("curie"), col("canonical"))
-  }
-
-  /**
-   * Rewrite triple endpoints through a `(curie, canonical)` DataFrame — two
-   * broadcast-hash left joins + coalesce, for canonical maps too big to hold
-   * on the driver. The canonical relation is ontology/entity-sized (always ≪
-   * corpus), so broadcasting it keeps the corpus side shuffle-free; if it
-   * ever outgrew broadcast, dropping the hint degrades gracefully to a
-   * shuffled hash join rather than an OOM.
-   */
-  def canonicalizeJoin(triples: DataFrame, canonical: DataFrame): DataFrame = {
-    val m = canonical.select(col("curie"), col("canonical"))
-    val bs = broadcast(m.withColumnRenamed("curie", "subj").withColumnRenamed("canonical", "subj_c"))
-    val bo = broadcast(m.withColumnRenamed("curie", "obj").withColumnRenamed("canonical", "obj_c"))
-    triples
-      .join(bs, Seq("subj"), "left")
-      .join(bo, Seq("obj"), "left")
-      .select(coalesce(col("subj_c"), col("subj")).as("subj"), col("pred"),
-        coalesce(col("obj_c"), col("obj")).as("obj"))
-  }
-
-  /**
    * Rewrite triple endpoints through the canonical-entity map — map-side, no
    * shuffle. Small maps (the common case: xref merges are ontology-sized)
    * become a literal `map_from_arrays` lookup that stays inside whole-stage
-   * codegen; big maps fall back to a broadcast-map UDF. For maps that exceed
-   * driver memory entirely, use [[xrefCanonicalTable]] + [[canonicalizeJoin]].
+   * codegen; big maps fall back to a broadcast-map UDF.
    */
   def canonicalize(triples: DataFrame, canonical: Map[String, String]): DataFrame = {
     if (canonical.isEmpty) return triples
@@ -171,11 +115,6 @@ object KgPipeline {
     triples.select(remap(col("subj")).as("subj"), col("pred"), remap(col("obj")).as("obj"))
   }
 
-  /**
-   * Full run over a transcripts DataFrame. When `icelite` is given, every
-   * expensive stage materializes as a tagged snapshot → kill-and-resume
-   * reuses finished stages and produces identical output (north rule).
-   */
   /**
    * Ontology-side artifacts, built ONCE per ontology release and reused
    * across every corpus batch/snapshot (at 10^12 turns, ontology prep is
@@ -218,6 +157,11 @@ object KgPipeline {
     OntologyContext(nodes, edges, grounder, canonical)
   }
 
+  /**
+   * Full run over a transcripts DataFrame. When `icelite` is given, every
+   * expensive stage materializes as a tagged snapshot → kill-and-resume
+   * reuses finished stages and produces identical output (north rule).
+   */
   def run(spark: SparkSession,
           transcripts: DataFrame,
           ontologyJsonPath: String,
@@ -307,9 +251,4 @@ object KgPipeline {
 
     Result(allTriples, nodeTable, top, snapId, metrics)
   }
-
-  /** Pipeline without icelite materialization — pure DataFrame (for bench/verify). */
-  def triples(spark: SparkSession, transcripts: DataFrame,
-              ontologyJsonPath: String): DataFrame =
-    run(spark, transcripts, ontologyJsonPath).triples
 }

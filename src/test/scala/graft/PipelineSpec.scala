@@ -43,7 +43,8 @@ class PipelineSpec extends AnyFunSuite {
     val shards = Grounder.buildSharded(lex, 3, ctx.canonical)
       .map(spark.sparkContext.broadcast(_))
     val one = MentionDetector.detectTopSlim(slim, single).collect().toSet
-    val sharded = MentionDetector.detectTopSlimSharded(slim, shards).collect().toSet
+    val sharded = shards.map(MentionDetector.detectTopSlim(slim, _)).reduce(_ union _)
+      .collect().toSet
     assert(one.nonEmpty)
     assert(sharded == one)
     // fused TRIPLE path too: cross-shard concept dedup must make the union
@@ -536,25 +537,27 @@ class PipelineSpec extends AnyFunSuite {
     val emptyNodes = spark.createDataFrame(Seq.empty[(String, Seq[String])])
       .toDF("curie", "xrefs")
 
-    // distributed table path (never collects)
-    val table = KgPipeline.xrefCanonicalTable(emptyNodes, None, Some(edges))
-    // driver-map path on the same edges (forced through union-find by size? —
-    // 120k < 200k limit, so this IS the driver branch)
+    // 120k < 200k limit, so this is Closure's driver union-find branch
     val m = KgPipeline.xrefCanonicalMap(emptyNodes, None, Some(edges))
     assert(m.size == nGroups * 3) // every non-rep member remapped
-    val tableMap = table.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(tableMap == m)
+    // each chain's min curie is its representative
+    assert(m == (0 until nGroups).flatMap(g =>
+      (1 to 3).map(j => f"E:${g * 4 + j}%07d" -> f"E:${g * 4}%07d")).toMap)
 
-    // triples through both rewrite paths agree exactly
+    // a 90k-entry map takes canonicalize's broadcast-UDF branch (> 10,000
+    // entries); it must agree with an independent driver-side rewrite of the
+    // same triples through m
     val triples = spark.range(5000).select(
       format_string("E:%07d", col("id") * 24 % (nGroups * 4)).as("subj"),
       lit("rel").as("pred"),
       format_string("E:%07d", (col("id") * 24 + 17) % (nGroups * 4)).as("obj"))
-    val viaJoin = KgPipeline.canonicalizeJoin(triples, table)
-      .collect().map(_.toSeq).sortBy(_.toString)
+    val expected = triples.collect()
+      .map(r => Seq(m.getOrElse(r.getString(0), r.getString(0)), r.getString(1),
+        m.getOrElse(r.getString(2), r.getString(2))))
+      .sortBy(_.toString)
     val viaMap = KgPipeline.canonicalize(triples, m)
       .collect().map(_.toSeq).sortBy(_.toString)
-    assert(viaJoin.toSeq == viaMap.toSeq)
+    assert(viaMap.toSeq == expected.toSeq)
   }
 
   test("plan: the fused pipeline has exactly ONE corpus-wide shuffle") {

@@ -9,117 +9,8 @@ import graft.fixtures.{MiniOntology, Transcripts}
 import graft.pipeline.KgPipeline
 import graft.streaming.IncrementalKg
 
-object StreamingSpec {
-  final case class Doc(doc_id: Long, text: String, ts: java.sql.Timestamp)
-}
-
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
-
-  test("stateful sessions: flatMapGroupsWithState closes idle conversations exactly once") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import org.apache.spark.sql.{Encoders, Row}
-    import graft.model.Turn
-    import graft.streaming.StatefulOps
-
-    val ctx = KgPipeline.prepare(spark, MiniOntology.writeTo("target/fixtures"))
-    implicit val enc = Encoders.product[Turn]
-    val source = MemoryStream[Turn](enc, spark)
-    def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000)
-    def turn(conv: String, idx: Int, text: String, min: Long) =
-      Turn(conv, idx, "user", text, null, ts(min))
-
-    val summaries = StatefulOps.conversationSummaries(
-      StatefulOps.mentionCounts(source.toDS(), ctx.grounder),
-      watermarkDelay = "1 minute", idleGapMs = 5L * 60 * 1000)
-    val q = summaries.writeStream.format("memory").queryName("conv_summaries")
-      .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // convA turn 0 matches TWO lexicon labels ("size", "big"), turn 1 one
-      source.addData(
-        turn("convA", 0, "the size is big here", 0),
-        turn("convA", 1, "a small value", 1),
-        turn("convB", 0, "no lexicon words at all", 1))
-      q.processAllAvailable()
-      assert(spark.table("conv_summaries").count() == 0, "nothing idle yet")
-
-      // an event far in the future advances the watermark past convA/convB's
-      // idle gap -> both close and emit their final summaries exactly once
-      source.addData(turn("convC", 0, "later big event", 60))
-      q.processAllAvailable()
-      source.addData(turn("convC", 1, "keep C open", 61))
-      q.processAllAvailable()
-      val rows = spark.table("conv_summaries")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-      assert(rows == Set(("convA", 2L, 3L, 1), ("convB", 1L, 0L, 0)), rows.toString)
-    } finally q.stop()
-  }
-
-  test("watermarked windowed aggregation finalizes windows and drops late data") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import org.apache.spark.sql.Encoders
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.TurnMentions
-
-    implicit val enc = Encoders.product[TurnMentions]
-    val source = MemoryStream[TurnMentions](enc, spark)
-    def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000)
-
-    val agg = StatefulOps.mentionsPerWindow(source.toDS(),
-      windowLength = "10 minutes", watermarkDelay = "5 minutes")
-    val q = agg.writeStream.format("memory").queryName("win_agg")
-      .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      source.addData(
-        TurnMentions("a", 0, 2, ts(1)), TurnMentions("a", 1, 1, ts(4)),
-        TurnMentions("b", 0, 3, ts(12)))
-      q.processAllAvailable()
-      // advance the watermark far past the first two windows
-      source.addData(TurnMentions("c", 0, 1, ts(60)))
-      q.processAllAvailable()
-      // a LATE event for the already-finalized first window must be dropped
-      source.addData(TurnMentions("late", 9, 100, ts(2)))
-      q.processAllAvailable()
-      source.addData(TurnMentions("c", 1, 1, ts(90)))
-      q.processAllAvailable()
-      val byWindow = spark.table("win_agg").collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2))).toSet
-      def winStart(min: Long) = { val t = ts(min).getTime; t - t % 600000 }
-      // first window: 2 turns, 3 mentions — the late +100 event was dropped
-      assert(byWindow.contains((winStart(1), 2L, 3L)), byWindow.toString)
-      assert(byWindow.contains((winStart(12), 1L, 3L)), byWindow.toString)
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup: duplicates within the watermark horizon dropped, state bounded") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import org.apache.spark.sql.Encoders
-    import graft.streaming.StatefulOps
-
-    import StreamingSpec.Doc
-    implicit val enc = Encoders.product[Doc]
-    val source = MemoryStream[Doc](enc, spark)
-    def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000)
-
-    val deduped = StatefulOps.streamingExactDedup(source.toDF(), watermarkDelay = "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("stream_dedup")
-      .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      source.addData(
-        Doc(1, "Hello  World", ts(0)),
-        Doc(2, "hello world", ts(1)),   // normalized duplicate of 1 → dropped
-        Doc(3, "something else", ts(1)))
-      q.processAllAvailable()
-      // duplicate arriving in a LATER batch, still within the horizon → dropped
-      source.addData(Doc(4, "HELLO   world", ts(2)))
-      q.processAllAvailable()
-      val ids = spark.table("stream_dedup").collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 3L), ids.toString)
-    } finally q.stop()
-  }
 
   test("Trigger.AvailableNow processes only new snapshot deltas; restart is incremental") {
     val base = Files.createTempDirectory("graft_stream").toString
