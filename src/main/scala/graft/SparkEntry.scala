@@ -10,6 +10,7 @@ import graft.ground.{Grounder, MentionDetector}
 import graft.model.Turn
 import graft.operators._
 import graft.pipeline.KgPipeline
+import graft.sources.OboGraphReader
 
 /**
  * Driver contract (see SURVEY.md §7 + builder prompt): one `queries` entry
@@ -381,7 +382,8 @@ object SparkEntry {
 
     // --- J1+T2: structure-filtered lexicon subset under ancestor PATO:0000117
     "q_subset" -> ((s, _) => {
-      val (nodes, edges) = KgPipeline.standardizeOntology(s, ontologyPath, conv, Some("PATO"))
+      val (nodes, edges) = KgPipeline.standardizeGraphs(
+        OboGraphReader.readGraphs(s, ontologyPath), conv, Some("PATO"))
       val dag = graft.operators.GraphStandardizer.subClassOfEdges(edges)
       val seeds = s.createDataFrame(Seq(Tuple1("PATO:0000117"))).toDF("curie")
       val closure = Closure.descendants(dag, seeds)
@@ -1941,7 +1943,8 @@ object SparkEntry {
   // ---------------------------------------------------------------------
 
   private def ontologyLexiconFull(s: SparkSession): DataFrame = {
-    val (nodes, _) = KgPipeline.standardizeOntology(s, ontologyPath, conv, Some("PATO"))
+    val (nodes, _) = KgPipeline.standardizeGraphs(
+      OboGraphReader.readGraphs(s, ontologyPath), conv, Some("PATO"))
     LiteralMappings.fromNodes(nodes, "PATO")
   }
 

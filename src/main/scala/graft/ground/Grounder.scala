@@ -275,30 +275,17 @@ object MentionDetector {
   }
 
   /**
-   * Detection with span-local top-1 fused into the scan (see
+   * String-path detection with span-local top-1 fused into the scan (see
    * [[Grounder.findTopMentions]]): same result as detect → topCandidates but
-   * with no ranking-window shuffle — the preferred path at corpus scale.
+   * with no ranking-window shuffle. A REFERENCE path (tests, kgbench's
+   * unfused check): production runs [[detectTriples]].
    */
-  def detectTop(turns: Dataset[Turn], grounder: Broadcast[Grounder]): Dataset[Mention] =
-    detectTopSlim(slim(turns.toDF()), grounder)
-
-  /** Preferred scale path: slim projection in, fused top-1 out. */
-  def detectTopSlim(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
-                    metrics: Option[graft.pipeline.RunMetrics] = None): Dataset[Mention] = {
+  def detectTopSlim(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder]): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.mapPartitions { it =>
       val g = grounder.value
-      it.flatMap { t =>
-        metrics.foreach(_.turnsProcessed.add(1))
-        val ms = g.findTopMentions(t.conv_id, t.turn_idx, t.text)
-        metrics.fold(ms) { m =>
-          var n = 0
-          val collected = ms.map { x => n += 1; x }.toVector
-          if (n == 0) m.emptyTurns.add(1) else m.mentionsEmitted.add(n)
-          collected.iterator
-        }
-      }
+      it.flatMap(t => g.findTopMentions(t.conv_id, t.turn_idx, t.text))
     }
   }
 
@@ -309,25 +296,21 @@ object MentionDetector {
   }
 
   /**
-   * THE scale path: detection → span top-1 → per-turn concept dedup, fused
-   * into one map-side pass emitting final `Triple`s directly.
+   * THE scale path, and the only production detection path: detection →
+   * span top-1 → per-turn concept dedup, fused into one map-side pass
+   * emitting final triples, as a first-class Catalyst operator
+   * ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel sits
+   * inside the single query plan, the corpus exchange below it stays visible
+   * to the optimizer, and subj/pred render in whole-stage codegen above it.
+   * The kernel is also the only place that counts turns and mentions.
    *
    * Zero-shuffle dedup argument: triple subj embeds (conv_id, turn_idx), so
    * duplicates of a (turn, concept) pair can only originate from the same
-   * turn — which lives in exactly one partition. A per-turn HashSet therefore
+   * turn — which lives in exactly one partition. A per-turn dedup therefore
    * yields GLOBALLY distinct mention triples with no exchange; with entries
    * born canonical (Grounder.build canonical map) nothing downstream needs a
    * second pass. Total corpus-wide shuffles in the whole pipeline: one (the
    * conversation-preserving repartition).
-   */
-  /** Narrow scan output: subj/pred are rendered in codegen downstream. */
-  final case class TurnConcept(conv_id: String, turn_idx: Int, obj: String)
-
-  /**
-   * THE scale path, as a first-class Catalyst operator
-   * ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel sits
-   * inside the single query plan, the corpus exchange below it stays visible
-   * to the optimizer, and subj/pred render in whole-stage codegen above it.
    */
   def detectTriples(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
                     metrics: Option[graft.pipeline.RunMetrics] = None): org.apache.spark.sql.DataFrame = {
@@ -379,14 +362,10 @@ object MentionDetector {
    * Final mention triples: (turn URI, ex:mentions, concept CURIE),
    * deduplicated (A2 — the "final groupBy-dedup materialization").
    */
-  /** @param dedup set false when the caller dedups downstream anyway (e.g.
-    *   after canonicalize + union) — the final distinct set is identical and
-    *   a corpus-sized exchange is saved. */
-  def mentionTriples(topMentions: DataFrame, dedup: Boolean = true): DataFrame = {
-    val t = topMentions.select(
+  def mentionTriples(topMentions: DataFrame): DataFrame =
+    topMentions.select(
       concat(lit("turn:"), col("conv_id"), lit("/"), col("turn_idx")).as("subj"),
       lit(Vocab.Mentions).as("pred"),
       concat(col("prefix"), lit(":"), col("id")).as("obj"))
-    if (dedup) t.dropDuplicates("subj", "pred", "obj") else t
-  }
+      .dropDuplicates("subj", "pred", "obj")
 }

@@ -62,8 +62,7 @@ object BulkRunner {
                 val version = OboGraphReader.squeezeGraph(graphs, Some(canonicalPrefix))
                   .select(OboGraphReader.versionColumn).collect()
                   .headOption.flatMap(r => Option(r.getString(0)))
-                val ctx = KgPipeline.prepare(spark, sourcePathOf(res), converter,
-                  Some(canonicalPrefix))
+                val ctx = KgPipeline.prepareGraphs(spark, graphs, converter, Some(canonicalPrefix))
                 // per-job context released once counted: a 1.2k-prefix sweep
                 // must not accumulate 1.2k cached tables + broadcast automatons
                 try {
@@ -118,14 +117,4 @@ object BulkRunner {
       } finally pool.shutdown()
     }
   }
-
-  /** The path the PARSEABLE JSON actually lives at: a ConvertedSource's
-    * `path` is the raw pre-conversion OWL/OBO — feeding that to the pipeline
-    * would re-parse garbage; its converter output (`outPath`) is the document
-    * the resolution succeeded on. */
-  private def sourcePathOf(res: SourceResolver.Resolution): String =
-    res.resolvedFrom.map {
-      case c: SourceResolver.ConvertedSource => c.outPath
-      case s                                 => s.path
-    }.getOrElse(throw new IllegalStateException("resolved graphs without a source"))
 }

@@ -53,14 +53,14 @@ object Demo {
     // snapshot's resume tag intact (re-runs must still reuse the stage)
     val expired = Seq("kg_edges", "kg_nodes", "minhash_store")
       .map(t => t -> ic.expireSnapshots(t, keepLast = 2))
-    // mentions_top IS vacuumed too, protected only by its keepTags entry —
+    // mention_triples IS vacuumed too, protected only by its keepTags entry —
     // so the mentions_reusable flag genuinely exercises the tag-preservation
     // contract (keepLast=1 alone would also keep it today; the tag is the
     // load-bearing guard once more snapshots exist)
-    ic.expireSnapshots("mentions_top", keepLast = 1, keepTags = Seq("run/mentions"))
+    ic.expireSnapshots("mention_triples", keepLast = 1, keepTags = Seq("run/mentions"))
     println(s"VACUUM ${expired.map { case (t, ids) => s"$t=${ids.size}" }.mkString(" ")} " +
       s"current=${ic.currentSnapshotId("kg_edges").getOrElse(-1L)} " +
-      s"mentions_reusable=${ic.findByTag("mentions_top", "run/mentions").isDefined}")
+      s"mentions_reusable=${ic.findByTag("mention_triples", "run/mentions").isDefined}")
     steadyState(spark)
     spark.stop()
   }

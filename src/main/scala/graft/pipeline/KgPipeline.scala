@@ -14,10 +14,9 @@ import graft.sources.OboGraphReader
  * End-to-end KG-construction pipeline (BASELINE.json north_star):
  *
  *   read transcripts → conversation-boundary-preserving repartition (hash on
- *   salted conv_id) → sortWithinPartitions(conv_id, turn_idx) →
- *   mapPartitions trie mention detection [G4] → candidate scoring + top-1
- *   window [F5] → CURIE canonicalization [F1-F4, native expressions] →
- *   xref-based entity merge [J3] → groupBy-dedup [A2] → (subj, pred, obj)
+ *   salted conv_id) → sortWithinPartitions(conv_id, turn_idx) → ONE fused
+ *   detection pass [G4] (span top-1 [F5], per-turn concept dedup [A2],
+ *   entries born canonical through the xref merge [J3]) → (subj, pred, obj)
  *   edge + node tables with per-partition lineage metrics [S9/S10/A4],
  *   checkpoint-resumable per icelite snapshot.
  *
@@ -25,11 +24,11 @@ import graft.sources.OboGraphReader
  *  - the ontology/lexicon/grounder path never shuffles the corpus: grounder
  *    and xref-merge maps are driver-built from ontology-sized tables and
  *    BROADCAST;
- *  - at most ONE corpus-wide shuffle on the fused path: the salted
- *    repartition (skipped entirely for conv_id-bucketed input — the Iceberg
- *    storage layout); per-turn dedup is map-side by construction. Only the
- *    icelite-materializing path pays a second exchange (snapshot read-back
- *    loses partitioning, so its dedup is a real partial/final hash agg);
+ *  - at most ONE corpus-wide shuffle: the salted repartition (skipped
+ *    entirely for conv_id-bucketed input — the Iceberg storage layout);
+ *    per-turn dedup is map-side by construction, in every mode — the
+ *    icelite path materializes the same kernel output, which is already
+ *    globally distinct, so its read-back needs no second exchange;
  *  - AQE + skew-join enabled by session conf; salting bounds any single
  *    conversation's partition footprint.
  */
@@ -38,21 +37,16 @@ object KgPipeline {
   final case class Result(
       triples: DataFrame,
       nodes: DataFrame,
-      mentionsTopK: DataFrame,
       snapshotId: Option[Long],
       metrics: RunMetrics)
 
   /** Salt width for conversation partitioning (SURVEY J4). */
   val SaltBuckets = 8
 
-  def standardizeOntology(spark: SparkSession, ontologyJsonPath: String, converter: Converter,
-                          prefix: Option[String] = None): (DataFrame, DataFrame) =
-    standardizeGraphs(OboGraphReader.readGraphs(spark, ontologyJsonPath), converter, prefix)
-
-  /** Graphs-first variant: callers that already hold the parsed graphs
-    * DataFrame (e.g. [[prepare]], which also derives equivalentNodesSets
-    * edges from it) pass it here, so the multiLine JSON document is parsed
-    * once per action — and both consumers provably see the SAME read. */
+  /** Standardized (nodes, edges) of a parsed graphs DataFrame
+    * ([[OboGraphReader.readGraphs]]). [[prepare]] also derives
+    * equivalentNodesSets edges from the same frame, so both consumers
+    * provably see the SAME read. */
   def standardizeGraphs(graphs: DataFrame, converter: Converter,
                         prefix: Option[String] = None): (DataFrame, DataFrame) = {
     val nodes = GraphStandardizer.standardizeNodes(graphs, converter, prefix).cache()
@@ -143,8 +137,16 @@ object KgPipeline {
               ontologyJsonPath: String,
               converter: Converter = MiniOntology.converter,
               prefix: Option[String] = Some("PATO"),
-              extraLexicon: Option[DataFrame] = None): OntologyContext = {
-    val graphs = OboGraphReader.readGraphs(spark, ontologyJsonPath)
+              extraLexicon: Option[DataFrame] = None): OntologyContext =
+    prepareGraphs(spark, OboGraphReader.readGraphs(spark, ontologyJsonPath), converter, prefix,
+      extraLexicon)
+
+  /** [[prepare]] over already-parsed graphs (e.g. a source resolution's). */
+  def prepareGraphs(spark: SparkSession,
+                    graphs: DataFrame,
+                    converter: Converter,
+                    prefix: Option[String],
+                    extraLexicon: Option[DataFrame] = None): OntologyContext = {
     val (nodes, edges) = standardizeGraphs(graphs, converter, prefix)
     val ownLexicon = LiteralMappings.fromNodes(nodes, prefix.getOrElse("ONT"))
     val lexicon = extraLexicon.fold(ownLexicon)(x => ownLexicon.unionByName(x))
@@ -206,37 +208,25 @@ object KgPipeline {
         .sortWithinPartitions(col("conv_id"), col("turn_idx"))
         .drop("salt")
 
-    // span-local top-1 fused into the detection scan (no ranking-window
-    // shuffle; equivalence with detect→topCandidates is unit-tested).
-    // Column pruning pushes the slim projection below the repartition, so
-    // only (conv_id, turn_idx, text) ever shuffles.
-    val slimTurns = MentionDetector.slim(turns)
-    // accumulators attach to whichever detection pass actually runs per mode
-    // (icelite → the materialized top-mention snapshot; else the fused scan)
-    val top = MentionDetector.detectTopSlim(slimTurns, grounder,
-      if (icelite.isDefined) Some(metrics) else None).toDF()
+    // detection + span top-1 + per-turn dedup fused into ONE map-side pass
+    // (see MentionDetector.detectTriples); its rows are globally distinct and
+    // born canonical. Column pruning pushes the slim projection below the
+    // repartition, so only (conv_id, turn_idx, text) ever shuffles.
+    val mentionTriples =
+      MentionDetector.detectTriples(MentionDetector.slim(turns), grounder, Some(metrics))
 
-    // ontology edges: canonicalize + distinct (tiny)
+    // ontology edges: canonicalize + distinct (tiny), in one partition so a
+    // snapshot of the union writes one file for them, not one per shuffle
+    // partition
     val ontologyTriples = canonicalize(edges.select("subj", "pred", "obj"), canonical)
       .dropDuplicates("subj", "pred", "obj")
+      .coalesce(1)
 
-    val allTriples = icelite match {
-      case Some(ic) =>
-        // resumable path: mentions materialize as a tagged snapshot first;
-        // read-back loses partitioning, so dedup pays one explicit shuffle
-        val topSnap = ic.materialize(spark, "mentions_top", s"$runTag/mentions")(top)
-        // dedup ONCE, after canonicalize+union — mentionTriples' own dedup
-        // would be a second corpus-sized exchange for the same final set
-        canonicalize(MentionDetector.mentionTriples(topSnap, dedup = false), canonical)
-          .unionByName(ontologyTriples)
-          .dropDuplicates("subj", "pred", "obj")
-      case None =>
-        // scale path: detection + top-1 + per-turn dedup + canonicalization
-        // fused into ONE map-side pass (see MentionDetector.detectTriples);
-        // the only corpus-wide shuffle in the whole plan is the repartition
-        MentionDetector.detectTriples(slimTurns, grounder, Some(metrics))
-          .unionByName(ontologyTriples)
-    }
+    // resumable path: the kernel output materializes as a tagged snapshot, so
+    // a resumed run reads it back instead of rescanning the corpus
+    val allTriples = icelite.fold(mentionTriples)(
+      _.materialize(spark, "mention_triples", s"$runTag/mentions")(mentionTriples))
+      .unionByName(ontologyTriples)
 
     val nodeTable = nodes.select(
       col("prefix"), col("id"), col("curie"), col("label"), col("deprecated"))
@@ -249,6 +239,6 @@ object KgPipeline {
       id
     }
 
-    Result(allTriples, nodeTable, top, snapId, metrics)
+    Result(allTriples, nodeTable, snapId, metrics)
   }
 }

@@ -8,9 +8,17 @@ import org.apache.spark.util.LongAccumulator
 /**
  * Run diagnostics (SURVEY S10/A3/A4 — robot.py GETTER_MESSAGES +
  * write_getter_warnings, and the north rule's per-partition lineage +
- * triple-count metrics): every lenient skip in the reference becomes an
- * accumulator bump here, flushed to a JSON file next to the outputs. Spark
+ * triple-count metrics), flushed to a JSON file next to the outputs. Spark
  * accumulators aggregate across all executors with no extra job.
+ *
+ * Writers: the detection kernel ([[graft.plans.DetectTriplesExec]]) is the
+ * only writer of `turns_processed` (each input turn), `mentions_emitted`
+ * (each distinct (turn, concept) row it emits) and `empty_turns`, in every
+ * pipeline mode; they count each executed detection pass, so a resumed run
+ * that reuses the mention snapshot reports 0, and each extra action over an
+ * unmaterialized result counts again. `dedup_dropped_*` are the session's
+ * DedupOps guard counts. `skipped_nodes`, `failed_sources` and `messages`
+ * have no writer yet: the reference's lenient skips are not counted here.
  */
 final class RunMetrics(spark: SparkSession) extends Serializable {
   val turnsProcessed: LongAccumulator = spark.sparkContext.longAccumulator("graft.turns_processed")

@@ -103,7 +103,10 @@ object OboGraphReader {
    * equivalentNodesSets, n_graphs.
    */
   def readGraphs(spark: SparkSession, path: String, sourceIri: Option[String] = None): DataFrame = {
-    val doc = spark.read.option("multiLine", value = true).schema(documentSchema).json(path)
+    // PERMISSIVE parsing keeps the raw text of a record that does not match
+    // the schema in this column (its mismatched fields come back null)
+    val doc = spark.read.option("multiLine", value = true)
+      .schema(documentSchema.add("_corrupt_record", StringType)).json(path)
     val graphs = doc
       .select(size(col("graphs")).as("n_graphs"), explode(col("graphs")).as("g"))
       .select(
@@ -116,15 +119,21 @@ object OboGraphReader {
         col("g.logicalDefinitionAxioms").as("logicalDefinitionAxioms"),
         col("g.equivalentNodesSets").as("equivalentNodesSets"))
 
+    // one probe job per read. A document that does not match the OBO Graph
+    // schema (truncated, or a field of the wrong JSON type) is a hard error:
+    // silently nulled nodes would make an empty ontology look like a good one.
     // P4 repair: sole graph without id ← source IRI; a sole id-less graph
     // with NO source IRI, or several graphs with missing ids, is unrepairable
     // (robot.py:345-349) — hard errors, not silent null ids that would poison
     // downstream provenance.
-    val missing = graphs.filter(col("graph_id").isNull)
-    val nMissing = missing.limit(2).count()
-    if (nMissing > 0) {
-      val multi = graphs.limit(2).count() > 1
-      if (multi) throw new IllegalArgumentException(
+    val probe = doc.select(
+      col("_corrupt_record").isNotNull,
+      coalesce(size(filter(col("graphs"), g => g("id").isNull)), lit(0)),
+      coalesce(size(col("graphs")), lit(0))).collect()
+    if (probe.exists(_.getBoolean(0))) throw new IllegalArgumentException(
+      s"malformed OBO Graph JSON: $path does not parse against the OBO Graph schema")
+    if (probe.map(_.getInt(1)).sum > 0) {
+      if (probe.map(_.getInt(2)).sum > 1) throw new IllegalArgumentException(
         "unrepairable OBO graph document: multiple graphs with missing ids (robot.py:346-349 semantics)")
       if (sourceIri.isEmpty) throw new IllegalArgumentException(
         "only graph is missing id and no source IRI to repair it (robot.py:345 semantics)")

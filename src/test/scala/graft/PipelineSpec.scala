@@ -88,11 +88,27 @@ class PipelineSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val root = "target/icelite_resume_" + System.nanoTime()
     val tr = Transcripts.synthetic(spark, 100)
+    def metric(ic: Icelite, id: Long, key: String): Long = {
+      val json = new String(Files.readAllBytes(
+        Paths.get(ic.root, "kg_edges", "metrics", s"$id.json")), "UTF-8")
+      s""""$key":(\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
+        .getOrElse(fail(s"$key missing from $json"))
+    }
 
     // full run #1 (fresh)
     val ic1 = new Icelite(root + "_fresh")
-    KgPipeline.run(spark, tr, ontPath, icelite = Some(ic1), runTag = "r1")
+    val freshId = KgPipeline.run(spark, tr, ontPath, icelite = Some(ic1), runTag = "r1")
+      .snapshotId.get
     val fresh = ic1.readSnapshot(spark, "kg_edges").collect().map(_.toSeq).toSet
+
+    // run metrics mean the same in every mode: the detection kernel counts
+    // each input turn once and each distinct (turn, concept) row it emits
+    assert(metric(ic1, freshId, "turns_processed") == tr.count())
+    assert(metric(ic1, freshId, "mentions_emitted") ==
+      ic1.readSnapshot(spark, "mention_triples").count())
+
+    // mode agreement: the icelite path builds the same KG as the in-memory one
+    assert(fresh == KgPipeline.run(spark, tr, ontPath).triples.collect().map(_.toSeq).toSet)
 
     // simulated crash: mentions snapshot landed, final tables did not
     val ic2 = new Icelite(root + "_resumed")
@@ -100,14 +116,16 @@ class PipelineSpec extends AnyFunSuite {
     val turns = tr.withColumn("salt", pmod(col("turn_idx"), lit(KgPipeline.SaltBuckets)))
       .repartition(col("conv_id"), col("salt"))
       .sortWithinPartitions(col("conv_id"), col("turn_idx")).drop("salt")
-    ic2.materialize(spark, "mentions_top", "r1/mentions")(
-      MentionDetector.detectTopSlim(MentionDetector.slim(turns), ctx.grounder).toDF())
-    assert(ic2.currentSnapshotId("mentions_top").contains(1L))
+    ic2.materialize(spark, "mention_triples", "r1/mentions")(
+      MentionDetector.detectTriples(MentionDetector.slim(turns), ctx.grounder))
+    assert(ic2.currentSnapshotId("mention_triples").contains(1L))
     assert(ic2.currentSnapshotId("kg_edges").isEmpty) // "crashed" before finishing
 
     // resume: full run against the same icelite root reuses the snapshot
-    KgPipeline.run(spark, tr, ontPath, icelite = Some(ic2), runTag = "r1")
-    assert(ic2.currentSnapshotId("mentions_top").contains(1L)) // NOT recomputed
+    val resumedId = KgPipeline.run(spark, tr, ontPath, icelite = Some(ic2), runTag = "r1")
+      .snapshotId.get
+    assert(ic2.currentSnapshotId("mention_triples").contains(1L)) // NOT recomputed
+    assert(metric(ic2, resumedId, "turns_processed") == 0L) // the kernel never ran
     val resumed = ic2.readSnapshot(spark, "kg_edges").collect().map(_.toSeq).toSet
     assert(resumed == fresh)
 
@@ -593,6 +611,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(!reports(2).ok && reports(2).messages.nonEmpty)
   }
 
+  test("bulk runner: malformed OBO Graph JSON fails its own job only") {
+    import graft.pipeline.BulkRunner
+    import graft.sources.SourceResolver._
+    import java.nio.file.{Files, Paths}
+    val fixtureJson = new String(Files.readAllBytes(Paths.get(ontPath)), "UTF-8")
+    val truncated = Paths.get("target/fixtures/bulk_truncated.json")
+    Files.write(truncated, fixtureJson.take(fixtureJson.length / 2).getBytes("UTF-8"))
+    val stringNodes = Paths.get("target/fixtures/bulk_string_nodes.json")
+    Files.write(stringNodes,
+      """{"graphs":[{"id":"http://purl.obolibrary.org/obo/pato.owl","nodes":"not a list","edges":[]}]}"""
+        .getBytes("UTF-8"))
+    val tr = Transcripts.synthetic(spark, 30)
+    val reports = BulkRunner.run(spark, Seq(
+      BulkRunner.OntologyJob("PATO", Seq(JsonSource(ontPath))),
+      BulkRunner.OntologyJob("PATO", Seq(JsonSource(truncated.toString))),
+      BulkRunner.OntologyJob("PATO", Seq(JsonSource(stringNodes.toString))),
+      BulkRunner.OntologyJob("PATO", Seq(JsonSource(ontPath)))),
+      tr, MiniOntology.converter)
+    for (bad <- Seq(reports(1), reports(2))) {
+      assert(!bad.ok, bad)
+      assert(bad.messages.nonEmpty, bad)
+    }
+    val usual = KgPipeline.run(spark, tr, ontPath).triples.count()
+    for (good <- Seq(reports(0), reports(3))) {
+      assert(good.ok, good.messages.mkString("; "))
+      assert(good.triples == usual)
+    }
+  }
+
   test("bulk runner: a ConvertedSource job pipelines the converter OUTPUT, not the raw source") {
     import graft.pipeline.BulkRunner
     import graft.sources.SourceResolver._
@@ -600,8 +647,8 @@ class PipelineSpec extends AnyFunSuite {
     java.nio.file.Files.write(script, "#!/bin/sh\ncp \"$1\" \"$2\"\n".getBytes("UTF-8"))
     script.toFile.setExecutable(true)
     // the "owl" input deliberately does NOT parse as OBO Graph JSON — only
-    // the converter's output does; before the sourcePathOf fix the pipeline
-    // re-read the raw path and the whole job failed after a good resolution
+    // the converter's output does; the pipeline must run on the graphs the
+    // resolution parsed, never re-read the raw path
     val rawOwl = java.nio.file.Paths.get("target/fixtures/bulk_raw.owl")
     java.nio.file.Files.write(rawOwl,
       "<rdf:RDF>this is not json</rdf:RDF>".getBytes("UTF-8"))
@@ -676,7 +723,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(reports.forall(_.ok), reports.map(_.messages).mkString("; "))
     // identical inputs → identical triple counts from every job
     assert(reports.map(_.triples).distinct.size == 1)
-    for (table <- Seq("mentions_top", "kg_nodes", "kg_edges")) {
+    for (table <- Seq("mention_triples", "kg_nodes", "kg_edges")) {
       val snaps = Paths.get(ic.root, table, "snapshots")
       val ids = Files.list(snaps).iterator()
       val manifests = new scala.collection.mutable.ArrayBuffer[Long]()
