@@ -44,7 +44,6 @@ object CorpusHygiene {
       maxDupTokenFrac: Double = 1.0,
       sampleRates: Map[String, Double] = Map.empty,
       sampleDefaultRate: Double = 1.0,
-      sampleSalt: String = "graft-mix",
       redact: Boolean = true)
 
   /**
@@ -94,8 +93,7 @@ object CorpusHygiene {
 
     // 5. stratified down-sampling (deterministic, partitioning-invariant)
     if (cfg.sampleRates.nonEmpty || cfg.sampleDefaultRate < 1.0)
-      d = TextOps.stratifiedSample(d, "lang", cfg.sampleRates,
-        cfg.sampleDefaultRate, cfg.sampleSalt)
+      d = TextOps.stratifiedSample(d, "lang", cfg.sampleRates, cfg.sampleDefaultRate)
 
     // 6. redaction LAST: earlier stages key on the original text
     if (cfg.redact) d.withColumn("text", TextOps.redactPii(col("text"))) else d

@@ -24,11 +24,15 @@ import graft.sources.OboGraphReader
  *  - the ontology/lexicon/grounder path never shuffles the corpus: grounder
  *    and xref-merge maps are driver-built from ontology-sized tables and
  *    BROADCAST;
+ *  - the ontology triples are finished ONCE per [[OntologyContext]]
+ *    (standardize → canonicalize → distinct, cached in one partition); a
+ *    pass only unions them, so it derives nothing ontology-side;
  *  - at most ONE corpus-wide shuffle: the salted repartition (skipped
- *    entirely for conv_id-bucketed input — the Iceberg storage layout);
- *    per-turn dedup is map-side by construction, in every mode — the
- *    icelite path materializes the same kernel output, which is already
- *    globally distinct, so its read-back needs no second exchange;
+ *    entirely for conv_id-bucketed input — the Iceberg storage layout —
+ *    where a pass has no exchange at all); per-turn dedup is map-side by
+ *    construction, in every mode — the icelite path materializes the same
+ *    kernel output, which is already globally distinct, so its read-back
+ *    needs no second exchange;
  *  - AQE + skew-join enabled by session conf; salting bounds any single
  *    conversation's partition footprint.
  */
@@ -38,15 +42,14 @@ object KgPipeline {
       triples: DataFrame,
       nodes: DataFrame,
       snapshotId: Option[Long],
-      metrics: RunMetrics)
+      metrics: Option[RunMetrics])
 
   /** Salt width for conversation partitioning (SURVEY J4). */
   val SaltBuckets = 8
 
   /** Standardized (nodes, edges) of a parsed graphs DataFrame
-    * ([[OboGraphReader.readGraphs]]). [[prepare]] also derives
-    * equivalentNodesSets edges from the same frame, so both consumers
-    * provably see the SAME read. */
+    * ([[OboGraphReader.readGraphs]]), both cached. The frame itself is not
+    * pinned: each consumer's first action parses the document again. */
   def standardizeGraphs(graphs: DataFrame, converter: Converter,
                         prefix: Option[String] = None): (DataFrame, DataFrame) = {
     val nodes = GraphStandardizer.standardizeNodes(graphs, converter, prefix).cache()
@@ -90,22 +93,12 @@ object KgPipeline {
 
   /**
    * Rewrite triple endpoints through the canonical-entity map — map-side, no
-   * shuffle. Small maps (the common case: xref merges are ontology-sized)
-   * become a literal `map_from_arrays` lookup that stays inside whole-stage
-   * codegen; big maps fall back to a broadcast-map UDF.
+   * shuffle: one UDF over the driver map, which rides in its closure. Only
+   * [[prepareGraphs]] calls it in a pipeline run, once per ontology release.
+   * Canonical representatives are never keys, so it is idempotent.
    */
   def canonicalize(triples: DataFrame, canonical: Map[String, String]): DataFrame = {
-    if (canonical.isEmpty) return triples
-    val remap: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (canonical.size <= 10000) {
-        val keys = array(canonical.keys.toSeq.map(lit): _*)
-        val vals = array(canonical.values.toSeq.map(lit): _*)
-        c => coalesce(element_at(map_from_arrays(keys, vals), c), c)
-      } else {
-        val b = triples.sparkSession.sparkContext.broadcast(canonical)
-        val f = udf((c: String) => if (c == null) null else b.value.getOrElse(c, c))
-        c => f(c)
-      }
+    val remap = udf((c: String) => if (c == null) null else canonical.getOrElse(c, c))
     triples.select(remap(col("subj")).as("subj"), col("pred"), remap(col("obj")).as("obj"))
   }
 
@@ -113,7 +106,9 @@ object KgPipeline {
    * Ontology-side artifacts, built ONCE per ontology release and reused
    * across every corpus batch/snapshot (at 10^12 turns, ontology prep is
    * amortized to zero — rebuilding the broadcast automaton per batch would
-   * serialize the cluster on the driver).
+   * serialize the cluster on the driver). `edges` are the KG's finished
+   * ontology triples: canonicalized through `canonical`, distinct, and cached
+   * in one partition (a snapshot of a pass writes one file for them).
    */
   final case class OntologyContext(
       nodes: DataFrame,
@@ -147,7 +142,7 @@ object KgPipeline {
                     converter: Converter,
                     prefix: Option[String],
                     extraLexicon: Option[DataFrame] = None): OntologyContext = {
-    val (nodes, edges) = standardizeGraphs(graphs, converter, prefix)
+    val nodes = GraphStandardizer.standardizeNodes(graphs, converter, prefix).cache()
     val ownLexicon = LiteralMappings.fromNodes(nodes, prefix.getOrElse("ONT"))
     val lexicon = extraLexicon.fold(ownLexicon)(x => ownLexicon.unionByName(x))
     // entity merge signals: node xrefs + equivalentNodesSets (both public
@@ -156,6 +151,10 @@ object KgPipeline {
     val canonical = xrefCanonicalMap(nodes, prefix, Some(ensEdges))
     // entity merge folded into the index: grounder entries are born canonical
     val grounder = spark.sparkContext.broadcast(Grounder.build(lexicon, canonical))
+    val edges = canonicalize(GraphStandardizer.standardizeEdges(graphs, converter), canonical)
+      .dropDuplicates("subj", "pred", "obj")
+      .coalesce(1)
+      .cache()
     OntologyContext(nodes, edges, grounder, canonical)
   }
 
@@ -177,6 +176,10 @@ object KgPipeline {
       icelite, runTag)
 
   /**
+   * One fused detection pass unioned with the context's ontology triples.
+   * Only with `icelite` is the kernel output materialized, hence counted once
+   * by `Result.metrics`; in memory each action re-runs it, so metrics are None.
+   *
    * @param inputConvPartitioned the input is ALREADY partitioned so that no
    *   conversation spans partitions (an Iceberg table bucketed on conv_id —
    *   the north-star storage layout — or this repo's generator output). The
@@ -190,10 +193,6 @@ object KgPipeline {
                   icelite: Option[Icelite] = None,
                   runTag: String = "run",
                   inputConvPartitioned: Boolean = false): Result = {
-    val OntologyContext(nodes, edges, grounder, canonical) = ctx
-    val metrics = new RunMetrics(spark)
-
-    // ---- corpus side (huge) -----------------------------------------------
     // conversation-boundary-preserving partitioning, salted for skew: hash on
     // (conv_id, turn_idx % S). Mention detection is per-turn, so salting is
     // allowed to split one conversation across ≤ S partitions without
@@ -212,33 +211,27 @@ object KgPipeline {
     // (see MentionDetector.detectTriples); its rows are globally distinct and
     // born canonical. Column pruning pushes the slim projection below the
     // repartition, so only (conv_id, turn_idx, text) ever shuffles.
-    val mentionTriples =
-      MentionDetector.detectTriples(MentionDetector.slim(turns), grounder, Some(metrics))
+    def mentionTriples(metrics: Option[RunMetrics]): DataFrame =
+      MentionDetector.detectTriples(MentionDetector.slim(turns), ctx.grounder, metrics)
 
-    // ontology edges: canonicalize + distinct (tiny), in one partition so a
-    // snapshot of the union writes one file for them, not one per shuffle
-    // partition
-    val ontologyTriples = canonicalize(edges.select("subj", "pred", "obj"), canonical)
-      .dropDuplicates("subj", "pred", "obj")
-      .coalesce(1)
-
-    // resumable path: the kernel output materializes as a tagged snapshot, so
-    // a resumed run reads it back instead of rescanning the corpus
-    val allTriples = icelite.fold(mentionTriples)(
-      _.materialize(spark, "mention_triples", s"$runTag/mentions")(mentionTriples))
-      .unionByName(ontologyTriples)
-
-    val nodeTable = nodes.select(
+    val nodeTable = ctx.nodes.select(
       col("prefix"), col("id"), col("curie"), col("label"), col("deprecated"))
 
-    val snapId = icelite.map { ic =>
-      ic.writeSnapshot(nodeTable, "kg_nodes", s"$runTag/nodes")
-      val id = ic.writeSnapshot(allTriples, "kg_edges", s"$runTag/edges")
-      // diagnostics flushed AFTER the snapshot actions populate accumulators
-      metrics.write(s"${ic.root}/kg_edges/metrics/$id.json")
-      id
+    icelite match {
+      case None =>
+        Result(mentionTriples(None).unionByName(ctx.edges), nodeTable, None, None)
+      case Some(ic) =>
+        // resumable path: the kernel output materializes as a tagged
+        // snapshot, so a resumed run reads it back instead of rescanning the
+        // corpus (and its metrics report 0 turns)
+        val metrics = new RunMetrics(spark)
+        val allTriples = ic.materialize(spark, "mention_triples", s"$runTag/mentions")(
+          mentionTriples(Some(metrics))).unionByName(ctx.edges)
+        ic.writeSnapshot(nodeTable, "kg_nodes", s"$runTag/nodes")
+        val id = ic.writeSnapshot(allTriples, "kg_edges", s"$runTag/edges")
+        // diagnostics flushed AFTER the snapshot actions populate accumulators
+        metrics.write(s"${ic.root}/kg_edges/metrics/$id.json")
+        Result(allTriples, nodeTable, Some(id), Some(metrics))
     }
-
-    Result(allTriples, nodeTable, snapId, metrics)
   }
 }

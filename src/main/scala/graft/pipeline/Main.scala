@@ -45,7 +45,7 @@ object Main {
 
     val snapId = result.snapshotId.getOrElse(-1L)
     // single summary line for the submitting driver to scrape
-    println(s"""{"snapshot_id":$snapId,"metrics":${result.metrics.toJson},""" +
+    println(s"""{"snapshot_id":$snapId,"metrics":${result.metrics.fold("null")(_.toJson)},""" +
       s""""manifest":${ic.manifestJson("kg_edges", snapId)}}""")
     spark.stop()
   }

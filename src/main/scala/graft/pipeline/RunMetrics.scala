@@ -13,10 +13,10 @@ import org.apache.spark.util.LongAccumulator
  *
  * Writers: the detection kernel ([[graft.plans.DetectTriplesExec]]) is the
  * only writer of `turns_processed` (each input turn), `mentions_emitted`
- * (each distinct (turn, concept) row it emits) and `empty_turns`, in every
- * pipeline mode; they count each executed detection pass, so a resumed run
- * that reuses the mention snapshot reports 0, and each extra action over an
- * unmaterialized result counts again. `dedup_dropped_*` are the session's
+ * (each distinct (turn, concept) row it emits) and `empty_turns`; they count
+ * each executed detection pass, so KgPipeline hands them only to its icelite
+ * path, whose materialized stage runs once (a resumed run that reuses the
+ * mention snapshot reports 0). `dedup_dropped_*` are the session's
  * DedupOps guard counts. `skipped_nodes`, `failed_sources` and `messages`
  * have no writer yet: the reference's lenient skips are not counted here.
  */

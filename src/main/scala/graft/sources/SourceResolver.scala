@@ -128,13 +128,17 @@ object SourceResolver {
   def resolve(spark: SparkSession, sources: Seq[SourceSpec],
               sourceIri: Option[String] = None): Resolution = {
     val messages = scala.collection.mutable.ArrayBuffer[String]()
+    // the read step of JSON and converted sources: a document with graphs
+    // resolves the cascade; an empty one is recorded and the cascade goes on
+    def read(s: SourceSpec, path: String, done: String): Option[Resolution] = {
+      val df = OboGraphReader.readGraphs(spark, path, sourceIri)
+      if (df.limit(1).count() > 0) Some(Resolution(Some(df), Some(s), messages.toSeq))
+      else { messages += s"[${s.kind}] $path $done but contained no graphs"; None }
+    }
     sources.foreach {
       case s @ JsonSource(path) =>
-        try {
-          val df = OboGraphReader.readGraphs(spark, path, sourceIri)
-          if (df.limit(1).count() > 0) return Resolution(Some(df), Some(s), messages.toSeq)
-          messages += s"[${s.kind}] $path parsed but contained no graphs"
-        } catch {
+        try read(s, path, "parsed").foreach(r => return r)
+        catch {
           case e: Exception =>
             // fallback-and-record, never fail (robot.py:138-147 semantics)
             messages += s"[${s.kind}] $path failed: ${e.getMessage}"
@@ -197,11 +201,8 @@ object SourceResolver {
               }
             } finally java.nio.file.Files.deleteIfExists(tmp)
           }
-          if (java.nio.file.Files.exists(out)) {
-            val df = OboGraphReader.readGraphs(spark, s.outPath, sourceIri)
-            if (df.limit(1).count() > 0) return Resolution(Some(df), Some(s), messages.toSeq)
-            messages += s"[${s.kind}] ${s.outPath} converted but contained no graphs"
-          }
+          if (java.nio.file.Files.exists(out))
+            read(s, s.outPath, "converted").foreach(r => return r)
         } catch {
           case e: Exception => // converter missing / conversion or parse failed → record, fall through
             messages += s"[${s.kind}] ${s.path} conversion failed: ${e.getMessage}"

@@ -97,18 +97,25 @@ class PipelineSpec extends AnyFunSuite {
 
     // full run #1 (fresh)
     val ic1 = new Icelite(root + "_fresh")
-    val freshId = KgPipeline.run(spark, tr, ontPath, icelite = Some(ic1), runTag = "r1")
-      .snapshotId.get
+    val freshRun = KgPipeline.run(spark, tr, ontPath, icelite = Some(ic1), runTag = "r1")
+    val freshId = freshRun.snapshotId.get
     val fresh = ic1.readSnapshot(spark, "kg_edges").collect().map(_.toSeq).toSet
 
-    // run metrics mean the same in every mode: the detection kernel counts
-    // each input turn once and each distinct (turn, concept) row it emits
+    // the detection kernel counts each input turn once and each distinct
+    // (turn, concept) row it emits
     assert(metric(ic1, freshId, "turns_processed") == tr.count())
     assert(metric(ic1, freshId, "mentions_emitted") ==
       ic1.readSnapshot(spark, "mention_triples").count())
+    // ... and only once: actions over the result read the materialized stage
+    assert(freshRun.triples.count() == fresh.size)
+    assert(freshRun.triples.collect().map(_.toSeq).toSet == fresh)
+    assert(freshRun.metrics.get.turnsProcessed.value == tr.count())
 
-    // mode agreement: the icelite path builds the same KG as the in-memory one
-    assert(fresh == KgPipeline.run(spark, tr, ontPath).triples.collect().map(_.toSeq).toSet)
+    // mode agreement: the icelite path builds the same KG as the in-memory
+    // one, which counts nothing (each action there re-runs the kernel)
+    val inMemory = KgPipeline.run(spark, tr, ontPath)
+    assert(inMemory.metrics.isEmpty)
+    assert(fresh == inMemory.triples.collect().map(_.toSeq).toSet)
 
     // simulated crash: mentions snapshot landed, final tables did not
     val ic2 = new Icelite(root + "_resumed")
@@ -562,9 +569,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(m == (0 until nGroups).flatMap(g =>
       (1 to 3).map(j => f"E:${g * 4 + j}%07d" -> f"E:${g * 4}%07d")).toMap)
 
-    // a 90k-entry map takes canonicalize's broadcast-UDF branch (> 10,000
-    // entries); it must agree with an independent driver-side rewrite of the
-    // same triples through m
+    // canonicalize through the 90k-entry map must agree with an independent
+    // driver-side rewrite of the same triples through m
     val triples = spark.range(5000).select(
       format_string("E:%07d", col("id") * 24 % (nGroups * 4)).as("subj"),
       lit("rel").as("pred"),
@@ -582,15 +588,36 @@ class PipelineSpec extends AnyFunSuite {
     val tr = Transcripts.synthetic(spark, 200)
     val triples = KgPipeline.run(spark, tr, ontPath).triples
     val plan = triples.queryExecution.executedPlan.toString
-    // count Exchange operators feeding the corpus branch; the ontology branch
-    // is rows-scale (allowed small exchanges), so assert on the corpus side:
-    // the mapPartitions (SerializeFromObject/MapPartitions) sits directly
-    // above exactly one Exchange
+    // count Exchange operators: the corpus repartition is the only one, since
+    // the ontology branch is the context's finished, cached triples
     val exchanges = "(?m)^\\s*(?:\\+- |:- )?Exchange ".r.findAllIn(plan).length
-    val ontologySideExchanges = 2 // edge dedup partial/final + union-side at most
+    val ontologySideExchanges = 0 // the context's triples are finished and cached
     assert(exchanges <= 1 + ontologySideExchanges, s"too many shuffles:\n$plan")
     // detection is a first-class operator in the SAME plan (no opaque RDD break)
     assert(plan.contains("DetectTriples"), plan)
+  }
+
+  test("plan: a pass over conv_id-partitioned input has no exchange; ontology side is cached") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val tr = Transcripts.synthetic(spark, 200)
+    val ctx = KgPipeline.prepare(spark, ontPath)
+    val triples = KgPipeline.runPrepared(spark, tr, ctx, inputConvPartitioned = true).triples
+    // the pass's own operators (the cached frame's plan is not walked), as
+    // planned before execution: exchanges inserted, no query stages yet
+    val pass = triples.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(pass.collect { case e: Exchange => e }.isEmpty, pass.treeString)
+    assert(pass.treeString.contains("DetectTriples"), pass.treeString)
+    // the ontology side is the context's cached frame, read as prepared
+    val scans = pass.collect { case m: InMemoryTableScanExec => m.relation.cacheBuilder }
+    val prepared = ctx.edges.queryExecution.optimizedPlan.collect {
+      case m: InMemoryRelation => m.cacheBuilder
+    }
+    assert(prepared.size == 1 && scans == prepared, pass.treeString)
   }
 
   test("bulk runner: canonical-prefix guard, failure recording, per-prefix run") {
