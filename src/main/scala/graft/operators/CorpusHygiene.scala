@@ -50,20 +50,30 @@ object CorpusHygiene {
    * Run the hygiene chain over `documents(doc_id, lang, text, ...)`.
    * One DataFrame out; callers count stage effects themselves if they want a
    * report (each count is a corpus job, so the engine does not force six of
-   * them on every run). NOT fully lazy: with `nearDupThreshold` set, the
-   * minhash stage `localCheckpoint(true)`s its candidate set EAGERLY — full
-   * corpus Spark jobs run at construction time, and the checkpointed blocks
-   * are lineage-truncated (unrecoverable on executor loss; a failed executor
-   * fails the job, which reruns — the stage is deterministic, so a rerun is
-   * correctness-safe, just not incremental).
+   * them on every run).
+   *
+   * Exact dedup runs ONCE per clean: its survivors are pinned with a lazy
+   * `localCheckpoint(false)` that the minhash banding, the candidate fetch,
+   * the contamination scan and the final chain all read, instead of each
+   * re-running the fingerprint shuffle. The pin stores one lineage-truncated
+   * copy of the exact-dedup survivors (memory and disk); it is not
+   * recoverable on executor loss, so a lost executor fails the job, which
+   * reruns — every stage is deterministic, so a rerun is correctness-safe,
+   * just not incremental.
+   *
+   * NOT fully lazy: under AQE, building a lazy pin runs its plan's shuffle
+   * stages, so construction runs the exact-dedup fingerprint shuffle and,
+   * with `nearDupThreshold` set, the minhash stage's banding probe and
+   * verify probe ([[DriverProbe]] jobs over the pinned survivors).
    *
    * @param benchmark optional (bench_id, text) eval items for the
    *   decontamination stage (skipped when absent)
    */
   def clean(documents: DataFrame, benchmark: Option[DataFrame] = None,
             cfg: HygieneConfig = HygieneConfig()): DataFrame = {
-    // 1. exact dedup: survivors keep the min doc_id of each normalized-text group
-    var d = DedupOps.exactDedup(documents)
+    // 1. exact dedup: survivors keep the min doc_id of each normalized-text
+    //    group, pinned once for every later stage
+    var d = DedupOps.exactDedup(documents).localCheckpoint(false)
 
     // 2. near-dup dedup: LSH candidates → verify → components → survivors
     cfg.nearDupThreshold.foreach { t =>
@@ -71,13 +81,15 @@ object CorpusHygiene {
     }
 
     // 3. decontamination: drop docs covering >= minFrac of any eval item's
-    //    gram set (the flagged id set is contamination-sized, anti-join)
+    //    gram set. The flagged id set is contamination-sized, so it is
+    //    broadcast; a broadcast anti-join ignores duplicate build keys, so it
+    //    needs no distinct, and the corpus side never shuffles
     (benchmark, cfg.decontaminateMinFrac) match {
       case (Some(bench), Some(frac)) =>
         val flagged = DedupOps
           .contamination(d, bench, cfg.decontaminateGram, frac)
-          .select("doc_id").distinct()
-        d = d.join(flagged, Seq("doc_id"), "left_anti")
+          .select("doc_id")
+        d = d.join(broadcast(flagged), Seq("doc_id"), "left_anti")
       case _ => ()
     }
 

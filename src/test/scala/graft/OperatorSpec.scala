@@ -254,6 +254,51 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(1L) == "unique alpha beta gamma delta epsilon zeta eta theta") // untouched
   }
 
+  test("plan: hygiene runs exact dedup once and never shuffles corpus text") {
+    // the planted-victim fixture of the test above
+    val docsDf = Seq(
+      (1L, "en", "unique alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "en", "Unique  alpha beta gamma delta epsilon zeta eta theta"),
+      (3L, "en", "near alpha beta gamma delta epsilon zeta eta theta iota kappa mu"),
+      (4L, "en", "near alpha beta gamma delta epsilon zeta eta theta iota kappa mu2"),
+      (5L, "en", "the benchmark question about spark shuffles and joins here today"),
+      (6L, "en", "loop loop loop loop loop loop loop loop"),
+      (7L, "en", "email me at a.b@example.com please and thanks for the data"))
+      .toDF("doc_id", "lang", "text")
+    val bench = Seq((100L, "the benchmark question about spark shuffles and joins"))
+      .toDF("bench_id", "text")
+    // plan as on a real corpus, where nothing corpus-sized broadcasts by size
+    // estimate (the seven-row fixture fits the default threshold everywhere)
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val threshold = spark.conf.getOption(thresholdKey)
+    val corpusBytes = docsDf.queryExecution.optimizedPlan.stats.sizeInBytes
+    spark.conf.set(thresholdKey, (corpusBytes - 1).toString)
+    val out = try {
+      val o = CorpusHygiene.clean(docsDf, Some(bench), CorpusHygiene.HygieneConfig(
+        nearDupThreshold = Some(0.7), minhashK = 16, minhashBands = 16,
+        decontaminateMinFrac = Some(0.8), maxDupTokenFrac = 0.5))
+      assert(o.collect().map(_.getLong(0)).toSet == Set(1L, 3L, 7L))
+      o
+    } finally threshold.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
+    // the final adaptive plan, query stages and subqueries included
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collectWithSubqueries(out.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }
+    assert(exchanges.nonEmpty, out.queryExecution.executedPlan.treeString)
+    val textShuffles = exchanges.filter(_.child.output.exists(_.name == "text"))
+    assert(textShuffles.isEmpty,
+      s"corpus text crosses an exchange:\n${textShuffles.map(_.treeString.take(1500)).mkString("\n")}")
+    // exact dedup is read from the clean's pin, never re-planned
+    val fpShuffles = exchanges.filter(_.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.exists(_.references.exists(_.name == "fp"))
+      case _ => false
+    })
+    assert(fpShuffles.isEmpty,
+      s"exact-dedup exchange in the plan:\n${fpShuffles.map(_.treeString.take(1500)).mkString("\n")}")
+  }
+
   // ---------------- DedupOps ----------------
 
   test("perSourceCap: cap respected, partitioning-invariant, partial top-N below the exchange") {
