@@ -1,8 +1,5 @@
 package graft.icelite
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
-
 /**
  * Crash-safe FOLD of sibling `prefix<id>` directories into one — the shared
  * mechanism behind steady-state compaction (ANN index batches, dedup-history
@@ -38,6 +35,10 @@ import org.apache.spark.sql.SparkSession
  * Appends racing the fold are safe as long as they land ABOVE the folded
  * ids — both callers guarantee that (appendIvfPq refuses ids at or below
  * the watermark; streaming batch ids are checkpoint-monotone).
+ *
+ * Every metadata operation — markers, claim, listing, deletes, the staging
+ * rename — goes through [[MetaIO.forRoot]]`(base)`: a scheme-less base keeps
+ * the POSIX `O_EXCL` claim, a URI base resolves the session's Hadoop conf.
  */
 object FoldSwap {
 
@@ -45,74 +46,51 @@ object FoldSwap {
   val WatermarkName = "_compacted_through"
 
   /** Highest id folded into `base` by compaction (-1 = none). */
-  def compactedThrough(fs: FileSystem, base: String): Long =
-    readLong(fs, new Path(s"$base/$WatermarkName"))
+  def compactedThrough(base: String): Long = watermark(MetaIO.forRoot(base), base)
 
-  /** Ids of existing `prefix<id>` dirs directly under `base`. */
-  def listIds(fs: FileSystem, base: String, prefix: String): Seq[Long] = {
-    val p = new Path(base)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map { st =>
-        val suffix = st.getPath.getName.stripPrefix(prefix)
-        // r7 (ADVICE): a stray non-numeric dir (a manual 'batch_id=bak'
-        // copy) must fail with the offending path and remedy, matching
-        // readLong's loud-with-remedy convention — a bare
-        // NumberFormatException here wedged every stored read and compact
-        suffix.toLongOption.getOrElse(throw new IllegalStateException(
-          s"non-numeric ${prefix}<id> directory ${st.getPath} under $base — " +
-            "not FoldSwap layout. Remove or rename the stray directory " +
-            "(ids must be plain longs for watermark ordering)"))
-      }
-  }
+  /** Ids of existing `prefix<id>` entries directly under `base`. */
+  def listIds(base: String, prefix: String): Seq[Long] =
+    listIds(MetaIO.forRoot(base), base, prefix)
 
-  private def readLong(fs: FileSystem, p: Path): Long =
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
+  private def watermark(io: MetaIO, base: String): Long =
+    readMarker(io, s"$base/$WatermarkName")
+
+  private def listIds(io: MetaIO, base: String, prefix: String): Seq[Long] =
+    io.list(base).filter(_.startsWith(prefix)).map { name =>
+      // r7 (ADVICE): a stray non-numeric dir (a manual 'batch_id=bak'
+      // copy) must fail with the offending path and remedy, matching
+      // readMarker's loud-with-remedy convention — a bare
+      // NumberFormatException here wedged every stored read and compact
+      name.stripPrefix(prefix).toLongOption.getOrElse(throw new IllegalStateException(
+        s"non-numeric ${prefix}<id> directory $base/$name under $base — " +
+          "not FoldSwap layout. Remove or rename the stray directory " +
+          "(ids must be plain longs for watermark ordering)"))
+    }
+
+  private def readMarker(io: MetaIO, p: String): Long =
+    io.readIfExists(p).fold(-1L) { raw =>
+      val txt = raw.trim
       // writes are atomic (temp + rename-overwrite below), so a non-long here
       // is EXTERNAL corruption — fail with the remedy, not a bare
       // NumberFormatException that wedges every ingest with no context
-      try txt.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalStateException(
-          s"corrupt compaction marker $p (content ${txt.take(40)}'): not a " +
-            "long. This file is written atomically — corruption is external. " +
-            "Restore it from backup or, if the fold state is known-good, " +
-            "delete it (deleting the watermark loses folded-batch replay " +
-            "REFUSAL: replays of folded ids would then duplicate rows).")
-      }
+      txt.toLongOption.getOrElse(throw new IllegalStateException(
+        s"corrupt compaction marker $p (content ${txt.take(40)}'): not a " +
+          "long. This file is written atomically — corruption is external. " +
+          "Restore it from backup or, if the fold state is known-good, " +
+          "delete it (deleting the watermark loses folded-batch replay " +
+          "REFUSAL: replays of folded ids would then duplicate rows)."))
     }
 
   /** Marker writes are ATOMIC (temp + rename-overwrite): the watermark is
     * the COMMIT POINT, and a crash mid-write must leave either the old
     * value or the new one — never a zero-length/partial file that wedges
-    * every later `compactedThrough` (ingest calls it before appending).
-    * Everything goes through FileContext: its local impl skips the
-    * ChecksumFileSystem wrapper, so no `.crc` sidecar can go stale across
-    * the data-file-only rename and poison a later checksummed open. */
-  private def writeLong(fs: FileSystem, p: Path, v: Long): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-    val tmp = new Path(p.getParent, p.getName + "._tmp")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // a marker written by fs.create in an older layout left a checksum
-    // sidecar; the rename below replaces only the data file, so drop it
-    fs.delete(new Path(p.getParent, s".${p.getName}.crc"), false)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+    * every later `compactedThrough` (ingest calls it before appending). */
+  private def writeMarker(io: MetaIO, p: String, v: Long): Unit =
+    io.writeAtomic(s"$p._tmp", p, v.toString, replace = true)
 
-  /** Swap-finish CLAIM file (the icelite snapshot-claim CAS precedent):
-    * whoever atomically CREATE_NEWs it owns the three finish steps. Without
+  /** Swap-finish CLAIM file, taken through the one claim CAS
+    * ([[MetaIO.createNew]], shared with icelite's snapshot-id claims):
+    * whoever creates it owns the three finish steps. Without
     * it, two racing finishers lose data — the delete set includes the very
     * path the winner renames staging into, so the loser's delete destroys
     * the only surviving copy of every folded batch. The claim carries an
@@ -128,69 +106,65 @@ object FoldSwap {
   /** Bounded wait for another party's finish (tests shrink it). */
   private[graft] var FinishWaitMs: Long = 60000L
 
-  private def claimPath(base: String) = new Path(s"$base/$ClaimName")
+  private def claimPath(base: String) = s"$base/$ClaimName"
 
-  /** Atomic CREATE_NEW with an owner token. Returns the token, or None when
-    * the claim is already held. Other IO faults PROPAGATE (the
-    * MetaIO.createNew exists-qualified semantics — swallowing them would
-    * misreport an FS outage as "claim held" and block reads for the wait). */
-  private def tryClaim(fs: FileSystem, base: String): Option[String] = {
+  /** Create the claim with a fresh owner token in the same exclusive
+    * create. Returns the token, or None when the claim is already held;
+    * other IO faults propagate (swallowing them would misreport an FS
+    * outage as "claim held" and block reads for the wait). */
+  private def tryClaim(io: MetaIO, base: String): Option[String] = {
     val token = java.util.UUID.randomUUID().toString
-    try {
-      val out = fs.create(claimPath(base), false)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      Some(token)
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => None
-      case e: java.io.IOException =>
-        if (fs.exists(claimPath(base))) None else throw e
-    }
+    if (io.createNew(claimPath(base), token)) Some(token) else None
   }
-
-  private def readClaimToken(fs: FileSystem, base: String): Option[String] =
-    if (!fs.exists(claimPath(base))) None
-    else {
-      val in = fs.open(claimPath(base))
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
 
   /** Delete the claim ONLY if `token` still owns it — read-verify-delete
     * (the residual TOCTOU needs a takeover to interleave between the two
     * steps, orders of magnitude narrower than the unowned delete it
     * replaces, and survivable: the next compact sweeps or takes over). */
-  private def releaseClaim(fs: FileSystem, base: String, token: String): Unit =
-    if (readClaimToken(fs, base).contains(token)) { fs.delete(claimPath(base), false); () }
+  private def releaseClaim(io: MetaIO, base: String, token: String): Unit =
+    if (io.readIfExists(claimPath(base)).contains(token)) io.deleteIfExists(claimPath(base))
 
   /** Maintenance-only: delete regardless of owner (presumed-dead takeover). */
-  private def breakClaim(fs: FileSystem, base: String): Unit = {
-    fs.delete(claimPath(base), false); ()
-  }
+  private def breakClaim(io: MetaIO, base: String): Unit = io.deleteIfExists(claimPath(base))
 
   /** The three finish steps — ONE definition shared by [[compact]] and
     * [[ensureRecovered]] so the delete-set rule can never fork between
     * writer recovery and reader healing. MUST be called holding the claim. */
-  private def finishSwap(fs: FileSystem, base: String, prefix: String, w: Long): Unit = {
-    listIds(fs, base, prefix).filter(_ <= w).foreach(id =>
-      fs.delete(new Path(s"$base/$prefix$id"), true))
-    require(fs.rename(new Path(s"$base/$TmpName"), new Path(s"$base/$prefix$w")),
-      s"compaction rename failed for $base")
-    fs.delete(new Path(s"$base/$prefix$w/_covers"), false)
+  private def finishSwap(io: MetaIO, base: String, prefix: String, w: Long): Unit = {
+    listIds(io, base, prefix).filter(_ <= w).foreach(id => io.deleteRecursive(s"$base/$prefix$id"))
+    io.rename(s"$base/$TmpName", s"$base/$prefix$w")
+    io.deleteIfExists(s"$base/$prefix$w/_covers")
   }
+
+  /** Finish the committed swap under the claim, if `tmp` still holds one.
+    * Re-derives EVERYTHING from the fresh watermark — a pre-claim peek may
+    * be stale (another finisher completed and a NEW fold committed in
+    * between; finishing to the stale target would rename the new staging
+    * over an old dir and leave its sources as duplicates). */
+  private def finishIfCommitted(io: MetaIO, base: String, prefix: String,
+                                token: String): Unit =
+    try committedTarget(io, base).foreach(finishSwap(io, base, prefix, _))
+    finally releaseClaim(io, base, token)
 
   /** Wait (bounded) for the claim holder's finish; loud failure names the
     * remedy — a stale claim is a crash-mid-finish artifact only compact()
     * (the single maintenance writer) may take over. */
-  private def awaitFinished(fs: FileSystem, base: String): Unit = {
-    val tmp = new Path(s"$base/$TmpName")
+  private def awaitFinished(io: MetaIO, base: String): Unit = {
+    val tmp = s"$base/$TmpName"
     val deadline = System.nanoTime() + FinishWaitMs * 1000000L
-    while (fs.exists(tmp) && System.nanoTime() < deadline) Thread.sleep(100L)
-    if (fs.exists(tmp)) throw new IllegalStateException(
+    while (io.exists(tmp) && System.nanoTime() < deadline) Thread.sleep(100L)
+    if (io.exists(tmp)) throw new IllegalStateException(
       s"committed compaction swap at $base still unfinished after $FinishWaitMs ms " +
         s"while another party holds $ClaimName — if that process is dead, run the " +
         "table's maintenance compact() (it takes over stale claims after the same wait)")
+  }
+
+  /** The watermark, when staging holds the swap it committed (`_covers`
+    * equals it). No staging reads `_covers` as -1, which never matches —
+    * so the common no-swap case costs one failed read. */
+  private def committedTarget(io: MetaIO, base: String): Option[Long] = {
+    val covers = readMarker(io, s"$base/$TmpName/_covers")
+    Some(covers).filter(c => c >= 0 && c == watermark(io, base))
   }
 
   /**
@@ -207,26 +181,12 @@ object FoldSwap {
    * over a stale claim — presumed-dead judgements belong to the single
    * maintenance writer, not to N concurrent readers).
    */
-  def ensureRecovered(spark: SparkSession, base: String, prefix: String): Unit = {
-    val fs = new Path(base).getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(s"$base/$TmpName")
-    if (!fs.exists(tmp)) return
-    val w = compactedThrough(fs, base)
-    val tmpCovers = readLong(fs, new Path(s"$base/$TmpName/_covers"))
-    if (tmpCovers != w || w < 0) return // uncommitted — compact() discards it
-    tryClaim(fs, base) match {
-      case Some(token) =>
-        try {
-          // re-derive EVERYTHING under the claim — the pre-claim peek may
-          // be stale (another finisher completed and a NEW fold committed
-          // in between; finishing to the stale target would rename the new
-          // staging over an old dir and leave its sources as duplicates)
-          val wNow = compactedThrough(fs, base)
-          if (fs.exists(tmp) && wNow >= 0 &&
-            readLong(fs, new Path(s"$base/$TmpName/_covers")) == wNow)
-            finishSwap(fs, base, prefix, wNow)
-        } finally releaseClaim(fs, base, token)
-      case None => awaitFinished(fs, base)
+  def ensureRecovered(base: String, prefix: String): Unit = {
+    val io = MetaIO.forRoot(base)
+    if (committedTarget(io, base).isEmpty) return
+    tryClaim(io, base) match {
+      case Some(token) => finishIfCommitted(io, base, prefix, token)
+      case None => awaitFinished(io, base)
     }
   }
 
@@ -239,62 +199,47 @@ object FoldSwap {
    * foldable. `failAt` ("before-commit" | "after-commit") is a TEST-ONLY
    * failpoint. Returns the new watermark.
    */
-  def compact(spark: SparkSession, base: String, prefix: String,
+  def compact(base: String, prefix: String,
               selectFoldable: Seq[Long] => Seq[Long],
               stage: (String, Seq[Long], Long) => Unit,
               failAt: Option[String] = None): Long = {
-    val fs = new Path(base).getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(s"$base/$TmpName")
-    val covers = new Path(s"$base/$TmpName/_covers")
-    // claim-or-take-over: compact IS the single maintenance writer, so a
-    // claim that outlives [[FinishWaitMs]] is a crash-mid-finish artifact
-    // (or a wedged finisher — the lease-less trade documented on
-    // [[ClaimName]]); readers only wait, compact may break it. Returns
-    // Some(ourToken) when WE must finish, None when another party did.
-    def claimAsMaintenance(): Option[String] =
-      tryClaim(fs, base) match {
-        case s @ Some(_) => s
+    val io = MetaIO.forRoot(base)
+    val tmp = s"$base/$TmpName"
+    // claim-or-take-over, then finish a COMMITTED swap: compact IS the
+    // single maintenance writer, so a claim that outlives [[FinishWaitMs]]
+    // is a crash-mid-finish artifact (or a wedged finisher — the lease-less
+    // trade documented on [[ClaimName]]); readers only wait, compact may
+    // break it. A live holder that finishes within the wait leaves nothing
+    // to do.
+    def finishCommittedClaimed(): Unit =
+      tryClaim(io, base) match {
+        case Some(token) => finishIfCommitted(io, base, prefix, token)
         case None =>
-          try { awaitFinished(fs, base); None } // live holder finished
+          try awaitFinished(io, base) // live holder finished
           catch {
             case _: IllegalStateException => // presumed dead: take over
-              breakClaim(fs, base)
-              Some(tryClaim(fs, base).getOrElse(throw new IllegalStateException(
-                s"could not take over the stale $ClaimName at $base")))
+              breakClaim(io, base)
+              finishIfCommitted(io, base, prefix, tryClaim(io, base).getOrElse(
+                throw new IllegalStateException(
+                  s"could not take over the stale $ClaimName at $base")))
           }
       }
-    // finish a COMMITTED swap under the claim, re-deriving the target from
-    // the fresh watermark (never a pre-claim peek)
-    def finishCommittedClaimed(): Unit =
-      claimAsMaintenance() match {
-        case Some(token) =>
-          try {
-            val wNow = compactedThrough(fs, base)
-            if (fs.exists(tmp) && wNow >= 0 && readLong(fs, covers) == wNow)
-              finishSwap(fs, base, prefix, wNow)
-          } finally releaseClaim(fs, base, token)
-        case None => () // another party finished it
-      }
     // crash recovery from a previous run
-    if (fs.exists(tmp)) {
-      val w = compactedThrough(fs, base)
-      val tmpCovers = readLong(fs, covers)
-      if (tmpCovers == w && w >= 0) {
-        // committed: finish. Deleting every remaining source dir at or
-        // below the watermark is exactly the interrupted swap's delete set
-        // (fold sets are always "all selected ids ≤ target").
-        finishCommittedClaimed()
-        return compactedThrough(fs, base)
-      } else fs.delete(tmp, true) // uncommitted: sources intact, discard staging
-    }
+    if (committedTarget(io, base).isDefined) {
+      // committed: finish. Deleting every remaining source dir at or
+      // below the watermark is exactly the interrupted swap's delete set
+      // (fold sets are always "all selected ids ≤ target").
+      finishCommittedClaimed()
+      return watermark(io, base)
+    } else if (io.exists(tmp)) io.deleteRecursive(tmp) // uncommitted: sources intact, discard staging
     // any claim with NO staging behind it is stale (a finisher crashed after
     // its rename but before releasing; a live one's remaining work — the
     // _covers cleanup and its token-checked self-release — cannot race a
     // later claim) — sweep so it cannot wedge readers
-    if (fs.exists(claimPath(base))) breakClaim(fs, base)
-    val ids = listIds(fs, base, prefix)
+    breakClaim(io, base)
+    val ids = listIds(io, base, prefix)
     val foldable = selectFoldable(ids)
-    if (foldable.size <= 1) return compactedThrough(fs, base)
+    if (foldable.size <= 1) return watermark(io, base)
     val target = foldable.max
     // recovery's delete-everything-<=-watermark is the interrupted swap's
     // delete set ONLY for a downward-closed fold set; a selector that skips
@@ -304,11 +249,11 @@ object FoldSwap {
       s"fold set must be downward-closed (every existing id <= $target): " +
         s"selected ${foldable.sorted} of ${ids.sorted} — a crash after commit " +
         "would make recovery delete the skipped dirs' only copy")
-    stage(tmp.toString, foldable, target)
-    writeLong(fs, covers, target)
+    stage(tmp, foldable, target)
+    writeMarker(io, s"$tmp/_covers", target)
     if (failAt.contains("before-commit"))
       throw new RuntimeException("failpoint: before-commit")
-    writeLong(fs, new Path(s"$base/$WatermarkName"), target) // COMMIT POINT
+    writeMarker(io, s"$base/$WatermarkName", target) // COMMIT POINT
     if (failAt.contains("after-commit"))
       throw new RuntimeException("failpoint: after-commit")
     // the claim is taken AFTER the commit point: a crash here leaves no

@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
  * The root may be a plain local path OR any Hadoop FileSystem URI
  * (`file://`, `hdfs://`, …): data files always go through Spark (Hadoop FS
  * natively), and every metadata operation goes through the [[MetaIO]] seam,
- * dispatched on the root's scheme (local paths keep POSIX `O_EXCL` claim
- * atomicity; URIs get `FileSystem.create(overwrite=false)` + `FileContext`
- * renames — atomic on HDFS, best-effort on stores without conditional
+ * dispatched on where the root resolves (plain paths under a local
+ * fs.defaultFS keep POSIX `O_EXCL` claim atomicity; URIs and plain paths
+ * under a non-local fs.defaultFS get `FileSystem.create(overwrite=false)` +
+ * `FileContext` renames — atomic on HDFS, best-effort on stores without conditional
  * writes, as documented on [[MetaIO]]).
  *
  * Writes are atomic-enough for a single driver: data first, manifest second
@@ -61,10 +62,8 @@ final class Icelite(rootDir: String) extends Serializable {
   private def tableDir(table: String): String = io.join(rootDir, table)
   private def snapsDir(table: String): String = io.join(tableDir(table), "snapshots")
 
-  def currentSnapshotId(table: String): Option[Long] = {
-    val p = io.join(tableDir(table), "current")
-    if (io.exists(p)) Some(io.readString(p).trim.toLong) else None
-  }
+  def currentSnapshotId(table: String): Option[Long] =
+    io.readIfExists(io.join(tableDir(table), "current")).map(_.trim.toLong)
 
   /** Per-table id counter (lazy so deserialized copies re-seed from disk). */
   @transient private lazy val idCounters =
@@ -328,21 +327,17 @@ final class Icelite(rootDir: String) extends Serializable {
     s.replace("\\\"", "\"").replace("\\\\", "\\")
 
   /** Bucket spec recorded in a snapshot's manifest, if any. */
-  def bucketSpec(table: String, id: Long): Option[BucketedTables.BucketSpec] = {
-    val mf = io.join(snapsDir(table), s"$id.json")
-    if (!io.exists(mf)) return None
-    BucketSpecRe.findFirstMatchIn(io.readString(mf))
+  def bucketSpec(table: String, id: Long): Option[BucketedTables.BucketSpec] =
+    io.readIfExists(io.join(snapsDir(table), s"$id.json"))
+      .flatMap(BucketSpecRe.findFirstMatchIn(_))
       .map(m => BucketedTables.BucketSpec(m.group(1).toInt, m.group(2).split(",").toSeq))
-  }
 
   /** Schema recorded with a bucketed snapshot (absent on pre-schema
     * manifests, whose non-empty data dirs infer fine). */
-  private def storedSchema(table: String, id: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val mf = io.join(snapsDir(table), s"$id.json")
-    if (!io.exists(mf)) return None
-    SchemaDdlRe.findFirstMatchIn(io.readString(mf))
+  private def storedSchema(table: String, id: Long): Option[org.apache.spark.sql.types.StructType] =
+    io.readIfExists(io.join(snapsDir(table), s"$id.json"))
+      .flatMap(SchemaDdlRe.findFirstMatchIn(_))
       .map(m => org.apache.spark.sql.types.StructType.fromDDL(unescapeJson(m.group(1))))
-  }
 
   def readSnapshot(spark: SparkSession, table: String, id: Option[Long] = None): DataFrame = {
     val sid = id.orElse(currentSnapshotId(table))

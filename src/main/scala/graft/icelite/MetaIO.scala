@@ -4,46 +4,64 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /**
- * Metadata IO for the icelite snapshot layer — the seam that makes the
- * table layer storage-agnostic. Every manifest/pointer/claim operation in
- * [[Icelite]] goes through this trait; the DATA files already do (Spark's
- * parquet reader/writer speaks Hadoop `FileSystem` natively), so with this
- * seam an icelite root can be a local directory, `file://`, `hdfs://`, or
- * any other Hadoop-registered scheme.
+ * Metadata IO for the icelite layer — the seam that makes the table layer
+ * storage-agnostic. Every manifest/pointer/claim operation in [[Icelite]]
+ * and every marker/claim/listing/swap operation in [[FoldSwap]] (and the
+ * stored tables built on it) goes through this trait; the DATA files
+ * already do (Spark's parquet reader/writer speaks Hadoop `FileSystem`
+ * natively), so with this seam a root can be a local directory, `file://`,
+ * `hdfs://`, or any other Hadoop-registered scheme.
  *
- * Two implementations, dispatched on the root's scheme
+ * Two implementations, dispatched on where the root resolves
  * ([[MetaIO.forRoot]]):
  *
- *  - [[NioMetaIO]] for scheme-less local paths — keeps the POSIX `O_EXCL`
- *    guarantee behind the snapshot-id claim CAS (java.nio `CREATE_NEW` is
- *    truly atomic on one filesystem, including across processes).
- *  - [[HadoopMetaIO]] for URIs — `FileSystem.create(path, overwrite=false)`
+ *  - [[NioMetaIO]] for scheme-less paths under a local `fs.defaultFS` —
+ *    keeps the POSIX `O_EXCL` guarantee behind every claim CAS (java.nio
+ *    `CREATE_NEW` is truly atomic on one filesystem, including across
+ *    processes).
+ *  - [[HadoopMetaIO]] for URIs, and for scheme-less paths when
+ *    `fs.defaultFS` is not local (the data files under such a path live on
+ *    the default filesystem, so the metadata must too) —
+ *    `FileSystem.create(path, overwrite=false)`
  *    is the claim CAS (atomic in the HDFS namenode; object stores without
  *    conditional writes weaken this to best-effort — documented below),
  *    and renames go through `FileContext.rename`, whose
- *    `Options.Rename` flag expresses both the fail-if-exists manifest
- *    commit and the overwriting pointer advance.
+ *    `Options.Rename` flag expresses both the fail-if-exists commit and
+ *    the overwriting pointer advance.
  *
  * S3A caveat (documented, not hidden): `create(overwrite=false)` on S3 is
  * check-then-put unless the store provides conditional writes, and rename
- * is copy+delete. On such stores the claim CAS and pointer atomicity
- * degrade to best-effort; run concurrent WRITERS against HDFS-backed
- * metadata (or a single ingest driver, the steady-state shape) and keep
- * S3 for the immutable data dirs, which never rename after commit.
+ * is copy+delete. The same holds for `file://` URIs: Hadoop's local
+ * filesystem checks existence, then opens — concurrent local writers
+ * belong on scheme-less paths. On such stores the claim CAS and pointer
+ * atomicity degrade to best-effort; run concurrent WRITERS against
+ * HDFS-backed metadata (or a single ingest driver, the steady-state shape)
+ * and keep S3 for the immutable data dirs, which never rename after commit.
  */
-private[icelite] sealed trait MetaIO extends Serializable {
+private[graft] sealed trait MetaIO extends Serializable {
   /** Join path segments with the layer's separator (both impls use '/'). */
   def join(parts: String*): String = parts.mkString("/")
   def exists(p: String): Boolean
   def mkdirs(p: String): Unit
   def readString(p: String): String
+  /** [[readString]], or None when `p` is absent — one read, so a file
+    * deleted between an exists() check and the read cannot throw. */
+  def readIfExists(p: String): Option[String] =
+    try Some(readString(p))
+    catch {
+      case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => None
+    }
   /** Write `content` to `tmp`, then atomically rename onto `dst`.
     * `replace=false` must FAIL if `dst` exists (manifest commit);
     * `replace=true` must atomically overwrite (pointer advance). */
   def writeAtomic(tmp: String, dst: String, content: String, replace: Boolean): Unit
-  /** Atomic create-if-absent (the id-claim CAS): true = this caller created
-    * the file, false = it already existed. */
-  def createNew(p: String): Boolean
+  /** Atomic create-if-absent — the ONE claim CAS (icelite snapshot ids,
+    * FoldSwap's swap-finish claim): true = this caller created the file and
+    * wrote `content` into it, false = it already existed (the existing
+    * bytes are untouched). Other IO faults propagate. */
+  def createNew(p: String, content: String = ""): Boolean
+  /** Rename `src` (file or directory) onto `dst`; FAILS if `dst` exists. */
+  def rename(src: String, dst: String): Unit
   def deleteIfExists(p: String): Unit
   /** Child NAMES (not paths) of `dir`; empty when `dir` is absent. */
   def list(dir: String): Seq[String]
@@ -51,17 +69,45 @@ private[icelite] sealed trait MetaIO extends Serializable {
   def deleteRecursive(dir: String): Unit
 }
 
-private[icelite] object MetaIO {
+private[graft] object MetaIO {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.spark.sql.SparkSession
+
   private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*://.*".r
 
-  /** Scheme-less root → NIO (keeps O_EXCL claims); URI root → Hadoop. */
-  def forRoot(root: String): MetaIO =
-    if (SchemeRe.matches(root)) new HadoopMetaIO else NioMetaIO
+  /** The Hadoop conf metadata paths resolve through: the thread's active
+    * session, else the process default session (a bare Configuration —
+    * core-site defaults — outside Spark). A caller driving a session that is
+    * neither must make it active for its fs.* settings to apply here. */
+  private[icelite] def sessionHadoopConf(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sessionState.newHadoopConf())
+      .getOrElse(new Configuration())
+
+  /** NIO (keeps O_EXCL claims) only for a scheme-less root whose default
+    * filesystem is local; a URI root, or a scheme-less one under a
+    * non-local fs.defaultFS — where Spark's parquet IO puts its data —
+    * goes to Hadoop. */
+  def forRoot(root: String): MetaIO = {
+    val conf = sessionHadoopConf()
+    if (!SchemeRe.matches(root) &&
+      org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme == "file") NioMetaIO
+    else new HadoopMetaIO(conf)
+  }
 }
 
 /** java.nio implementation for plain local paths. */
-private[icelite] object NioMetaIO extends MetaIO {
+private[graft] object NioMetaIO extends MetaIO {
   private def path(p: String) = Paths.get(p)
+
+  /** A file Hadoop's checksummed local filesystem wrote (the same path
+    * opened as a `file://` URI) carries a `.<name>.crc` sidecar. Replacing
+    * or deleting only the data file would leave that checksum stale, and
+    * the next checksummed open would throw — so both drop it. */
+  private def dropCrc(p: String): Unit = {
+    val f = path(p)
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc")); ()
+  }
 
   override def exists(p: String): Boolean = Files.exists(path(p))
   override def mkdirs(p: String): Unit = { Files.createDirectories(path(p)); () }
@@ -73,6 +119,7 @@ private[icelite] object NioMetaIO extends MetaIO {
     Files.write(path(tmp), content.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     if (replace) {
+      dropCrc(dst)
       Files.move(path(tmp), path(dst),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING); ()
@@ -101,11 +148,18 @@ private[icelite] object NioMetaIO extends MetaIO {
     }
   }
 
-  override def createNew(p: String): Boolean =
-    try { Files.createFile(path(p)); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  override def createNew(p: String, content: String): Boolean =
+    try {
+      Files.write(path(p), content.getBytes("UTF-8"),
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE); true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
 
-  override def deleteIfExists(p: String): Unit = { Files.deleteIfExists(path(p)); () }
+  // no REPLACE_EXISTING: an existing target throws FileAlreadyExistsException
+  override def rename(src: String, dst: String): Unit = {
+    Files.move(path(src), path(dst)); ()
+  }
+
+  override def deleteIfExists(p: String): Unit = { Files.deleteIfExists(path(p)); dropCrc(p) }
 
   override def list(dir: String): Seq[String] = {
     val d = path(dir)
@@ -119,31 +173,34 @@ private[icelite] object NioMetaIO extends MetaIO {
     Files.getLastModifiedTime(path(p)).toMillis
 
   override def deleteRecursive(dir: String): Unit = {
-    val d = path(dir)
-    if (!Files.exists(d)) return
-    val walk = Files.walk(d)
+    val walk =
+      try Files.walk(path(dir))
+      catch { case _: java.nio.file.NoSuchFileException => return } // absent
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => { Files.deleteIfExists(p); () })
     finally walk.close()
   }
 }
 
-/** Hadoop FileSystem implementation for URI roots (file://, hdfs://, …). */
-private[icelite] final class HadoopMetaIO extends MetaIO {
+/** Hadoop FileSystem implementation for URI roots (file://, hdfs://, …)
+  * and for scheme-less roots under a non-local fs.defaultFS. */
+private[graft] final class HadoopMetaIO(@transient private val resolved: org.apache.hadoop.conf.Configuration)
+    extends MetaIO {
   import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
-  // FileSystem/FileContext are not Serializable — rebuilt lazily per JVM.
-  // The active session's Hadoop conf (when present) carries the user's
-  // fs.* settings; metadata ops are driver-side so the fallback bare
-  // Configuration (core-site defaults) only matters in non-Spark tooling.
+  // Configuration/FileSystem/FileContext are not Serializable: a
+  // deserialized copy re-resolves the conf from its own JVM's session
+  // (metadata ops are driver-side, so that fallback only matters in
+  // non-Spark tooling).
   @transient private lazy val conf =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+    Option(resolved).getOrElse(MetaIO.sessionHadoopConf())
 
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
-  private def fc(p: Path): FileContext =
-    FileContext.getFileContext(p.toUri, conf)
+  /** `p` qualified against its filesystem: FileContext resolves a
+    * scheme-less path against fs.defaultFS exactly as FileSystem (and
+    * Spark's parquet IO) does. */
+  private def qualified(p: String): Path = { val hp = new Path(p); fs(hp).makeQualified(hp) }
+  private def fc(p: Path): FileContext = FileContext.getFileContext(p.toUri, conf)
 
   override def exists(p: String): Boolean = { val hp = new Path(p); fs(hp).exists(hp) }
   override def mkdirs(p: String): Unit = { val hp = new Path(p); fs(hp).mkdirs(hp); () }
@@ -157,21 +214,29 @@ private[icelite] final class HadoopMetaIO extends MetaIO {
 
   override def writeAtomic(tmp: String, dst: String, content: String,
                            replace: Boolean): Unit = {
-    val tp = new Path(tmp); val dp = new Path(dst)
+    val tp = qualified(tmp)
     val out = fs(tp).create(tp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
     val flag = if (replace) Options.Rename.OVERWRITE else Options.Rename.NONE
-    fc(tp).rename(tp, dp, flag) // atomic on HDFS; NONE throws if dst exists
+    fc(tp).rename(tp, qualified(dst), flag) // atomic on HDFS; NONE throws if dst exists
   }
 
-  override def createNew(p: String): Boolean = {
+  override def createNew(p: String, content: String): Boolean = {
     val hp = new Path(p)
-    try { fs(hp).create(hp, false).close(); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      // RawLocalFileSystem signals exists-collision as a plain IOException
-      case _: java.io.IOException if fs(hp).exists(hp) => false
-    }
+    val out =
+      try fs(hp).create(hp, false)
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+        // RawLocalFileSystem signals exists-collision as a plain IOException
+        case _: java.io.IOException if fs(hp).exists(hp) => return false
+      }
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    true
+  }
+
+  override def rename(src: String, dst: String): Unit = {
+    val sp = qualified(src)
+    fc(sp).rename(sp, qualified(dst), Options.Rename.NONE) // throws if dst exists
   }
 
   override def deleteIfExists(p: String): Unit = {

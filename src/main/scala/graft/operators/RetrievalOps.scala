@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.icelite.{FoldSwap, MetaIO}
+
 /**
  * Full-text retrieval over `documents(doc_id, text)`: a distributed
  * inverted index + Okapi BM25 top-k scoring — the lookup primitive a
@@ -152,13 +154,11 @@ object RetrievalOps {
   /** Bucket count persisted with the index by [[writePostingsIndex]]. */
   def readPostingsMeta(spark: org.apache.spark.sql.SparkSession,
                        path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(metaDir(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) throw new IllegalStateException(
+    if (!MetaIO.forRoot(path).exists(metaDir(path))) throw new IllegalStateException(
       s"no retrieval metadata at ${metaDir(path)} — not writePostingsIndex " +
         "storage (a bucket count guessed at query time would silently " +
         "prune the WRONG partitions)")
-    spark.read.parquet(p.toString).head().getInt(0)
+    spark.read.parquet(metaDir(path)).head().getInt(0)
   }
 
   /** FULL REBUILD of a stored postings index: clears any existing index
@@ -170,9 +170,7 @@ object RetrievalOps {
                          nBuckets: Int = 256): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = documents.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    MetaIO.forRoot(path).deleteRecursive(path)
     import spark.implicits._
     Seq(nBuckets).toDF("n_buckets")
       .coalesce(1).write.mode("overwrite").parquet(metaDir(path))
@@ -195,9 +193,7 @@ object RetrievalOps {
                           batchId: Long): Unit = {
     val spark = documents.sparkSession
     val nBuckets = readPostingsMeta(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val w = graft.icelite.FoldSwap.compactedThrough(fs, s"$path/postings")
+    val w = FoldSwap.compactedThrough(s"$path/postings")
     require(batchId > w,
       s"appendPostingsIndex batch_id=$batchId is already folded into this " +
         s"index by compaction (compacted through $w) — replay under a fresh " +
@@ -237,19 +233,17 @@ object RetrievalOps {
     // heal an interrupted-but-committed postings compaction before any scan
     // (FoldSwap.ensureRecovered doc) — stats sidecars are never folded and
     // need no recovery
-    graft.icelite.FoldSwap.ensureRecovered(spark, s"$path/postings", "batch_id=")
+    FoldSwap.ensureRecovered(s"$path/postings", "batch_id=")
     // r7 (ADVICE): a crash between appendPostingsIndex's postings write and
     // its stats write leaves the batch's tf/df visible while its docs are
     // missing from N/avgdl — scores would be silently mis-normalized until
     // the operator replays the batch. Readers HEAL-OR-FAIL here (the
     // FoldSwap.ensureRecovered convention): any live postings batch without
     // its committed stats sidecar fails loudly with the replay remedy.
-    val fsCheck = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.icelite.FoldSwap.listIds(fsCheck, s"$path/postings", "batch_id=")
+    val io = MetaIO.forRoot(path)
+    FoldSwap.listIds(s"$path/postings", "batch_id=")
       .foreach { id =>
-        if (!fsCheck.exists(new org.apache.hadoop.fs.Path(
-            s"$path/stats/batch_id=$id/_SUCCESS")))
+        if (!io.exists(s"$path/stats/batch_id=$id/_SUCCESS"))
           throw new IllegalStateException(
             s"postings batch_id=$id at $path has no committed stats sidecar " +
               "— an interrupted appendPostingsIndex. Replay that batch id " +
@@ -291,11 +285,10 @@ object RetrievalOps {
     * interrupted batch (and everything above it) replayable. */
   def compactPostings(spark: org.apache.spark.sql.SparkSession, path: String,
                       failAt: Option[String] = None): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.icelite.FoldSwap.compact(spark, s"$path/postings", "batch_id=",
+    val io = MetaIO.forRoot(path)
+    FoldSwap.compact(s"$path/postings", "batch_id=",
       selectFoldable = ids => ids.sorted.takeWhile(id =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats/batch_id=$id/_SUCCESS"))),
+        io.exists(s"$path/stats/batch_id=$id/_SUCCESS")),
       stage = (tmp, _, target) => {
         spark.read.parquet(s"$path/postings")
           .filter(col("batch_id") <= target).drop("batch_id")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.icelite.{FoldSwap, MetaIO}
+
 /**
  * Similarity search over an embedding column (`embeddings(vec_id,
  * embedding: array<float>, label)`).
@@ -718,12 +720,10 @@ object SimilarityOps {
     * surfaces here, not as silently wrong neighbors. */
   def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
                     path: String): IvfPqMeta = {
-    val p = new org.apache.hadoop.fs.Path(metaDir(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) throw new IllegalStateException(
+    if (!MetaIO.forRoot(path).exists(metaDir(path))) throw new IllegalStateException(
       s"no index metadata at ${metaDir(path)} — not writeIvfPq storage " +
         "(or written by a pre-metadata version; rebuild with writeIvfPq)")
-    val rows = spark.read.parquet(p.toString).collect()
+    val rows = spark.read.parquet(metaDir(path)).collect()
     val version = rows.head.getAs[String]("version")
     def vec(r: org.apache.spark.sql.Row): Array[Double] =
       r.getAs[scala.collection.Seq[Double]]("values").toArray
@@ -757,9 +757,7 @@ object SimilarityOps {
   def writeIvfPq(embeddings: DataFrame, index: IvfIndex,
                  codebooks: Array[Array[Array[Double]]], path: String): Unit = {
     val spark = embeddings.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    MetaIO.forRoot(path).deleteRecursive(path)
     // training-time assignment stats ride along so every later ingest batch
     // can run [[ivfDrift]] against them
     writeIndexMeta(spark, path, index, codebooks,
@@ -789,9 +787,7 @@ object SimilarityOps {
       s"appendIvfPq under WRONG quantizers: index at $path is version " +
         s"${stored.version}, caller supplied $caller — load them with " +
         "readIndexMeta, or rebuild with writeIvfPq")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(newVectors.sparkSession.sessionState.newHadoopConf())
-    val w = compactedThrough(fs, path)
+    val w = FoldSwap.compactedThrough(path)
     require(batchId > w,
       s"appendIvfPq batch_id=$batchId is already folded into this index by " +
         s"compaction (compacted through $w) — the per-batch overwrite that made " +
@@ -816,11 +812,6 @@ object SimilarityOps {
   // into one subtree with ~1 file per list.
   // ------------------------------------------------------------------------
 
-  /** Highest batch id folded into the index by compaction (-1 = none).
-    * [[appendIvfPq]] refuses batch ids at or below it. */
-  def compactedThrough(fs: org.apache.hadoop.fs.FileSystem, path: String): Long =
-    graft.icelite.FoldSwap.compactedThrough(fs, path)
-
   /** Steady-state index MAINTENANCE: fold every `batch_id=N` subtree into a
     * single `batch_id=<maxId>` with ~one file per list, then advance the
     * `_compacted_through` watermark so [[appendIvfPq]] fails LOUDLY on a
@@ -838,11 +829,10 @@ object SimilarityOps {
     // recovered by REPLAYING its batch id, and folding its partial rows
     // would bake them in while the watermark refuses exactly that replay.
     // Maximal committed prefix keeps the fold set downward-closed.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.icelite.FoldSwap.compact(spark, path, "batch_id=",
+    val io = MetaIO.forRoot(path)
+    FoldSwap.compact(path, "batch_id=",
       selectFoldable = ids => ids.sorted.takeWhile(id =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/batch_id=$id/_SUCCESS"))),
+        io.exists(s"$path/batch_id=$id/_SUCCESS")),
       stage = (tmp, _, target) => {
         // key-aligned shuffle ⇒ each list's rows in one task ⇒ one file
         // per list after the fold
@@ -866,7 +856,7 @@ object SimilarityOps {
     // discovery — otherwise a crash inside the fold's swap window would
     // serve a top-k silently missing every folded batch until the next
     // maintenance compactIvfPq
-    graft.icelite.FoldSwap.ensureRecovered(spark, path, "batch_id=")
+    FoldSwap.ensureRecovered(path, "batch_id=")
     val probeQs = queries.select(
       explode(graft.functions.CentroidIds(
         col("qvec").cast("array<double>"), index.centroids, nprobe)).as("list_id"))

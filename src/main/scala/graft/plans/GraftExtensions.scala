@@ -35,22 +35,7 @@ class GraftExtensions(private val conv: Converter) extends (SparkSessionExtensio
   def this() = this(GraftExtensions.converterOverride.getOrElse(MiniOntology.converter))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def register(name: String, builder: (Expression, Converter) => Expression): Unit =
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        (children: Seq[Expression]) => {
-          if (children.size != 1) throw new IllegalArgumentException(
-            s"$name expects exactly 1 argument, got ${children.size}")
-          builder(children.head, conv)
-        }))
-
-    register("compress_iri", CompressIri(_, _))
-    register("expand_curie", ExpandCurie(_, _))
-    register("normalize_prefix", NormalizePrefix(_, _))
-    register("normalize_predicate", NormalizePredicate(_, _))
-    register("standardize_id", StandardizeId(_, _))
-    def arity1(name: String, build: Expression => Expression): Unit =
+    def register(name: String, build: Expression => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name),
@@ -59,8 +44,14 @@ class GraftExtensions(private val conv: Converter) extends (SparkSessionExtensio
             s"$name expects exactly 1 argument, got ${children.size}")
           build(children.head)
         }))
-    arity1("simhash64", SimHash64(_))
-    arity1("simhash64_from_hashes", SimHash64FromHashes(_))
+
+    register("compress_iri", CompressIri(_, conv))
+    register("expand_curie", ExpandCurie(_, conv))
+    register("normalize_prefix", NormalizePrefix(_, conv))
+    register("normalize_predicate", NormalizePredicate(_, conv))
+    register("standardize_id", StandardizeId(_, conv))
+    register("simhash64", SimHash64(_))
+    register("simhash64_from_hashes", SimHash64FromHashes(_))
     // winnowing_sketch(text[, k, w]) — k/w must be foldable int literals
     ext.injectFunction((
       FunctionIdentifier("winnowing_sketch"),

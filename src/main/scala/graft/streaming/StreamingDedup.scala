@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.icelite.{BucketedTables, Icelite}
+import graft.icelite.{BucketedTables, FoldSwap, Icelite, MetaIO}
 import graft.operators.DedupOps
 
 /**
@@ -100,26 +100,21 @@ object StreamingDedup {
           //    schema inference throws on every replay) — enumerating
           //    batch_id= dirs with an explicit schema reads exactly the
           //    completed partitions and nothing else;
-          //  - enumeration goes through Hadoop's FileSystem (resolved from
+          //  - enumeration is FoldSwap.listIds (MetaIO, resolved from
           //    outDir's scheme), NOT java.io.File — a local-only listFiles
           //    returns null for hdfs://-s3a:// outDirs, history silently
           //    becomes empty, and re-crawled near-dups would SURVIVE with
           //    no error (the exact silent-wrong-output this stage guards
-          //    against).
+          //    against); a stray non-numeric `batch_id=` dir fails loudly
+          //    instead of being read as history.
           //  - an interrupted-but-committed history compaction is healed
           //    BEFORE enumerating (FoldSwap.ensureRecovered): a crash in
           //    compactHistory's swap window would otherwise hide every
           //    folded batch from this listing and let their re-crawls
           //    survive as "new" docs
-          graft.icelite.FoldSwap.ensureRecovered(spark, outDir, "batch_id=")
-          val outPath = new org.apache.hadoop.fs.Path(outDir)
-          val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-          val committed =
-            if (!fs.exists(outPath)) Seq.empty[String]
-            else fs.listStatus(outPath).toSeq
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
-                s.getPath.getName != s"batch_id=$batchId")
-              .map(_.getPath.toString)
+          FoldSwap.ensureRecovered(outDir, "batch_id=")
+          val committed = FoldSwap.listIds(outDir, "batch_id=")
+            .filter(_ != batchId).map(id => s"$outDir/batch_id=$id")
           // each committed partition reads through its doc_id-bucketed table
           // registration, so the candidate-id IN filter (pushed through the
           // union) prunes bucket files at every scan
@@ -172,7 +167,7 @@ object StreamingDedup {
   def compactHistory(spark: SparkSession, outDir: String,
                      failAt: Option[String] = None): Long = {
     val folded = scala.collection.mutable.ArrayBuffer[Long]()
-    val w = graft.icelite.FoldSwap.compact(spark, outDir, "batch_id=",
+    val w = FoldSwap.compact(outDir, "batch_id=",
       // all but the highest (possibly still-replayable) batch dir
       selectFoldable = ids => if (ids.size <= 1) Seq.empty else ids.sorted.dropRight(1),
       stage = (tmp, foldIds, _) => {
@@ -196,12 +191,10 @@ object StreamingDedup {
     // fold target keeps a batch_id= name and stays registered). Best-effort
     // by design: a crash before this point leaves stale-but-harmless
     // entries, exactly the pre-r7 behavior.
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val io = MetaIO.forRoot(outDir)
     folded.foreach { id =>
       val dir = s"$outDir/batch_id=$id"
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        BucketedTables.dropRegistration(spark, dir, HistoryBuckets)
+      if (!io.exists(dir)) BucketedTables.dropRegistration(spark, dir, HistoryBuckets)
     }
     w
   }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.icelite.BucketedTables
+import graft.icelite.{BucketedTables, FoldSwap}
 import graft.operators.{DedupOps, SimilarityOps}
 import graft.streaming.StreamingDedup
 
@@ -92,11 +92,8 @@ object CompactionProbe {
       .select(col("id").as("doc_id")).localCheckpoint(true)
     val nCandidates = candidateIds.count()
     def histRun(): Long = {
-      val fs = new org.apache.hadoop.fs.Path(histDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val committed = fs.listStatus(new org.apache.hadoop.fs.Path(histDir)).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath.toString)
+      val committed = FoldSwap.listIds(histDir, "batch_id=")
+        .map(id => s"$histDir/batch_id=$id")
       val history = committed
         .map(dir => BucketedTables.read(spark, dir, StreamingDedup.HistoryBuckets,
           Some(StreamingDedup.docSchema)).select("doc_id", "text"))

@@ -1534,9 +1534,8 @@ class OperatorSpec extends AnyFunSuite {
 
   // ---------------- incremental-dedup store layout ----------------
 
-  test("bucketed signature store: per-batch band join adds NO store-side exchange") {
+  test("bucketed signature store: per-batch band join adds NO store-side exchange") { SparkTestBase.withTempDir("graft_store_plan") { root =>
     import graft.icelite.{BucketedTables, Icelite}
-    val root = java.nio.file.Files.createTempDirectory("graft_store_plan").toString
     val ic = new Icelite(root)
     val hist = (0L until 60L).map(i => (i, s"history document $i body ${i % 7} tail")).toDF("doc_id", "text")
     val batch = (100L until 130L).map(i => (i, s"history document ${i - 100} body ${(i - 100) % 7} tail")).toDF("doc_id", "text")
@@ -1590,7 +1589,7 @@ class OperatorSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
+  }}
 
   test("store-side mega-bucket guard: degenerate store bucket dropped LOUDLY") {
     // a band bucket accumulated in the HISTORICAL store beyond MaxBucket
@@ -1613,9 +1612,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(m1 - m0 >= DedupOps.MaxBucket, s"dropped-members delta ${m1 - m0}")
   }
 
-  test("history fetch: candidate ids bucket-prune a doc_id-bucketed corpus (point lookups)") {
+  test("history fetch: candidate ids bucket-prune a doc_id-bucketed corpus (point lookups)") { SparkTestBase.withTempDir("graft_hist_bkt") { dir =>
     import graft.icelite.BucketedTables
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist_bkt").toString
     val docs = (0L until 400L).map(i => (i, s"retained doc $i")).toDF("doc_id", "text")
     val spec = graft.streaming.StreamingDedup.HistoryBuckets
     BucketedTables.write(docs, dir, spec)
@@ -1639,5 +1637,5 @@ class OperatorSpec extends AnyFunSuite {
     // over-limit id sets fall back to the semi-join path and stay correct
     val manyIds = spark.range(0, DedupOps.FetchProbeLimit + 100L).select(col("id").as("doc_id"))
     assert(DedupOps.fetchDocsByIds(history, manyIds).count() == 400L)
-  }
+  }}
 }

@@ -1117,7 +1117,7 @@ class PipelineSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       SimilarityOps.compactIvfPq(spark, p1, failAt = Some("before-commit"))
     }
-    assert(SimilarityOps.compactedThrough(fs, p1) == -1L, "uncommitted crash moved the watermark")
+    assert(graft.icelite.FoldSwap.compactedThrough(p1) == -1L, "uncommitted crash moved the watermark")
     assert(key(p1) == want1, "pre-commit crash changed visible results")
     assert(SimilarityOps.compactIvfPq(spark, p1) == 1L)
     assert(key(p1) == want1)
@@ -1132,7 +1132,7 @@ class PipelineSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       SimilarityOps.compactIvfPq(spark, p2, failAt = Some("after-commit"))
     }
-    assert(SimilarityOps.compactedThrough(fs, p2) == 1L)
+    assert(graft.icelite.FoldSwap.compactedThrough(p2) == 1L)
     assert(key(p2) == want2, "post-commit crash window shows wrong results")
     assert(SimilarityOps.compactIvfPq(spark, p2) == 1L)
     assert(key(p2) == want2)
@@ -1288,7 +1288,7 @@ class PipelineSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       RetrievalOps.compactPostings(spark, p1, failAt = Some("before-commit"))
     }
-    assert(graft.icelite.FoldSwap.compactedThrough(fs, s"$p1/postings") == -1L)
+    assert(graft.icelite.FoldSwap.compactedThrough(s"$p1/postings") == -1L)
     assert(key(p1) == want1, "pre-commit crash changed visible scores")
     assert(RetrievalOps.compactPostings(spark, p1) == 1L)
     assert(key(p1) == want1)
@@ -1300,7 +1300,7 @@ class PipelineSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       RetrievalOps.compactPostings(spark, p2, failAt = Some("after-commit"))
     }
-    assert(graft.icelite.FoldSwap.compactedThrough(fs, s"$p2/postings") == 1L)
+    assert(graft.icelite.FoldSwap.compactedThrough(s"$p2/postings") == 1L)
     assert(key(p2) == want2, "post-commit crash window shows wrong scores")
     assert(RetrievalOps.compactPostings(spark, p2) == 1L)
     assert(key(p2) == want2)
@@ -1346,8 +1346,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     // simulate a finisher that died HOLDING the claim (the only crash that
     // leaves one — the claim is taken after the commit point)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$p/postings/${FoldSwap.ClaimName}"), false).close()
+    graft.icelite.MetaIO.forRoot(p).createNew(s"$p/postings/${FoldSwap.ClaimName}")
     val saved = FoldSwap.FinishWaitMs
     FoldSwap.FinishWaitMs = 300L
     try {
@@ -1406,7 +1405,7 @@ class PipelineSpec extends AnyFunSuite {
     // recovery's delete-everything-<=-watermark would delete the skipped
     // dir's only copy after a post-commit crash
     val exGap = intercept[IllegalArgumentException] {
-      graft.icelite.FoldSwap.compact(spark, base, "batch_id=",
+      graft.icelite.FoldSwap.compact(base, "batch_id=",
         selectFoldable = _ => Seq(0L, 2L),
         stage = (_, _, _) => fail("stage must not run for a gappy fold set"))
     }
@@ -1417,9 +1416,120 @@ class PipelineSpec extends AnyFunSuite {
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/_compacted_through"), true)
     out.write("garbage".getBytes("UTF-8")); out.close()
     val exCorrupt = intercept[IllegalStateException] {
-      graft.icelite.FoldSwap.compactedThrough(fs, base)
+      graft.icelite.FoldSwap.compactedThrough(base)
     }
     assert(exCorrupt.getMessage.contains("corrupt compaction marker"), exCorrupt.getMessage)
+  }
+
+  test("MetaIO contract on a scheme-less path and a file:// URI: createNew keeps the first writer, rename refuses an existing target, writeAtomic(replace) overwrites") {
+    import graft.icelite.MetaIO
+    SparkTestBase.withTempDir("graft_metaio") { dir =>
+      val abs = new java.io.File(dir).getAbsolutePath
+      Seq(s"$abs/nio", s"file://$abs/hadoop").foreach { root =>
+        val io = MetaIO.forRoot(root)
+        io.mkdirs(root)
+        // the claim CAS: the loser gets false and the winner's bytes stay
+        val claim = io.join(root, "x.claim")
+        assert(io.createNew(claim, "first"), root)
+        assert(!io.createNew(claim, "second"), s"$root: a second createNew won the claim")
+        assert(io.readString(claim) == "first", s"$root: the losing createNew wrote")
+        // rename never replaces an existing target — file or directory
+        val a = io.join(root, "a"); val b = io.join(root, "b")
+        io.writeAtomic(a + "._tmp", a, "A", replace = true)
+        io.writeAtomic(b + "._tmp", b, "B", replace = true)
+        intercept[java.io.IOException](io.rename(a, b))
+        assert(io.readString(a) == "A" && io.readString(b) == "B", root)
+        val d1 = io.join(root, "d1"); val d2 = io.join(root, "d2")
+        io.mkdirs(d1); assert(io.createNew(io.join(d1, "f"), "in d1")); io.mkdirs(d2)
+        intercept[java.io.IOException](io.rename(d1, d2))
+        io.deleteRecursive(d2)
+        io.rename(d1, d2)
+        assert(!io.exists(d1) && io.readString(io.join(d2, "f")) == "in d1", root)
+        // writeAtomic(replace = true) overwrites, repeatedly
+        io.writeAtomic(b + "._tmp", b, "B2", replace = true)
+        io.writeAtomic(b + "._tmp", b, "B3", replace = true)
+        assert(io.readString(b) == "B3", root)
+        assert(io.readIfExists(io.join(root, "absent")).isEmpty, root)
+      }
+    }
+  }
+
+  test("MetaIO: a scheme-less root under a non-local fs.defaultFS resolves through Hadoop, never local disk") {
+    import graft.icelite.{FoldSwap, MetaIO, NioMetaIO}
+    val rel = "target/fixtures/defaultfs_" + System.nanoTime()
+    assert(MetaIO.forRoot(rel) eq NioMetaIO, "a local defaultFS keeps the O_EXCL claims")
+    // an unregistered scheme: resolution reaches it and fails there, so no
+    // host is ever contacted — and a -1 read off local disk would mean the
+    // watermark came from the wrong filesystem
+    spark.conf.set("fs.defaultFS", "graftmock://nn/")
+    try {
+      assert(!(MetaIO.forRoot(rel) eq NioMetaIO), "scheme-less metadata left the default filesystem")
+      val ex = intercept[java.io.IOException](FoldSwap.compactedThrough(rel))
+      assert(ex.getMessage.contains("graftmock"), ex.getMessage)
+    } finally spark.conf.unset("fs.defaultFS")
+    assert(MetaIO.forRoot(rel) eq NioMetaIO)
+  }
+
+  test("MetaIO: NIO replace and delete drop Hadoop's checksum sidecar, so the same base still opens as a file:// URI") {
+    import graft.icelite.{MetaIO, NioMetaIO}
+    SparkTestBase.withTempDir("graft_crc") { dir =>
+      val abs = new java.io.File(dir).getAbsolutePath
+      val hadoop = MetaIO.forRoot(s"file://$abs")
+      // Hadoop's checksummed local filesystem leaves `.<name>.crc` sidecars
+      hadoop.writeAtomic(s"file://$abs/m._tmp", s"file://$abs/m", "1", replace = true)
+      assert(hadoop.createNew(s"file://$abs/c", "tok-a"))
+      assert(new java.io.File(s"$abs/.m.crc").exists && new java.io.File(s"$abs/.c.crc").exists)
+      NioMetaIO.writeAtomic(s"$abs/m._tmp", s"$abs/m", "22", replace = true)
+      NioMetaIO.deleteIfExists(s"$abs/c")
+      assert(NioMetaIO.createNew(s"$abs/c", "tok-b"))
+      assert(hadoop.readString(s"file://$abs/m") == "22")
+      assert(hadoop.readString(s"file://$abs/c") == "tok-b")
+    }
+  }
+
+  test("FoldSwap race: concurrent ensureRecovered/compact after a committed swap all return; the stored read equals the pre-fold read") {
+    import spark.implicits._
+    import graft.operators.RetrievalOps
+    import graft.icelite.FoldSwap
+    def mkDocs(from: Int, until: Int) =
+      spark.range(from, until).select(col("id").as("doc_id"),
+        concat_ws(" ", (0 until 12).map(i =>
+          concat(lit("w"), pmod(col("id") * (i + 3) + i, lit(40)))): _*).as("text"))
+    val queries = Seq((1L, "w7 w21"), (2L, "w2 w30")).toDF("query_id", "qtext")
+    val p = "target/fixtures/bm25_race_" + System.nanoTime()
+    RetrievalOps.writePostingsIndex(mkDocs(0, 100), p, nBuckets = 8)
+    RetrievalOps.appendPostingsIndex(mkDocs(100, 140), p, batchId = 1)
+    def key() = RetrievalOps.bm25TopKStored(spark, p, queries, k = 3)
+      .collect().map(r => ((r.getLong(0), r.getInt(3)), (r.getLong(1), r.getDouble(2)))).toSet
+    val want = key()
+    intercept[RuntimeException] {
+      RetrievalOps.compactPostings(spark, p, failAt = Some("after-commit"))
+    }
+    // six parties race to finish the committed swap: readers heal, the
+    // maintenance compacts finish or wait; exactly one may hold the claim
+    val base = s"$p/postings"
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    val got = try {
+      val calls = (0 until 6).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            start.await()
+            if (i % 2 == 0) { FoldSwap.ensureRecovered(base, "batch_id="); 1L }
+            else RetrievalOps.compactPostings(spark, p)
+          }
+        })
+      }
+      start.countDown()
+      calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(got.forall(_ == 1L), s"watermarks returned: $got")
+    assert(key() == want, "racing finishers changed visible scores")
+    val dirs = new java.io.File(base).listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    assert(dirs == 1, s"racing finishers left $dirs batch dirs")
+    assert(!new java.io.File(s"$base/${FoldSwap.TmpName}").exists(), "staging leaked")
+    assert(!new java.io.File(s"$base/${FoldSwap.ClaimName}").exists(), "claim leaked")
   }
 
   test("icelite: a ZERO-ROW bucketed snapshot reads back through its recorded schema") {
@@ -1528,14 +1638,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(nameFromUrl("https://x.org/%C3%A9.owl") == "é.owl")
   }
 
-  test("S8 JSON sink round-trips the graph document (nulls dropped)") {
+  test("S8 JSON sink round-trips the graph document (nulls dropped)") { SparkTestBase.withTempDir("graft_json") { dir =>
     val graphs = graft.sources.OboGraphReader.readGraphs(spark, ontPath)
-    val out = java.nio.file.Files.createTempDirectory("graft_json").toString + "/doc"
+    val out = dir + "/doc"
     graft.sources.OboGraphReader.writeGraphDocument(graphs, out)
     val txt = spark.read.text(out).collect().map(_.getString(0)).mkString("\n")
     assert(txt.contains("\"lbl\":\"PATO - the Phenotype And Trait Ontology\""))
     assert(!txt.contains("null")) // exclude_none semantics (robot.py:90-92)
-  }
+  }}
 
   test("grounder.ground API parity: scored matches ranked by quality") {
     val ctx = KgPipeline.prepare(spark, ontPath)

@@ -9,4 +9,11 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` on a fresh `java.io.tmpdir` directory named `prefix…`,
+    * deleted recursively afterwards — pass or fail. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir) finally graft.icelite.NioMetaIO.deleteRecursive(dir)
+  }
 }

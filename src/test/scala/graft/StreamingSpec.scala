@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestBase.withTempDir
 import graft.fixtures.{MiniOntology, Transcripts}
 import graft.pipeline.KgPipeline
 import graft.streaming.IncrementalKg
@@ -12,8 +13,7 @@ import graft.streaming.IncrementalKg
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  test("Trigger.AvailableNow processes only new snapshot deltas; restart is incremental") {
-    val base = Files.createTempDirectory("graft_stream").toString
+  test("Trigger.AvailableNow processes only new snapshot deltas; restart is incremental") { withTempDir("graft_stream") { base =>
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     val ctx = KgPipeline.prepare(spark, MiniOntology.writeTo("target/fixtures"))
 
@@ -40,11 +40,10 @@ class StreamingSpec extends AnyFunSuite {
     val dupCheck = afterSecond.groupBy("subj", "pred", "obj").count()
       .filter(col("count") > 1).count()
     assert(dupCheck == 0, "incremental restart reprocessed old files")
-  }
+  }}
 
-  test("streaming ingest dedup: cross-batch near-dups dropped via the icelite store; restart incremental") {
+  test("streaming ingest dedup: cross-batch near-dups dropped via the icelite store; restart incremental") { withTempDir("graft_sdedup") { base =>
     import graft.streaming.StreamingDedup
-    val base = Files.createTempDirectory("graft_sdedup").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     val ic = new graft.icelite.Icelite(s"$base/ic")
     val docs = graft.tools.SketchDialsProbe.syntheticDocs(spark, 120, 0).localCheckpoint(true)
@@ -87,12 +86,11 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(graft.operators.DedupOps.normText(col("text"))).count()
       .filter(col("count") > 1).count()
     assert(texts == 0, "duplicate texts survived streaming ingest dedup")
-  }
+  }}
 
-  test("streaming ingest dedup: an ALL-duplicate batch (zero survivors) doesn't wedge history") {
+  test("streaming ingest dedup: an ALL-duplicate batch (zero survivors) doesn't wedge history") { withTempDir("graft_sdedup_empty") { base =>
     import graft.streaming.StreamingDedup
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_sdedup_empty").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     val ic = new graft.icelite.Icelite(s"$base/ic")
     val docs = graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 0).localCheckpoint(true)
@@ -123,11 +121,10 @@ class StreamingSpec extends AnyFunSuite {
     val finalIds = spark.read.schema(StreamingDedup.docSchema).parquet(out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(finalIds == (0L until 30L).toSet ++ (40L to 49L).toSet, s"got ${finalIds.size} ids")
-  }
+  }}
 
-  test("history compaction: folds committed batch dirs; dedup against folded history intact; crash-safe") {
+  test("history compaction: folds committed batch dirs; dedup against folded history intact; crash-safe") { withTempDir("graft_sdedup_compact") { base =>
     import graft.streaming.StreamingDedup
-    val base = Files.createTempDirectory("graft_sdedup_compact").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     val ic = new graft.icelite.Icelite(s"$base/ic")
     val docs = graft.tools.SketchDialsProbe.syntheticDocs(spark, 120, 0).localCheckpoint(true)
@@ -183,12 +180,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingDedup.compactHistory(spark, out) == 2L)
     assert(dirs() == 2)
     assert(spark.read.schema(StreamingDedup.docSchema).parquet(out).count() == 100)
-  }
+  }}
 
-  test("history compaction drops reader registrations over folded-away dirs (r7 ADVICE)") {
+  test("history compaction drops reader registrations over folded-away dirs (r7 ADVICE)") { withTempDir("graft_sdedup_catalog") { out =>
     import graft.streaming.StreamingDedup
     import graft.icelite.BucketedTables
-    val out = Files.createTempDirectory("graft_sdedup_catalog").toString
     import spark.implicits._
     def mk(from: Int, until: Int) = (from until until)
       .map(i => (i.toLong, s"text body $i")).toDF("doc_id", "text")
@@ -208,24 +204,20 @@ class StreamingSpec extends AnyFunSuite {
     val folded = BucketedTables.read(spark, s"$out/batch_id=1",
       StreamingDedup.HistoryBuckets, Some(StreamingDedup.docSchema))
     assert(folded.count() == 20, "fold target must stay readable post-cleanup")
-  }
+  }}
 
-  test("FoldSwap.listIds: a stray non-numeric dir fails loudly with the path (r7 ADVICE)") {
-    val base = Files.createTempDirectory("graft_foldswap_stray").toString
+  test("FoldSwap.listIds: a stray non-numeric dir fails loudly with the path (r7 ADVICE)") { withTempDir("graft_foldswap_stray") { base =>
     Files.createDirectories(java.nio.file.Paths.get(s"$base/batch_id=0"))
     Files.createDirectories(java.nio.file.Paths.get(s"$base/batch_id=bak"))
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val ex = intercept[IllegalStateException] {
-      graft.icelite.FoldSwap.listIds(fs, base, "batch_id=")
+      graft.icelite.FoldSwap.listIds(base, "batch_id=")
     }
     assert(ex.getMessage.contains("batch_id=bak"), ex.getMessage)
     assert(ex.getMessage.contains("Remove or rename"), ex.getMessage)
-  }
+  }}
 
-  test("incremental sink is idempotent under batch REPLAY (at-least-once foreachBatch)") {
+  test("incremental sink is idempotent under batch REPLAY (at-least-once foreachBatch)") { withTempDir("graft-replay") { out =>
     import org.apache.spark.sql.functions.lit
-    val out = java.nio.file.Files.createTempDirectory("graft-replay").toString
     val triples = spark.createDataFrame(Seq(("turn:c/0", "graft:mentions", "PATO:1"),
       ("turn:c/1", "graft:mentions", "PATO:2"))).toDF("subj", "pred", "obj")
     IncrementalKg.writeBatch(triples, out, batchId = 7L)
@@ -235,5 +227,5 @@ class StreamingSpec extends AnyFunSuite {
     val back = spark.read.parquet(out)
     assert(back.count() == 4, "replayed batch must not append duplicates")
     assert(back.groupBy("subj", "pred", "obj").count().filter(col("count") > 1).count() == 0)
-  }
+  }}
 }
