@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -67,13 +68,16 @@ object SimHash64 {
     z ^ (z >>> 31)
   }
 
-  /** 64-bit string hash: FNV-1a over UTF-8 bytes, splitmix-finalized. */
+  /** 64-bit string hash: FNV-1a over UTF-8 bytes, splitmix-finalized. Reads
+    * the bytes in place (no copy per token). */
   def hashString(s: UTF8String): Long = {
-    val bytes = s.getBytes
+    val base = s.getBaseObject
+    val offset = s.getBaseOffset
+    val n = s.numBytes
     var h = 0xCBF29CE484222325L
     var i = 0
-    while (i < bytes.length) {
-      h ^= bytes(i) & 0xFFL
+    while (i < n) {
+      h ^= Platform.getByte(base, offset + i) & 0xFFL
       h *= 0x100000001B3L
       i += 1
     }

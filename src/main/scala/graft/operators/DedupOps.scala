@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.SimHash64
+import graft.functions.{Shingles, SimHash64}
 
 /**
  * Deduplication operators for training-data pipelines over
@@ -50,20 +50,21 @@ object DedupOps {
   // -------------------------------------------------------------------------
 
   /**
-   * Token-3-gram shingles from an ALREADY-MATERIALIZED token-array column.
+   * Distinct token n-gram shingles (default 3) of a token-array column —
+   * the native [[graft.functions.TokenShingles]] kernel:
+   * first-occurrence order, and fewer than n tokens give one whole-text
+   * shingle. It and the band kernel below run as one loop per row inside
+   * whole-stage codegen.
    *
-   * PERFORMANCE RULE (measured, 20×): any non-attribute expression referenced
-   * inside a higher-order-function lambda is re-evaluated PER ARRAY ELEMENT —
-   * Catalyst does no common-subexpression elimination across lambda scopes.
-   * So tokenization/normalization must be staged through real projections
-   * (`.select(... .as("toks"))`) and lambdas may only touch attributes.
+   * HOF-CSE RULE (measured, 20×) for the higher-order-function lambdas left
+   * in this file and its callers: any non-attribute expression referenced
+   * inside a lambda is re-evaluated PER ARRAY ELEMENT — Catalyst does no
+   * common-subexpression elimination across lambda scopes. So stage such
+   * inputs through real projections (`.select(... .as("toks"))`) and let
+   * lambdas touch only attributes.
    */
   def shinglesFromTokens(toks: Column, n: Int = 3): Column =
-    array_distinct(
-      when(size(toks) < n, array(concat_ws(" ", toks)))
-        .otherwise(transform(
-          sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+    Shingles.tokenShingles(toks, n)
 
   /**
    * Banded minhash signatures: documents → (doc_id, band_idx, band_hash),
@@ -71,26 +72,18 @@ object DedupOps {
    * schema ([[incrementalMinhashDedup]]): bands × 16 bytes per retained doc,
    * written back as an icelite snapshot between ingest batches.
    *
-   * Band hashes are computed DIRECTLY from the materialized shingle-hash
-   * attribute (`sh`) in one projection. Referencing a `sig` alias here
-   * would let CollapseProject inline the whole K-minhash expression into
-   * the per-band lambda → recomputed per band (measured 0.3s → 6.6s).
+   * One native kernel ([[graft.functions.MinhashBands]]) hashes each shingle
+   * once and folds all k minhash rows and the per-band hashes in a single
+   * pass; its band hashes are bit-identical to the xxhash64 / array_min /
+   * concat_ws definition earlier stores were written with, so those stores
+   * stay valid. A null text keeps its `bands` rows (each `xxhash64("")`).
    */
-  def bandedSignatures(documents: DataFrame, k: Int = 16, bands: Int = 4): DataFrame = {
-    val r = k / bands
+  def bandedSignatures(documents: DataFrame, k: Int = 16, bands: Int = 4): DataFrame =
     documents
-      .select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks")).as("shingle_arr"))
-      .select(col("doc_id"), transform(col("shingle_arr"), s => xxhash64(s)).as("sh"))
-      .select(col("doc_id"),
-        posexplode(array((0 until bands).map { b =>
-          xxhash64(concat_ws(",",
-            (b * r until (b + 1) * r).map(i =>
-              array_min(transform(col("sh"), h => xxhash64(h, lit(i)))).cast("string")): _*))
-        }: _*)))
+      .select(col("doc_id"), posexplode(Shingles.minhashBands(
+        shinglesFromTokens(split(normText(col("text")), " ")), k, bands)))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
-  }
 
   /**
    * LSH candidate pairs: band-bucket grouping over [[bandedSignatures]].
@@ -182,9 +175,8 @@ object DedupOps {
       .select(col("p.a").as("a"), col("p.b").as("b"))
 
   /** Exact SHINGLE-set Jaccard from two ALREADY-MATERIALIZED shingle-array
-    * attributes (see the PERFORMANCE RULE above: inlining the tokenize +
-    * shingle expression here would re-tokenize per array element inside the
-    * intersect/union lambdas). Stage arrays with [[shingleArray]] first. */
+    * attributes: inlining the tokenize + shingle expression here would run it
+    * once per reference. Stage arrays with [[shingleArray]] first. */
   def shingleJaccardFromArrays(sa: Column, sb: Column): Column =
     round(size(array_intersect(sa, sb)).cast("double") /
       size(array_union(sa, sb)).cast("double"), 6)
@@ -239,7 +231,7 @@ object DedupOps {
    * pair table rides the verify join as a broadcast. Over the probe (or with
    * non-long ids, which the driver path would re-type) the distinct pairs
    * are pinned and their ids fetched the same way. Only candidate docs are
-   * shingled, once, pinned for both verify-join sides (HOF rule above).
+   * shingled, once, pinned for both verify-join sides.
    *
    * @param pairsAll candidate pairs (a, b, …); extra columns ride through
    * @param docs (doc_id, text) covering every candidate id
@@ -745,7 +737,7 @@ object DedupOps {
 
   /** (doc_id, pos, gh): 64-bit hash of each n-token gram at 0-based token
     * position pos. Tokenization and the gram-hash array are staged through
-    * separate projections (HOF-CSE rule at the top of this file); docs
+    * separate projections (HOF-CSE rule at [[shinglesFromTokens]]); docs
     * shorter than n tokens contribute nothing. */
   private def gramPositions(documents: DataFrame, n: Int): DataFrame =
     documents

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -423,6 +425,175 @@ class OperatorSpec extends AnyFunSuite {
       DedupOps.bandedSignatures(bigHist, k = 16, bands = 1), bigHist, threshold = 0.7,
       k = 16, bands = 1)
     assert(bigSurv.select("doc_id").collect().map(_.getLong(0)).toSet == Set(5000L, 5001L))
+  }
+
+  // ---------------- native shingle + minhash-band kernels ----------------
+
+  /** The higher-order-function shingle chain the native kernel replaced,
+    * kept verbatim as the reference the kernel must reproduce. */
+  private def hofShingles(toks: Column, n: Int): Column =
+    array_distinct(
+      when(size(toks) < n, array(concat_ws(" ", toks)))
+        .otherwise(transform(
+          sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+
+  /** The higher-order-function band chain, verbatim, over a staged shingle
+    * array: (id, n, band_idx, band_hash). */
+  private def hofBands(shingles: DataFrame, k: Int, bands: Int): DataFrame = {
+    val r = k / bands
+    shingles
+      .select(col("id"), col("n"), transform(col("shingle_arr"), s => xxhash64(s)).as("sh"))
+      .select(col("id"), col("n"),
+        posexplode(array((0 until bands).map { b =>
+          xxhash64(concat_ws(",",
+            (b * r until (b + 1) * r).map(i =>
+              array_min(transform(col("sh"), h => xxhash64(h, lit(i)))).cast("string")): _*))
+        }: _*)))
+      .toDF("id", "n", "band_idx", "band_hash")
+  }
+
+  /** Edge texts for the kernel equivalence: empty, blank, fewer than n
+    * tokens, repeated n-grams, non-ASCII and surrogate pairs, tab/newline,
+    * a trailing newline and a null text. */
+  private val kernelEdgeTexts: Seq[String] = Seq("", "   ", "a", "a b", "a b c",
+    "the cat the cat the cat the cat", "naïve café 日本語 über straße",
+    "\uD835\uDD18\uD835\uDD2B \uD83D\uDE00 grin \uD83D\uDE00 grin \uD83D\uDE00",
+    "tab\tseparated\twords here", "line\nbreak\nwords\nhere", "ends with a newline\n",
+    null, "Mixed CASE words mixed case WORDS", "one two three four five six seven",
+    "  leading and trailing  ")
+
+  /** Rows through an RDD, not a local relation: a projection over a local
+    * relation is folded on the driver by interpreted eval, which would keep
+    * the generated-code path out of the test. */
+  private def rddFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  /** Generated texts (a small vocabulary, so n-grams repeat, with non-ASCII
+    * and astral tokens) ∪ synthetic corpus docs ∪ the edge texts. */
+  private def kernelTexts(): DataFrame = {
+    val vocab = Array("a", "b", "ab", "é", "\uD83D\uDE00", "x", "", "tab\tx")
+    val generated = (0 until 200).map { id =>
+      val rng = new scala.util.Random(id)
+      Row(id.toLong, Array.fill(rng.nextInt(30))(vocab(rng.nextInt(vocab.length))).mkString(" "))
+    }
+    val edge = kernelEdgeTexts.zipWithIndex.map { case (t, i) => Row(100000L + i, t) }
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    rddFrame(generated ++ edge, schema)
+      .unionByName(graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 20))
+  }
+
+  /** Raw token arrays the tokenizer never emits: null elements, empty
+    * tokens, an empty array and a null array. */
+  private def kernelTokenArrays(): DataFrame = {
+    val arrays: Seq[Seq[String]] = Seq(Seq("a", null, "b", "c"), Seq(null, null, null),
+      Seq(null), Seq(), null, Seq("", "a"), Seq("", ""), Seq("a", "b", null, "a", "b", null),
+      Seq(null, "x", "y", "z", "x", "y", "z"), Seq("é", null, "\uD83D\uDE00"))
+    rddFrame(arrays.zipWithIndex.map { case (a, i) => Row(i.toLong, a) },
+      StructType(Seq(StructField("id", LongType), StructField("toks", ArrayType(StringType)))))
+  }
+
+  /** Both directions of exceptAll are empty, and neither side is empty.
+    * Each side is computed once, pinned, then compared. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): DataFrame = {
+    val (g, w) = (got.localCheckpoint(true), want.localCheckpoint(true))
+    val extra = g.exceptAll(w).count()
+    val missing = w.exceptAll(g).count()
+    assert(extra == 0 && missing == 0, s"$what: $extra extra rows, $missing missing rows")
+    assert(w.count() > 0, s"$what: empty reference")
+    w
+  }
+
+  private def kernelEquivalence(): Unit = {
+    val toks = kernelTexts()
+      .select(col("doc_id").as("id"), split(DedupOps.normText(col("text")), " ").as("toks"))
+      .unionByName(kernelTokenArrays())
+    def shingleSets(f: (Column, Int) => Column) = Seq(1, 3, 5)
+      .map(n => toks.select(col("id"), lit(n).as("n"), f(col("toks"), n).as("shingle_arr")))
+      .reduce(_ unionByName _)
+    val shingles = assertSameRows(shingleSets(DedupOps.shinglesFromTokens),
+      shingleSets(hofShingles), "shinglesFromTokens")
+    // bands over every shingle size, and over raw arrays (n = 0) with null
+    // elements and a null array (the null text and the null token array
+    // are null shingle arrays too)
+    val bandInput = shingles.unionByName(
+      kernelTokenArrays().select(col("id"), lit(0).as("n"), col("toks").as("shingle_arr")))
+    val configs = Seq((16, 16), (16, 8), (16, 4), (16, 1), (8, 2))
+    def perConfig(side: (Int, Int) => DataFrame) = configs
+      .map { case (k, b) => side(k, b).withColumn("k", lit(k)).withColumn("b", lit(b)) }
+      .reduce(_ unionByName _)
+    assertSameRows(
+      perConfig((k, b) => bandInput.select(col("id"), col("n"), posexplode(
+        graft.functions.Shingles.minhashBands(col("shingle_arr"), k, b)))
+        .toDF("id", "n", "band_idx", "band_hash")),
+      perConfig((k, b) => hofBands(bandInput, k, b)),
+      "minhash bands")
+    // the public operator, end to end from text
+    val docs = kernelTexts()
+    assertSameRows(
+      perConfig((k, b) => DedupOps.bandedSignatures(docs, k, b)),
+      perConfig((k, b) => hofBands(docs.select(col("doc_id").as("id"), lit(3).as("n"),
+        hofShingles(split(DedupOps.normText(col("text")), " "), 3).as("shingle_arr")), k, b)
+        .drop("n").withColumnRenamed("id", "doc_id")),
+      "bandedSignatures")
+  }
+
+  test("native shingle + minhash-band kernels == the HOF chains, generated and interpreted") {
+    kernelEquivalence()
+    // the generated-code path really ran: the band kernel sits inside a
+    // whole-stage-codegen subtree
+    val plan = DedupOps.bandedSignatures(kernelTexts(), 16, 4).queryExecution.executedPlan
+    assert(plan.collectFirst {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+        if w.toString.contains("minhash_bands") => w
+    }.isDefined, plan.treeString)
+    // and again with eval only: no whole-stage codegen, no generated
+    // projections (nullSafeEval / eval)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try kernelEquivalence()
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("minhash bands: a null text keeps its bands rows, each xxhash64(\"\")") {
+    val edge = rddFrame(kernelEdgeTexts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) },
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val rows = DedupOps.bandedSignatures(edge, k = 16, bands = 8).collect()
+    assert(kernelEdgeTexts.size == 15 && rows.length == 120)
+    val nullId = kernelEdgeTexts.indexOf(null).toLong
+    val nullRows = rows.filter(_.getLong(0) == nullId)
+    assert(nullRows.map(_.getInt(1)).sorted.toSeq == (0 until 8))
+    val emptyHash = spark.range(1).select(xxhash64(lit(""))).head().getLong(0)
+    assert(emptyHash == EmptyStringXxHash64)
+    assert(nullRows.forall(_.getLong(2) == EmptyStringXxHash64))
+  }
+
+  /** Spark's `xxhash64("")` (seed 42). */
+  private val EmptyStringXxHash64 = -7444071767201028348L
+
+  test("simhash hashString reads UTF8String bytes in place: == FNV-1a over a byte copy") {
+    def copyHash(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+      var h = 0xCBF29CE484222325L
+      s.getBytes.foreach { b => h ^= b & 0xFFL; h *= 0x100000001B3L }
+      graft.functions.SimHash64.mix64(h)
+    }
+    val strs = Seq("", "a", "hello world", "naïve café", "日本語", "\uD83D\uDE00 grin", "tab\tx\n")
+    // tokens that live inside an unsafe array, at non-zero offsets into
+    // one shared buffer — the way the kernel sees them in a task
+    val rowArr = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(Array[org.apache.spark.sql.types.DataType](ArrayType(StringType)))
+      .apply(org.apache.spark.sql.catalyst.InternalRow(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          strs.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any])))
+      .getArray(0)
+    (0 until rowArr.numElements()).foreach { i =>
+      val slice = rowArr.getUTF8String(i)
+      assert(graft.functions.SimHash64.hashString(slice) == copyHash(slice), strs(i))
+      val fresh = org.apache.spark.unsafe.types.UTF8String.fromString(strs(i))
+      assert(graft.functions.SimHash64.hashString(fresh) == copyHash(fresh), strs(i))
+    }
   }
 
   test("simhash: identical texts distance 0; near texts within small Hamming") {
