@@ -85,8 +85,7 @@ object FoldSwap {
     * the COMMIT POINT, and a crash mid-write must leave either the old
     * value or the new one — never a zero-length/partial file that wedges
     * every later `compactedThrough` (ingest calls it before appending). */
-  private def writeMarker(io: MetaIO, p: String, v: Long): Unit =
-    io.writeAtomic(s"$p._tmp", p, v.toString, replace = true)
+  private def writeMarker(io: MetaIO, p: String, v: Long): Unit = io.overwrite(p, v.toString)
 
   /** Swap-finish CLAIM file, taken through the one claim CAS
     * ([[MetaIO.createNew]], shared with icelite's snapshot-id claims):

@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /**
- * Metadata IO for the icelite layer — the seam that makes the table layer
- * storage-agnostic. Every manifest/pointer/claim operation in [[Icelite]]
- * and every marker/claim/listing/swap operation in [[FoldSwap]] (and the
- * stored tables built on it) goes through this trait; the DATA files
- * already do (Spark's parquet reader/writer speaks Hadoop `FileSystem`
- * natively), so with this seam a root can be a local directory, `file://`,
- * `hdfs://`, or any other Hadoop-registered scheme.
+ * Metadata IO for stored tables — the ONE seam for every metadata record:
+ * [[Icelite]] manifests, pointers and claims, [[FoldSwap]] markers, claims,
+ * listings and swaps, the ANN index and postings sidecars, the per-batch
+ * BM25 stats and the run metrics (small JSON documents, read back with
+ * [[readJson]]). Spark reads and writes only table DATA (its parquet IO
+ * speaks Hadoop `FileSystem` natively), so with this seam a root can be a
+ * local directory, `file://`, `hdfs://`, or any other Hadoop-registered scheme.
  *
  * Two implementations, dispatched on where the root resolves
  * ([[MetaIO.forRoot]]):
@@ -51,10 +51,16 @@ private[graft] sealed trait MetaIO extends Serializable {
     catch {
       case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => None
     }
-  /** Write `content` to `tmp`, then atomically rename onto `dst`.
-    * `replace=false` must FAIL if `dst` exists (manifest commit);
-    * `replace=true` must atomically overwrite (pointer advance). */
+  /** [[readIfExists]] parsed as JSON. */
+  def readJson(p: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+    readIfExists(p).map(MetaIO.json.readTree)
+  /** Write `content` to `tmp`, then atomically rename onto `dst`; missing
+    * parent directories are created. `replace=false` must FAIL if `dst`
+    * exists (manifest commit); `replace=true` must atomically overwrite
+    * (pointer advance). */
   def writeAtomic(tmp: String, dst: String, content: String, replace: Boolean): Unit
+  /** [[writeAtomic]] over `p` via the temp `p._tmp`, replacing it. */
+  def overwrite(p: String, content: String): Unit = writeAtomic(s"$p._tmp", p, content, replace = true)
   /** Atomic create-if-absent — the ONE claim CAS (icelite snapshot ids,
     * FoldSwap's swap-finish claim): true = this caller created the file and
     * wrote `content` into it, false = it already existed (the existing
@@ -74,6 +80,11 @@ private[graft] object MetaIO {
   import org.apache.spark.sql.SparkSession
 
   private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*://.*".r
+
+  // records write doubles with `Double.toString` (NaN/Infinity bare, hence the
+  // feature); float tokens parse with `Double.parseDouble`: bit-exact round trip
+  private[icelite] val json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
 
   /** The Hadoop conf metadata paths resolve through: the thread's active
     * session, else the process default session (a bare Configuration —
@@ -116,6 +127,7 @@ private[graft] object NioMetaIO extends MetaIO {
 
   override def writeAtomic(tmp: String, dst: String, content: String,
                            replace: Boolean): Unit = {
+    Option(path(tmp).getParent).foreach(Files.createDirectories(_))
     Files.write(path(tmp), content.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     if (replace) {

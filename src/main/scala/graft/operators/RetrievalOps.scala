@@ -137,29 +137,31 @@ object RetrievalOps {
   // a query batch's bucket set becomes STATIC partition filters — a
   // 5-term query opens ~5/nBuckets of the postings, not the corpus.
   // Layout (the writeIvfPq conventions):
-  //   path/_retrieval_meta/            nBuckets (pruning is WRONG under a
+  //   path/_retrieval_meta.json        nBuckets (pruning is WRONG under a
   //                                    different bucket count — rides the index)
   //   path/postings/batch_id=N/tb=B/   (doc_id, dl, th, tf)
-  //   path/stats/batch_id=N/           one (n_docs, sum_dl) row per batch —
-  //                                    exact longs, summed at query time, so
-  //                                    stored avgdl/idf match the in-memory
-  //                                    path bit-for-bit
+  //   path/stats/batch_id=N.json       the batch's (n_docs, sum_dl) — exact
+  //                                    longs, summed at query time, so stored
+  //                                    avgdl/idf match the in-memory path
+  //                                    bit-for-bit; it lands last, so its
+  //                                    existence COMMITS the batch
+  // The .json records are MetaIO documents, never Spark reads or writes.
   // batch_id=N makes ingest idempotent (a replayed batch OVERWRITES its own
-  // subtree); FoldSwap compaction folds the daily small files back to ~one
-  // file per bucket.
+  // subtree and stats); FoldSwap compaction folds the daily small files back
+  // to ~one file per bucket.
   // --------------------------------------------------------------------
 
-  private def metaDir(path: String) = s"$path/_retrieval_meta"
+  private def metaPath(path: String) = s"$path/_retrieval_meta.json"
+  private def statsPath(path: String, batchId: Long) = s"$path/stats/batch_id=$batchId.json"
+  private val StatsName = """batch_id=\d+\.json""".r
 
   /** Bucket count persisted with the index by [[writePostingsIndex]]. */
-  def readPostingsMeta(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Int = {
-    if (!MetaIO.forRoot(path).exists(metaDir(path))) throw new IllegalStateException(
-      s"no retrieval metadata at ${metaDir(path)} — not writePostingsIndex " +
-        "storage (a bucket count guessed at query time would silently " +
-        "prune the WRONG partitions)")
-    spark.read.parquet(metaDir(path)).head().getInt(0)
-  }
+  def readPostingsMeta(path: String): Int =
+    MetaIO.forRoot(path).readJson(metaPath(path)).map(_.get("n_buckets").intValue)
+      .getOrElse(throw new IllegalStateException(
+        s"no retrieval metadata at ${metaPath(path)} — not writePostingsIndex storage " +
+          "or an older layout; rebuild with writePostingsIndex (a guessed bucket " +
+          "count would silently prune the WRONG partitions)"))
 
   /** FULL REBUILD of a stored postings index: clears any existing index
     * (prior batches bucketed under a different nBuckets would mis-prune),
@@ -169,11 +171,9 @@ object RetrievalOps {
   def writePostingsIndex(documents: DataFrame, path: String,
                          nBuckets: Int = 256): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val spark = documents.sparkSession
-    MetaIO.forRoot(path).deleteRecursive(path)
-    import spark.implicits._
-    Seq(nBuckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(metaDir(path))
+    val io = MetaIO.forRoot(path)
+    io.deleteRecursive(path)
+    io.overwrite(metaPath(path), s"""{"n_buckets":$nBuckets}""")
     appendPostingsIndex(documents, path, batchId = 0L)
   }
 
@@ -184,15 +184,14 @@ object RetrievalOps {
     * doc_id would double its term frequencies). IDEMPOTENT per batch id;
     * REFUSES ids at or below the compaction watermark (their overwrite
     * subtree was folded away — a replay would duplicate postings). A crash
-    * between the postings write and the stats write leaves the batch's
+    * between the postings write and the stats document leaves the batch's
     * df/tf visible but its docs uncounted in N/avgdl — the recovery
     * contract is the streaming one: REPLAY the interrupted batch id (both
     * writes are overwrites) before trusting query scores, exactly as
     * StreamingDedup replays uncommitted batches. */
   def appendPostingsIndex(documents: DataFrame, path: String,
                           batchId: Long): Unit = {
-    val spark = documents.sparkSession
-    val nBuckets = readPostingsMeta(spark, path)
+    val nBuckets = readPostingsMeta(path)
     val w = FoldSwap.compactedThrough(s"$path/postings")
     require(batchId > w,
       s"appendPostingsIndex batch_id=$batchId is already folded into this " +
@@ -211,13 +210,14 @@ object RetrievalOps {
     // array), so one narrow distinct over (doc_id, dl) reproduces the
     // exact same longs at a fraction of the bytes. Explicit schema: an
     // EMPTY batch writes only _SUCCESS and inference would throw.
-    documents.sparkSession.read
+    val st = documents.sparkSession.read
       .schema("doc_id BIGINT, dl INT, th BIGINT, tf BIGINT, tb INT")
       .parquet(s"$path/postings/batch_id=$batchId")
       .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).cast("bigint").as("sum_dl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/stats/batch_id=$batchId")
+      .agg(count(lit(1)), coalesce(sum(col("dl")).cast("bigint"), lit(0L)))
+      .head()
+    MetaIO.forRoot(path).overwrite(statsPath(path, batchId),
+      s"""{"n_docs":${st.getLong(0)},"sum_dl":${st.getLong(1)}}""")
   }
 
   /** BM25 top-k over [[writePostingsIndex]] storage: the query batch's
@@ -231,29 +231,30 @@ object RetrievalOps {
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // heal an interrupted-but-committed postings compaction before any scan
-    // (FoldSwap.ensureRecovered doc) — stats sidecars are never folded and
+    // (FoldSwap.ensureRecovered doc) — stats documents are never folded and
     // need no recovery
     FoldSwap.ensureRecovered(s"$path/postings", "batch_id=")
-    // r7 (ADVICE): a crash between appendPostingsIndex's postings write and
-    // its stats write leaves the batch's tf/df visible while its docs are
-    // missing from N/avgdl — scores would be silently mis-normalized until
-    // the operator replays the batch. Readers HEAL-OR-FAIL here (the
+    val nBuckets = readPostingsMeta(path)
+    // a crash between appendPostingsIndex's postings write and its stats
+    // document leaves the batch's tf/df visible while its docs are missing
+    // from N/avgdl — scores would be silently mis-normalized until the
+    // operator replays the batch. Readers HEAL-OR-FAIL here (the
     // FoldSwap.ensureRecovered convention): any live postings batch without
-    // its committed stats sidecar fails loudly with the replay remedy.
+    // its committed stats document fails loudly with the replay remedy.
     val io = MetaIO.forRoot(path)
     FoldSwap.listIds(s"$path/postings", "batch_id=")
       .foreach { id =>
-        if (!io.exists(s"$path/stats/batch_id=$id/_SUCCESS"))
+        if (!io.exists(statsPath(path, id)))
           throw new IllegalStateException(
-            s"postings batch_id=$id at $path has no committed stats sidecar " +
+            s"postings batch_id=$id at $path has no committed stats document " +
               "— an interrupted appendPostingsIndex. Replay that batch id " +
               "(both writes are overwrites) before querying, or its docs " +
               "stay uncounted in N/avgdl and every score is mis-normalized")
       }
-    val nBuckets = readPostingsMeta(spark, path)
-    val st = spark.read.parquet(s"$path/stats")
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sdl")).head()
-    require(!st.isNullAt(0) && st.getLong(0) > 0,
+    val stats = io.list(s"$path/stats").filter(StatsName.matches)
+      .flatMap(n => io.readJson(s"$path/stats/$n"))
+    val nDocs = stats.map(_.get("n_docs").longValue).sum
+    require(nDocs > 0,
       s"postings index at $path holds ZERO documents (every ingested batch " +
         "was empty) — nothing to rank")
     val buckets = queries
@@ -265,18 +266,18 @@ object RetrievalOps {
       .filter(col("tb").isin(buckets: _*))
       .select("doc_id", "dl", "th", "tf")
     scoreTopK(post, queries,
-      nDocs = st.getLong(0), sumDl = st.getLong(1), k, k1, b)
+      nDocs = nDocs, sumDl = stats.map(_.get("sum_dl").longValue).sum, k, k1, b)
   }
 
   /** Steady-state index MAINTENANCE: fold every COMMITTED `batch_id=N`
     * postings subtree into one with ~one file per bucket (after D daily
     * appends a Q-term query opens Q×D file sets; the fold restores Q).
     * Crash safety and the replay-refusal watermark are
-    * [[graft.icelite.FoldSwap]]'s contract. Stats sidecars stay per-batch
-    * (one row each — never the files problem). Returns the watermark.
+    * [[graft.icelite.FoldSwap]]'s contract. Stats documents stay per-batch
+    * (one small file each — never the files problem). Returns the watermark.
     *
-    * "Committed" = the batch's STATS sidecar has its `_SUCCESS` marker (the
-    * stats write is [[appendPostingsIndex]]'s second and last step). A batch
+    * "Committed" = the batch's STATS document exists (it is
+    * [[appendPostingsIndex]]'s second and last step). A batch
     * caught in the documented crash window — postings written, stats missing
     * — must stay out of the fold: folding it would bake its tf/df rows into
     * the index while the watermark REFUSES the replay that is its one
@@ -287,8 +288,7 @@ object RetrievalOps {
                       failAt: Option[String] = None): Long = {
     val io = MetaIO.forRoot(path)
     FoldSwap.compact(s"$path/postings", "batch_id=",
-      selectFoldable = ids => ids.sorted.takeWhile(id =>
-        io.exists(s"$path/stats/batch_id=$id/_SUCCESS")),
+      selectFoldable = ids => ids.sorted.takeWhile(id => io.exists(statsPath(path, id))),
       stage = (tmp, _, target) => {
         spark.read.parquet(s"$path/postings")
           .filter(col("batch_id") <= target).drop("batch_id")

@@ -575,11 +575,10 @@ object SimilarityOps {
   // part of the index — without them, [[writeIvfPq]] storage is queryable
   // only by the session that trained them (a fresh session would have to
   // RETRAIN, and retrained quantizers do not reproduce the stored codes).
-  // They persist as a parquet sidecar under `path/_index_meta` (leading
-  // underscore → invisible to the data scan, exactly like `_metadata`),
-  // versioned by a content hash so an ingest under the WRONG quantizers —
-  // whose codes would silently mis-rank against the stored ones — fails
-  // loudly instead.
+  // They persist as the MetaIO document `path/_index_meta.json` (leading
+  // underscore → invisible to the data scan), versioned by a content hash
+  // so an ingest under the WRONG quantizers — whose codes would silently
+  // mis-rank against the stored ones — fails loudly instead.
   // ------------------------------------------------------------------------
 
   /** Assignment-distance stats over a (sampled) vector set: the index's
@@ -615,7 +614,7 @@ object SimilarityOps {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  private def metaDir(path: String) = s"$path/_index_meta"
+  private def metaPath(path: String) = s"$path/_index_meta.json"
 
   // ------------------------------------------------------------------------
   // Index DRIFT detection — "retrain only when drift warrants a rebuild" as
@@ -690,27 +689,24 @@ object SimilarityOps {
     DriftReport(batch, train, mr, pr, mr > meanRatioMax || pr > p95RatioMax)
   }
 
-  /** Persist the quantizers next to the index (parquet keeps the doubles
-    * bit-exact; JSON text round-trips are where reconstruction drift comes
-    * from). One sidecar per index version — written by [[writeIvfPq]]. */
-  def writeIndexMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                     index: IvfIndex,
+  /** Persist the quantizers next to the index as `_index_meta.json` (doubles
+    * as `Double.toString`, which reads back bit-exact; no Spark job). One
+    * document per index version — written by [[writeIvfPq]]. */
+  def writeIndexMeta(path: String, index: IvfIndex,
                      codebooks: Array[Array[Array[Double]]],
                      trainStats: Option[AssignStats] = None): Unit = {
-    import spark.implicits._
-    val ver = indexVersion(index, codebooks)
-    val rows: Seq[(String, Int, Int, Seq[Double])] =
-      index.centroids.zipWithIndex.toSeq.map { case (c, i) => ("centroid", i, -1, c.toSeq) } ++
-        codebooks.zipWithIndex.toSeq.flatMap { case (b, s) =>
-          b.zipWithIndex.toSeq.map { case (c, j) => ("codebook", s, j, c.toSeq) }
-        } ++
-        // auxiliary, NOT part of the version hash: stats describe the
-        // training corpus, the version identifies the quantizers
-        trainStats.toSeq.map(st =>
-          ("stat", 0, -1, Seq(st.meanDist, st.p95Dist, st.n.toDouble)))
-    rows.toDF("kind", "s", "c", "values")
-      .withColumn("version", lit(ver))
-      .coalesce(1).write.mode("overwrite").parquet(metaDir(path))
+    def arr[T](xs: Array[T])(f: T => String) = xs.map(f).mkString("[", ",", "]")
+    def num(d: Double) = java.lang.Double.toString(d)
+    def vec(v: Array[Double]) = arr(v)(num)
+    // auxiliary, NOT part of the version hash: stats describe the training
+    // corpus, the version identifies the quantizers
+    val stats = trainStats.fold("")(st =>
+      s""","train_stats":{"mean_dist":${num(st.meanDist)},""" +
+        s""""p95_dist":${num(st.p95Dist)},"n":${st.n}}""")
+    val doc = s"""{"version":"${indexVersion(index, codebooks)}",""" +
+      s""""centroids":${arr(index.centroids)(vec)},""" +
+      s""""codebooks":${arr(codebooks)(arr(_)(vec))}$stats}"""
+    MetaIO.forRoot(path).overwrite(metaPath(path), doc)
   }
 
   /** Load a stored index's quantizers — what makes [[writeIvfPq]] storage
@@ -718,23 +714,20 @@ object SimilarityOps {
     * would not reproduce the stored codes). Verifies the recorded version
     * against a recomputation over the loaded values, so sidecar corruption
     * surfaces here, not as silently wrong neighbors. */
-  def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                    path: String): IvfPqMeta = {
-    if (!MetaIO.forRoot(path).exists(metaDir(path))) throw new IllegalStateException(
-      s"no index metadata at ${metaDir(path)} — not writeIvfPq storage " +
-        "(or written by a pre-metadata version; rebuild with writeIvfPq)")
-    val rows = spark.read.parquet(metaDir(path)).collect()
-    val version = rows.head.getAs[String]("version")
-    def vec(r: org.apache.spark.sql.Row): Array[Double] =
-      r.getAs[scala.collection.Seq[Double]]("values").toArray
-    val centroids = rows.filter(_.getAs[String]("kind") == "centroid")
-      .sortBy(_.getAs[Int]("s")).map(vec)
-    val codebooks = rows.filter(_.getAs[String]("kind") == "codebook")
-      .groupBy(_.getAs[Int]("s")).toArray.sortBy(_._1)
-      .map { case (_, rs) => rs.sortBy(_.getAs[Int]("c")).map(vec) }
-    val trainStats = rows.find(_.getAs[String]("kind") == "stat").map(vec)
-      .map(v => AssignStats(v(0), v(1), v(2).toLong))
-    val meta = IvfPqMeta(IvfIndex(centroids), codebooks, version, trainStats)
+  def readIndexMeta(path: String): IvfPqMeta = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
+    val doc = MetaIO.forRoot(path).readJson(metaPath(path))
+      .getOrElse(throw new IllegalStateException(
+        s"no index metadata at ${metaPath(path)} — not writeIvfPq storage " +
+          "or an older layout; rebuild with writeIvfPq"))
+    def vec(n: JsonNode) = n.asScala.map(_.doubleValue).toArray
+    def mat(n: JsonNode) = n.asScala.map(vec).toArray
+    val version = doc.get("version").textValue
+    val trainStats = Option(doc.get("train_stats")).map(st => AssignStats(
+      st.get("mean_dist").doubleValue, st.get("p95_dist").doubleValue, st.get("n").longValue))
+    val meta = IvfPqMeta(IvfIndex(mat(doc.get("centroids"))),
+      doc.get("codebooks").asScala.map(mat).toArray, version, trainStats)
     val recomputed = indexVersion(meta.index, meta.codebooks)
     require(recomputed == version,
       s"index metadata at $path is corrupt: recorded version $version, content hashes to $recomputed")
@@ -751,16 +744,15 @@ object SimilarityOps {
     * partition column, so probe pruning is unaffected. A FULL REBUILD:
     * clears any existing index first (prior batches were coded under a
     * possibly-different quantizer version and would silently mis-rank),
-    * then persists the quantizers as the versioned `_index_meta` sidecar
+    * then persists the quantizers as the versioned `_index_meta.json` sidecar
     * ([[writeIndexMeta]]) so a fresh session can query and append without
     * retraining. */
   def writeIvfPq(embeddings: DataFrame, index: IvfIndex,
                  codebooks: Array[Array[Array[Double]]], path: String): Unit = {
-    val spark = embeddings.sparkSession
     MetaIO.forRoot(path).deleteRecursive(path)
     // training-time assignment stats ride along so every later ingest batch
     // can run [[ivfDrift]] against them
-    writeIndexMeta(spark, path, index, codebooks,
+    writeIndexMeta(path, index, codebooks,
       trainStats = Some(assignStats(embeddings, index)))
     appendIvfPq(embeddings, index, codebooks, path, batchId = 0L)
   }
@@ -781,7 +773,7 @@ object SimilarityOps {
   def appendIvfPq(newVectors: DataFrame, index: IvfIndex,
                   codebooks: Array[Array[Array[Double]]], path: String,
                   batchId: Long): Unit = {
-    val stored = readIndexMeta(newVectors.sparkSession, path)
+    val stored = readIndexMeta(path)
     val caller = indexVersion(index, codebooks)
     require(stored.version == caller,
       s"appendIvfPq under WRONG quantizers: index at $path is version " +

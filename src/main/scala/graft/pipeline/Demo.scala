@@ -134,7 +134,7 @@ object Demo {
         // training stats the sidecar carries (same distribution ⇒ append; a
         // drifted drop would recommend rebuild instead of silently letting
         // appended codes degrade), and appendIvfPq asserts the version
-        val meta = SimilarityOps.readIndexMeta(spark, idxDir)
+        val meta = SimilarityOps.readIndexMeta(idxDir)
         val drift = SimilarityOps.ivfDrift(vecs, meta)
         assert(!drift.rebuildRecommended,
           s"day $day is drawn from the training distribution yet flagged drift: $drift")
@@ -172,7 +172,7 @@ object Demo {
       .listFiles().count(_.getName.endsWith(".json"))
     assert(retained <= 2, s"store retention keepLast=2 violated: $retained manifests")
     // the composed index is queryable over ALL batches from sidecar metadata
-    val meta = SimilarityOps.readIndexMeta(spark, idxDir)
+    val meta = SimilarityOps.readIndexMeta(idxDir)
     val queries = embed(spark.range(1000L, 1003L).select(col("id").as("doc_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val topk = SimilarityOps.annTopKIvfPqStored(spark, idxDir, queries,

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
@@ -43,11 +41,8 @@ final class RunMetrics(spark: SparkSession) extends Serializable {
       s""""messages":$msgJson}"""
   }
 
-  /** Flush to a file (write_getter_warnings analogue, robot.py:371-374). */
-  def write(path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    Files.write(p, toJson.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  /** Flush to a file through [[graft.icelite.MetaIO]], so a URI path lands on
+    * its own filesystem (write_getter_warnings analogue, robot.py:371-374). */
+  def write(path: String): Unit =
+    graft.icelite.MetaIO.forRoot(path).overwrite(path, toJson)
 }

@@ -56,7 +56,7 @@ object CompactionProbe {
     val books = SimilarityOps.trainPq(day0, m = 4, k = 8, dim = 16)
     SimilarityOps.writeIvfPq(day0, index, books, idxDir)
     for (day <- 1 until days) {
-      val meta = SimilarityOps.readIndexMeta(spark, idxDir) // the production shape
+      val meta = SimilarityOps.readIndexMeta(idxDir) // the production shape
       SimilarityOps.appendIvfPq(vecs(day), meta.index, meta.codebooks, idxDir,
         batchId = day.toLong)
     }

@@ -12,6 +12,35 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   lazy val ontPath = MiniOntology.writeTo("target/fixtures")
 
+  /** `body`'s result and the Spark jobs it started on this thread, counted
+    * by a SparkListener. Listener events arrive asynchronously, so a marker
+    * job in its own group, seen after `body`, flushes every earlier event. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job_count_${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$group.marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "withJobCount")
+      val out = body
+      sc.setJobGroup(s"$group.marker", "withJobCount marker")
+      sc.parallelize(Seq(0), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+      (out, jobs.get())
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
   test("fused detectTriples == detect -> topCandidates -> mentionTriples -> canonicalize") {
     import spark.implicits._
     val tr = Transcripts.synthetic(spark, 300)
@@ -298,8 +327,9 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(!computed && re.collect().map(_.getString(1)).toSeq == Seq("a"))
     // claim CAS via FileSystem.create(overwrite=false): a claim held by a
-    // FOREIGN process forces allocation past it — id 3 is skipped, not shared
-    fs.create(new HPath(s"$root/t/snapshots/3.claim"), false).close()
+    // FOREIGN process (taken here with the same MetaIO claim it would run)
+    // forces allocation past it — id 3 is skipped, not shared
+    graft.icelite.MetaIO.forRoot(root).createNew(s"$root/t/snapshots/3.claim")
     assert(ic.writeSnapshot(Seq((4, "d")).toDF("k", "v"), "t", tag = "fourth") == 4L,
       "foreign claim on id 3 was not skipped")
     fs.delete(new HPath(s"$root/t/snapshots/3.claim"), false)
@@ -328,6 +358,17 @@ class PipelineSpec extends AnyFunSuite {
     val aggPlan = agg.queryExecution.executedPlan.toString
     assert(aggPlan.contains("Bucketed: true"),
       s"URI-root bucketed snapshot fell back to a plain parquet scan:\n${aggPlan.take(1500)}")
+    // a pipeline run over the URI root keeps its run metrics under that
+    // root — never at a relative local `file:/…` path in the working dir
+    val tr = Transcripts.synthetic(spark, 20)
+    val kgId = KgPipeline.run(spark, tr, ontPath, icelite = Some(ic), runTag = "uri")
+      .snapshotId.get
+    val metricsJson = s"$root/kg_edges/metrics/$kgId.json"
+    assert(fs.exists(new HPath(metricsJson)), s"run metrics missing at $metricsJson")
+    assert(graft.icelite.MetaIO.forRoot(root).readString(metricsJson)
+      .contains(s""""turns_processed":${tr.count()}"""))
+    val cwd = new java.io.File(".").list().toSeq
+    assert(!cwd.exists(_.startsWith("file:")), s"metrics landed in the working dir: $cwd")
   }
 
   test("int8 quantization: bounded codes, extremes hit ±127, top-k recall vs full precision") {
@@ -940,8 +981,10 @@ class PipelineSpec extends AnyFunSuite {
     // FRESH session (new session state/catalog — the new-process shape):
     // everything needed to query comes off disk, nothing is retrained
     val fresh = spark.newSession()
-    val meta = SimilarityOps.readIndexMeta(fresh, path)
-    // quantizers round-trip BIT-exact (parquet doubles, not JSON text)
+    val (meta, metaJobs) = withJobCount(SimilarityOps.readIndexMeta(path))
+    assert(metaJobs == 0, s"readIndexMeta ran $metaJobs Spark jobs")
+    // quantizers round-trip BIT-exact (Double.toString into the JSON
+    // sidecar, Double.parseDouble back)
     assert(meta.version == SimilarityOps.indexVersion(index, books))
     assert(meta.index.centroids.length == index.centroids.length &&
       meta.index.centroids.zip(index.centroids).forall { case (a, b) => a.sameElements(b) })
@@ -976,6 +1019,12 @@ class PipelineSpec extends AnyFunSuite {
       SimilarityOps.appendIvfPq(more, index, books,
         "target/fixtures/ann_no_meta_" + System.nanoTime(), batchId = 0)
     }
+    // an index in the older layout (an `_index_meta/` parquet directory, no
+    // `_index_meta.json`) fails loudly with the rebuild call
+    val oldLayout = "target/fixtures/ann_old_meta_" + System.nanoTime()
+    spark.range(1).write.parquet(s"$oldLayout/_index_meta")
+    val exOld = intercept[IllegalStateException](SimilarityOps.readIndexMeta(oldLayout))
+    assert(exOld.getMessage.contains("rebuild with writeIvfPq"), exOld.getMessage)
   }
 
   test("index drift: sidecar stats round-trip; same-distribution batch passes, shifted batch trips") {
@@ -992,7 +1041,7 @@ class PipelineSpec extends AnyFunSuite {
     SimilarityOps.writeIvfPq(emb, index, books, path)
 
     // training stats ride the sidecar and round-trip
-    val meta = SimilarityOps.readIndexMeta(spark, path)
+    val meta = SimilarityOps.readIndexMeta(path)
     val want = SimilarityOps.assignStats(emb, index)
     assert(meta.trainStats.contains(want),
       s"sidecar stats ${meta.trainStats} != recomputed $want")
@@ -1021,9 +1070,9 @@ class PipelineSpec extends AnyFunSuite {
     // an index written before drift detection existed fails LOUDLY, not
     // with a fabricated baseline
     val legacy = "target/fixtures/ann_drift_legacy_" + System.nanoTime()
-    SimilarityOps.writeIndexMeta(spark, legacy, index, books)
+    SimilarityOps.writeIndexMeta(legacy, index, books)
     val ex = intercept[IllegalStateException] {
-      SimilarityOps.ivfDrift(emb, SimilarityOps.readIndexMeta(spark, legacy))
+      SimilarityOps.ivfDrift(emb, SimilarityOps.readIndexMeta(legacy))
     }
     assert(ex.getMessage.contains("no training assignment stats"), ex.getMessage)
   }
@@ -1063,8 +1112,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(batchDirs() == 1, "compaction left multiple batch subtrees")
     assert(dataFiles() < filesBefore,
       s"compaction did not reduce file count ($filesBefore -> ${dataFiles()})")
-    // ~one file per list + the _index_meta sidecar — the fold's whole point
-    assert(dataFiles() <= 6 + 1, s"${dataFiles()} files after folding 6 lists")
+    // ~one file per list — the fold's whole point (the _index_meta.json
+    // sidecar is not a parquet file)
+    assert(dataFiles() <= 6, s"${dataFiles()} files after folding 6 lists")
     assert(key() == want, "compaction changed stored-index query results")
     assert(spark.read.parquet(path).count() == 450, "compaction lost/duplicated rows")
 
@@ -1188,6 +1238,16 @@ class PipelineSpec extends AnyFunSuite {
       RetrievalOps.bm25TopKStored(spark, path + "_nope", queries, k = 4)
     }
     assert(ex.getMessage.contains("no retrieval metadata"), ex.getMessage)
+    // the bucket count is a MetaIO document: reading it runs no Spark job
+    val (nBuckets, metaJobs) = withJobCount(RetrievalOps.readPostingsMeta(path))
+    assert(nBuckets == 32 && metaJobs == 0, s"nBuckets=$nBuckets, $metaJobs Spark jobs")
+    // an index in the older layout (an `_retrieval_meta/` parquet directory,
+    // no `_retrieval_meta.json`) fails loudly with the rebuild call
+    Seq(32).toDF("n_buckets").write.parquet(s"${path}_old/_retrieval_meta")
+    val exOld = intercept[IllegalStateException] {
+      RetrievalOps.bm25TopKStored(spark, s"${path}_old", queries, k = 4)
+    }
+    assert(exOld.getMessage.contains("rebuild with writePostingsIndex"), exOld.getMessage)
     // an index whose every ingested batch was empty also fails loudly
     RetrievalOps.writePostingsIndex(
       mkDocs(0, 150).filter(col("doc_id") < 0), path + "_empty", nBuckets = 8)
@@ -1195,12 +1255,12 @@ class PipelineSpec extends AnyFunSuite {
       RetrievalOps.bm25TopKStored(spark, path + "_empty", queries, k = 4)
     }
     assert(exEmpty.getMessage.contains("ZERO documents"), exEmpty.getMessage)
-    // r7 (ADVICE): an interrupted appendPostingsIndex (postings written,
-    // stats sidecar missing) must fail the READ loudly with the replay
-    // remedy — not serve silently mis-normalized scores
+    // an interrupted appendPostingsIndex (postings written, stats document
+    // missing) must fail the READ loudly with the replay remedy — not serve
+    // silently mis-normalized scores
     RetrievalOps.appendPostingsIndex(mkDocs(200, 220), path, batchId = 2)
-    val statsSuccess = java.nio.file.Paths.get(s"$path/stats/batch_id=2/_SUCCESS")
-    java.nio.file.Files.delete(statsSuccess)
+    val statsDoc = java.nio.file.Paths.get(s"$path/stats/batch_id=2.json")
+    java.nio.file.Files.delete(statsDoc)
     val exStats = intercept[IllegalStateException] {
       RetrievalOps.bm25TopKStored(spark, path, queries, k = 4)
     }
@@ -1379,7 +1439,7 @@ class PipelineSpec extends AnyFunSuite {
     // written, the stats write never ran
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/stats/batch_id=2"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/stats/batch_id=2.json"), true)
     // the fold must stop BELOW the interrupted batch — folding it would
     // bake its tf/df into the index while the watermark refuses the replay
     // that is its only recovery path
