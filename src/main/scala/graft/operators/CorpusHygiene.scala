@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
  * IMPLEMENTATION.md "training-data operators"); this object fixes the
  * COMPOSITION: stage order (redaction last — it rewrites the text other
  * stages key on), the id-only join discipline (corpus text never shuffles —
- * stage decisions travel as doc_id sets through semi/anti joins or map-side
- * filters), and the dials ([[HygieneConfig]]). The q_hygiene oracle replays
+ * stage decisions the driver holds travel as doc_id IN-set filters or local
+ * relations, and decontamination is a map-side filter), and the dials ([[HygieneConfig]]). The q_hygiene oracle replays
  * the exact-dedup → decontaminate → repetition → sample → redact chain in
  * DuckDB, and q_hygiene_full replays all SIX stages (minhash survivors
  * included) on a smaller subset — so the composition itself is
@@ -53,8 +53,8 @@ object CorpusHygiene {
    * them on every run).
    *
    * Exact dedup runs ONCE per clean: its survivors are pinned with a lazy
-   * `localCheckpoint(false)` that the minhash banding, the candidate fetch,
-   * the contamination scan and the final chain all read, instead of each
+   * `localCheckpoint(false)` that the minhash banding, the candidate fetch
+   * and the final chain all read, instead of each
    * re-running the fingerprint shuffle. The pin stores one lineage-truncated
    * copy of the exact-dedup survivors (memory and disk); it is not
    * recoverable on executor loss, so a lost executor fails the job, which
@@ -64,7 +64,10 @@ object CorpusHygiene {
    * NOT fully lazy: under AQE, building a lazy pin runs its plan's shuffle
    * stages, so construction runs the exact-dedup fingerprint shuffle and,
    * with `nearDupThreshold` set, the minhash stage's banding probe and
-   * verify probe ([[DriverProbe]] jobs over the pinned survivors).
+   * verify probe ([[DriverProbe]] jobs over the pinned survivors), and with
+   * a benchmark, the probe that collects its gram index (one job over the
+   * benchmark). The final plan then reads the pin through map-side filters
+   * only: no exchange.
    *
    * @param benchmark optional (bench_id, text) eval items for the
    *   decontamination stage (skipped when absent)
@@ -81,15 +84,11 @@ object CorpusHygiene {
     }
 
     // 3. decontamination: drop docs covering >= minFrac of any eval item's
-    //    gram set. The flagged id set is contamination-sized, so it is
-    //    broadcast; a broadcast anti-join ignores duplicate build keys, so it
-    //    needs no distinct, and the corpus side never shuffles
+    //    gram set — a map-side filter against the benchmark's broadcast
+    //    gram index, so the corpus side neither joins nor shuffles
     (benchmark, cfg.decontaminateMinFrac) match {
       case (Some(bench), Some(frac)) =>
-        val flagged = DedupOps
-          .contamination(d, bench, cfg.decontaminateGram, frac)
-          .select("doc_id")
-        d = d.join(broadcast(flagged), Seq("doc_id"), "left_anti")
+        d = DedupOps.decontaminate(d, bench, cfg.decontaminateGram, frac)
       case _ => ()
     }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Shingles, SimHash64}
+import graft.functions.{Contamination, Shingles, SimHash64}
 
 /**
  * Deduplication operators for training-data pipelines over
@@ -228,10 +228,13 @@ object DedupOps {
    * behind the mega-bucket guard), so the NON-distinct stream (a pair
    * repeats once per shared band) is [[DriverProbe]]d and deduped on the
    * driver: the ids reach [[fetchDocsByIds]] as a local relation and the
-   * pair table rides the verify join as a broadcast. Over the probe (or with
-   * non-long ids, which the driver path would re-type) the distinct pairs
-   * are pinned and their ids fetched the same way. Only candidate docs are
-   * shingled, once, pinned for both verify-join sides.
+   * pair list streams into the verify join from the driver. When the
+   * candidate docs fit the fetch's IN filter their shingle arrays are
+   * broadcast, once for both verify-join sides (a reused exchange), and
+   * nothing is pinned; a larger candidate set pins its shingle arrays.
+   * Over the probe (or with non-long ids, which the driver path would
+   * re-type) the distinct pairs are pinned and their ids fetched the same
+   * way. Only candidate docs are shingled, once.
    *
    * @param pairsAll candidate pairs (a, b, …); extra columns ride through
    * @param docs (doc_id, text) covering every candidate id
@@ -245,20 +248,20 @@ object DedupOps {
     val longIds = Seq(pairsAll.schema("a"), pairsAll.schema("b"), docs.schema("doc_id"))
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     val probe = if (longIds) DriverProbe.bounded(pairsAll, DriverGroupLimit) else None
-    val (cand, candDocs) = probe match {
+    val (cand, sh) = probe match {
       case Some(rows) =>
         val pairs = rows.distinct
         val candIds = pairs.iterator
           .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toArray.distinct.sorted
-        (broadcast(spark.createDataFrame(java.util.Arrays.asList(pairs: _*), pairsAll.schema)),
-          fetchDocsByIds(docs, candIds.toSeq.toDF("doc_id")))
+        val sh = shingleArray(fetchDocsByIds(docs, candIds.toSeq.toDF("doc_id")))
+        (spark.createDataFrame(java.util.Arrays.asList(pairs: _*), pairsAll.schema),
+          if (candIds.length <= FetchProbeLimit) broadcast(sh) else sh.localCheckpoint(false))
       case None =>
         val cand = pairsAll.distinct().localCheckpoint(false)
-        (cand, fetchDocsByIds(docs,
+        (cand, shingleArray(fetchDocsByIds(docs,
           cand.select(col("a").as("doc_id")).unionByName(cand.select(col("b").as("doc_id")))
-            .distinct()))
+            .distinct())).localCheckpoint(false))
     }
-    val sh = shingleArray(candDocs).localCheckpoint(false)
     (verifyPairs(cand, sh, "jaccard", shingleJaccardFromArrays, _ >= threshold),
       probe.isDefined)
   }
@@ -366,29 +369,78 @@ object DedupOps {
    * containing a short eval item verbatim scores 1.0 on the ITEM even though
    * the item covers little of the document.
    *
-   * 100 TB design: eval sets are tiny (10²–10⁵ items) → the gram-exploded
-   * benchmark side is BROADCAST; the corpus is scanned once and only MATCHED
-   * (doc, bench, gram) rows — sparse by construction, contamination is the
-   * exception — reach the aggregation shuffle. Nothing corpus-sized is ever
-   * shuffled, and both gram sets are distinct so the join emits unique
-   * triples (count, not countDistinct).
+   * 100 TB design: eval sets are tiny (10²–10⁵ items), so their gram sets
+   * are collected once ([[DriverProbe]], at most [[BenchIndexLimit]] rows)
+   * into a driver-built gram index, shipped with `sparkContext.broadcast`
+   * (no job), and every document is tested map-side by the native
+   * [[graft.functions.BenchCoverage]] kernel: one hash lookup per document
+   * gram, no shuffle, no join. Benchmark rows group on
+   * (bench_id, n_bench); n_shared counts the (doc gram, bench row gram)
+   * matches of a group and frac is [[graft.functions.Contamination.frac]].
+   * Over the probe the same quantities come from a gram join and a groupBy
+   * per (doc_id, bench_id, n_bench) — the distributed branch; both branches
+   * agree for unique doc ids, the corpus contract.
    *
    * @param benchmark (bench_id, text) eval items
    * @return (doc_id, bench_id, n_shared, n_bench, frac) for frac ≥ minFrac
    */
   def contamination(documents: DataFrame, benchmark: DataFrame, n: Int = 3,
-                    minFrac: Double = 0.8): DataFrame = {
-    val docGrams = shingleArray(documents, n)
-      .select(col("doc_id"), explode(col("sh")).as("gram"))
-    val benchGrams = benchmark
+                    minFrac: Double = 0.8): DataFrame =
+    benchCoverage(benchmark, n, minFrac) match {
+      case Some(cover) =>
+        documents.select(col("doc_id"), explode(cover(col("text"))).as("m"))
+          .select(col("doc_id"), col("m.*"))
+      case None => contaminationJoin(documents, benchmark, n, minFrac)
+    }
+
+  /** `documents` minus every document [[contamination]] flags: a map-side
+    * filter through the coverage kernel, or over the probe an anti-join of
+    * the flagged ids. */
+  def decontaminate(documents: DataFrame, benchmark: DataFrame, n: Int = 3,
+                    minFrac: Double = 0.8): DataFrame =
+    benchCoverage(benchmark, n, minFrac) match {
+      case Some(cover) => documents.filter(size(cover(col("text"))) === 0)
+      case None =>
+        dropDocsByIds(documents, contaminationJoin(documents, benchmark, n, minFrac).select("doc_id"))
+    }
+
+  /** Most benchmark rows [[contamination]] indexes on the driver. */
+  val BenchIndexLimit = 100000
+
+  /** (bench_id, sh): each eval item's distinct gram array; n_bench = size(sh). */
+  private def benchShingles(benchmark: DataFrame, n: Int): DataFrame =
+    benchmark
       .select(col("bench_id"), split(normText(col("text")), " ").as("toks"))
       .select(col("bench_id"), shinglesFromTokens(col("toks"), n).as("sh"))
+
+  /** The coverage kernel over a text column, when the benchmark fits the
+    * driver index. */
+  private def benchCoverage(benchmark: DataFrame, n: Int,
+                            minFrac: Double): Option[Column => Column] = {
+    val bench = benchShingles(benchmark, n)
+    val benchType = bench.schema("bench_id").dataType
+    DriverProbe.bounded(bench, BenchIndexLimit).map { rows =>
+      val index = benchmark.sparkSession.sparkContext
+        .broadcast(Contamination.index(rows, benchType))
+      text => Contamination.coverage(
+        shinglesFromTokens(split(normText(text), " "), n), index, benchType, minFrac)
+    }
+  }
+
+  /** The distributed branch of [[contamination]]: distinct gram sets on
+    * both sides, so the join emits unique triples (count, not
+    * countDistinct); only matched triples reach the aggregation shuffle. */
+  private def contaminationJoin(documents: DataFrame, benchmark: DataFrame, n: Int,
+                                minFrac: Double): DataFrame = {
+    val docGrams = shingleArray(documents, n)
+      .select(col("doc_id"), explode(col("sh")).as("gram"))
+    val benchGrams = benchShingles(benchmark, n)
       .select(col("bench_id"), size(col("sh")).cast("long").as("n_bench"),
         explode(col("sh")).as("gram"))
-    docGrams.join(broadcast(benchGrams), "gram")
+    docGrams.join(benchGrams, "gram")
       .groupBy("doc_id", "bench_id", "n_bench")
       .agg(count(lit(1)).as("n_shared"))
-      .withColumn("frac", round(col("n_shared").cast("double") / col("n_bench"), 6))
+      .withColumn("frac", Contamination.coverageFrac(col("n_shared"), col("n_bench")))
       .filter(col("frac") >= minFrac)
       .select("doc_id", "bench_id", "n_shared", "n_bench", "frac")
   }
@@ -437,11 +489,9 @@ object DedupOps {
   /** The one survivor rule: each connected group of verified pairs (a, b)
     * keeps its min id ([[nearDupGroups]]); every other member is dropped
     * from `items`, keyed on `idCol`. Items in no pair pass untouched. */
-  private def survivors(items: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val dropped = nearDupGroups(pairs)
-      .filter(col("doc_id") =!= col("keep_id")).select(col("doc_id").as(idCol))
-    items.join(dropped, Seq(idCol), "left_anti")
-  }
+  private def survivors(items: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dropDocsByIds(items, nearDupGroups(pairs)
+      .filter(col("doc_id") =!= col("keep_id")).select(col("doc_id").as(idCol)), idCol)
 
   // -------------------------------------------------------------------------
   // incremental NEAR-dup dedup (batch vs historical signature store)
@@ -469,13 +519,13 @@ object DedupOps {
       .select(col("doc_id").as("a"), explode(col("ids")).as("b"))
   }
 
-  /** How many candidate ids the driver-side probe of [[fetchDocsByIds]] will
-    * hold before falling back to a semi-join (ids are 8 bytes; the IN list
-    * must also stay small enough to plan). */
+  /** How many ids the driver-side probe of [[fetchDocsByIds]] and
+    * [[dropDocsByIds]] will hold before falling back to a join (ids are 8
+    * bytes; the IN list must also stay small enough to plan). */
   val FetchProbeLimit = 10000
 
   /** Fetch `docs` rows whose doc_id is in `ids` (a near-dup-sized set) —
-    * the one "IN filter, else semi-join" step of every candidate fetch.
+    * the one "IN filter, else join" step of every candidate fetch.
     * [[DriverProbe]]: if the id set fits [[FetchProbeLimit]], push it as an
     * `IN` filter — on a doc_id-BUCKETED corpus table that filter prunes
     * whole bucket files at the scan (point lookups; `SelectedBucketsCount`
@@ -485,9 +535,22 @@ object DedupOps {
     * runs no Spark job, and its exact size statistics let the planner
     * broadcast it on overflow. */
   private[graft] def fetchDocsByIds(docs: DataFrame, ids: DataFrame): DataFrame =
+    byIds(docs, "doc_id", ids, keep = true)
+
+  /** The anti-join twin of [[fetchDocsByIds]]: `docs` rows whose `idCol` is
+    * NOT in `ids` (a decision-sized set), as a `NOT IN` filter or else a
+    * `left_anti` join. Null ids pass either way, as through `left_anti`. */
+  private[graft] def dropDocsByIds(docs: DataFrame, ids: DataFrame,
+                                   idCol: String = "doc_id"): DataFrame =
+    byIds(docs, idCol, ids, keep = false)
+
+  private def byIds(docs: DataFrame, idCol: String, ids: DataFrame, keep: Boolean): DataFrame =
     DriverProbe.bounded(ids, FetchProbeLimit) match {
-      case Some(rows) => docs.filter(col("doc_id").isin(rows.map(_.get(0)): _*))
-      case None       => docs.join(ids, Seq("doc_id"), "left_semi")
+      case Some(rows) =>
+        // a null in the list would make every NOT IN test null
+        val in = col(idCol).isin(rows.map(_.get(0)).filter(_ != null): _*)
+        docs.filter(if (keep) in else !in || col(idCol).isNull)
+      case None => docs.join(ids, Seq(idCol), if (keep) "left_semi" else "left_anti")
     }
 
   /**
@@ -552,8 +615,7 @@ object DedupOps {
         val comp = DriverUnionFind.components(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))(
           (x, y) => math.min(x, y))
         val histKeep = comp.collect { case (d, c) if histIds(d) => c }.toSet
-        val ids = comp.collect { case (d, c) if histKeep(c) || d != c => d }.toSeq.sorted
-        broadcast(ids.toDF("doc_id")) // driver-sized by the probe bound
+        comp.collect { case (d, c) if histKeep(c) || d != c => d }.toSeq.sorted.toDF("doc_id")
       } else {
         val pairs = verified.select("a", "b", "hist").localCheckpoint(false)
         val groups = nearDupGroups(pairs)
@@ -562,14 +624,14 @@ object DedupOps {
             Seq("doc_id"), "left_semi")
           .select("keep_id").distinct()
         // the drop-decision set is PINNED: it is the junction both returned
-        // frames hang off (survivors anti-join; store update via survivors),
+        // frames hang off (survivors' drop step; store update via survivors),
         // and as a lazy plan the components would re-run per consumer action
         groups.join(histComponents, Seq("keep_id"), "left_semi").select("doc_id")
           .unionByName(groups.filter(col("doc_id") =!= col("keep_id")).select("doc_id"))
           .distinct()
           .localCheckpoint(false)
       }
-    val survivors = batch.join(dropped, Seq("doc_id"), "left_anti")
+    val survivors = dropDocsByIds(batch, dropped)
     val updated = store.select("doc_id", "band_idx", "band_hash")
       .unionByName(batchBands.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"))
     (survivors, updated)

@@ -1,22 +1,47 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LocalRelation}
+import org.apache.spark.sql.graftshim.InternalRowShim
 
 /**
- * The bounded driver probe behind every driver cost switch: ONE job collects
- * at most `limit + 1` rows, and the row count decides the branch — so the
- * small case gets its whole input from the same job that chose it, and the
- * large case never holds more than `limit + 1` rows on the driver.
+ * The bounded driver probe behind every driver cost switch: ONE job, over
+ * every partition, in which each partition returns at most `limit + 1` rows,
+ * and the row count decides the branch — so the small case gets its whole
+ * input from the same job that chose it. A frame whose optimized plan is a
+ * local relation (rows the driver already holds) is read without a job.
+ *
+ * Driver memory: the worst case in flight is P × (limit + 1) rows for a
+ * frame of P partitions, not limit + 1. (`limit(n).collect()` has the same
+ * worst case in its last round — Spark's `executeTake` scans 1 partition,
+ * then the rest at once, each returning up to the rows still missing — and
+ * pays one job per round.)
  */
 object DriverProbe {
 
-  /** `Some(rows)` iff `df` has at most `limit` rows. `limit` is clamped to
+  /** Forces every probe to answer `None`, so tests can drive the
+    * distributed branch of each cost switch on fixture-sized input. Not a
+    * user option. */
+  private[graft] val forceDistributed = new scala.util.DynamicVariable(false)
+
+  /** `Some(rows)` iff `df` has at most `limit` rows; the rows equal
+    * `df.collect()`'s, in the same order. `limit` is clamped to
     * [0, Int.MaxValue - 1] so that `limit + 1` fits Spark's Int limit (an
     * unclamped Int.MaxValue would overflow to a negative limit, which Spark
     * rejects at analysis). */
-  def bounded(df: DataFrame, limit: Long): Option[Array[Row]] = {
-    val n = math.max(0L, math.min(limit, Int.MaxValue - 1L)).toInt
-    val rows = df.limit(n + 1).collect()
-    if (rows.length <= n) Some(rows) else None
-  }
+  def bounded(df: DataFrame, limit: Long): Option[Array[Row]] =
+    if (forceDistributed.value) None
+    else {
+      val n = math.max(0L, math.min(limit, Int.MaxValue - 1L)).toInt
+      val rows = df.queryExecution.optimizedPlan match {
+        // a limit over local rows folds into the relation: no job
+        case _: LocalRelation => df.limit(n + 1).collect()
+        // a per-partition limit and one collect (an SQL execution, like any
+        // Dataset action): partition order, so the rows are collect()'s
+        case _ => InternalRowShim.logicalDf(df.sparkSession,
+          LocalLimit(Literal(n + 1), InternalRowShim.logicalPlan(df))).collect()
+      }
+      if (rows.length <= n) Some(rows) else None
+    }
 }

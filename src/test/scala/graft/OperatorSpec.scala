@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 
-class OperatorSpec extends AnyFunSuite {
+class OperatorSpec extends AnyFunSuite with JobCounting {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -231,7 +231,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(updated.count() == 3) // old fp + the two new survivors' fps
   }
 
-  test("hygiene pipeline: each stage drops its planted victim, survivors pass through redacted") {
+  /** The planted-victim hygiene fixture: (documents, benchmark). */
+  private def hygieneFixture(): (DataFrame, DataFrame) = {
     val docsDf = Seq(
       (1L, "en", "unique alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "en", "Unique  alpha beta gamma delta epsilon zeta eta theta"), // exact dup of 1 (case+ws)
@@ -243,12 +244,19 @@ class OperatorSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "text")
     val bench = Seq((100L, "the benchmark question about spark shuffles and joins"))
       .toDF("bench_id", "text")
+    (docsDf, bench)
+  }
+
+  /** The fixture's dials: r = 1 minhash rows (structural recall). */
+  private val hygieneConfig = CorpusHygiene.HygieneConfig(
+    nearDupThreshold = Some(0.7), minhashK = 16, minhashBands = 16,
+    decontaminateMinFrac = Some(0.8), maxDupTokenFrac = 0.5)
+
+  test("hygiene pipeline: each stage drops its planted victim, survivors pass through redacted") {
+    val (docsDf, bench) = hygieneFixture()
     // threshold 0.7: docs 3/4 (J=0.818) merge; docs 1-3/1-4 (J=0.545, the
     // shared 8-token run) stay distinct — verified against the exact pair set
-    val out = CorpusHygiene.clean(docsDf, Some(bench), CorpusHygiene.HygieneConfig(
-      nearDupThreshold = Some(0.7), minhashK = 16, minhashBands = 16, // r=1: structural recall
-      decontaminateMinFrac = Some(0.8),
-      maxDupTokenFrac = 0.5))
+    val out = CorpusHygiene.clean(docsDf, Some(bench), hygieneConfig)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     // 2 exact-dup of 1; 4 near-dup of 3; 5 covers the bench item; 6 loops
     assert(out.keySet == Set(1L, 3L, 7L), out.toString)
@@ -257,18 +265,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan: hygiene runs exact dedup once and never shuffles corpus text") {
-    // the planted-victim fixture of the test above
-    val docsDf = Seq(
-      (1L, "en", "unique alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "en", "Unique  alpha beta gamma delta epsilon zeta eta theta"),
-      (3L, "en", "near alpha beta gamma delta epsilon zeta eta theta iota kappa mu"),
-      (4L, "en", "near alpha beta gamma delta epsilon zeta eta theta iota kappa mu2"),
-      (5L, "en", "the benchmark question about spark shuffles and joins here today"),
-      (6L, "en", "loop loop loop loop loop loop loop loop"),
-      (7L, "en", "email me at a.b@example.com please and thanks for the data"))
-      .toDF("doc_id", "lang", "text")
-    val bench = Seq((100L, "the benchmark question about spark shuffles and joins"))
-      .toDF("bench_id", "text")
+    val (docsDf, bench) = hygieneFixture()
     // plan as on a real corpus, where nothing corpus-sized broadcasts by size
     // estimate (the seven-row fixture fits the default threshold everywhere)
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
@@ -276,9 +273,7 @@ class OperatorSpec extends AnyFunSuite {
     val corpusBytes = docsDf.queryExecution.optimizedPlan.stats.sizeInBytes
     spark.conf.set(thresholdKey, (corpusBytes - 1).toString)
     val out = try {
-      val o = CorpusHygiene.clean(docsDf, Some(bench), CorpusHygiene.HygieneConfig(
-        nearDupThreshold = Some(0.7), minhashK = 16, minhashBands = 16,
-        decontaminateMinFrac = Some(0.8), maxDupTokenFrac = 0.5))
+      val o = CorpusHygiene.clean(docsDf, Some(bench), hygieneConfig)
       assert(o.collect().map(_.getLong(0)).toSet == Set(1L, 3L, 7L))
       o
     } finally threshold.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
@@ -287,7 +282,9 @@ class OperatorSpec extends AnyFunSuite {
     val exchanges = helper.collectWithSubqueries(out.queryExecution.executedPlan) {
       case e: org.apache.spark.sql.execution.exchange.Exchange => e
     }
-    assert(exchanges.nonEmpty, out.queryExecution.executedPlan.treeString)
+    // every stage decision reaches the final plan as driver-held data (IN
+    // filters, the broadcast gram index), so it reads the pin map-side only
+    assert(exchanges.isEmpty, out.queryExecution.executedPlan.treeString)
     val textShuffles = exchanges.filter(_.child.output.exists(_.name == "text"))
     assert(textShuffles.isEmpty,
       s"corpus text crosses an exchange:\n${textShuffles.map(_.treeString.take(1500)).mkString("\n")}")
@@ -299,6 +296,46 @@ class OperatorSpec extends AnyFunSuite {
     })
     assert(fpShuffles.isEmpty,
       s"exact-dedup exchange in the plan:\n${fpShuffles.map(_.treeString.take(1500)).mkString("\n")}")
+  }
+
+  test("cost switches of the clean: driver and distributed branches give the same output") {
+    val (docsDf, bench) = hygieneFixture()
+    def run() = (
+      CorpusHygiene.clean(docsDf, Some(bench), hygieneConfig).collect().toSet,
+      DedupOps.minhashSurvivors(docsDf, 0.7, 16, 16).collect().toSet,
+      DedupOps.contamination(docsDf, bench, n = 3, minFrac = 0.1).collect().toSet)
+    val driver = run()
+    val distributed = DriverProbe.forceDistributed.withValue(true)(run())
+    assert(driver._1.map(_.getLong(0)) == Set(1L, 3L, 7L), driver._1)
+    assert(driver._2.map(_.getLong(0)) == Set(1L, 3L, 5L, 6L, 7L), driver._2)
+    assert(driver._3.map(_.getLong(0)) == Set(5L), driver._3)
+    assert(distributed == driver)
+  }
+
+  test("DriverProbe.bounded: one job over every partition, none over local rows, None over the cap") {
+    val df = spark.range(0, 100, 1, 8).toDF("x")
+    val (fits, fitJobs) = withJobCount(DriverProbe.bounded(df, 100))
+    assert(fitJobs == 1 && fits.map(_.toSeq) == Some(df.collect().toSeq))
+    val (over, overJobs) = withJobCount(DriverProbe.bounded(df, 99))
+    assert(overJobs == 1 && over.isEmpty)
+    val local = (0L until 5L).toDF("x")
+    val (held, heldJobs) = withJobCount(DriverProbe.bounded(local, 5))
+    assert(heldJobs == 0 && held.map(_.toSeq) == Some(local.collect().toSeq))
+    val (heldOver, heldOverJobs) = withJobCount(DriverProbe.bounded(local, 4))
+    assert(heldOverJobs == 0 && heldOver.isEmpty)
+  }
+
+  test("CorpusHygiene.clean + one collect runs 7 Spark jobs on the hygiene fixture") {
+    val (docsDf, bench) = hygieneFixture()
+    // exact-dedup pin 2 (fingerprint shuffle, keep-set broadcast), banding
+    // probe 2 (bucket shuffle, probe), verify 1 (one shingle broadcast for
+    // both sides), component probe 1, the collect 1. The benchmark is a
+    // local relation here, so its gram index costs no job (a cached or
+    // scanned benchmark costs one)
+    val (ids, jobs) = withJobCount(
+      CorpusHygiene.clean(docsDf, Some(bench), hygieneConfig).collect().map(_.getLong(0)).toSet)
+    assert(ids == Set(1L, 3L, 7L))
+    assert(jobs == 7, s"$jobs jobs")
   }
 
   // ---------------- DedupOps ----------------
@@ -479,8 +516,10 @@ class OperatorSpec extends AnyFunSuite {
     }
     val edge = kernelEdgeTexts.zipWithIndex.map { case (t, i) => Row(100000L + i, t) }
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    // the corpus docs' ids are shifted past the others: every doc_id is unique
     rddFrame(generated ++ edge, schema)
-      .unionByName(graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 20))
+      .unionByName(graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 20)
+        .withColumn("doc_id", col("doc_id") + 1000000000L))
   }
 
   /** Raw token arrays the tokenizer never emits: null elements, empty
@@ -1103,6 +1142,79 @@ class OperatorSpec extends AnyFunSuite {
     val loose = DedupOps.contamination(docsDf, bench, n = 3, minFrac = 0.1)
       .collect().map(_.getLong(0)).toSet
     assert(loose == Set(1L, 3L)) // partial leak surfaces, disjoint doc never
+  }
+
+  /** Decontamination as it was a broadcast gram join, verbatim: the
+    * reference the coverage kernel is checked against. */
+  private def contaminationJoinReference(documents: DataFrame, benchmark: DataFrame, n: Int,
+                                         minFrac: Double): DataFrame = {
+    val docGrams = DedupOps.shingleArray(documents, n)
+      .select(col("doc_id"), explode(col("sh")).as("gram"))
+    val benchGrams = benchmark
+      .select(col("bench_id"), split(DedupOps.normText(col("text")), " ").as("toks"))
+      .select(col("bench_id"), DedupOps.shinglesFromTokens(col("toks"), n).as("sh"))
+      .select(col("bench_id"), size(col("sh")).cast("long").as("n_bench"),
+        explode(col("sh")).as("gram"))
+    docGrams.join(broadcast(benchGrams), "gram")
+      .groupBy("doc_id", "bench_id", "n_bench")
+      .agg(count(lit(1)).as("n_shared"))
+      .withColumn("frac", round(col("n_shared").cast("double") / col("n_bench"), 6))
+      .filter(col("frac") >= minFrac)
+      .select("doc_id", "bench_id", "n_shared", "n_bench", "frac")
+  }
+
+  /** Eval items over the kernel texts' vocabulary: a row duplicated under
+    * its bench_id, one bench_id over two texts of equal gram count and one
+    * over two of different counts, texts shorter than n, empty and null
+    * texts, a null bench_id and repeated grams. */
+  private def decontaminationBench(): DataFrame = {
+    val rows = Seq[(java.lang.Long, String)](
+      (1L, "a b ab é x a b"), (1L, "a b ab é x a b"),
+      (2L, "a b ab é x"), (2L, "b ab é x a"),
+      (3L, "x x a"), (3L, "ab ab ab ab b x é"),
+      (4L, "a b"), (5L, "a"), (6L, ""), (7L, null), (null, "x a b ab"),
+      (8L, "\uD83D\uDE00 a \uD83D\uDE00 a \uD83D\uDE00"),
+      (9L, "one two three four five six seven"))
+    rddFrame(rows.map { case (id, t) => Row(id, t) },
+      StructType(Seq(StructField("bench_id", LongType), StructField("text", StringType))))
+  }
+
+  private def decontaminationEquivalence(): Unit = {
+    val docs = kernelTexts()
+    val bench = decontaminationBench()
+    def perConfig(side: (Int, Double) => DataFrame) =
+      (for (n <- Seq(1, 3, 5); f <- Seq(0.0, 0.5, 1.0)) yield
+        side(n, f).withColumn("n", lit(n)).withColumn("min_frac", lit(f)))
+        .reduce(_ unionByName _)
+    val reference = perConfig(contaminationJoinReference(docs, bench, _, _))
+    assertSameRows(perConfig(DedupOps.contamination(docs, bench, _, _)), reference,
+      "contamination kernel")
+    assertSameRows(DriverProbe.forceDistributed.withValue(true)(
+      perConfig(DedupOps.contamination(docs, bench, _, _))), reference, "contamination join")
+    val kept = reference.filter(col("n") === 3 && col("min_frac") === 0.5).select("doc_id")
+    assertSameRows(DedupOps.decontaminate(docs, bench, 3, 0.5),
+      docs.join(kept, Seq("doc_id"), "left_anti"), "decontaminate")
+    // an empty benchmark covers nothing and keeps every document
+    val empty = bench.filter(lit(false))
+    assert(DedupOps.contamination(docs, empty, 3, 0.0).count() == 0)
+    assert(contaminationJoinReference(docs, empty, 3, 0.0).count() == 0)
+    assert(DedupOps.decontaminate(docs, empty, 3, 0.0).count() == docs.count())
+  }
+
+  test("decontamination kernel == the broadcast gram join, generated and interpreted") {
+    decontaminationEquivalence()
+    val plan = DedupOps.contamination(kernelTexts(), decontaminationBench(), 3, 0.5)
+      .queryExecution.executedPlan
+    assert(plan.collectFirst {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+        if w.toString.contains("bench_coverage") => w
+    }.isDefined, plan.treeString)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try decontaminationEquivalence()
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("winnowing relative threshold separates real overlap from boilerplate") {

@@ -8,38 +8,9 @@ import graft.ground.{Grounder, MentionDetector}
 import graft.icelite.Icelite
 import graft.pipeline.KgPipeline
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with JobCounting {
   lazy val spark = SparkTestBase.spark
   lazy val ontPath = MiniOntology.writeTo("target/fixtures")
-
-  /** `body`'s result and the Spark jobs it started on this thread, counted
-    * by a SparkListener. Listener events arrive asynchronously, so a marker
-    * job in its own group, seen after `body`, flushes every earlier event. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"job_count_${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(g) if g == s"$group.marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "withJobCount")
-      val out = body
-      sc.setJobGroup(s"$group.marker", "withJobCount marker")
-      sc.parallelize(Seq(0), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener never saw the marker job")
-      (out, jobs.get())
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
 
   test("fused detectTriples == detect -> topCandidates -> mentionTriples -> canonicalize") {
     import spark.implicits._
