@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -59,25 +59,6 @@ case class BenchCoverage(child: Expression, index: Broadcast[BenchIndex], benchT
   override def prettyName: String = "bench_coverage"
   override protected def withNewChildInternal(newChild: Expression): BenchCoverage =
     copy(child = newChild)
-}
-
-/** `round(n_shared / n_bench, 6)` as [[Contamination.frac]] computes it, for
-  * plans that count n_shared themselves. */
-case class CoverageFrac(left: Expression, right: Expression) extends BinaryExpression
-  with org.apache.spark.sql.graftshim.TypedInputs {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def expectedInputTypes: Seq[DataType] = Seq(LongType, LongType)
-
-  override def nullSafeEval(nShared: Any, nBench: Any): Any =
-    Contamination.frac(nShared.asInstanceOf[Long], nBench.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, b) => s"graft.functions.Contamination.frac($s, $b)")
-
-  override def prettyName: String = "coverage_frac"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CoverageFrac =
-    copy(left = l, right = r)
 }
 
 object Contamination {
@@ -151,7 +132,4 @@ object Contamination {
   def coverage(shingles: Column, index: Broadcast[BenchIndex], benchType: DataType,
                minFrac: Double): Column =
     ColumnShim.column(BenchCoverage(ColumnShim.expr(shingles), index, benchType, minFrac))
-
-  def coverageFrac(nShared: Column, nBench: Column): Column =
-    ColumnShim.column(CoverageFrac(ColumnShim.expr(nShared), ColumnShim.expr(nBench)))
 }

@@ -228,10 +228,10 @@ object DedupOps {
    * behind the mega-bucket guard), so the NON-distinct stream (a pair
    * repeats once per shared band) is [[DriverProbe]]d and deduped on the
    * driver: the ids reach [[fetchDocsByIds]] as a local relation and the
-   * pair list streams into the verify join from the driver. When the
-   * candidate docs fit the fetch's IN filter their shingle arrays are
-   * broadcast, once for both verify-join sides (a reused exchange), and
-   * nothing is pinned; a larger candidate set pins its shingle arrays.
+   * pair list streams into the verify join from the driver. While the
+   * candidate docs' shingle arrays fit the broadcast threshold by their
+   * size estimate they are broadcast, once for both verify-join sides (a
+   * reused exchange), and nothing is pinned; else they are pinned.
    * Over the probe (or with non-long ids, which the driver path would
    * re-type) the distinct pairs are pinned and their ids fetched the same
    * way. Only candidate docs are shingled, once.
@@ -254,8 +254,10 @@ object DedupOps {
         val candIds = pairs.iterator
           .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toArray.distinct.sorted
         val sh = shingleArray(fetchDocsByIds(docs, candIds.toSeq.toDF("doc_id")))
+        val fits = sh.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
         (spark.createDataFrame(java.util.Arrays.asList(pairs: _*), pairsAll.schema),
-          if (candIds.length <= FetchProbeLimit) broadcast(sh) else sh.localCheckpoint(false))
+          if (fits) broadcast(sh) else sh.localCheckpoint(false))
       case None =>
         val cand = pairsAll.distinct().localCheckpoint(false)
         (cand, shingleArray(fetchDocsByIds(docs,
@@ -378,9 +380,13 @@ object DedupOps {
    * (bench_id, n_bench); n_shared counts the (doc gram, bench row gram)
    * matches of a group and frac is [[graft.functions.Contamination.frac]].
    * Over the probe the same quantities come from a gram join and a groupBy
-   * per (doc_id, bench_id, n_bench) — the distributed branch; both branches
-   * agree for unique doc ids, the corpus contract.
+   * per (doc_id, bench_id, n_bench) — the distributed branch.
    *
+   * Precondition: `documents`' doc_ids are unique and non-null. The kernel
+   * scores each row on its own, the join each doc_id's rows together, so
+   * the branches agree only on such ids.
+   *
+   * @param documents (doc_id, text), doc_ids unique and non-null
    * @param benchmark (bench_id, text) eval items
    * @return (doc_id, bench_id, n_shared, n_bench, frac) for frac ≥ minFrac
    */
@@ -395,11 +401,13 @@ object DedupOps {
 
   /** `documents` minus every document [[contamination]] flags: a map-side
     * filter through the coverage kernel, or over the probe an anti-join of
-    * the flagged ids. */
+    * the flagged ids. Same precondition as [[contamination]]; a null doc_id
+    * passes either way, as through `left_anti`. */
   def decontaminate(documents: DataFrame, benchmark: DataFrame, n: Int = 3,
                     minFrac: Double = 0.8): DataFrame =
     benchCoverage(benchmark, n, minFrac) match {
-      case Some(cover) => documents.filter(size(cover(col("text"))) === 0)
+      case Some(cover) =>
+        documents.filter(size(cover(col("text"))) === 0 || col("doc_id").isNull)
       case None =>
         dropDocsByIds(documents, contaminationJoin(documents, benchmark, n, minFrac).select("doc_id"))
     }
@@ -429,7 +437,8 @@ object DedupOps {
 
   /** The distributed branch of [[contamination]]: distinct gram sets on
     * both sides, so the join emits unique triples (count, not
-    * countDistinct); only matched triples reach the aggregation shuffle. */
+    * countDistinct). The benchmark side is broadcast, so the corpus side
+    * never shuffles and only matched triples reach the aggregation shuffle. */
   private def contaminationJoin(documents: DataFrame, benchmark: DataFrame, n: Int,
                                 minFrac: Double): DataFrame = {
     val docGrams = shingleArray(documents, n)
@@ -437,10 +446,10 @@ object DedupOps {
     val benchGrams = benchShingles(benchmark, n)
       .select(col("bench_id"), size(col("sh")).cast("long").as("n_bench"),
         explode(col("sh")).as("gram"))
-    docGrams.join(benchGrams, "gram")
+    docGrams.join(broadcast(benchGrams), "gram")
       .groupBy("doc_id", "bench_id", "n_bench")
       .agg(count(lit(1)).as("n_shared"))
-      .withColumn("frac", Contamination.coverageFrac(col("n_shared"), col("n_bench")))
+      .withColumn("frac", round(col("n_shared").cast("double") / col("n_bench"), 6))
       .filter(col("frac") >= minFrac)
       .select("doc_id", "bench_id", "n_shared", "n_bench", "frac")
   }

@@ -12,11 +12,10 @@ import org.apache.spark.sql.graftshim.InternalRowShim
  * input from the same job that chose it. A frame whose optimized plan is a
  * local relation (rows the driver already holds) is read without a job.
  *
- * Driver memory: the worst case in flight is P × (limit + 1) rows for a
- * frame of P partitions, not limit + 1. (`limit(n).collect()` has the same
- * worst case in its last round — Spark's `executeTake` scans 1 partition,
- * then the rest at once, each returning up to the rows still missing — and
- * pays one job per round.)
+ * Driver memory: the driver keeps at most `limit` rows plus the task result
+ * in hand. Once the running count passes `limit` it drops what it holds and
+ * cancels the job, so an over-cap frame costs the tasks that finish before
+ * the cancel lands (about one wave), not a scan of every partition.
  */
 object DriverProbe {
 
@@ -34,14 +33,12 @@ object DriverProbe {
     if (forceDistributed.value) None
     else {
       val n = math.max(0L, math.min(limit, Int.MaxValue - 1L)).toInt
-      val rows = df.queryExecution.optimizedPlan match {
+      df.queryExecution.optimizedPlan match {
         // a limit over local rows folds into the relation: no job
-        case _: LocalRelation => df.limit(n + 1).collect()
-        // a per-partition limit and one collect (an SQL execution, like any
-        // Dataset action): partition order, so the rows are collect()'s
-        case _ => InternalRowShim.logicalDf(df.sparkSession,
-          LocalLimit(Literal(n + 1), InternalRowShim.logicalPlan(df))).collect()
+        case _: LocalRelation => Some(df.limit(n + 1).collect()).filter(_.length <= n)
+        // a per-partition limit lets each task stop at n + 1 rows
+        case _ => InternalRowShim.collectAtMost(InternalRowShim.logicalDf(df.sparkSession,
+          LocalLimit(Literal(n + 1), InternalRowShim.logicalPlan(df))), n)
       }
-      if (rows.length <= n) Some(rows) else None
     }
 }

@@ -325,6 +325,19 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     assert(heldOverJobs == 0 && heldOver.isEmpty)
   }
 
+  test("DriverProbe.bounded over the cap on many partitions: cancels its job, keeps no rows") {
+    // 64 partitions of 50 rows, all but the first slow: the first result
+    // alone passes the cap of 10, so the probe cancels while the rest run
+    val df = spark.range(0, 64 * 50, 1, 64).as[Long].mapPartitions { it =>
+      if (org.apache.spark.TaskContext.getPartitionId() > 0) Thread.sleep(300)
+      it
+    }.toDF("x")
+    val (over, jobs, succeeded) = withJobStats(DriverProbe.bounded(df, 10))
+    assert(over.isEmpty && jobs == 1)
+    // a scan of every partition would return 64 results of 11 rows each
+    assert(succeeded <= 8, s"$succeeded of 64 tasks returned rows to the driver")
+  }
+
   test("CorpusHygiene.clean + one collect runs 7 Spark jobs on the hygiene fixture") {
     val (docsDf, bench) = hygieneFixture()
     // exact-dedup pin 2 (fingerprint shuffle, keep-set broadcast), banding
@@ -516,10 +529,8 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     }
     val edge = kernelEdgeTexts.zipWithIndex.map { case (t, i) => Row(100000L + i, t) }
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
-    // the corpus docs' ids are shifted past the others: every doc_id is unique
     rddFrame(generated ++ edge, schema)
-      .unionByName(graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 20)
-        .withColumn("doc_id", col("doc_id") + 1000000000L))
+      .unionByName(graft.tools.SketchDialsProbe.syntheticDocs(spark, 60, 20))
   }
 
   /** Raw token arrays the tokenizer never emits: null elements, empty
@@ -1180,7 +1191,9 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
   }
 
   private def decontaminationEquivalence(): Unit = {
-    val docs = kernelTexts()
+    // contamination's precondition: unique doc_ids (the fixture's synthetic
+    // docs reuse the generated ids), so the comparison re-keys every row
+    val docs = kernelTexts().withColumn("doc_id", monotonically_increasing_id())
     val bench = decontaminationBench()
     def perConfig(side: (Int, Double) => DataFrame) =
       (for (n <- Seq(1, 3, 5); f <- Seq(0.0, 0.5, 1.0)) yield
@@ -1199,6 +1212,29 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     assert(DedupOps.contamination(docs, empty, 3, 0.0).count() == 0)
     assert(contaminationJoinReference(docs, empty, 3, 0.0).count() == 0)
     assert(DedupOps.decontaminate(docs, empty, 3, 0.0).count() == docs.count())
+    decontaminationOffContract()
+  }
+
+  /** Ids outside the precondition: a doc_id on a covered and a clean row,
+    * and a covered row with a null doc_id. The kernel scores each row, so
+    * only the covered row of the pair drops; the join scores the doc_id, so
+    * both drop. A null doc_id passes either way, as through `left_anti`. */
+  private def decontaminationOffContract(): Unit = {
+    val item = "the benchmark question about spark shuffles and joins"
+    val bench = Seq((100L, item)).toDF("bench_id", "text")
+    val docs = rddFrame(Seq(Row(1L, s"$item here"), Row(1L, "an unrelated clean document"),
+      Row(null, item)),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    def kept() = DedupOps.decontaminate(docs, bench, 3, 0.8).collect()
+      .map(r => (Option(r.get(0)), r.getString(1))).toSet
+    assert(kept() == Set((Some(1L), "an unrelated clean document"), (None, item)))
+    assert(DriverProbe.forceDistributed.withValue(true)(kept()) == Set((None, item)))
+    val flagged = Seq((null, 100L, 6L, 6L, 1.0), (1L, 100L, 6L, 6L, 1.0))
+    for (force <- Seq(false, true))
+      assert(DriverProbe.forceDistributed.withValue(force)(
+        DedupOps.contamination(docs, bench, 3, 0.8).collect()
+          .map(r => (r.get(0), r.get(1), r.get(2), r.get(3), r.get(4))).toSet) == flagged.toSet,
+        s"forced=$force")
   }
 
   test("decontamination kernel == the broadcast gram join, generated and interpreted") {
