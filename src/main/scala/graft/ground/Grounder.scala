@@ -1,6 +1,6 @@
 package graft.ground
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
@@ -126,10 +126,16 @@ final class Grounder private (
     }.toArray
   }
 
-  /** Concept CURIEs pre-encoded as UTF8String — built once per executor after
-    * broadcast deserialization (transient), shared by all tasks read-only. */
-  @transient lazy val conceptUtf8: Array[org.apache.spark.unsafe.types.UTF8String] =
-    conceptCuries.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+  /** Concept CURIEs' UTF-8 packed end to end in one array, and where each
+    * starts (concept c is `[starts(c), starts(c + 1))`). A mention triple
+    * copies its obj from here: a UTF8String per concept would cost two
+    * dependent loads into scattered objects per triple. Built once per
+    * executor after broadcast deserialization (transient), shared by all
+    * tasks read-only. */
+  @transient lazy val conceptBytes: (Array[Byte], Array[Int]) = {
+    val utf8 = conceptCuries.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (utf8.flatten, utf8.scanLeft(0)(_ + _.length))
+  }
 
   /** Driver-side single-string grounding (reference: grounder.ground("apoptosis")). */
   def ground(text: String): Seq[Mention] =
@@ -289,20 +295,20 @@ object MentionDetector {
     }
   }
 
-  def slim(transcripts: org.apache.spark.sql.DataFrame): Dataset[SlimTurn] = {
-    val spark = transcripts.sparkSession
-    import spark.implicits._
-    transcripts.select(col("conv_id"), col("turn_idx"), col("text")).as[SlimTurn]
-  }
+  /** Derived once: `spark.implicits` would derive it by reflection per call. */
+  private lazy val slimEncoder: Encoder[SlimTurn] = Encoders.product[SlimTurn]
+
+  def slim(transcripts: org.apache.spark.sql.DataFrame): Dataset[SlimTurn] =
+    transcripts.select(col("conv_id"), col("turn_idx"), col("text")).as(slimEncoder)
 
   /**
    * THE scale path, and the only production detection path: detection →
    * span top-1 → per-turn concept dedup, fused into one map-side pass
-   * emitting final triples, as a first-class Catalyst operator
-   * ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel sits
-   * inside the single query plan, the corpus exchange below it stays visible
-   * to the optimizer, and subj/pred render in whole-stage codegen above it.
-   * The kernel is also the only place that counts turns and mentions.
+   * emitting finished (subj, pred, obj) triples, as a first-class Catalyst
+   * operator ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel
+   * sits inside the single query plan, the corpus exchange below it stays
+   * visible to the optimizer, and the exec renders the triples itself. The
+   * kernel is also the only place that counts turns and mentions.
    *
    * Zero-shuffle dedup argument: triple subj embeds (conv_id, turn_idx), so
    * duplicates of a (turn, concept) pair can only originate from the same
@@ -313,16 +319,19 @@ object MentionDetector {
    * conversation-preserving repartition).
    */
   def detectTriples(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
-                    metrics: Option[graft.pipeline.RunMetrics] = None): org.apache.spark.sql.DataFrame = {
+                    metrics: Option[graft.pipeline.RunMetrics] = None): org.apache.spark.sql.DataFrame =
+    detectTriplesIn(turns.toDF(), grounder, metrics)
+
+  /** [[detectTriples]] over the (conv_id, turn_idx, text) columns of any
+    * frame: plans the kernel with no typed round trip. */
+  def detectTriplesIn(turns: DataFrame, grounder: Broadcast[Grounder],
+                      metrics: Option[graft.pipeline.RunMetrics] = None): DataFrame = {
     val spark = turns.sparkSession
     import org.apache.spark.sql.graftshim.InternalRowShim
     graft.plans.DetectTriples.ensureRegistered(spark)
-    val node = graft.plans.DetectTriplesNode(
-      InternalRowShim.logicalPlan(turns.toDF()), grounder, metrics)
-    InternalRowShim.logicalDf(spark, node).select(
-      concat(lit("turn:"), col("conv_id"), lit("/"), col("turn_idx")).as("subj"),
-      lit(Vocab.Mentions).as("pred"),
-      col("obj"))
+    val node = graft.plans.DetectTriplesNode(InternalRowShim.logicalPlan(
+      turns.select(col("conv_id"), col("turn_idx"), col("text"))), grounder, metrics)
+    InternalRowShim.logicalDf(spark, node)
   }
 
   /**

@@ -212,7 +212,7 @@ object KgPipeline {
     // born canonical. Column pruning pushes the slim projection below the
     // repartition, so only (conv_id, turn_idx, text) ever shuffles.
     def mentionTriples(metrics: Option[RunMetrics]): DataFrame =
-      MentionDetector.detectTriples(MentionDetector.slim(turns), ctx.grounder, metrics)
+      MentionDetector.detectTriplesIn(turns, ctx.grounder, metrics)
 
     val nodeTable = ctx.nodes.select(
       col("prefix"), col("id"), col("curie"), col("label"), col("deprecated"))

@@ -1,15 +1,21 @@
 package graft.plans
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ground.Grounder
+import graft.model.Vocab
 import graft.pipeline.RunMetrics
 
 /**
@@ -21,10 +27,13 @@ import graft.pipeline.RunMetrics
  * slim projection under the shuffle exactly as with a built-in operator).
  *
  * Child contract: output columns (conv_id: string, turn_idx: int, text:
- * string) — resolved by name at execution, so projections may reorder.
- * Output: (conv_id, turn_idx, obj) with obj = canonical concept CURIE,
+ * string) — checked, names and types, when the node is built, and resolved
+ * by name at execution, so projections may reorder.
+ * Output: the finished mention triples (subj, pred, obj) =
+ * ("turn:<conv_id>/<turn_idx>", [[Vocab.Mentions]], canonical concept CURIE),
  * deduplicated per turn (the zero-shuffle dedup argument — duplicates of a
  * (turn, concept) pair can only originate from the turn's single partition).
+ * A turn with a null conv_id or turn_idx has no turn URI and emits nothing.
  */
 case class DetectTriplesNode(
     child: LogicalPlan,
@@ -48,11 +57,11 @@ case class DetectTriplesNode(
 
 object DetectTriplesNode {
   def apply(child: LogicalPlan, grounder: Broadcast[Grounder],
-            metrics: Option[RunMetrics]): DetectTriplesNode =
-    DetectTriplesNode(child, grounder, metrics, Seq(
-      AttributeReference("conv_id", StringType, nullable = false)(),
-      AttributeReference("turn_idx", IntegerType, nullable = false)(),
-      AttributeReference("obj", StringType, nullable = false)()))
+            metrics: Option[RunMetrics]): DetectTriplesNode = {
+    DetectTriples.childOrdinals(child.output)
+    DetectTriplesNode(child, grounder, metrics,
+      Seq("subj", "pred", "obj").map(AttributeReference(_, StringType, nullable = false)()))
+  }
 }
 
 case class DetectTriplesExec(
@@ -64,46 +73,11 @@ case class DetectTriplesExec(
   override def producedAttributes: AttributeSet = AttributeSet(output)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val convOrd = child.output.indexWhere(_.name == "conv_id")
-    val turnOrd = child.output.indexWhere(_.name == "turn_idx")
-    val textOrd = child.output.indexWhere(_.name == "text")
-    require(convOrd >= 0 && turnOrd >= 0 && textOrd >= 0,
-      s"DetectTriples child must provide (conv_id, turn_idx, text); got ${child.output.map(_.name)}")
+    val Array(convOrd, turnOrd, textOrd) = DetectTriples.childOrdinals(child.output)
     val g = grounder
     val m = runMetrics
-    child.execute().mapPartitions { it =>
-      // Per-task kernel state: fused normalize+scan over Tungsten UTF8String
-      // bytes (AhoCorasick.Scanner), span top-1 precomputed per pattern id,
-      // per-turn concept dedup via flag array — zero per-turn allocation.
-      // Emitted rows reference executor-shared concept UTF8Strings; conv_id
-      // is copied once per EMITTING turn (the input row buffer is reused).
-      val grounder = g.value
-      val scanner = grounder.automaton.newScanner()
-      val concepts = grounder.conceptUtf8
-      val collector = new Grounder.ConceptCollector(grounder)
-      it.flatMap { row =>
-        collector.reset()
-        val text = if (row.isNullAt(textOrd)) null else row.getUTF8String(textOrd)
-        if (text != null && text.numBytes > 0) scanner.scan(text, collector)
-        m.foreach { mm =>
-          mm.turnsProcessed.add(1)
-          if (collector.n == 0) mm.emptyTurns.add(1) else mm.mentionsEmitted.add(collector.n)
-        }
-        if (collector.n == 0) Iterator.empty
-        else {
-          val convId = row.getUTF8String(convOrd).copy()
-          val turnIdx = row.getInt(turnOrd)
-          val arr = new Array[InternalRow](collector.n)
-          var i = 0
-          while (i < arr.length) {
-            arr(i) = new GenericInternalRow(
-              Array[Any](convId, turnIdx, concepts(collector.hits(i))))
-            i += 1
-          }
-          arr.iterator
-        }
-      }
-    }
+    child.execute().mapPartitions(turns =>
+      new DetectTriples.TripleRows(turns, convOrd, turnOrd, textOrd, g.value, m))
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): DetectTriplesExec =
@@ -127,5 +101,89 @@ object DetectTriples {
     val cur = cs.experimental.extraStrategies
     if (!cur.contains(DetectTriplesStrategy))
       cs.experimental.extraStrategies = cur :+ DetectTriplesStrategy
+  }
+
+  private val TurnPrefix = "turn:".getBytes(StandardCharsets.UTF_8)
+  private val Pred = UTF8String.fromString(Vocab.Mentions)
+  private val ChildContract = Seq("conv_id" -> StringType, "turn_idx" -> IntegerType, "text" -> StringType)
+
+  /** Ordinals of conv_id, turn_idx and text in a child's output. Fails unless
+    * they are there, typed (string, int, string), as the `SlimTurn` encoder
+    * required: a wider turn_idx would render a wrong turn URI. */
+  def childOrdinals(child: Seq[Attribute]): Array[Int] = ChildContract.map { case (name, dt) =>
+    val i = child.indexWhere(_.name == name)
+    require(i >= 0 && child(i).dataType == dt,
+      "DetectTriples child must provide (conv_id: string, turn_idx: int, text: string); got " +
+        child.map(a => s"${a.name}: ${a.dataType.simpleString}").mkString("(", ", ", ")"))
+    i
+  }.toArray
+
+  /**
+   * The kernel over one partition's turns: per turn, the fused
+   * normalize+scan (AhoCorasick.Scanner) feeds a [[Grounder.ConceptCollector]]
+   * (span top-1 precomputed per pattern id, per-turn concept dedup by flag
+   * array), and each collected concept leaves as a finished (subj, pred, obj)
+   * UnsafeRow. subj is rendered once per turn that has a match, into a reused
+   * buffer; obj is copied from [[Grounder.conceptBytes]]. The one output row
+   * is reused across `next()`, as Spark's own projections reuse theirs: an
+   * operator that keeps a row copies it.
+   */
+  final class TripleRows(turns: Iterator[InternalRow], convOrd: Int, turnOrd: Int, textOrd: Int,
+                         grounder: Grounder, metrics: Option[RunMetrics]) extends Iterator[InternalRow] {
+    private val scanner = grounder.automaton.newScanner()
+    private val collector = new Grounder.ConceptCollector(grounder)
+    private val (objBytes, objStarts) = grounder.conceptBytes
+    private val turnsProcessed = metrics.map(_.turnsProcessed).orNull
+    private val emptyTurns = metrics.map(_.emptyTurns).orNull
+    private val mentionsEmitted = metrics.map(_.mentionsEmitted).orNull
+    private val writer = new UnsafeRowWriter(3)
+    private var subj = new Array[Byte](64)
+    private var subjLen = 0
+    private var k = 0 // next collected concept of the current turn
+
+    override def hasNext: Boolean = {
+      while (k >= collector.n && turns.hasNext) detect(turns.next())
+      k < collector.n
+    }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("no more mention triples")
+      val c = collector.hits(k)
+      k += 1
+      writer.reset()
+      writer.zeroOutNullBytes()
+      writer.write(0, subj, 0, subjLen)
+      writer.write(1, Pred)
+      writer.write(2, objBytes, objStarts(c), objStarts(c + 1) - objStarts(c))
+      writer.getRow
+    }
+
+    private def detect(turn: InternalRow): Unit = {
+      collector.reset()
+      k = 0
+      // a turn without a conv_id or turn_idx has no URI: no triples, no scan
+      if (!turn.isNullAt(convOrd) && !turn.isNullAt(turnOrd) && !turn.isNullAt(textOrd)) {
+        val text = turn.getUTF8String(textOrd)
+        if (text.numBytes > 0) scanner.scan(text, collector)
+      }
+      if (turnsProcessed != null) {
+        turnsProcessed.add(1)
+        if (collector.n == 0) emptyTurns.add(1) else mentionsEmitted.add(collector.n)
+      }
+      if (collector.n > 0) renderSubj(turn.getUTF8String(convOrd), turn.getInt(turnOrd))
+    }
+
+    /** subj = "turn:<conv_id>/<turn_idx>", the int written as Spark casts it to string. */
+    private def renderSubj(convId: UTF8String, turnIdx: Int): Unit = {
+      val idx = Integer.toString(turnIdx)
+      val slash = TurnPrefix.length + convId.numBytes
+      subjLen = slash + 1 + idx.length
+      if (subj.length < subjLen) subj = new Array[Byte](2 * subjLen)
+      System.arraycopy(TurnPrefix, 0, subj, 0, TurnPrefix.length)
+      convId.writeToMemory(subj, Platform.BYTE_ARRAY_OFFSET + TurnPrefix.length)
+      subj(slash) = '/'.toByte
+      var i = 0
+      while (i < idx.length) { subj(slash + 1 + i) = idx.charAt(i).toByte; i += 1 }
+    }
   }
 }

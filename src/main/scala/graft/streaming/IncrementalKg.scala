@@ -49,8 +49,7 @@ object IncrementalKg {
         // same fused scan as the batch pipeline — per-turn dedup is exact
         // within a batch; across batches a turn never reappears (snapshot
         // deltas are append-only by conversation turn)
-        writeBatch(MentionDetector.detectTriples(
-          MentionDetector.slim(batch), ctx.grounder), outDir, batchId)
+        writeBatch(MentionDetector.detectTriplesIn(batch, ctx.grounder), outDir, batchId)
       }
       .start()
     q.awaitTermination()

@@ -1957,4 +1957,44 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     val manyIds = spark.range(0, DedupOps.FetchProbeLimit + 100L).select(col("id").as("doc_id"))
     assert(DedupOps.fetchDocsByIds(history, manyIds).count() == 400L)
   }}
+
+  // ---------------- mention-triple rendering ----------------
+
+  test("DetectTriplesExec's rendered triples == the concat projection, through an exchange and icelite") {
+    SparkTestBase.withTempDir("graft_render") { root =>
+      import graft.ground.MentionDetector
+      import graft.model.Vocab
+      val ctx = graft.pipeline.KgPipeline.prepare(spark,
+        graft.fixtures.MiniOntology.writeTo("target/fixtures"))
+      // conv_ids with non-ASCII letters, a '/', the empty string; turn_idx
+      // 0, -1 and Int.MaxValue; each text matches several concepts
+      val convs = Seq("c1", "Größe-ß", "中文会话", "a/b", "", "conv/7/x")
+      val idxs = Seq(0, -1, Int.MaxValue, 42)
+      val turns = (for (c <- convs; t <- idxs) yield (c, t,
+        s"the big quality of $c is a slow and huge trait, turn $t")).toDF("conv_id", "turn_idx", "text")
+      val slim = MentionDetector.slim(turns)
+      // the reference: the string-path detection, and the projection the
+      // detection pass rendered its subj with before the exec rendered it
+      val reference = MentionDetector.detectTopSlim(slim, ctx.grounder).toDF().select(
+        concat(lit("turn:"), col("conv_id"), lit("/"), col("turn_idx")).as("subj"),
+        lit(Vocab.Mentions).as("pred"),
+        concat(col("prefix"), lit(":"), col("id")).as("obj")).distinct()
+      def sameAsReference(df: DataFrame): Unit = {
+        assert(df.columns.toSeq == Seq("subj", "pred", "obj"))
+        assert(df.exceptAll(reference).isEmpty, df.exceptAll(reference).collect().mkString("\n"))
+        assert(reference.exceptAll(df).isEmpty, reference.exceptAll(df).collect().mkString("\n"))
+      }
+      val fused = MentionDetector.detectTriples(slim, ctx.grounder)
+      assert(reference.count() >= convs.size * idxs.size * 3)
+      sameAsReference(fused)
+      assert(fused.count() == reference.count()) // already distinct per turn
+      // an exchange above the exec (UnsafeRow serialization), and a write
+      // and read-back of its rows
+      sameAsReference(MentionDetector.detectTriplesSharded(slim, Seq(ctx.grounder)))
+      sameAsReference(new graft.icelite.Icelite(root).materialize(spark, "mentions", "t")(fused))
+      // a spot check, independent of any projection
+      assert(fused.filter(col("subj") === s"turn:Größe-ß/${Int.MaxValue}").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSet.contains((Vocab.Mentions, "PATO:0000118")))
+    }
+  }
 }

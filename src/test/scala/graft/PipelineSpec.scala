@@ -34,6 +34,41 @@ class PipelineSpec extends AnyFunSuite with JobCounting {
     assert(fused.nonEmpty)
   }
 
+  test("a turn with a null conv_id or turn_idx emits no triples; the pass goes on") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+      StructField("text", StringType)))
+    val turns = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(null, 1, "a big quality"),   // used to fail the pass (NullPointerException)
+      Row("c1", null, "a big quality"), // used to emit turn 0's URI, turn:c1/0
+      Row("c1", 2, "a big quality")), 1), schema)
+    val ctx = KgPipeline.prepare(spark, ontPath)
+    val m = new graft.pipeline.RunMetrics(spark)
+    val mentions = MentionDetector.detectTriplesIn(turns, ctx.grounder, Some(m))
+      .collect().map(r => (r.getString(0), r.getString(2))).toSet
+    assert(mentions == Set(("turn:c1/2", "PATO:0000118"), ("turn:c1/2", "PATO:0000001")), mentions)
+    assert((m.turnsProcessed.value, m.emptyTurns.value, m.mentionsEmitted.value) == ((3L, 2L, 2L)))
+    val pass = KgPipeline.runPrepared(spark, turns, ctx, inputConvPartitioned = true).triples
+      .filter(col("pred") === graft.model.Vocab.Mentions)
+      .collect().map(r => (r.getString(0), r.getString(2))).toSet
+    assert(pass == mentions)
+  }
+
+  test("the detection pass rejects a turn_idx, conv_id or text of the wrong type") {
+    val turns = Transcripts.synthetic(spark, 5)
+    val ctx = KgPipeline.prepare(spark, ontPath)
+    for ((name, to) <- Seq("turn_idx" -> "bigint", "turn_idx" -> "string", "conv_id" -> "int",
+                           "text" -> "binary")) {
+      val mistyped = turns.withColumn(name, col(name).cast(to))
+      val e = intercept[IllegalArgumentException](
+        MentionDetector.detectTriplesIn(mistyped, ctx.grounder))
+      assert(e.getMessage.contains(s"$name: $to"), e.getMessage)
+      intercept[IllegalArgumentException](
+        KgPipeline.runPrepared(spark, mistyped, ctx, inputConvPartitioned = true).triples.count())
+    }
+  }
+
   test("sharded detection over the ontology lexicon == single-automaton detection") {
     val tr = Transcripts.synthetic(spark, 60)
     val ctx = KgPipeline.prepare(spark, ontPath)

@@ -198,6 +198,28 @@ object GraftProperties extends Properties("graft") {
         (alphabet > 64) :| s"alphabet $alphabet" && matchesEqualBruteForce(lexicon, text)
     }
 
+  // the scan checks a state's outputs only before a non-word unit or at the
+  // end of the text: patterns that END in a non-word unit, before every kind
+  // of follower, pin that rule against the brute force
+  private val nonWordEnders = Seq("c++", "vit. c.", "c+", "c", "vit", "+")
+  private val followers = Seq("x", "7", "é", ".", "+", " ", " \t-", "_-\u3000", "\uD83D\uDE00", "")
+
+  property("scan == brute force for patterns ending in a non-word unit, every follower") =
+    Prop.all((for {
+      p <- Seq("c++", "vit. c.")
+      lead <- Seq("", "a ", "x", "(", "\uD83D\uDE00")
+      follow <- followers
+      upper <- Seq(false, true)
+    } yield {
+      val text = lead + (if (upper) p.toUpperCase(java.util.Locale.ROOT) else p) + follow
+      matchesEqualBruteForce(nonWordEnders, text) :| s"text '$text'"
+    }): _*)
+
+  property("scan == brute force for non-word-ending patterns planted among any units") =
+    forAll(plantedTextGen(nonWordEnders, narrowUnits ++ followers.filter(_.nonEmpty))) { text =>
+      matchesEqualBruteForce(nonWordEnders, text)
+    }
+
   property("Scanner reuse across calls leaves no state behind") = {
     val ac = AhoCorasick.build(Seq("ab", "b c"))
     val scanner = ac.newScanner()
