@@ -290,33 +290,88 @@ object AhoCorasick {
     sb.toString
   }
 
+  /**
+   * The trie under construction, in primitive arrays: node v ≥ 1 hangs off
+   * `parent(v)` by the edge labelled `label(v)` (each node but the root is
+   * made by exactly one edge), and an open-addressing table keyed by
+   * (node, char) finds a node's child — no per-node map, no boxed keys.
+   */
+  private final class TrieBuilder {
+    var size = 1                       // nodes, the root included
+    var parent = new Array[Int](64)
+    var label = new Array[Char](64)
+    private var keys = new Array[Long](128) // ((node << 16) | char) + 1; 0 = empty slot
+    private var vals = new Array[Int](128)
+
+    @inline private def slot(key: Long, mask: Int): Int =
+      ((key * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+
+    /** The child of `u` by `c`, or -1. */
+    def child(u: Int, c: Char): Int = {
+      val key = ((u.toLong << 16) | c) + 1
+      val mask = keys.length - 1
+      var i = slot(key, mask)
+      while (keys(i) != 0L) {
+        if (keys(i) == key) return vals(i)
+        i = (i + 1) & mask
+      }
+      -1
+    }
+
+    /** A new child of `u` by `c` (which `u` must not have yet). */
+    def addChild(u: Int, c: Char): Int = {
+      val v = size
+      if (v == parent.length) {
+        parent = java.util.Arrays.copyOf(parent, 2 * v)
+        label = java.util.Arrays.copyOf(label, 2 * v)
+      }
+      parent(v) = u; label(v) = c
+      size += 1
+      if (2 * size > keys.length) { // load ≤ 1/2: rebuild twice as large
+        keys = new Array[Long](2 * keys.length)
+        vals = new Array[Int](keys.length)
+        var w = 1
+        while (w < v) { put(parent(w), label(w), w); w += 1 }
+      }
+      put(u, c, v)
+      v
+    }
+
+    private def put(u: Int, c: Char, v: Int): Unit = {
+      val key = ((u.toLong << 16) | c) + 1
+      val mask = keys.length - 1
+      var i = slot(key, mask)
+      while (keys(i) != 0L) i = (i + 1) & mask
+      keys(i) = key; vals(i) = v
+    }
+  }
+
   def build(rawPatterns: Seq[String]): AhoCorasick = {
     val patterns = rawPatterns.toArray
-    val gotoMaps = mutable.ArrayBuffer[java.util.HashMap[Character, Integer]](new java.util.HashMap)
-    val outSets = mutable.ArrayBuffer[mutable.ArrayBuffer[Int]](new mutable.ArrayBuffer)
+    val trie = new TrieBuilder
 
     // trie insert, counting the edges each character labels
     val edgeCounts = new Array[Int](Char.MaxValue + 1)
+    val endNode = new Array[Int](patterns.length)
     var pid = 0
     while (pid < patterns.length) {
       val p = patterns(pid)
       var node = 0
       var i = 0
       while (i < p.length) {
-        val c = Character.valueOf(p.charAt(i))
-        val nxt: Integer = gotoMaps(node).get(c)
-        if (nxt == null) {
-          edgeCounts(c.charValue()) += 1
-          gotoMaps += new java.util.HashMap
-          outSets += new mutable.ArrayBuffer
-          gotoMaps(node).put(c, Integer.valueOf(gotoMaps.length - 1))
-          node = gotoMaps.length - 1
-        } else node = nxt.intValue()
+        val c = p.charAt(i)
+        val nxt = trie.child(node, c)
+        if (nxt < 0) {
+          edgeCounts(c) += 1
+          node = trie.addChild(node, c)
+        } else node = nxt
         i += 1
       }
-      if (p.nonEmpty) outSets(node) += pid
+      endNode(pid) = node
       pid += 1
     }
+    val n = trie.size
+    val (parent, label) = (trie.parent, trie.label)
 
     // character classes: the 63 characters labelling the most edges get a
     // bit each (ties by char, so the layout is deterministic), every other
@@ -328,16 +383,41 @@ object AhoCorasick {
     val charClass = Array.fill[Byte](if (byFreq.isEmpty) 0 else byFreq.max + 1)(-1)
     byFreq.iterator.zipWithIndex.foreach { case (c, rank) => charClass(c) = math.min(rank, RareClass).toByte }
 
-    // one BFS numbers the nodes, resolves failure links, merges outputs and
+    // each node's children (kidStart(u) until kidStart(u + 1) in `kidsOf`)
+    // and its own patterns (ownStart(u) until ownStart(u + 1) in `ownPids`,
+    // in pattern order; the empty pattern ends at the root and matches nothing)
+    val kidStart = new Array[Int](n + 1)
+    var v = 1
+    while (v < n) { kidStart(parent(v) + 1) += 1; v += 1 }
+    var u = 0
+    while (u < n) { kidStart(u + 1) += kidStart(u); u += 1 }
+    val kidsOf = new Array[Int](math.max(n - 1, 0))
+    val kidFill = java.util.Arrays.copyOf(kidStart, n)
+    v = 1
+    while (v < n) { kidsOf(kidFill(parent(v))) = v; kidFill(parent(v)) += 1; v += 1 }
+    val ownStart = new Array[Int](n + 1)
+    pid = 0
+    while (pid < patterns.length) { if (endNode(pid) > 0) ownStart(endNode(pid) + 1) += 1; pid += 1 }
+    u = 0
+    while (u < n) { ownStart(u + 1) += ownStart(u); u += 1 }
+    val ownPids = new Array[Int](ownStart(n))
+    val ownFill = java.util.Arrays.copyOf(ownStart, n)
+    pid = 0
+    while (pid < patterns.length) {
+      val e = endNode(pid)
+      if (e > 0) { ownPids(ownFill(e)) = pid; ownFill(e) += 1 }
+      pid += 1
+    }
+
+    // one BFS numbers the nodes, resolves failure links, counts the merged
+    // outputs (a node's own patterns, then its failure node's outputs) and
     // fills the per-id arrays. Each node's children are enqueued in
     // (class, char) order, so they get consecutive ids in exactly the order
-    // the bitmap rank (and the rare tail's binary search) assumes. Build keeps
-    // Character/Integer deliberately — java.util.Map[Char, Int] in Scala
-    // silently unboxes missing-key null to 0, which corrupts the trie.
-    val n = gotoMaps.length
+    // the bitmap rank (and the rare tail's binary search) assumes.
     val order = new Array[Int](n)     // id → trie node; doubles as the BFS queue
     val id = new Array[Int](n)        // trie node → id
     val failNode = new Array[Int](n)  // trie node → failure trie node
+    val outCount = new Array[Int](n)  // trie node → merged output count
     val base = new Array[Int](n + 1)
     val childMask = new Array[Long](n)
     val fail = new Array[Int](n)
@@ -347,48 +427,52 @@ object AhoCorasick {
     var s = 0
     var next = 1
     while (s < next) {
-      val u = order(s)
-      var deg = 0
-      val it = gotoMaps(u).entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val c = e.getKey.charValue()
-        if (deg == kids.length) kids = java.util.Arrays.copyOf(kids, 2 * deg)
-        kids(deg) = (((charClass(c).toLong << 16) | c) << 32) | e.getValue.intValue()
-        deg += 1
+      u = order(s)
+      val deg = kidStart(u + 1) - kidStart(u)
+      if (deg > kids.length) kids = new Array[Long](math.max(deg, 2 * kids.length))
+      var k = 0
+      while (k < deg) {
+        val w = kidsOf(kidStart(u) + k)
+        val c = label(w)
+        kids(k) = (((charClass(c).toLong << 16) | c) << 32) | w
+        k += 1
       }
       java.util.Arrays.sort(kids, 0, deg)
       base(s + 1) = base(s) + deg
       fail(s) = id(failNode(u))
-      outOff(s + 1) = outOff(s) + outSets(u).length
-      var k = 0
+      outOff(s + 1) = outOff(s) + outCount(u)
+      k = 0
       while (k < deg) {
         val cls = (kids(k) >>> 48).toInt
         val c = (kids(k) >>> 32).toChar
-        val v = kids(k).toInt
+        v = kids(k).toInt
         childMask(s) |= 1L << cls
         if (cls == RareClass) tailChars(next - 1) = c
         // failure state for v: deepest proper suffix state with a c-edge
-        val boxed = Character.valueOf(c)
         var f = failNode(u)
         var resolved = -1
         while (resolved < 0) {
-          val nxt: Integer = gotoMaps(f).get(boxed)
-          if (nxt != null && nxt.intValue() != v) resolved = nxt.intValue()
+          val nxt = trie.child(f, c)
+          if (nxt >= 0 && nxt != v) resolved = nxt
           else if (f == 0) resolved = 0
           else f = failNode(f)
         }
         failNode(v) = resolved
-        outSets(v) ++= outSets(resolved)
+        outCount(v) = ownStart(v + 1) - ownStart(v) + outCount(resolved)
         order(next) = v; id(v) = next; next += 1
         k += 1
       }
       s += 1
     }
+    // a node's outputs: its own patterns, then a copy of its failure node's
+    // (which sits at a smaller id, so it is already filled)
     val outPids = new Array[Int](outOff(n))
     s = 0
     while (s < n) {
-      outSets(order(s)).copyToArray(outPids, outOff(s))
+      u = order(s)
+      val own = ownStart(u + 1) - ownStart(u)
+      System.arraycopy(ownPids, ownStart(u), outPids, outOff(s), own)
+      System.arraycopy(outPids, outOff(fail(s)), outPids, outOff(s) + own, outCount(failNode(u)))
       s += 1
     }
     val patLen = patterns.map(_.length)

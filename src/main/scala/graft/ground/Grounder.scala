@@ -31,18 +31,19 @@ final case class TermEntry(prefix: String, id: String, name: String, predicate: 
 final class Grounder private (
     val automaton: AhoCorasick,
     val entries: Array[Array[TermEntry]], // per pattern id
-    val surfaces: Array[String])          // original (pre-normalization) representative surface
+    val surfaces: Array[String],          // original (pre-normalization) representative surface
+    /** Distinct canonical top-1 CURIEs (concept table for flag-array dedup),
+      * in order of first appearance over the pattern ids. */
+    val conceptCuries: Array[String],
+    /** pattern id → index into [[conceptCuries]]. The fused triple kernel
+      * never consults surfaces/case bonuses (the predicate-weight argmax
+      * depends on the pattern alone), so the span top-1 is a pure function
+      * of pid — resolved ONCE at build, not 10^12 times out there. */
+    val pidConcept: Array[Int])
   extends Serializable {
 
   /** Predicate weight: label beats exact synonym beats everything else. */
-  @inline def predicateWeight(pred: String): Double = pred match {
-    case Vocab.Label => 10.0
-    case Vocab.HasExactSynonym => 9.0
-    case Vocab.HasNarrowSynonym => 7.0
-    case Vocab.HasBroadSynonym => 6.0
-    case Vocab.HasRelatedSynonym => 5.0
-    case _ => 4.0
-  }
+  @inline def predicateWeight(pred: String): Double = Grounder.predicateWeight(pred)
 
   /** All scored candidates for every word-boundary match in `text`. */
   def findMentions(convId: String, turnIdx: Int, text: String): Iterator[Mention] = {
@@ -88,44 +89,6 @@ final class Grounder private (
     }
   }
 
-  // ----- precomputed hot-loop tables ---------------------------------------
-  // The fused triple kernel never consults surfaces/case bonuses (the
-  // predicate-weight argmax depends on the pattern alone), so the span top-1
-  // is a pure function of pid — resolved ONCE here, not 10^12 times out there.
-
-  /** Best entry per pattern id by (predicateWeight desc, prefix/id/pred asc). */
-  private def bestEntry(pid: Int): TermEntry = {
-    val es = entries(pid)
-    var best = es(0)
-    var bestScore = predicateWeight(es(0).predicate)
-    var i = 1
-    while (i < es.length) {
-      val sc = predicateWeight(es(i).predicate)
-      if (sc > bestScore) { bestScore = sc; best = es(i) }
-      i += 1
-    }
-    best
-  }
-
-  /** Distinct canonical top-1 CURIEs (concept table for flag-array dedup). */
-  val conceptCuries: Array[String] = {
-    val seen = scala.collection.mutable.LinkedHashMap[String, Int]()
-    entries.indices.foreach { pid =>
-      val b = bestEntry(pid)
-      seen.getOrElseUpdate(b.prefix + ":" + b.id, seen.size)
-    }
-    seen.keys.toArray
-  }
-
-  /** pattern id → index into [[conceptCuries]]. */
-  val pidConcept: Array[Int] = {
-    val idx = conceptCuries.zipWithIndex.toMap
-    entries.indices.map { pid =>
-      val b = bestEntry(pid)
-      idx(b.prefix + ":" + b.id)
-    }.toArray
-  }
-
   /** Concept CURIEs' UTF-8 packed end to end in one array, and where each
     * starts (concept c is `[starts(c), starts(c + 1))`). A mention triple
     * copies its obj from here: a UTF8String per concept would cost two
@@ -165,73 +128,192 @@ object Grounder {
     }
   }
 
-  /** Hard bound on distinct normalized patterns collected to the driver.
-    * ~2M pattern rows (with entry structs) is a few GiB of driver heap —
+  private def predicateWeight(pred: String): Double = pred match {
+    case Vocab.Label => 10.0
+    case Vocab.HasExactSynonym => 9.0
+    case Vocab.HasNarrowSynonym => 7.0
+    case Vocab.HasBroadSynonym => 6.0
+    case Vocab.HasRelatedSynonym => 5.0
+    case _ => 4.0
+  }
+
+  /** Hard bound on the lexicon rows [[build]] collects to the driver (rows
+    * whose text normalizes to something; a lexicon never has fewer rows than
+    * distinct normalized patterns). ~2M rows is a few GiB of driver heap —
     * within a production driver's budget but a deliberate ceiling: a
     * UMLS-scale (~4M-term) lexicon would otherwise stress driver memory
     * SILENTLY, surfacing as a mid-build OOM instead of a diagnosis. */
   val MaxDriverPatterns = 2000000L
 
-  /**
-   * Build from a literal_mappings DataFrame (columns prefix, id, name,
-   * predicate, text). The groupBy on NORMALIZED text happens in Spark — the
-   * normalize UDF runs distributed (ontology side, never the corpus hot
-   * path) and the driver collects one row per DISTINCT normalized pattern,
-   * not one per raw lexicon row: a huge lexicon aggregates before it ever
-   * touches the driver (round-1 collected raw rows and grouped driver-side).
-   *
-   * The collect is HARD-BOUNDED at `maxPatterns` via [[DriverProbe]] (one
-   * job, at most maxPatterns+1 rows ever reach the driver); an over-cap
-   * lexicon fails loudly with a strategy pointer instead of OOMing the driver.
-   */
-  def build(literalMappings: DataFrame,
-            canonical: Map[String, String] = Map.empty,
-            maxPatterns: Long = MaxDriverPatterns): Grounder = {
+  /** The rows [[build]] collects: (prefix, id, name, predicate, text, norm)
+    * per lexicon row whose text normalizes to something, name defaulting to
+    * the text. Row-wise (the normalize UDF runs distributed), no exchange. */
+  private[graft] def lexiconRows(literalMappings: DataFrame): DataFrame = {
     val normUdf = udf((s: String) => AhoCorasick.normalize(s))
-    val byPattern = literalMappings
+    literalMappings
       .select(col("prefix"), col("id"), coalesce(col("name"), col("text")).as("name"),
         col("predicate"), col("text"))
       .withColumn("norm", normUdf(col("text")))
       .filter(col("norm") =!= "")
-      .groupBy(col("norm"))
-      .agg(collect_list(struct(col("prefix"), col("id"), col("name"),
-        col("predicate"), col("text"))).as("es"))
-    val grouped = DriverProbe.bounded(byPattern, maxPatterns).getOrElse(
+  }
+
+  /**
+   * Build from a literal_mappings DataFrame (columns prefix, id, name,
+   * predicate, text): ONE Spark job collects [[lexiconRows]], and one driver
+   * pass groups them by normalized pattern. A groupBy in Spark would save the
+   * driver nothing — every raw row rides inside its pattern's group — and
+   * costs a shuffle and a second job.
+   *
+   * The collect is HARD-BOUNDED at `maxPatterns` collected ROWS via
+   * [[DriverProbe]] (one job, the driver holds at most maxPatterns rows): the
+   * rows, not the distinct patterns, are what the driver heap grows with, so
+   * a lexicon of many spellings per pattern hits the cap before its pattern
+   * count does. An over-cap lexicon fails loudly with a strategy pointer
+   * instead of OOMing the driver.
+   */
+  def build(literalMappings: DataFrame,
+            canonical: Map[String, String] = Map.empty,
+            maxPatterns: Long = MaxDriverPatterns): Grounder = {
+    val rows = DriverProbe.bounded(lexiconRows(literalMappings), maxPatterns).getOrElse(
       throw new IllegalStateException(
-        s"lexicon exceeds $maxPatterns distinct normalized patterns — too large " +
-          "for one driver-built automaton. Either raise maxPatterns to match the " +
-          "driver's actual heap, or use Grounder.buildSharded(lexicon, N): it " +
-          "shards the pattern space by hash of the NORMALIZED pattern text (raw " +
-          "text would split variant spellings of one pattern across shards and " +
-          "corrupt per-span top-1), and the union of the shards' mentions " +
-          "(MentionDetector.detectTriplesSharded) equals " +
-          "the single-automaton result exactly."))
+        s"lexicon exceeds $maxPatterns rows with a non-empty normalized text (the cap " +
+          "counts collected lexicon rows, which are never fewer than its distinct " +
+          "normalized patterns) — too large for one driver-built automaton. Either raise " +
+          "maxPatterns to match the driver's actual heap, or use " +
+          "Grounder.buildSharded(lexicon, N): it shards the pattern space by hash of the " +
+          "NORMALIZED pattern text (raw text would split variant spellings of one pattern " +
+          "across shards and corrupt per-span top-1), and the union of the shards' " +
+          "mentions (MentionDetector.detectTriplesSharded) equals the single-automaton " +
+          "result exactly."))
+    fromRows(rows, canonical)
+  }
 
-    // deterministic order regardless of partitioning: patterns sorted, and
-    // per-pattern entries sorted by (prefix, id, predicate, text)
-    val sorted = grouped.map { r =>
-      val norm = r.getString(0)
-      val es = r.getSeq[org.apache.spark.sql.Row](1).map { e =>
-        (TermEntry(e.getString(0), e.getString(1), e.getString(2), e.getString(3)), e.getString(4))
-      }.sortBy { case (t, text) => (t.prefix, t.id, t.predicate, text) }
-      norm -> es
-    }.sortBy(_._1)
-
-    val patterns = sorted.map(_._1)
-    val entries = sorted.map { case (_, es) =>
-      es.map { case (t, _) =>
-        // fold the xref entity-merge INTO the index: entries are born
-        // canonical, so downstream triples need no remap pass at all
-        canonical.get(s"${t.prefix}:${t.id}") match {
-          case Some(canon) if canon.indexOf(':') > 0 =>
-            val i = canon.indexOf(':')
-            t.copy(prefix = canon.substring(0, i), id = canon.substring(i + 1))
-          case _ => t
-        }
-      }.distinct.sortBy(e => (e.prefix, e.id, e.predicate)).toArray
+  /**
+   * The driver half of [[build]]. One sort of the row indices by (norm,
+   * prefix, id, predicate, text) makes the order independent of the input's
+   * partitioning; one loop over it then yields, per pattern (sorted): the
+   * surface (the first row's text), the entries — folded through the xref
+   * canonical map, so they are born canonical and downstream triples need no
+   * remap pass, distinct, sorted by (prefix, id, predicate) — and the
+   * pattern's top-1 concept. `trie` builds the automaton over the sorted
+   * patterns (a seam for timing it apart, [[graft.tools.SetupProbe]]).
+   */
+  private[graft] def fromRows(rows: Array[org.apache.spark.sql.Row], canonical: Map[String, String],
+                              trie: Seq[String] => AhoCorasick = AhoCorasick.build): Grounder = {
+    val n = rows.length
+    val prefix, id, name, predicate, text, norm = new Array[String](n)
+    var r = 0
+    while (r < n) {
+      val row = rows(r)
+      prefix(r) = row.getString(0); id(r) = row.getString(1); name(r) = row.getString(2)
+      predicate(r) = row.getString(3); text(r) = row.getString(4); norm(r) = row.getString(5)
+      r += 1
     }
-    val surfaces = sorted.map(_._2.head._2)
-    new Grounder(AhoCorasick.build(patterns.toIndexedSeq), entries, surfaces)
+    val order = sortedIndices(n, (a, b) => {
+      var c = compareNullsFirst(norm(a), norm(b))
+      if (c == 0) c = compareNullsFirst(prefix(a), prefix(b))
+      if (c == 0) c = compareNullsFirst(id(a), id(b))
+      if (c == 0) c = compareNullsFirst(predicate(a), predicate(b))
+      if (c == 0) c = compareNullsFirst(text(a), text(b))
+      c
+    })
+    val byKey: java.util.Comparator[TermEntry] = (x, y) => {
+      var c = compareNullsFirst(x.prefix, y.prefix)
+      if (c == 0) c = compareNullsFirst(x.id, y.id)
+      if (c == 0) c = compareNullsFirst(x.predicate, y.predicate)
+      c
+    }
+
+    val patterns, surfaces = new scala.collection.mutable.ArrayBuffer[String]
+    val entries = new scala.collection.mutable.ArrayBuffer[Array[TermEntry]]
+    val pidConcept = new scala.collection.mutable.ArrayBuffer[Int]
+    val conceptCuries = new scala.collection.mutable.ArrayBuffer[String]
+    val conceptOf = new scala.collection.mutable.HashMap[(String, String), Int]
+    var group = new Array[TermEntry](16)
+    var i = 0
+    while (i < n) {
+      val pattern = norm(order(i))
+      patterns += pattern
+      surfaces += text(order(i))
+      var k = 0
+      while (i < n && norm(order(i)) == pattern) {
+        val row = order(i)
+        if (k == group.length) group = java.util.Arrays.copyOf(group, 2 * k)
+        group(k) = canonicalEntry(TermEntry(prefix(row), id(row), name(row), predicate(row)), canonical)
+        k += 1
+        i += 1
+      }
+      // the rows came sorted by the ORIGINAL ids; a stable sort by the
+      // canonical ones keeps that order among ties, and an entry equal to
+      // one before it can only sit in its own (prefix, id, predicate) run
+      java.util.Arrays.sort(group, 0, k, byKey)
+      val es = new scala.collection.mutable.ArrayBuffer[TermEntry](k)
+      var run = 0
+      var j = 0
+      while (j < k) {
+        val e = group(j)
+        if (j > 0 && byKey.compare(group(j - 1), e) != 0) run = es.length
+        var dup = false
+        var m = run
+        while (!dup && m < es.length) { dup = es(m) == e; m += 1 }
+        if (!dup) es += e
+        j += 1
+      }
+      // top-1: the first entry of the highest predicate weight
+      var best = es(0)
+      j = 1
+      while (j < es.length) {
+        if (predicateWeight(es(j).predicate) > predicateWeight(best.predicate)) best = es(j)
+        j += 1
+      }
+      entries += es.toArray
+      pidConcept += conceptOf.getOrElseUpdate((best.prefix, best.id), {
+        conceptCuries += best.prefix + ":" + best.id
+        conceptCuries.length - 1
+      })
+    }
+    new Grounder(trie(patterns.toIndexedSeq), entries.toArray, surfaces.toArray,
+      conceptCuries.toArray, pidConcept.toArray)
+  }
+
+  /** `t` with its CURIE replaced through the xref canonical map, if mapped. */
+  private def canonicalEntry(t: TermEntry, canonical: Map[String, String]): TermEntry =
+    if (canonical.isEmpty) t
+    else canonical.get(s"${t.prefix}:${t.id}") match {
+      case Some(canon) if canon.indexOf(':') > 0 =>
+        val c = canon.indexOf(':')
+        t.copy(prefix = canon.substring(0, c), id = canon.substring(c + 1))
+      case _ => t
+    }
+
+  @inline private def compareNullsFirst(x: String, y: String): Int =
+    if (x eq y) 0 else if (x == null) -1 else if (y == null) 1 else x.compareTo(y)
+
+  /** The indices 0 until n, stably sorted by `cmp`: a bottom-up merge sort
+    * over Int arrays, so no index is boxed. */
+  private def sortedIndices(n: Int, cmp: (Int, Int) => Int): Array[Int] = {
+    var a = Array.range(0, n)
+    var b = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var i = lo
+        var j = mid
+        var k = lo
+        while (k < hi) {
+          if (i < mid && (j >= hi || cmp(a(i), a(j)) <= 0)) { b(k) = a(i); i += 1 }
+          else { b(k) = a(j); j += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = a; a = b; b = t
+      width *= 2
+    }
+    a
   }
 
   /**
@@ -245,7 +327,7 @@ object Grounder {
    * normalized pattern, so any span is matched by exactly one shard's
    * automaton; the union of the shards' mentions equals the single-automaton
    * result, including span-local top-1 (equivalence-tested). Each shard's
-   * build pays its own distributed aggregation but collects only its slice.
+   * build pays its own probe job but collects only its slice.
    */
   def buildSharded(literalMappings: DataFrame, nShards: Int,
                    canonical: Map[String, String] = Map.empty,

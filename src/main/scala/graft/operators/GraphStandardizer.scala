@@ -56,12 +56,21 @@ object GraphStandardizer {
 
   /**
    * graphs DF → standardized, DEDUPLICATED edge table (subj, pred, obj) as
-   * CURIE strings. Normalization can collapse distinct raw edges (`is_a` vs
-   * the subClassOf IRI) → dropDuplicates is part of the semantics (A2), not
-   * an optimization. Rows whose endpoints fail standardization are dropped
-   * leniently (P7 requires non-null subj/pred/obj — ner.py:133-138).
+   * CURIE strings: [[standardizedEdgeRows]], distinct. Normalization can
+   * collapse distinct raw edges (`is_a` vs the subClassOf IRI) →
+   * dropDuplicates is part of the semantics (A2), not an optimization.
    */
-  def standardizeEdges(graphs: DataFrame, converter: Converter): DataFrame = {
+  def standardizeEdges(graphs: DataFrame, converter: Converter): DataFrame =
+    standardizedEdgeRows(graphs, converter).dropDuplicates("subj", "pred", "obj")
+
+  /**
+   * graphs DF → standardized edge rows (subj, pred, obj), NOT deduplicated:
+   * for a caller that dedups later, after its own rewrite (KgPipeline's
+   * ontology triples dedup once, inside their one partition). Rows whose
+   * endpoints fail standardization are dropped leniently (P7 requires
+   * non-null subj/pred/obj — ner.py:133-138).
+   */
+  def standardizedEdgeRows(graphs: DataFrame, converter: Converter): DataFrame =
     graphs
       .select(explode(col("edges")).as("edge"))
       .select(
@@ -69,8 +78,6 @@ object GraphStandardizer {
         normalize_predicate(col("edge.pred"), converter).as("pred"),
         standardize_id(col("edge.obj"), converter).as("obj"))
       .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .dropDuplicates("subj", "pred", "obj")
-  }
 
   /**
    * equivalentNodesSets → undirected merge edges (OBO Graph JSON's second

@@ -25,8 +25,9 @@ import graft.sources.OboGraphReader
  *    and xref-merge maps are driver-built from ontology-sized tables and
  *    BROADCAST;
  *  - the ontology triples are finished ONCE per [[OntologyContext]]
- *    (standardize → canonicalize → distinct, cached in one partition); a
- *    pass only unions them, so it derives nothing ontology-side;
+ *    (standardize → canonicalize → one partition → distinct, cached, with
+ *    no exchange); a pass only unions them, so it derives nothing
+ *    ontology-side;
  *  - at most ONE corpus-wide shuffle: the salted repartition (skipped
  *    entirely for conv_id-bucketed input — the Iceberg storage layout —
  *    where a pass has no exchange at all); per-turn dedup is map-side by
@@ -108,7 +109,8 @@ object KgPipeline {
    * amortized to zero — rebuilding the broadcast automaton per batch would
    * serialize the cluster on the driver). `edges` are the KG's finished
    * ontology triples: canonicalized through `canonical`, distinct, and cached
-   * in one partition (a snapshot of a pass writes one file for them).
+   * in one partition (a snapshot of a pass writes one file for them); the
+   * dedup runs once, inside that partition, so preparing them shuffles nothing.
    */
   final case class OntologyContext(
       nodes: DataFrame,
@@ -151,12 +153,20 @@ object KgPipeline {
     val canonical = xrefCanonicalMap(nodes, prefix, Some(ensEdges))
     // entity merge folded into the index: grounder entries are born canonical
     val grounder = spark.sparkContext.broadcast(Grounder.build(lexicon, canonical))
-    val edges = canonicalize(GraphStandardizer.standardizeEdges(graphs, converter), canonical)
-      .dropDuplicates("subj", "pred", "obj")
-      .coalesce(1)
-      .cache()
-    OntologyContext(nodes, edges, grounder, canonical)
+    OntologyContext(nodes, ontologyTriples(graphs, converter, canonical), grounder, canonical)
   }
+
+  /** [[OntologyContext.edges]] of `graphs`, cached, not yet computed. One
+    * dedup, after the canonical rewrite and inside the one partition the
+    * triples are cached in: no exchange (a multi-line JSON document parses
+    * into one partition per file, so the coalesce moves no rows between
+    * tasks). */
+  private[graft] def ontologyTriples(graphs: DataFrame, converter: Converter,
+                                     canonical: Map[String, String]): DataFrame =
+    canonicalize(GraphStandardizer.standardizedEdgeRows(graphs, converter), canonical)
+      .coalesce(1)
+      .dropDuplicates("subj", "pred", "obj")
+      .cache()
 
   /**
    * Full run over a transcripts DataFrame. When `icelite` is given, every

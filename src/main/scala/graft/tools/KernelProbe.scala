@@ -38,7 +38,7 @@ object KernelProbe {
     "gu", "pi", "zo", "he", "va", "ju", "xe", "qo", "ty", "cy")
 
   /** A pronounceable word of at least three syllables, distinct per k. */
-  private def termWord(k: Int): String = {
+  private[tools] def termWord(k: Int): String = {
     val b = new StringBuilder
     var x = k
     var n = 0

@@ -13,9 +13,14 @@ import org.apache.spark.sql.execution.SQLExecution
  * back into a DataFrame both need `private[sql]` classic-session entry
  * points. This shim (inside the sql package — the public technique Spark's
  * own `functions` uses) re-exports exactly the two the engine needs, plus
- * the bounded collect behind `graft.operators.DriverProbe`.
+ * the bounded collect behind `graft.operators.DriverProbe` and the
+ * listener-bus drain `graft.tools.SetupProbe` counts task CPU after.
  */
 object InternalRowShim {
+
+  /** Blocks until every listener has seen every event posted so far
+    * (`listenerBus` is `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Analyzed logical plan of a DataFrame (for wrapping in custom operators). */
   def logicalPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -1253,6 +1253,34 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
+  /** The DAGScheduler's "non-existent accumulator" messages logged while
+    * `body` runs: each is a task that reported to a SQL metric the driver
+    * had already dropped. */
+  private def lostAccumulators(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lost = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("lost-accumulators", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val text = e.getMessage.getFormattedMessage +
+          Option(e.getThrown).fold("")(t => " " + t.getMessage)
+        if (text.contains("non-existent accumulator")) lost.add(text)
+      }
+    }
+    appender.start()
+    val dag = LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler").asInstanceOf[Logger]
+    dag.addAppender(appender)
+    try body finally {
+      dag.removeAppender(appender)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    lost.asScala.toSeq
+  }
+
   test("winnowing relative threshold separates real overlap from boilerplate") {
     val shared = (0 until 40).map(i => s"common$i").mkString(" ")
     val docs = Seq(
@@ -1271,30 +1299,36 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     // the same relative threshold over the sf0.01 documents table, five
     // times: no task may report to a SQL metric the driver has already
     // dropped (DAGScheduler logs "non-existent accumulator" when one does)
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val lost = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("winnow-accumulators", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val text = e.getMessage.getFormattedMessage +
-          Option(e.getThrown).fold("")(t => " " + t.getMessage)
-        if (text.contains("non-existent accumulator")) lost.add(text)
-      }
-    }
-    appender.start()
-    val dag = LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler").asInstanceOf[Logger]
-    dag.addAppender(appender)
-    try {
+    val lost = lostAccumulators {
       for (_ <- 1 to 5)
         SparkEntry.queries("q_dedup_winnow")(spark, "/root/testdata/sf0.01").collect()
-    } finally {
-      dag.removeAppender(appender)
-      appender.stop()
     }
-    assert(lost.isEmpty, s"${lost.size} accumulator errors, first: ${lost.peek()}")
+    assert(lost.isEmpty, s"${lost.size} accumulator errors, first: ${lost.headOption}")
+  }
+
+  test("incremental minhash dedup: no lost accumulators with a GC between its consumers' actions") {
+    // the lazy batch-bands pin feeds three consumers; a collection between
+    // their actions is where a pin first computed after its plan's SQL
+    // metrics were dropped would show as DAGScheduler ERRORs
+    def gc(): Unit = { System.gc(); Thread.sleep(100) }
+    val lost = lostAccumulators {
+      for (seed <- 0L until 3L) {
+        val docs = graft.tools.SketchDialsProbe.syntheticDocs(spark, 120, 20 + seed)
+        val history = docs.filter(col("doc_id") < 60)
+        val batch = docs.filter(col("doc_id") >= 60)
+        val (survivors, updated) = DedupOps.incrementalMinhashDedup(batch,
+          DedupOps.bandedSignatures(history), history)
+        gc()
+        val kept = survivors.collect().length
+        gc()
+        assert(updated.count() > 0)
+        gc()
+        assert(survivors.count() == kept)
+      }
+      gc()
+      spark.range(10).count() // a later job, after the pins are unreachable
+    }
+    assert(lost.isEmpty, s"${lost.size} accumulator errors, first: ${lost.headOption}")
   }
 
   test("hyperplane bucket: >64 planes is a construction error, not silent bit aliasing") {
@@ -1361,9 +1395,9 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("grounder build aggregates by normalized pattern BEFORE collect (distributed groupBy)") {
+  test("grounder build groups lexicon rows by normalized pattern, any partitioning") {
     import graft.ground.Grounder
-    // 1000 raw rows but only 3 distinct normalized patterns, spread over partitions
+    // 1000 raw rows but only 2 distinct normalized patterns, spread over partitions
     val rows = (0 until 1000).map { i =>
       val t = Seq("Alpha  Beta", "alpha-beta", "gamma")(i % 3)
       (s"P$i", f"$i%05d", t, "rdfs:label", t, "SYN", Seq.empty[String])
@@ -1378,6 +1412,171 @@ class OperatorSpec extends AnyFunSuite with JobCounting {
     assert(g2.automaton.patterns.toSeq == g.automaton.patterns.toSeq)
     assert(g2.ground("alpha beta").map(m => (m.prefix, m.id)) ==
       g.ground("alpha beta").map(m => (m.prefix, m.id)))
+  }
+
+  /** `Grounder.build` as it was before it collected raw rows — a groupBy on
+    * the normalized text in Spark, a driver regroup, and the class body's
+    * top-1 tables — kept verbatim as the reference the one-job build must
+    * reproduce. Returns (patterns, entries, surfaces, conceptCuries,
+    * pidConcept). */
+  private def groupByGrounderTables(literalMappings: DataFrame, canonical: Map[String, String])
+      : (Array[String], Array[Array[graft.ground.TermEntry]], Array[String], Array[String], Array[Int]) = {
+    import graft.ground.{AhoCorasick, TermEntry}
+    import graft.model.Vocab
+    val normUdf = udf((s: String) => AhoCorasick.normalize(s))
+    val byPattern = literalMappings
+      .select(col("prefix"), col("id"), coalesce(col("name"), col("text")).as("name"),
+        col("predicate"), col("text"))
+      .withColumn("norm", normUdf(col("text")))
+      .filter(col("norm") =!= "")
+      .groupBy(col("norm"))
+      .agg(collect_list(struct(col("prefix"), col("id"), col("name"),
+        col("predicate"), col("text"))).as("es"))
+    val grouped = byPattern.collect()
+
+    val sorted = grouped.map { r =>
+      val norm = r.getString(0)
+      val es = r.getSeq[Row](1).map { e =>
+        (TermEntry(e.getString(0), e.getString(1), e.getString(2), e.getString(3)), e.getString(4))
+      }.sortBy { case (t, text) => (t.prefix, t.id, t.predicate, text) }
+      norm -> es
+    }.sortBy(_._1)
+
+    val patterns = sorted.map(_._1)
+    val entries = sorted.map { case (_, es) =>
+      es.map { case (t, _) =>
+        canonical.get(s"${t.prefix}:${t.id}") match {
+          case Some(canon) if canon.indexOf(':') > 0 =>
+            val i = canon.indexOf(':')
+            t.copy(prefix = canon.substring(0, i), id = canon.substring(i + 1))
+          case _ => t
+        }
+      }.distinct.sortBy(e => (e.prefix, e.id, e.predicate)).toArray
+    }
+    val surfaces = sorted.map(_._2.head._2)
+
+    def predicateWeight(pred: String): Double = pred match {
+      case Vocab.Label => 10.0
+      case Vocab.HasExactSynonym => 9.0
+      case Vocab.HasNarrowSynonym => 7.0
+      case Vocab.HasBroadSynonym => 6.0
+      case Vocab.HasRelatedSynonym => 5.0
+      case _ => 4.0
+    }
+    def bestEntry(pid: Int): TermEntry = {
+      val es = entries(pid)
+      var best = es(0)
+      var bestScore = predicateWeight(es(0).predicate)
+      var i = 1
+      while (i < es.length) {
+        val sc = predicateWeight(es(i).predicate)
+        if (sc > bestScore) { bestScore = sc; best = es(i) }
+        i += 1
+      }
+      best
+    }
+    val conceptCuries: Array[String] = {
+      val seen = scala.collection.mutable.LinkedHashMap[String, Int]()
+      entries.indices.foreach { pid =>
+        val b = bestEntry(pid)
+        seen.getOrElseUpdate(b.prefix + ":" + b.id, seen.size)
+      }
+      seen.keys.toArray
+    }
+    val pidConcept: Array[Int] = {
+      val idx = conceptCuries.zipWithIndex.toMap
+      entries.indices.map { pid =>
+        val b = bestEntry(pid)
+        idx(b.prefix + ":" + b.id)
+      }.toArray
+    }
+    (patterns, entries, surfaces, conceptCuries, pidConcept)
+  }
+
+  test("one-job grounder build == the groupBy build: tables, bytes, matches, shards") {
+    import graft.ground.{AhoCorasick, Grounder}
+    import graft.model.Vocab
+    val rnd = new scala.util.Random(15)
+    val words = Seq("alpha", "Beta", "gamma", "δέλτα", "straße", "naïve", "x", "Ω-ray", "c++")
+    val seps = Seq(" ", "-", "_", "  ", " - ")
+    val preds = Seq(Vocab.Label, Vocab.HasExactSynonym, Vocab.HasNarrowSynonym,
+      Vocab.HasBroadSynonym, Vocab.HasRelatedSynonym, "skos:altLabel")
+    // a name is fixed per CURIE (null for one id in seven, defaulting to the
+    // text), so rows equal on (prefix, id, predicate, text) are equal rows
+    def row(pfx: String, id: Int, pred: String, text: String) =
+      (pfx, f"$id%03d", if (id % 7 == 0) null else s"$pfx name $id", pred, text)
+    val generated = (0 until 600).map { _ =>
+      val text = Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.length)))
+        .mkString(seps(rnd.nextInt(seps.length)))
+      // variant spellings of one pattern: random case and separators
+      val spelled = if (rnd.nextBoolean()) text.toUpperCase else text
+      row(if (rnd.nextInt(4) == 0) "Q" else "P", rnd.nextInt(60), preds(rnd.nextInt(preds.length)), spelled)
+    }
+    val planted = Seq(
+      row("P", 1, Vocab.Label, "tie"), row("P", 2, Vocab.Label, "tie"), // predicate tie
+      row("P", 3, Vocab.Label, "merged"), row("P", 10, Vocab.Label, "merged"), // canonical merge
+      row("P", 4, Vocab.Label, " - _ "), row("P", 5, Vocab.Label, null), // normalize to empty
+      row("P", 14, Vocab.HasExactSynonym, "Ünïcode Tërm"), row("P", 15, Vocab.Label, "ünïcode-tërm"))
+    // duplicate raw rows
+    val rows = generated ++ planted ++ generated.take(80) ++ planted.take(2)
+    val df = spark.createDataFrame(rows).toDF("prefix", "id", "name", "predicate", "text").repartition(4)
+    val canonical = Map("P:003" -> "P:001", "P:010" -> "P:001", "P:011" -> "Q:900",
+      "Q:020" -> "P:020", "P:012" -> "no-colon")
+
+    val ser = org.apache.spark.SparkEnv.get.serializer
+    def bytes(g: Grounder): Array[Byte] = {
+      val b = ser.newInstance().serialize(g)
+      val out = new Array[Byte](b.remaining()); b.get(out); out
+    }
+    val ctor = classOf[Grounder].getDeclaredConstructors.head
+    ctor.setAccessible(true)
+    val texts = Seq.fill(50)(Seq.fill(12)(words(rnd.nextInt(words.length)) + Seq(" ", ", ", "-")(rnd.nextInt(3)))
+      .mkString) ++ Seq("TIE merged ünïcode tërm", "c++ and Ω-ray; naïve straße")
+    def same(got: Grounder, lex: DataFrame): Unit = {
+      val (patterns, entries, surfaces, curies, pidConcept) = groupByGrounderTables(lex, canonical)
+      assert(got.automaton.patterns.toSeq == patterns.toSeq)
+      assert(got.entries.map(_.toSeq).toSeq == entries.map(_.toSeq).toSeq)
+      assert(got.surfaces.toSeq == surfaces.toSeq)
+      assert(got.conceptCuries.toSeq == curies.toSeq)
+      assert(got.pidConcept.toSeq == pidConcept.toSeq)
+      val ref = ctor.newInstance(AhoCorasick.build(patterns.toIndexedSeq), entries, surfaces, curies, pidConcept)
+        .asInstanceOf[Grounder]
+      assert(java.util.Arrays.equals(bytes(got), bytes(ref)), "serialized grounders differ")
+      texts.foreach { t =>
+        val norm = AhoCorasick.normalize(t)
+        assert(got.automaton.findAll(norm) == ref.automaton.findAll(norm), t)
+        assert(got.findTopMentions("c", 0, t).toSeq == ref.findTopMentions("c", 0, t).toSeq, t)
+        assert(got.findMentions("c", 0, t).toSeq == ref.findMentions("c", 0, t).toSeq, t)
+      }
+    }
+    val g = Grounder.build(df, canonical)
+    assert(g.automaton.patterns.contains("tie") && g.automaton.patterns.contains("ünïcode tërm"))
+    assert(!g.automaton.patterns.contains(""))
+    same(g, df)
+    // the merge folded P:003 and P:010 into P:001 (one entry per name)
+    assert(g.entries(g.automaton.patterns.indexOf("merged")).toSeq.map(e => (e.prefix, e.id, e.name)) ==
+      Seq(("P", "001", "P name 3"), ("P", "001", "P name 10"))) // in order of the original ids
+
+    val normUdf = udf((s: String) => AhoCorasick.normalize(s))
+    val shards = Grounder.buildSharded(df, 3, canonical)
+    assert(shards.length == 3)
+    shards.zipWithIndex.foreach { case (shard, i) =>
+      same(shard, df.filter(pmod(xxhash64(normUdf(col("text"))), lit(3)) === i))
+    }
+  }
+
+  test("grounder build caps collected ROWS: 3 rows of 2 patterns fail at cap 2") {
+    import graft.ground.Grounder
+    val df = Seq(
+      ("PATO", "0000001", "apoptosis", "rdfs:label", "apoptosis"),
+      ("PATO", "0000001", "apoptosis", "oboInOwl:hasExactSynonym", "Apoptosis"),
+      ("PATO", "0000002", "necrosis", "rdfs:label", "necrosis"))
+      .toDF("prefix", "id", "name", "predicate", "text").repartition(2)
+    val e = intercept[IllegalStateException](Grounder.build(df, maxPatterns = 2))
+    assert(e.getMessage.contains("rows"), e.getMessage)
+    assert(e.getMessage.contains("Grounder.buildSharded"))
+    // at cap 3 the same rows build, into 2 patterns
+    assert(Grounder.build(df, maxPatterns = 3).automaton.patterns.toSeq == Seq("apoptosis", "necrosis"))
   }
 
   test("sharded grounder: union of shard mentions == single-automaton mentions (exact)") {

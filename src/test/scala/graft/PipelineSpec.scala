@@ -667,6 +667,55 @@ class PipelineSpec extends AnyFunSuite with JobCounting {
     assert(prepared.size == 1 && scans == prepared, pass.treeString)
   }
 
+  test("Grounder.build: ONE job and no exchange on a multi-partition lexicon") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val lex = spark.range(0, 400, 1, 4).select(lit("P").as("prefix"),
+      format_string("%04d", col("id")).as("id"), lit(null).cast("string").as("name"),
+      lit(graft.model.Vocab.Label).as("predicate"),
+      concat(lit("term "), (col("id") % 150).cast("string")).as("text"))
+    assert(lex.rdd.getNumPartitions == 4)
+    val (g, jobs) = withJobCount(Grounder.build(lex))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(g.automaton.patterns.length == 150)
+    val plan = Grounder.lexiconRows(lex).queryExecution.executedPlan
+    assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+  }
+
+  test("prepare: ontology triples dedup once in one partition, no exchange, == the old chain") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.GraphStandardizer
+    import graft.sources.{OboGraphReader, SourceResolver}
+    SparkTestBase.withTempDir("graft_two_docs") { dir =>
+      // two documents of one source: every edge comes twice
+      val json = Files.readAllBytes(Paths.get(ontPath))
+      Files.write(Paths.get(dir, "a.json"), json)
+      Files.write(Paths.get(dir, "b.json"), json)
+      val twoDocs = SourceResolver.resolve(spark, Seq(SourceResolver.JsonSource(dir))).graphs.get
+      assert(twoDocs.count() == 2)
+      Seq(OboGraphReader.readGraphs(spark, ontPath), twoDocs).foreach { graphs =>
+        val ctx = KgPipeline.prepareGraphs(spark, graphs, MiniOntology.converter, Some("PATO"))
+        // the chain before the dedup moved into the partition
+        val old = KgPipeline.canonicalize(GraphStandardizer.standardizeEdges(graphs, MiniOntology.converter),
+          ctx.canonical).dropDuplicates("subj", "pred", "obj").coalesce(1)
+        assert(ctx.edges.count() == old.count() && ctx.edges.count() > 0)
+        assert(ctx.edges.exceptAll(old).isEmpty && old.exceptAll(ctx.edges).isEmpty)
+        assert(ctx.edges.rdd.getNumPartitions == 1)
+        def physical(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        val plan = physical(physical(ctx.edges.queryExecution.executedPlan).collectFirst {
+          case m: InMemoryTableScanExec => m.relation.cachedPlan
+        }.get)
+        assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+        ctx.release()
+      }
+    }
+  }
+
   test("bulk runner: canonical-prefix guard, failure recording, per-prefix run") {
     import graft.pipeline.BulkRunner
     import graft.sources.SourceResolver._
