@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  *     posexplode for turns), so generation itself is distributed,
  *     deterministic for a fixed seed, and never materializes on the driver.
  *     Includes a heavy-tail conversation-length distribution to exercise
- *     skew/salting (SURVEY J4).
+ *     skew (SURVEY J4).
  */
 object Transcripts {
 

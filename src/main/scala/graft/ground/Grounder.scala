@@ -388,17 +388,18 @@ object MentionDetector {
    * span top-1 → per-turn concept dedup, fused into one map-side pass
    * emitting finished (subj, pred, obj) triples, as a first-class Catalyst
    * operator ([[graft.plans.DetectTriplesNode]]): the fused byte-scan kernel
-   * sits inside the single query plan, the corpus exchange below it stays
-   * visible to the optimizer, and the exec renders the triples itself. The
-   * kernel is also the only place that counts turns and mentions.
+   * sits inside the single query plan, visible to the optimizer, and the exec
+   * renders the triples itself. The kernel is also the only place that
+   * counts turns and mentions.
    *
    * Zero-shuffle dedup argument: triple subj embeds (conv_id, turn_idx), so
    * duplicates of a (turn, concept) pair can only originate from the same
    * turn — which lives in exactly one partition. A per-turn dedup therefore
    * yields GLOBALLY distinct mention triples with no exchange; with entries
    * born canonical (Grounder.build canonical map) nothing downstream needs a
-   * second pass. Total corpus-wide shuffles in the whole pipeline: one (the
-   * conversation-preserving repartition).
+   * second pass. This holds under ANY partitioning of the turns, so the
+   * pipeline shuffles no corpus at all: a pass runs in the input's own
+   * partitions.
    */
   def detectTriples(turns: Dataset[SlimTurn], grounder: Broadcast[Grounder],
                     metrics: Option[graft.pipeline.RunMetrics] = None): org.apache.spark.sql.DataFrame =

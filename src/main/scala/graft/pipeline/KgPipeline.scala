@@ -13,12 +13,11 @@ import graft.sources.OboGraphReader
 /**
  * End-to-end KG-construction pipeline (BASELINE.json north_star):
  *
- *   read transcripts → conversation-boundary-preserving repartition (hash on
- *   salted conv_id) → sortWithinPartitions(conv_id, turn_idx) → ONE fused
- *   detection pass [G4] (span top-1 [F5], per-turn concept dedup [A2],
- *   entries born canonical through the xref merge [J3]) → (subj, pred, obj)
- *   edge + node tables with per-partition lineage metrics [S9/S10/A4],
- *   checkpoint-resumable per icelite snapshot.
+ *   read transcripts → sortWithinPartitions(conv_id, turn_idx), in the
+ *   input's own partitions → ONE fused detection pass [G4] (span top-1 [F5],
+ *   per-turn concept dedup [A2], entries born canonical through the xref
+ *   merge [J3]) → (subj, pred, obj) edge + node tables with per-partition
+ *   lineage metrics [S9/S10/A4], checkpoint-resumable per icelite snapshot.
  *
  * Scale design (100 TB corpus, ontology side always ≪):
  *  - the ontology/lexicon/grounder path never shuffles the corpus: grounder
@@ -28,14 +27,15 @@ import graft.sources.OboGraphReader
  *    (standardize → canonicalize → one partition → distinct, cached, with
  *    no exchange); a pass only unions them, so it derives nothing
  *    ontology-side;
- *  - at most ONE corpus-wide shuffle: the salted repartition (skipped
- *    entirely for conv_id-bucketed input — the Iceberg storage layout —
- *    where a pass has no exchange at all); per-turn dedup is map-side by
- *    construction, in every mode — the icelite path materializes the same
+ *  - no pass shuffles the corpus, on any input: a triple's subj names its
+ *    turn and the kernel dedups per input row, so a turn's triples come from
+ *    the one task that holds its row under ANY partitioning — the pass
+ *    never needs conversations whole. The icelite path materializes the same
  *    kernel output, which is already globally distinct, so its read-back
- *    needs no second exchange;
- *  - AQE + skew-join enabled by session conf; salting bounds any single
- *    conversation's partition footprint.
+ *    needs no exchange either;
+ *  - skew [J4]: with no exchange keyed on conv_id, a hot conversation cannot
+ *    make a straggler; a task's load is its input split's (parquet file
+ *    splits, or the generator's partitions).
  */
 object KgPipeline {
 
@@ -44,9 +44,6 @@ object KgPipeline {
       nodes: DataFrame,
       snapshotId: Option[Long],
       metrics: Option[RunMetrics])
-
-  /** Salt width for conversation partitioning (SURVEY J4). */
-  val SaltBuckets = 8
 
   /** Standardized (nodes, edges) of a parsed graphs DataFrame
     * ([[OboGraphReader.readGraphs]]), both cached. The frame itself is not
@@ -190,12 +187,10 @@ object KgPipeline {
    * Only with `icelite` is the kernel output materialized, hence counted once
    * by `Result.metrics`; in memory each action re-runs it, so metrics are None.
    *
-   * @param inputConvPartitioned the input is ALREADY partitioned so that no
-   *   conversation spans partitions (an Iceberg table bucketed on conv_id —
-   *   the north-star storage layout — or this repo's generator output). The
-   *   corpus-wide repartition is then skipped: the zero-shuffle dedup
-   *   argument in [[MentionDetector.detectTriples]] holds for ANY
-   *   conversation-preserving partitioning, not just the one we create.
+   * @param inputConvPartitioned changes nothing: every input runs in its own
+   *   partitions, with no exchange, because the kernel's dedup holds under
+   *   any partitioning (see [[MentionDetector.detectTriples]]). It stays so
+   *   callers that pass it by name compile.
    */
   def runPrepared(spark: SparkSession,
                   transcripts: DataFrame,
@@ -203,24 +198,14 @@ object KgPipeline {
                   icelite: Option[Icelite] = None,
                   runTag: String = "run",
                   inputConvPartitioned: Boolean = false): Result = {
-    // conversation-boundary-preserving partitioning, salted for skew: hash on
-    // (conv_id, turn_idx % S). Mention detection is per-turn, so salting is
-    // allowed to split one conversation across ≤ S partitions without
-    // breaking semantics; the stable-order invariant is asserted on unsalted
-    // read-back (SURVEY §7.5.3), not mid-pipeline.
-    val turns =
-      if (inputConvPartitioned)
-        transcripts.sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      else transcripts
-        .withColumn("salt", pmod(col("turn_idx"), lit(SaltBuckets)))
-        .repartition(col("conv_id"), col("salt"))
-        .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-        .drop("salt")
+    // sorted within the input's own partitions: the stable (conv_id,
+    // turn_idx) order of the input hint, with no exchange
+    val turns = transcripts.sortWithinPartitions(col("conv_id"), col("turn_idx"))
 
     // detection + span top-1 + per-turn dedup fused into ONE map-side pass
     // (see MentionDetector.detectTriples); its rows are globally distinct and
     // born canonical. Column pruning pushes the slim projection below the
-    // repartition, so only (conv_id, turn_idx, text) ever shuffles.
+    // sort, so only (conv_id, turn_idx, text) reach the kernel.
     def mentionTriples(metrics: Option[RunMetrics]): DataFrame =
       MentionDetector.detectTriplesIn(turns, ctx.grounder, metrics)
 

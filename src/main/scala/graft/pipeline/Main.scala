@@ -26,8 +26,6 @@ object Main {
 
     val builder = SparkSession.builder()
       .appName("graft-kg-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // applies in BOTH branches: the explode-plan regression the exclusion
       // prevents is independent of how the session got its master

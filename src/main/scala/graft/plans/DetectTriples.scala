@@ -22,9 +22,9 @@ import graft.pipeline.RunMetrics
  * Whole-operator mention detection as a first-class Catalyst operator
  * (SURVEY G4/F5 scale path): logical node + strategy + exec node, so the
  * fused detect→top-1→per-turn-dedup kernel lives INSIDE the one query plan —
- * `explain` shows it, plan-shape tests can assert around it, and the corpus
- * exchange below it stays visible to the optimizer (column pruning pushes the
- * slim projection under the shuffle exactly as with a built-in operator).
+ * `explain` shows it, plan-shape tests can assert around it, and the
+ * optimizer sees through it (column pruning pushes the slim projection under
+ * the pass's sort exactly as with a built-in operator).
  *
  * Child contract: output columns (conv_id: string, turn_idx: int, text:
  * string) — checked, names and types, when the node is built, and resolved

@@ -155,9 +155,8 @@ class PipelineSpec extends AnyFunSuite with JobCounting {
     // simulated crash: mentions snapshot landed, final tables did not
     val ic2 = new Icelite(root + "_resumed")
     val ctx = KgPipeline.prepare(spark, ontPath)
-    val turns = tr.withColumn("salt", pmod(col("turn_idx"), lit(KgPipeline.SaltBuckets)))
-      .repartition(col("conv_id"), col("salt"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx")).drop("salt")
+    // the pass's own input layout: the input's partitions, sorted within
+    val turns = tr.sortWithinPartitions(col("conv_id"), col("turn_idx"))
     ic2.materialize(spark, "mention_triples", "r1/mentions")(
       MentionDetector.detectTriples(MentionDetector.slim(turns), ctx.grounder))
     assert(ic2.currentSnapshotId("mention_triples").contains(1L))
@@ -631,17 +630,96 @@ class PipelineSpec extends AnyFunSuite with JobCounting {
     assert(viaMap.toSeq == expected.toSeq)
   }
 
-  test("plan: the fused pipeline has exactly ONE corpus-wide shuffle") {
+  test("plan: no pass exchanges the corpus, through run or through BulkRunner") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.BulkRunner
+    import graft.sources.SourceResolver.JsonSource
+    // every operator of a plan: final adaptive stages (or, before
+    // execution, the initial plan), subqueries, write commands and the plans
+    // a snapshot write persists its input with (a sweep's pass runs inside one)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def operators(p: SparkPlan): Seq[SparkPlan] = helper.collectWithSubqueries(p) {
+      case c: CommandResultExec => operators(c.commandPhysicalPlan)
+      case m: InMemoryTableScanExec => m +: operators(m.relation.cachedPlan)
+      case o => Seq(o)
+    }.flatten
+
+    // plain input runs in its own partitions, and the ontology branch is the
+    // context's finished, cached triples
     val tr = Transcripts.synthetic(spark, 200)
-    val triples = KgPipeline.run(spark, tr, ontPath).triples
-    val plan = triples.queryExecution.executedPlan.toString
-    // count Exchange operators: the corpus repartition is the only one, since
-    // the ontology branch is the context's finished, cached triples
-    val exchanges = "(?m)^\\s*(?:\\+- |:- )?Exchange ".r.findAllIn(plan).length
-    val ontologySideExchanges = 0 // the context's triples are finished and cached
-    assert(exchanges <= 1 + ontologySideExchanges, s"too many shuffles:\n$plan")
+    val plan = KgPipeline.run(spark, tr, ontPath).triples.queryExecution.executedPlan
+    val exchanges = operators(plan).collect { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"the pass shuffles:\n${plan.treeString}")
     // detection is a first-class operator in the SAME plan (no opaque RDD break)
-    assert(plan.contains("DetectTriples"), plan)
+    assert(plan.treeString.contains("DetectTriples"), plan.treeString)
+
+    // a bulk sweep writing icelite snapshots, under a listener
+    val marker = "graft_plan_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) flushed.countDown()
+        else operators(qe.executedPlan).foreach(seen.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val reports = try SparkTestBase.withTempDir("graft_bulk_plan") { root =>
+      val r = BulkRunner.run(spark, Seq(BulkRunner.OntologyJob("PATO", Seq(JsonSource(ontPath)))),
+        tr, MiniOntology.converter, icelite = Some(new Icelite(root)))
+      // listener events arrive asynchronously: a marker query flushes them
+      spark.range(1).toDF(marker).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker never seen")
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(reports.map(_.ok) == Seq(true), reports)
+    import scala.jdk.CollectionConverters._
+    val ops = seen.asScala.toSeq
+    assert(ops.exists(_.nodeName.contains("DetectTriples")), "the sweep's pass was not observed")
+    val convShuffles = ops.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case k: Expression => k.references.exists(_.name == "conv_id")
+        case _ => false
+      }) => e
+    }
+    assert(convShuffles.isEmpty,
+      s"conv_id-keyed exchange:\n${convShuffles.map(_.treeString.take(1500)).mkString("\n")}")
+  }
+
+  test("skew: the pass gives the same triples under any layout of a hot conversation") {
+    import org.apache.spark.sql.functions.spark_partition_id
+    val ctx = KgPipeline.prepare(spark, ontPath)
+    // conv0 is the generator's long-tail conversation: skewFactor 90 makes it
+    // about a fifth of all turns
+    val tr = Transcripts.synthetic(spark, 300, skewFactor = 90).cache()
+    val hot = col("conv_id") === "conv0"
+    val share = tr.filter(hot).count().toDouble / tr.count()
+    assert(share > 0.15 && share < 0.25, s"hot share $share")
+
+    // reference: string-path detection, raw grounder, then the canonical remap
+    val grounderRaw = spark.sparkContext.broadcast(
+      Grounder.build(graft.operators.LiteralMappings.fromNodes(ctx.nodes, "PATO")))
+    val reference = KgPipeline.canonicalize(
+      MentionDetector.mentionTriples(
+        MentionDetector.detectTopSlim(MentionDetector.slim(tr), grounderRaw).toDF()),
+      ctx.canonical).unionByName(ctx.edges).collect().map(_.toSeq).toSet
+    assert(reference.exists(_.head.toString.startsWith("turn:conv0/")))
+
+    // round-robin spreads the hot conversation over every task
+    val roundRobin = tr.repartition(4)
+    assert(roundRobin.filter(hot).select(spark_partition_id()).distinct().count() == 4)
+    val layouts = Seq("round-robin" -> roundRobin, "one partition" -> tr.coalesce(1),
+      "by conv_id" -> tr.repartition(col("conv_id")))
+    for ((name, input) <- layouts) {
+      val got = KgPipeline.runPrepared(spark, input, ctx).triples.collect().map(_.toSeq).toSet
+      assert(got == reference, s"$name: ${(got diff reference).take(3)} / ${(reference diff got).take(3)}")
+    }
+    tr.unpersist()
   }
 
   test("plan: a pass over conv_id-partitioned input has no exchange; ontology side is cached") {
